@@ -183,9 +183,14 @@ _NOH = {"op_noheaders": False}
 
 
 def _spark():
+    """The running session as it is, else a new one: the builder would
+    re-apply its configs (``spark.sql.shuffle.partitions`` among them) to
+    a running session."""
+    from pyspark.sql import SparkSession
+
     from gluettalax_spark.session import get_spark
 
-    return get_spark("gluettalax-cli")
+    return SparkSession.getActiveSession() or get_spark("gluettalax-cli")
 
 
 @cmd

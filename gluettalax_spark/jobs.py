@@ -11,9 +11,10 @@ registered in-process:
 * **concurrency** = per-job semaphore sized by ``max_concurrent_runs``
   (Glue's MaxConcurrentRuns, gluettalax.py:679) →
   :class:`JobConcurrentRunsExceeded` when exhausted (:259-260);
-* **history** = an engine-maintained runs table queried with DataFrame
-  ops — dogfooding the data plane for A3/C5/D5-D7 (filter, status
-  exclusion, per-job last-N window).
+* **history** = the registry's run records. A3/C5/D5-D7 (filter, status
+  exclusion, per-job last-N window) read them directly, with no Spark
+  job, as the reference filters ``get_job_runs`` on the client;
+  ``runs_df`` is the DataFrame view for the run-history operators.
 
 Args are strings end-to-end, like Glue job arguments (gluettalax.py:254).
 """
@@ -28,8 +29,6 @@ from dataclasses import dataclass, field
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, Row, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from gluettalax_spark.exceptions import (
     JobConcurrentRunsExceeded,
@@ -195,30 +194,41 @@ class JobRegistry:
             raise JobTimeout(f"Job {name} timeout after {effective_timeout}s")
         return state == SUCCEEDED
 
-    # -- history (A3/C5, dogfooding the data plane) ------------------------
+    # -- history (A3/C5) ---------------------------------------------------
+
+    def _rows(self) -> list[Row]:
+        """A snapshot of the run history, one ``Row`` per run with the
+        fields of ``runs_df`` (``started_on`` naive UTC)."""
+        with self._lock:
+            return [
+                Row(
+                    run_id=r.run_id,
+                    job_name=r.job_name,
+                    state=r.state,
+                    started_on=r.started_on.replace(tzinfo=None),
+                    execution_time=float(r.execution_time),
+                    arguments=dict(r.arguments),
+                    error=r.error,
+                )
+                for r in self._runs.values()
+            ]
 
     def runs_df(self, spark: SparkSession) -> DataFrame:
         """Run history as a DataFrame (the reference's JobRun records,
-        gluettalax.py:305-330)."""
-        with self._lock:
-            runs = list(self._runs.values())
-        rows = [
-            Row(
-                run_id=r.run_id,
-                job_name=r.job_name,
-                state=r.state,
-                started_on=r.started_on.replace(tzinfo=None),
-                execution_time=float(r.execution_time),
-                arguments=r.arguments,
-                error=r.error,
-            )
-            for r in runs
-        ]
+        gluettalax.py:305-330) — the view the ``runhistory`` operators
+        query; ``list_runs`` and ``last_runs_per_job`` read the registry
+        directly."""
         schema = (
             "run_id string, job_name string, state string, started_on timestamp, "
             "execution_time double, arguments map<string,string>, error string"
         )
-        return spark.createDataFrame(rows, schema=schema)
+        return spark.createDataFrame(self._rows(), schema=schema)
+
+    def _newest_first(self) -> list[Row]:
+        """History ordered by ``started_on`` descending, ties by ``run_id``
+        ascending (two stable sorts)."""
+        rows = sorted(self._rows(), key=lambda r: r.run_id)
+        return sorted(rows, key=lambda r: r.started_on, reverse=True)
 
     def list_runs(
         self,
@@ -228,35 +238,33 @@ class JobRegistry:
         include_succeeded: bool = True,
     ) -> list[Row]:
         """A3 (gluettalax.py:305-326): filter by job, optional SUCCEEDED
-        exclusion (D5), newest-first limit (D6) — as a DataFrame plan."""
-        df = self.runs_df(spark)
+        exclusion (D5), newest-first limit (D6) — client-side over the
+        registry, like the reference filters ``get_job_runs``; no Spark
+        job. ``spark`` is kept for API compatibility."""
         if name is not None:
             self.get(name)  # raise JobNotFound like the reference
-            df = df.filter(F.col("job_name") == name)
-        if not include_succeeded:
-            df = df.filter(F.col("state") != SUCCEEDED)  # D5
-        df = df.orderBy(F.col("started_on").desc(), F.col("run_id"))
-        if lines is not None:
-            df = df.limit(int(lines))  # D6
-        return df.collect()
+        rows = [
+            r
+            for r in self._newest_first()
+            if (name is None or r.job_name == name)
+            and (include_succeeded or r.state != SUCCEEDED)  # D5
+        ]
+        return rows if lines is None else rows[: max(int(lines), 0)]  # D6
 
     def last_runs_per_job(self, spark: SparkSession, lines: int = 1) -> list[Row]:
-        """C5's all-jobs report (gluettalax.py:343-345): last N runs per
-        job — the D7 window (row_number ≤ N per job)."""
-        w = Window.partitionBy("job_name").orderBy(F.col("started_on").desc(), F.col("run_id"))
-        return (
-            self.runs_df(spark)
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= lines)
-            .drop("rn")
-            .orderBy("job_name", F.col("started_on").desc())
-            .collect()
-        )
+        """C5's all-jobs report (gluettalax.py:343-345): the last N runs
+        per job (D7), ordered by job name, newest first within a job."""
+        per_job: dict[str, list[Row]] = {}
+        for r in self._newest_first():
+            kept = per_job.setdefault(r.job_name, [])
+            if len(kept) < lines:
+                kept.append(r)
+        return [r for job in sorted(per_job) for r in per_job[job]]
 
     def load_history(self, runs) -> None:
         """Restore run history (e.g. from a persisted runs table) into
         this registry. Replayed records are indistinguishable from live
-        ones to A3/C5/D5–D7 — the same ``runs_df`` plan serves both."""
+        ones to A3/C5/D5–D7 and to ``runs_df``."""
         with self._lock:
             for r in runs:
                 self._runs[r.run_id] = r

@@ -15,6 +15,11 @@ Parity notes (cited against /root/reference/gluettalax.py):
 * duplicate partition → :class:`PartitionAlreadyExists` warning (exit 0
   at the CLI), missing partition on delete → :class:`PartitionNotFound`
   (gluettalax.py:480-482, 494-497).
+* reads go to the session catalog directly, as the reference goes to
+  ``get_table`` / ``get_partitions``: one table read gives the partition
+  keys and location, one partition listing gives every partition's raw
+  values and location; no DESCRIBE / SHOW PARTITIONS text is parsed and
+  no Spark job runs. Locations render in DESCRIBE's ``file:/…`` form.
 """
 
 from __future__ import annotations
@@ -23,6 +28,7 @@ import threading
 import time
 from typing import NamedTuple
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 
 from gluettalax_spark.exceptions import (
@@ -112,11 +118,6 @@ def create_external_table(
     )
 
 
-def _require_table(spark: SparkSession, database: str, table: str) -> None:
-    if not spark.catalog.tableExists(f"{database}.{table}"):
-        raise TableNotFound(f"Table not found {database}.{table}")
-
-
 def list_tables(spark: SparkSession, pattern: str | None = None) -> list[Table]:
     """All tables across all databases (reference ``search_tables`` with
     manual pagination, gluettalax.py:503-514 — the catalog iterator
@@ -155,50 +156,61 @@ def get_partition_values(kargs: dict[str, str], partition_keys: list[str]) -> li
     return values
 
 
-def _partition_keys(spark: SparkSession, database: str, table: str) -> list[str]:
-    _require_table(spark, database, table)
-    rows = spark.sql(f"DESCRIBE TABLE {_qualified(database, table)}").collect()
-    keys: list[str] = []
-    in_part = False
-    for r in rows:
-        name = (r.col_name or "").strip()
-        if name.startswith("# Partition"):
-            in_part = True
-            continue
-        if in_part:
-            if not name or name.startswith("#"):
-                continue
-            keys.append(name)
-    # De-dup (DESCRIBE repeats partition columns in the column list).
-    seen: set[str] = set()
-    uniq = []
-    for k in keys:
-        if k not in seen:
-            seen.add(k)
-            uniq.append(k)
-    return uniq
+class _Table(NamedTuple):
+    """A partitioned table as the session catalog holds it."""
+
+    catalog: object  # JVM SessionCatalog
+    ident: object  # JVM TableIdentifier
+    keys: list[str]
+    location: str
 
 
-def _table_location(spark: SparkSession, database: str, table: str) -> str:
-    rows = spark.sql(f"DESCRIBE TABLE EXTENDED {_qualified(database, table)}").collect()
-    for r in rows:
-        if (r.col_name or "").strip() == "Location":
-            return r.data_type.strip()
-    raise TableNotFound(f"no location for {database}.{table}")
+def _as_list(jvm, seq) -> list:
+    """A Scala ``Seq`` as a Python list, read by index: py4j ends an
+    iteration on a Java exception, which PySpark's error conversion makes
+    cost tens of milliseconds."""
+    items = jvm.scala.jdk.javaapi.CollectionConverters.asJava(seq)
+    return [items.get(i) for i in range(items.size())]
+
+
+def _uri_to_string(jvm):
+    """DESCRIBE's ``file:/…`` rendering (``URI.toString`` gives ``file:///…``)."""
+    return jvm.org.apache.spark.sql.catalyst.catalog.CatalogUtils.URIToString
+
+
+def _partitioned_table(spark: SparkSession, database: str, table: str) -> _Table:
+    """Partition keys and location from one catalog read (no DESCRIBE)."""
+    jvm = spark.sparkContext._jvm
+    state = spark._jsparkSession.sessionState()
+    catalog = state.catalog()
+    try:
+        ident = state.sqlParser().parseTableIdentifier(_qualified(database, table))
+        meta = catalog.getTableMetadata(ident)
+    except AnalysisException as exc:
+        raise TableNotFound(f"Table not found {database}.{table}") from exc
+    keys = _as_list(jvm, meta.partitionColumnNames())
+    if not keys:
+        raise InvalidOption(f"table {database}.{table} is not partitioned")
+    return _Table(catalog, ident, keys, _uri_to_string(jvm)(meta.location()))
+
+
+def _partitions(spark: SparkSession, t: _Table, values: list[str] | None = None) -> list[tuple]:
+    """``(*values, location)`` of every partition, or of the one with
+    ``values``, from one catalog listing. Values come back raw, as Glue's
+    ``Values`` do (SHOW PARTITIONS path-escapes them: ``10:00`` →
+    ``10%3A00``)."""
+    jvm = spark.sparkContext._jvm
+    spec = None if values is None else jvm.PythonUtils.toScalaMap(dict(zip(t.keys, values)))
+    uri_to_string = _uri_to_string(jvm)
+    out = []
+    for p in _as_list(jvm, t.catalog.listPartitions(t.ident, jvm.scala.Option.apply(spec))):
+        p_spec = p.spec()
+        out.append(tuple(p_spec.apply(k) for k in t.keys) + (uri_to_string(p.location()),))
+    return out
 
 
 def _partition_spec(keys: list[str], values: list[str]) -> str:
     return ", ".join(f"{_q(k)}={_sql_str(v)}" for k, v in zip(keys, values))
-
-
-def _partition_exists(spark: SparkSession, database: str, table: str, spec: str) -> bool:
-    try:
-        rows = spark.sql(
-            f"SHOW PARTITIONS {_qualified(database, table)} PARTITION ({spec})"
-        ).collect()
-        return bool(rows)
-    except Exception:
-        return False
 
 
 # --------------------------------------------------------------------------
@@ -226,14 +238,12 @@ def add_partition(
     gluettalax.py:480-482 + :849-851)."""
     kargs = dict(kargs)
     location = kargs.pop("location", None)
-    keys = _partition_keys(spark, database, table)
-    if not keys:
-        raise InvalidOption(f"table {database}.{table} is not partitioned")
-    values = get_partition_values(kargs, keys)
+    t = _partitioned_table(spark, database, table)
+    values = get_partition_values(kargs, t.keys)
     if location is None:
-        location = derive_partition_location(_table_location(spark, database, table), keys, values)
-    spec = _partition_spec(keys, values)
-    if _partition_exists(spark, database, table, spec):
+        location = derive_partition_location(t.location, t.keys, values)
+    spec = _partition_spec(t.keys, values)
+    if _partitions(spark, t, values):
         raise PartitionAlreadyExists(f"Partition already exists: {spec}")
     spark.sql(
         f"ALTER TABLE {_qualified(database, table)} ADD PARTITION ({spec}) "
@@ -249,12 +259,10 @@ def add_partition(
 
 def delete_partition(spark: SparkSession, database: str, table: str, kargs: dict[str, str]) -> None:
     """Metadata-only drop, like Glue: data files untouched."""
-    keys = _partition_keys(spark, database, table)
-    if not keys:
-        raise InvalidOption(f"table {database}.{table} is not partitioned")
-    values = get_partition_values(dict(kargs), keys)
-    spec = _partition_spec(keys, values)
-    if not _partition_exists(spark, database, table, spec):
+    t = _partitioned_table(spark, database, table)
+    values = get_partition_values(dict(kargs), t.keys)
+    spec = _partition_spec(t.keys, values)
+    if not _partitions(spark, t, values):
         raise PartitionNotFound(f"Partition not found: {spec}")
     spark.sql(f"ALTER TABLE {_qualified(database, table)} DROP PARTITION ({spec})")
 
@@ -264,35 +272,16 @@ def delete_partition(spark: SparkSession, database: str, table: str, kargs: dict
 # --------------------------------------------------------------------------
 
 
-def _partition_location(
-    spark: SparkSession, database: str, table: str, spec: str
-) -> str:
-    rows = spark.sql(
-        f"DESCRIBE TABLE EXTENDED {_qualified(database, table)} PARTITION ({spec})"
-    ).collect()
-    for r in rows:
-        if (r.col_name or "").strip() == "Location":
-            return r.data_type.strip()
-    return ""
-
-
 def list_partitions(
     spark: SparkSession, database: str, table: str, header: bool = True
 ) -> Partitions:
     """Partition values + location, per-column max display widths (D10),
     sorted by location (D8) — the reference's exact output contract
-    (gluettalax.py:374-395)."""
-    keys = _partition_keys(spark, database, table)
-    if not keys:
-        raise InvalidOption(f"table {database}.{table} is not partitioned")
-    part_rows = spark.sql(f"SHOW PARTITIONS {_qualified(database, table)}").collect()
-    data: list[tuple] = []
-    for r in part_rows:
-        # 'k1=v1/k2=v2' → positional values in key order
-        pairs = dict(seg.split("=", 1) for seg in r.partition.split("/"))
-        values = [pairs.get(k, "") for k in keys]
-        spec = _partition_spec(keys, values)
-        data.append(tuple(values) + (_partition_location(spark, database, table, spec),))
+    (gluettalax.py:374-395), from one table read and one partition listing
+    like its ``get_table`` + ``get_partitions``."""
+    t = _partitioned_table(spark, database, table)
+    keys = t.keys
+    data = _partitions(spark, t)
     data.sort(key=lambda row: row[-1])  # sort by location (gluettalax.py:394)
     headers = [*keys, "location"]
     max_lengths = [len(h) if header else 0 for h in headers]
@@ -345,50 +334,38 @@ def add_partitions_by_location(
     table's partition keys are actually SKIPPED — the reference's Skip
     branches fall through and create bogus partitions (SURVEY.md §2.B
     warning; gluettalax.py:419,:426)."""
-    keys = _partition_keys(spark, database, table)
-    if not keys:
-        raise InvalidOption(f"table {database}.{table} is not partitioned")
+    t = _partitioned_table(spark, database, table)
     if location is None:
-        location = _table_location(spark, database, table)
+        location = t.location
     base = location[len("file:"):] if location.startswith("file:") else location
     base = base if base.endswith("/") else base + "/"
 
+    existing = {row[:-1] for row in _partitions(spark, t)}
     result: dict[str, list[str]] = {"added": [], "skipped": [], "existed": []}
+    new_specs: list[str] = []
     for d in _list_leaf_dirs(spark, location):
         rel = d[len(base.rstrip("/")):].strip("/")
-        if not rel:
-            result["skipped"].append(d)
-            continue
-        segments = rel.split("/")
+        segments = rel.split("/") if rel else []
         # Locate the first 'key=' anchor (gluettalax.py:417), then parse
         # k=v pairs positionally (:421-424).
-        start = next((i for i, s in enumerate(segments) if "=" in s), None)
-        if start is None or len(segments) - start != len(keys):
+        start = next((i for i, s in enumerate(segments) if "=" in s), len(segments))
+        pairs = [seg.split("=", 1) for seg in segments[start:]]
+        if len(pairs) != len(t.keys) or any(
+            len(pair) != 2 or pair[0] != k for pair, k in zip(pairs, t.keys)
+        ):
             result["skipped"].append(d)
             continue
-        parsed_keys: list[str] = []
-        values: list[str] = []
-        ok = True
-        for i, seg in enumerate(segments[start:]):
-            if "=" not in seg:
-                ok = False
-                break
-            k, v = seg.split("=", 1)
-            if k != keys[i]:
-                ok = False
-                break
-            parsed_keys.append(k)
-            values.append(v)
-        if not ok:
-            result["skipped"].append(d)
-            continue
-        try:
-            add_partition(
-                spark, database, table, dict(zip(parsed_keys, values), location=d)
-            )
-            result["added"].append(d)
-        except PartitionAlreadyExists:
+        values = tuple(v for _, v in pairs)
+        if values in existing:
             result["existed"].append(d)
+            continue
+        existing.add(values)
+        result["added"].append(d)
+        new_specs.append(
+            f"PARTITION ({_partition_spec(t.keys, values)}) LOCATION {_sql_str(d)}"
+        )
+    if new_specs:  # every new partition in one ALTER
+        spark.sql(f"ALTER TABLE {_qualified(database, table)} ADD {' '.join(new_specs)}")
     return result
 
 

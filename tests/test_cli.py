@@ -212,6 +212,21 @@ def test_cli_jobs(cli_env, capsys):
     assert gluettalax("run_job", "ghost") == 1
 
 
+def test_cli_keeps_running_session_conf(spark):
+    """An in-process command reuses the running session as it is: the
+    session builder would re-apply its shuffle-partition count."""
+    from gluettalax_spark import cli
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        assert cli.main(["gluettalax", "lsr"]) == 0
+        assert spark.conf.get(key) == "3"
+    finally:
+        spark.conf.set(key, before)
+
+
 def test_cli_crawler(cli_env, capsys):
     db = cli_env
     assert gluettalax("lsc", "test*") == 0

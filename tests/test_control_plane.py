@@ -132,6 +132,62 @@ def test_positional_partition_layout(spark, db, tmp_path):
     assert parts.data[0][:2] == ("2024", "01")
 
 
+def test_list_partitions_returns_raw_values(spark, db, tmp_path, capsys):
+    """A value that Hive path escaping changes (``10:00`` → ``10%3A00``
+    in SHOW PARTITIONS) lists raw, as Glue's ``Values`` do."""
+    from gluettalax_spark.cli import gluettalax
+
+    base = tmp_path / "hourly"
+    cat.create_external_table(
+        spark, db, "hourly", str(base), "n LONG", partition_keys=["dt", "hr"]
+    )
+    cat.add_partition(spark, db, "hourly", {"dt": "2024-01-01", "hr": "10:00"})
+    parts = cat.list_partitions(spark, db, "hourly")
+    assert parts.data == [("2024-01-01", "10:00", f"file:{base}/dt=2024-01-01/hr=10:00")]
+    assert gluettalax("lsp", db, "hourly", "--noheaders") == 0
+    assert "10:00" in capsys.readouterr().out
+    cat.delete_partition(spark, db, "hourly", {"dt": "2024-01-01", "hr": "10:00"})
+    assert cat.list_partitions(spark, db, "hourly").data == []
+
+
+def test_partition_locations_keep_describe_form(spark, db, usage_table, tmp_path):
+    """Locations are DESCRIBE's ``file:/…`` form, whether given explicitly
+    or derived from the table location."""
+    elsewhere = tmp_path / "elsewhere" / "p"
+    cat.add_partition(
+        spark, db, "usage", {"year": "2030", "month": "02", "location": str(elsewhere)}
+    )
+    cat.add_partition(spark, db, "usage", {"year": "2031", "month": "03"})
+    assert cat.list_partitions(spark, db, "usage").data == [
+        ("2030", "02", f"file:{elsewhere}"),
+        ("2031", "03", f"file:{usage_table}/year=2031/month=03"),
+    ]
+
+
+def test_add_partitions_by_location_splits_new_existing_skipped(spark, db, usage_table):
+    """One repair over new, already-registered and non-conforming dirs
+    returns the same split as adding them one at a time, and registers
+    every new dir at its ``file:/…`` location."""
+    import os
+
+    leaves = sorted(
+        root for root, _dirs, files in os.walk(usage_table)
+        if any(not f.startswith(("_", ".")) for f in files)
+    )
+    existing = leaves[0]
+    year, month = (seg.split("=", 1)[1] for seg in existing.split("/")[-2:])
+    cat.add_partition(spark, db, "usage", {"year": year, "month": month})
+    bogus = os.path.join(usage_table, "year=2099")
+    os.makedirs(bogus)
+    with open(os.path.join(bogus, "part-0.parquet"), "wb") as f:
+        f.write(b"x")
+
+    result = cat.add_partitions_by_location(spark, db, "usage")
+    assert result == {"added": leaves[1:], "skipped": [bogus], "existed": [existing]}
+    listed = cat.list_partitions(spark, db, "usage").data
+    assert sorted(row[-1] for row in listed) == [f"file:{d}" for d in leaves]
+
+
 def test_derive_partition_location():
     assert (
         cat.derive_partition_location("/w/t", ["year", "month"], ["2024", "01"])
@@ -260,6 +316,108 @@ def test_job_async_and_window_report(spark, registry):
     # D6: limit.
     assert len(registry.list_runs(spark, "a_job", lines=1)) == 1
     assert registry.list_jobs() == ["a_job", "b_job"]
+
+
+def _history_registry():
+    """Two jobs, mixed states, and runs sharing a ``started_on`` both
+    within a job and across jobs."""
+    from datetime import datetime, timezone
+
+    reg = jobs_mod.JobRegistry()
+    reg.register("a_job", _pricing)
+    reg.register("b_job", _pricing)
+    t = [datetime(2024, 1, 1, 12, 0, s, tzinfo=timezone.utc) for s in range(3)]
+    runs = [
+        ("jr_04", "a_job", "SUCCEEDED", t[0]),
+        ("jr_02", "a_job", "FAILED", t[1]),
+        ("jr_05", "a_job", "TIMEOUT", t[1]),
+        ("jr_01", "a_job", "SUCCEEDED", t[2]),
+        ("jr_03", "b_job", "SUCCEEDED", t[1]),
+        ("jr_06", "b_job", "RUNNING", t[2]),
+        ("jr_00", "b_job", "FAILED", t[2]),
+    ]
+    reg.load_history(
+        jobs_mod.JobRun(run_id=i, job_name=j, arguments={"RUN": i}, state=st, started_on=ts,
+                        execution_time=float(len(i)), error=None if st == "SUCCEEDED" else st)
+        for i, j, st, ts in runs
+    )
+    return reg
+
+
+def _dataframe_list_runs(spark, reg, name, lines, include_succeeded):
+    """The DataFrame plan ``list_runs`` used to run over ``runs_df``."""
+    df = reg.runs_df(spark)
+    if name is not None:
+        df = df.filter(F.col("job_name") == name)
+    if not include_succeeded:
+        df = df.filter(F.col("state") != "SUCCEEDED")
+    df = df.orderBy(F.col("started_on").desc(), F.col("run_id"))
+    if lines is not None:
+        df = df.limit(lines)
+    return df.collect()
+
+
+def _dataframe_last_runs_per_job(spark, reg, lines):
+    """The window plan ``last_runs_per_job`` used to run over ``runs_df``."""
+    from pyspark.sql.window import Window
+
+    w = Window.partitionBy("job_name").orderBy(F.col("started_on").desc(), F.col("run_id"))
+    return (
+        reg.runs_df(spark)
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= lines)
+        .drop("rn")
+        .orderBy("job_name", F.col("started_on").desc())
+        .collect()
+    )
+
+
+@pytest.mark.parametrize("include_succeeded", [True, False])
+@pytest.mark.parametrize("lines", [1, None])
+@pytest.mark.parametrize("name", ["a_job", "b_job", None])
+def test_list_runs_matches_dataframe_plan(spark, name, lines, include_succeeded):
+    reg = _history_registry()
+    got = reg.list_runs(spark, name, lines=lines, include_succeeded=include_succeeded)
+    want = _dataframe_list_runs(spark, reg, name, lines, include_succeeded)
+    assert [r.asDict() for r in got] == [r.asDict() for r in want]
+    assert got and isinstance(got[0]["arguments"], dict)
+    assert got[0].started_on.tzinfo is None and isinstance(got[0].execution_time, float)
+
+
+@pytest.mark.parametrize("lines", [1, 2])
+def test_last_runs_per_job_matches_window_plan(spark, lines):
+    reg = _history_registry()
+    got = reg.last_runs_per_job(spark, lines=lines)
+    want = _dataframe_last_runs_per_job(spark, reg, lines)
+
+    assert sorted((r.asDict() for r in got), key=lambda d: d["run_id"]) == sorted(
+        (r.asDict() for r in want), key=lambda d: d["run_id"]
+    )
+    order = [(r.job_name, -r.started_on.timestamp()) for r in got]
+    assert order == sorted(order)
+    assert [r.job_name for r in got] == ["a_job"] * lines + ["b_job"] * lines
+
+
+def test_control_plane_reads_run_no_spark_job(spark, db, usage_table):
+    """History and partition listing are served from the registry and the
+    session catalog: no Spark job runs in their job group."""
+    sc = spark.sparkContext
+    reg = _history_registry()
+    cat.add_partitions_by_location(spark, db, "usage")
+
+    def jobs_in_group(read) -> list[int]:
+        group = f"reads_{uuid.uuid4().hex[:8]}"
+        sc.setJobGroup(group, "control-plane reads")
+        try:
+            read()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return list(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert jobs_in_group(lambda: spark.range(3).count())  # the probe sees jobs
+    assert jobs_in_group(lambda: reg.list_runs(spark, "a_job", lines=2)) == []
+    assert jobs_in_group(lambda: reg.last_runs_per_job(spark, lines=2)) == []
+    assert jobs_in_group(lambda: cat.list_partitions(spark, db, "usage")) == []
 
 
 def test_builtin_jobs_run_via_cli_registry(spark):
