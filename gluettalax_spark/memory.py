@@ -56,28 +56,3 @@ def clear_session_df_caches() -> None:
     for cache in SESSION_DF_CACHES:
         cache.clear()
 
-
-def multi_cut(df):
-    """Multi-consumer lineage cut with an env-selectable style — the r13
-    per-key A/B instrument (VERDICT r12 #1: A/B the four cut styles on
-    each regressed key, keep the winner). Styles:
-
-    * ``persist``     — lazy columnar cache (the r12 default);
-    * ``lazy_ckpt``   — localCheckpoint(eager=False): plan truncation,
-      upstream stages still execute at call time under AQE;
-    * ``eager_ckpt``  — localCheckpoint(eager=True): adds a blocking
-      block-materialization job per call;
-    * ``none``        — no cut (consumers recompute the subtree).
-
-    Production code paths hard-code each site's measured winner; this
-    helper only remains on sites still under A/B."""
-    import os
-
-    style = os.environ.get("SPARK_GRAFT_CUT_STYLE", "persist")
-    if style == "persist":
-        return df.persist(CKPT_LEVEL)
-    if style == "lazy_ckpt":
-        return df.localCheckpoint(eager=False, storageLevel=CKPT_LEVEL)
-    if style == "eager_ckpt":
-        return df.localCheckpoint(eager=True, storageLevel=CKPT_LEVEL)
-    return df

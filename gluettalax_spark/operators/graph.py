@@ -20,8 +20,6 @@ MapReduce and Beyond") — same join primitive, provably fewer rounds.
 
 from __future__ import annotations
 
-import os
-
 from gluettalax_spark.memory import CKPT_LEVEL
 
 from pyspark.sql import DataFrame, SparkSession
@@ -142,14 +140,16 @@ def connected_components(edges: DataFrame, src: str = "u", dst: str = "v") -> Da
     # over the new generation alone — the same single job that
     # materializes the lazy checkpoint, one join fewer per round.
     # decimal(38,0) keeps the sum exact at any node-id scale. Only valid
-    # for NUMERIC labels (ids); string node keys (the fuzzy-name graph)
+    # for INTEGRAL labels (ids, or decimals of scale 0): a fractional
+    # decimal would round in that cast, so two rounds could sum equal
+    # while labels still move. String node keys (the fuzzy-name graph)
     # keep the join-probe — min() still decreases lexicographically but
     # has no exact sum.
     from pyspark.sql.types import ByteType, DecimalType, IntegerType, LongType, ShortType
 
-    sum_probe = isinstance(
-        labels.schema["lab"].dataType,
-        (ByteType, ShortType, IntegerType, LongType, DecimalType),
+    lab_type = labels.schema["lab"].dataType
+    sum_probe = isinstance(lab_type, (ByteType, ShortType, IntegerType, LongType)) or (
+        isinstance(lab_type, DecimalType) and lab_type.scale == 0
     )
     prev_sum = None
     for _ in range(_FALLOVER_ROUNDS):
@@ -170,7 +170,8 @@ def connected_components(edges: DataFrame, src: str = "u", dst: str = "v") -> Da
             cur_sum = new_labels.agg(
                 F.sum(F.col("lab").cast("decimal(38,0)")).alias("s")
             ).collect()[0]["s"]
-            done = cur_sum == prev_sum
+            # A NULL sum (no labels) proves nothing: not converged.
+            done = cur_sum is not None and cur_sum == prev_sum
             prev_sum = cur_sum
         else:
             done = (
@@ -622,10 +623,6 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 _PR_ITERS = 8
-# Rounds per lineage cut (round fusion, r13): each pagerank round
-# references its predecessor once, so the plan grows linearly between
-# cuts; env-overridable ONLY for the A/B harness.
-_PR_CKPT_EVERY = int(os.environ.get("SPARK_GRAFT_PR_CKPT_EVERY", "4"))
 _PR_TOPK = 20
 # Fixed-point arithmetic for the rank vector: ranks live in integer
 # units of 1e-12 ("e12"), damping 0.85 is the exact rational 85/100, and
@@ -704,74 +701,75 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor losses keep it slightly under SCALE, identically on both
     engines.
 
-    Scale shape: the adjacency is built once (basket explode + support
-    prune), symmetrized map-side, pre-joined with the degree table, and
-    FROZEN with localCheckpoint — each of the 8 iterations is then
-    exactly one equi-join (adjacency x ranks, both hash-partitioned on
-    the node key) plus one aggregation; ranks are checkpointed every
-    `_PR_CKPT_EVERY` iterations (round fusion, r13 — one rank-join per
-    round keeps the un-cut plan linear, so a handful of rounds share a
-    cut and the per-round driver-blocking checkpoint barriers drop with
-    it; unbounded unrolling is still avoided — lineage blow-up is the
-    classic iterative-DataFrame failure mode). On a real cluster the
-    adjacency would be a bucketed table so
-    the per-iteration join co-locates without reshuffling the static
-    side; the rank side is (node, long) — the narrowest possible
-    shuffle.
+    Scale shape: vertex-state message passing (the Pregel form). The
+    state is one row per node, (n, nbrs, r), built once by one
+    aggregate over the map-side symmetrized edges. Each round explodes
+    every node into its own state row (nbrs, no contribution) plus one
+    message (neighbour, r DIV degree) per neighbour, and ONE groupBy(n)
+    puts each node's adjacency and incoming contributions back
+    together: one hash exchange per round, no join, no broadcast, no
+    cut. The adjacency travels with the round's shuffle instead of
+    being re-joined against a cached copy. ``flatten(collect_list)``
+    (ObjectHashAggregate) rebuilds the list — ``collect_list`` skips
+    the messages' NULL lists, so each node gets back exactly its own;
+    ``max(nbrs)`` would plan as SortAggregate and add two sorts per
+    round. Each round references its predecessor once, so the logical
+    plan grows linearly; it is cut once, after the last round, because
+    the mass and the top-k both read the final ranks. Degree is
+    ``size(nbrs)``, so no degree join remains either.
     """
-    edges = cooccurrence_edges(spark, sf_dir).persist(CKPT_LEVEL)
-
-    sym = edges.select(F.col("pa").alias("src"), F.col("pb").alias("dst")).unionAll(
-        edges.select(F.col("pb").alias("src"), F.col("pa").alias("dst"))
+    sym = cooccurrence_edges(spark, sf_dir).select(
+        F.explode(
+            F.array(
+                F.struct(F.col("pa").alias("src"), F.col("pb").alias("dst")),
+                F.struct(F.col("pb").alias("src"), F.col("pa").alias("dst")),
+            )
+        ).alias("e")
     )
-    deg = sym.groupBy(F.col("src").alias("n")).agg(F.count(F.lit(1)).alias("d"))
-    # Static per-iteration input: (src, dst, d_src), frozen once.
-    adj = (
-        sym.join(deg.withColumnRenamed("n", "src"), "src")
-        .select("src", "dst", F.col("d").alias("d_src"))
+    nodes = (
+        sym.groupBy(F.col("e.src").alias("n"))
+        .agg(F.collect_list("e.dst").alias("nbrs"))
         .persist(CKPT_LEVEL)
     )
 
-    n_nodes = deg.count()
+    n_nodes = nodes.count()
     if n_nodes == 0:
         # Support-pruned graph can be empty; an empty result beats a
         # divide-by-zero in the teleport term.
         return spark.createDataFrame([], "part long, rank_e12 long, degree long, mass_e12 long")
     base = _PR_TELEPORT_E12 // n_nodes
-    ranks = deg.select("n", F.lit(_PR_SCALE // n_nodes).cast("long").alias("r"))
-    for it in range(1, _PR_ITERS + 1):
-        contribs = (
-            adj.join(ranks.withColumnRenamed("n", "src"), "src")
-            .groupBy(F.col("dst").alias("n"))
-            .agg(F.sum(F.expr("r DIV d_src")).alias("in_sum"))
+    state = nodes.select("n", "nbrs", F.lit(_PR_SCALE // n_nodes).cast("long").alias("r"))
+    for _ in range(_PR_ITERS):
+        msgs = state.select(
+            F.explode(
+                F.expr(
+                    "concat(array(named_struct('n', n, 'nbrs', nbrs, 'c', 0L)), "
+                    "transform(nbrs, x -> named_struct('n', x, 'nbrs', CAST(NULL AS "
+                    "array<long>), 'c', r DIV size(nbrs))))"
+                )
+            ).alias("m")
         )
-        ranks = contribs.select(
-            "n",
-            (F.lit(base) + F.expr("(85 * in_sum) DIV 100")).cast("long").alias("r"),
+        state = (
+            msgs.groupBy(F.col("m.n").alias("n"))
+            .agg(
+                F.flatten(F.collect_list("m.nbrs")).alias("nbrs"),
+                F.sum("m.c").alias("in_sum"),
+            )
+            .select(
+                "n",
+                "nbrs",
+                (F.lit(base) + F.expr("(85 * in_sum) DIV 100")).cast("long").alias("r"),
+            )
         )
-        # Round FUSION (r13, VERDICT r12 #7): each round references its
-        # predecessor exactly ONCE (join + aggregate), so the un-cut
-        # logical plan grows LINEARLY and several rounds can ride one
-        # lineage cut — under AQE every lazy localCheckpoint call
-        # executes all upstream stages as driver-blocking work, so
-        # fusing rounds removes (ITERS − ITERS/K) of those barriers and
-        # block materializations while executing the same shuffles.
-        # Cut cadence measured in the r13 A/B (see OPTIMIZATION_r13.md);
-        # the final round is ALWAYS cut: mass + the deg join both
-        # consume `ranks`, and without the cut the whole chain would
-        # execute twice. Lazy localCheckpoint, NOT persist — the r12
-        # A/B measured the 8-deep InMemoryRelation chain 3x slower
-        # (7.7 s vs 2.5 s builder+count).
-        if it % _PR_CKPT_EVERY == 0 or it == _PR_ITERS:
-            ranks = ranks.localCheckpoint(eager=False, storageLevel=CKPT_LEVEL)
+    # The one cut: the mass and the top-k both read the final ranks.
+    ranks = state.localCheckpoint(eager=False, storageLevel=CKPT_LEVEL)
 
     mass = ranks.agg(F.sum("r").cast("long").alias("mass_e12"))
     return (
-        ranks.join(deg, "n")
-        .select(
+        ranks.select(
             F.col("n").alias("part"),
             F.col("r").alias("rank_e12"),
-            F.col("d").cast("long").alias("degree"),
+            F.size("nbrs").cast("long").alias("degree"),
         )
         .orderBy(F.desc("rank_e12"), F.asc("part"))
         .limit(_PR_TOPK)
@@ -859,7 +857,9 @@ def _lpa_edges_and_labels(spark: SparkSession, sf_dir: str):
             # persist, not localCheckpoint (r12): AQE executes upstream
             # stages at even a lazy checkpoint call — 3 blocking builder
             # jobs; the CacheManager substitution keeps plans one round
-            # deep with zero build-time execution (see graph_pagerank).
+            # deep with zero build-time execution. (graph_pagerank needs
+            # neither: its message-passing round reads its predecessor
+            # once, so its plan grows linearly and takes one final cut.)
             .persist(CKPT_LEVEL)
         )
     return edges, labels
@@ -1035,7 +1035,7 @@ def sql_recursive_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: each recursion level is one equi-join of the frontier
     against the edge set (the same per-round join every hand-rolled loop
-    in this module does — CC, LPA, PageRank); the depth cap bounds the
+    in this module does — CC, LPA); the depth cap bounds the
     path fan-out at out-degree^depth over a support-pruned sparse graph.
     The engine-level win being demonstrated: the loop lives INSIDE one
     declarative query (no driver-side iteration, no per-round checkpoint

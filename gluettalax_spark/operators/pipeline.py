@@ -452,22 +452,24 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows, which would push every customer row (~1.5B at 100×) through
     one task three times.
 
-    Single-pass fusion (r13, guide §2.1/§2.3 — VERDICT r12 #8): the r12
-    form CHAINED three exact_global_rank passes, each a range exchange
-    of progressively wider rows plus its own isolation checkpoint (the
-    r5 rank-determinism contract). All three metrics now ride ONE pass:
-    each customer row explodes map-side into three (tag, sortval,
-    custkey) rows — DESC metrics negate their integer sort value, so
-    (sortval ASC, custkey ASC) reproduces each oracle window's order
-    exactly (monetary is 2-dp decimal, so cents = monetary·100 is an
-    exact long) — and the global rank over (tag, sortval, custkey)
-    yields each metric's in-tag rank as rn − tag·N (every tag block
-    holds exactly N = _n/3 rows). One range exchange of three narrow
-    rows per customer, ONE isolation checkpoint, one pivot aggregate;
-    ranks (hence quartiles) stay total-order exact and the oracle keeps
-    the one-window SQL form."""
-    from gluettalax_spark.memory import multi_cut
+    Single-pass fusion (r13, guide §2.1/§2.3 — VERDICT r12 #8): all
+    three metrics ride ONE rank pass. Each customer row explodes
+    map-side into three (tag, sortval, custkey) rows — DESC metrics
+    negate their integer sort value, so (sortval ASC, custkey ASC)
+    reproduces each oracle window's order exactly (monetary is a DOUBLE
+    rounded to 2 dp, so its cents are rounded, not truncated, to an
+    exact long: 0.29·100 is 28.999…) — and the global rank over (tag,
+    sortval, custkey) yields each metric's in-tag rank as rn − tag·N
+    (every tag block holds exactly N = _n/3 rows). One range exchange
+    of three rows per customer, ONE isolation checkpoint, one pivot
+    aggregate; ranks (hence quartiles) stay total-order exact and the
+    oracle keeps the one-window SQL form.
 
+    Every tagged row also carries the customer's three metric values,
+    so the pivot aggregate, which already shuffles on o_custkey, takes
+    them back with ``max`` (the same value on all three rows). The
+    metric aggregate therefore has one consumer: it needs no cut and no
+    join back onto the quartiles."""
     orders = load(spark, sf_dir, "orders")
     anchor = F.lit("2002-01-01 00:00:00").cast("timestamp")
     base = orders.groupBy("o_custkey").agg(
@@ -475,9 +477,10 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("frequency"),
         F.round(F.sum("o_totalprice"), 2).alias("monetary"),
     )
-    base = multi_cut(base)  # feeds the tagged explode AND the value join
+    metrics = ["recency_days", "frequency", "monetary"]
     tagged = base.select(
         "o_custkey",
+        *metrics,
         F.explode(
             F.array(
                 F.struct(
@@ -490,36 +493,28 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
                 F.struct(
                     F.lit(2).cast("long").alias("tag"),
-                    (-(F.col("monetary") * 100)).cast("long").alias("sortval"),
+                    (-F.round(F.col("monetary") * 100)).cast("long").alias("sortval"),
                 ),
             )
         ).alias("_t"),
-    ).select(F.col("_t.tag").alias("tag"), F.col("_t.sortval").alias("sortval"), "o_custkey")
+    ).select(
+        F.col("_t.tag").alias("tag"), F.col("_t.sortval").alias("sortval"), "o_custkey", *metrics
+    )
     ranked = exact_global_rank(tagged, [F.col("tag"), F.col("sortval"), F.col("o_custkey")], "_rn")
     n_tag = F.expr("_n DIV 3")
-    quart = (
+    return (
         ranked.select(
             "o_custkey",
+            *metrics,
             "tag",
             ntile_from_rank(F.col("_rn") - F.col("tag") * n_tag, n_tag, 4).alias("_q"),
         )
         .groupBy("o_custkey")
         .agg(
+            *[F.max(m).alias(m) for m in metrics],
             F.max(F.when(F.col("tag") == 0, F.col("_q"))).alias("r_quartile"),
             F.max(F.when(F.col("tag") == 1, F.col("_q"))).alias("f_quartile"),
             F.max(F.when(F.col("tag") == 2, F.col("_q"))).alias("m_quartile"),
-        )
-    )
-    return (
-        base.join(quart, "o_custkey")
-        .select(
-            "o_custkey",
-            "recency_days",
-            "frequency",
-            "monetary",
-            "r_quartile",
-            "f_quartile",
-            "m_quartile",
         )
         .orderBy("o_custkey")
     )

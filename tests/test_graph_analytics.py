@@ -244,3 +244,22 @@ def test_pagerank_plan_stays_one_iteration_deep(spark, sf_dir):
     # One rank join + one degree join at most remain visible above the
     # checkpoint boundary.
     assert plan.count("SortMergeJoin") + plan.count("ShuffledHashJoin") + plan.count("BroadcastHashJoin") <= 3, plan
+
+
+def test_cc_decimal_ids_match_join_probe(spark):
+    """Fractional DECIMAL node ids must not take the label-sum probe: its
+    decimal(38,0) cast rounds 1.10..1.40 all to 1, so the sum stops
+    moving while labels still do. The DOUBLE copy of the same graph runs
+    the join probe and is the reference."""
+    from pyspark.sql import functions as F
+
+    from gluettalax_spark.operators.graph import connected_components
+
+    chain = [("1.10", "1.20"), ("1.20", "1.30"), ("1.30", "1.40"), ("2.50", "2.60")]
+    edges = spark.createDataFrame(chain, "u string, v string")
+    dec = edges.select(F.col("u").cast("decimal(10,2)"), F.col("v").cast("decimal(10,2)"))
+    dbl = edges.select(F.col("u").cast("double"), F.col("v").cast("double"))
+    got = {(float(r.node), float(r.component)) for r in connected_components(dec).collect()}
+    want = {(r.node, r.component) for r in connected_components(dbl).collect()}
+    assert want == {(1.1, 1.1), (1.2, 1.1), (1.3, 1.1), (1.4, 1.1), (2.5, 2.5), (2.6, 2.5)}
+    assert got == want

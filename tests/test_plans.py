@@ -496,6 +496,84 @@ def test_rfm_segments_no_single_task_window(spark, sf_dir):
             assert "_pid" in ln or "o_custkey" in ln, ln
 
 
+def _run_in_job_group(spark, action) -> tuple[int, list[str]]:
+    """(Spark jobs, physical plans of the SQL executions) that ``action``
+    ran — the plans include the stages a lazy localCheckpoint executes,
+    which the returned frame's own plan hides behind its ExistingRDD."""
+    import uuid
+
+    sc = spark.sparkContext
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions_after(last_id: int) -> list:
+        execs = store.executionsList()  # ascending execution ids
+        out, i = [], execs.size() - 1
+        while i >= 0 and execs.apply(i).executionId() > last_id:
+            out.append(execs.apply(i))
+            i -= 1
+        return out
+
+    # Both stores are fed by the asynchronous listener bus.
+    drain = sc._jsc.sc().listenerBus().waitUntilEmpty
+    drain()
+    execs = store.executionsList()
+    last_id = execs.apply(execs.size() - 1).executionId() if execs.size() else -1
+    group = f"budget_{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "job budget")
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    drain()
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    plans = [e.physicalPlanDescription() for e in executions_after(last_id)]
+    return jobs, plans
+
+
+# Spark jobs of one graph_pagerank builder + count() on the sf0.001
+# fixture with a cold cache, when each round was a rank join plus an
+# aggregate with a cut every 4 rounds and a final degree join.
+_PAGERANK_JOBS_JOIN_ROUNDS = 36
+
+
+def test_pagerank_job_budget_and_plan_shape(spark, sf_dir):
+    """Each PageRank round is one hash exchange: message explode +
+    groupBy, no join, no broadcast, no sort-based aggregate — in the
+    rounds the lineage cut executes as well as in the final plan."""
+    jobs, plans = _run_in_job_group(
+        spark, lambda: queries()["graph_pagerank"](spark, sf_dir).count()
+    )
+    assert 0 < jobs <= _PAGERANK_JOBS_JOIN_ROUNDS // 2, jobs
+    assert plans
+    plans.append(physical_plan(queries()["graph_pagerank"](spark, sf_dir)))
+    for plan in plans:
+        for op in ("SortMergeJoin", "ShuffledHashJoin", "BroadcastHashJoin", "SortAggregate"):
+            assert op not in plan, (op, plan)
+
+
+def test_rfm_segments_no_custkey_join_and_one_cut(spark, sf_dir):
+    """The metric values ride the tagged rows into the pivot aggregate,
+    so nothing joins back on o_custkey and the only storage a call
+    leaves behind is the exact rank's isolation checkpoint."""
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    built = []
+    _, plans = _run_in_job_group(
+        spark, lambda: built.append(queries()["customer_rfm_segments"](spark, sf_dir).count())
+    )
+    new = {k: v for k, v in jsc.getPersistentRDDs().items() if k not in before}
+    assert len(new) == 1, new
+    assert "localCheckpoint" in str(next(iter(new.values())).toString()), new
+    assert built and built[0] > 0
+    plans.append(physical_plan(queries()["customer_rfm_segments"](spark, sf_dir)))
+    for plan in plans:
+        for ln in plan.splitlines():
+            # One-line join nodes carry their keys inline; the formatted
+            # form lists them under the node as "Left keys"/"Right keys".
+            is_join = "Join" in ln or ln.startswith(("Left keys", "Right keys"))
+            assert not (is_join and "o_custkey" in ln), ln
+
+
 def test_pareto_take_ordered_no_full_rank(spark, sf_dir):
     """Top-50 must plan as TakeOrderedAndProject; the only global-order
     window allowed is the one over the 50-row limit output."""

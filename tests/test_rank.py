@@ -151,3 +151,33 @@ def test_grouped_running_sum_no_group_partitioned_data_window(spark):
             # the offsets prefix window orders by _pid — anything else
             # would be the single-task-per-group shape we banned
             raise AssertionError(f"group-only data window in plan: {ln.strip()[:160]}")
+
+
+def test_rfm_monetary_quartile_rounds_cents(spark, tmp_path):
+    """monetary is a DOUBLE: 0.29 * 100 is 28.999..., so truncated cents
+    would tie 0.29 with 0.28 and hand the order to the custkey tiebreak.
+    The 0.29 customer sits on the larger custkey so a tie flips them."""
+    import datetime as dt
+
+    import duckdb
+    import pandas as pd
+
+    from gluettalax_spark.registry import all_queries
+
+    orders = pd.DataFrame(
+        {
+            "o_orderkey": [1, 2, 3, 4],
+            "o_custkey": [1, 2, 3, 4],
+            "o_totalprice": [0.28, 0.29, 5.00, 0.10],
+            "o_orderdate": [dt.datetime(1998, 1, d) for d in (1, 2, 3, 4)],
+        }
+    )
+    orders.to_parquet(tmp_path / "orders.parquet", index=False, coerce_timestamps="us")
+    spec = all_queries()["customer_rfm_segments"]
+    got = {r["o_custkey"]: r["m_quartile"] for r in spec.builder(spark, str(tmp_path)).collect()}
+    con = duckdb.connect()
+    con.register("orders", orders)
+    want = dict(con.execute(spec.oracle).df()[["o_custkey", "m_quartile"]].values.tolist())
+    con.close()
+    assert want == {3: 1, 2: 2, 1: 3, 4: 4}  # ORDER BY monetary DESC, o_custkey
+    assert got == want
