@@ -713,21 +713,27 @@ def _pq_model_np(sf_dir: str):
     return _MODEL_CACHE[key]
 
 
-def _ivfpq_model(spark: SparkSession, sf_dir: str):
+def _ivfpq_model(sf_dir: str):
     """(nlist, nprobe, centers, books, dim) for the IVFADC index of
-    ``sf_dir`` — coarse quantizer + residual-trained PQ codebooks."""
+    ``sf_dir`` — coarse quantizer + residual-trained PQ codebooks.
+
+    The training sample is the first PQ_TRAIN_SAMPLE vectors BY vec_id,
+    read like :func:`_ivf_centers_np` and :func:`_pq_model_np` read theirs
+    (a bare ``limit`` would follow the file's row order), so the model
+    does not depend on how the corpus file is laid out."""
     import numpy as np
+    import pandas as pd
 
     key = ("ivfpq", fixture_fingerprint(sf_dir, "embeddings"))
     if key not in _MODEL_CACHE:
-        emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-        # Coarse geometry scales with the corpus (√n sizing); count() on
-        # parquet is a metadata-only read, not a data scan.
-        nlist, nprobe = _pq_geometry(emb.count())
+        pdf = pd.read_parquet(
+            f"{sf_dir}/embeddings.parquet", columns=["vec_id", "embedding"]
+        ).sort_values("vec_id")
+        # Coarse geometry scales with the corpus (√n sizing).
+        nlist, nprobe = _pq_geometry(len(pdf))
         # One driver-side training sample feeds BOTH quantizers; the PQ
         # codebooks train on coarse residuals, not raw vectors.
-        sample = emb.select("embedding").limit(PQ_TRAIN_SAMPLE).collect()
-        X = np.asarray([r["embedding"] for r in sample], dtype=np.float64)
+        X = np.asarray(pdf["embedding"].tolist(), dtype=np.float64)[:PQ_TRAIN_SAMPLE]
         centers = _lloyd(X, nlist, PQ_ITERS, SEED)
         x_assign = (
             (X**2).sum(1)[:, None] - 2.0 * X @ centers.T + (centers**2).sum(1)[None, :]
@@ -1031,7 +1037,7 @@ def _ivfpq_scored(spark: SparkSession, sf_dir: str):
 
     # --- coarse quantizer + residual PQ codebooks, trained once per
     # corpus dir and cached (the ANN build/search split).
-    nlist, nprobe, centers, books, dim = _ivfpq_model(spark, sf_dir)
+    nlist, nprobe, centers, books, dim = _ivfpq_model(sf_dir)
     d_sub = dim // PQ_M
     sc = spark.sparkContext
     b_books = sc.broadcast([b.tolist() for b in books])

@@ -300,7 +300,13 @@ def _list_leaf_dirs(spark: SparkSession, location: str) -> list[str]:
     """Distinct sorted parent dirs of all files under a prefix — the
     reference's flat-S3-listing → dirname → set → sorted (gluettalax.py:
     398-405) via the Hadoop FileSystem API (works for file://, s3a://,
-    hdfs:// alike)."""
+    hdfs:// alike).
+
+    The walk descends into every directory, hidden ones included, as
+    ``fs.listFiles(path, True)`` does. It uses ``listStatus`` instead
+    because every ``LocatedFileStatus`` that ``listFiles`` builds loads
+    the file's permissions, which the local filesystem does by forking
+    ``ls -ld`` when Hadoop's native library is absent."""
     jvm = spark.sparkContext._jvm
     conf = spark.sparkContext._jsc.hadoopConfiguration()
     path = jvm.org.apache.hadoop.fs.Path(location)
@@ -308,15 +314,19 @@ def _list_leaf_dirs(spark: SparkSession, location: str) -> list[str]:
     if not fs.exists(path):
         return []
     dirs: set[str] = set()
-    it = fs.listFiles(path, True)
-    while it.hasNext():
-        f = it.next()
-        name = str(f.getPath().getName())
-        # Ignore metadata/hidden files (_SUCCESS, .crc, ...) — Spark/Hadoop
-        # convention; they'd otherwise make every base dir look like a leaf.
-        if name.startswith(("_", ".")):
-            continue
-        dirs.add(str(f.getPath().getParent().toUri().getPath()))
+    todo = [path]
+    while todo:
+        leaf = False  # one visible file makes its dir a leaf
+        for st in fs.listStatus(todo.pop()):
+            p = st.getPath()
+            if st.isDirectory():
+                todo.append(p)
+            # Ignore metadata/hidden files (_SUCCESS, .crc, ...) — Spark/
+            # Hadoop convention; they'd otherwise make every base dir look
+            # like a leaf.
+            elif not leaf and not str(p.getName()).startswith(("_", ".")):
+                leaf = True
+                dirs.add(str(p.getParent().toUri().getPath()))
     return sorted(dirs)
 
 

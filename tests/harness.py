@@ -3,12 +3,14 @@
 Row-count + column-name + order-insensitive value compare, with tolerant
 float matching (the driver hashes values; we additionally allow a tiny
 relative tolerance so a genuine semantic mismatch is distinguishable from
-last-ulp float noise when debugging).
+last-ulp float noise when debugging). Also the Spark-job counter the
+"runs no job" tests share.
 """
 
 from __future__ import annotations
 
 import math
+import uuid
 from datetime import date, datetime
 
 import pandas as pd
@@ -73,3 +75,16 @@ def exact_hash_compare(spark_df, oracle_pdf: pd.DataFrame) -> bool:
     """Strict bit-for-bit check (what a hash-based driver would see)."""
     spark_pdf = spark_df.toPandas()
     return _normalize(spark_pdf) == _normalize(oracle_pdf)
+
+
+def jobs_in_group(spark, fn) -> list[int]:
+    """Ids of the Spark jobs that ``fn()`` runs, read from the status
+    tracker through a job group of its own."""
+    sc = spark.sparkContext
+    group = f"jobs_{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "jobs_in_group")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return list(sc.statusTracker().getJobIdsForGroup(group))

@@ -175,6 +175,29 @@ def test_pq_topk_shape_and_recall(spark, sf_dir):
     assert len(embedded) == 1 and abs(embedded.pop() - round(recall, 4)) <= 1e-9
 
 
+def test_ivfpq_model_ignores_corpus_row_order(sf_dir, tmp_path):
+    """The IVF-PQ training sample is the first vectors by vec_id, not the
+    first rows of the file: a copy of the corpus with its rows permuted
+    trains array-equal coarse centers and residual codebooks."""
+    import pyarrow.parquet as pq
+
+    from gluettalax_spark.operators.ann import _ivfpq_model
+
+    tbl = pq.read_table(f"{sf_dir}/embeddings.parquet")
+    perm = np.random.default_rng(7).permutation(tbl.num_rows)
+    assert (perm != np.arange(tbl.num_rows)).any()
+    for d, t in (("sorted", tbl), ("permuted", tbl.take(perm))):
+        (tmp_path / d).mkdir()
+        pq.write_table(t, str(tmp_path / d / "embeddings.parquet"))
+    a = _ivfpq_model(str(tmp_path / "sorted"))
+    b = _ivfpq_model(str(tmp_path / "permuted"))
+    assert a[:2] == b[:2] and a[4] == b[4]  # nlist, nprobe, dim
+    np.testing.assert_array_equal(a[2], b[2])
+    assert len(a[3]) == len(b[3])
+    for book_a, book_b in zip(a[3], b[3]):
+        np.testing.assert_array_equal(book_a, book_b)
+
+
 @pytest.mark.slow  # gate tier (make gate): heavyweight recompute/replay (r13 tiering)
 def test_ivfpq_topk_shape_and_recall(spark, sf_dir):
     from gluettalax_spark.operators.ann import similarity_topk_ivfpq

@@ -25,6 +25,7 @@ from gluettalax_spark.exceptions import (
     TableNotFound,
 )
 from gluettalax_spark.plans import catalog as cat
+from tests.harness import jobs_in_group
 
 
 @pytest.fixture()
@@ -186,6 +187,30 @@ def test_add_partitions_by_location_splits_new_existing_skipped(spark, db, usage
     assert result == {"added": leaves[1:], "skipped": [bogus], "existed": [existing]}
     listed = cat.list_partitions(spark, db, "usage").data
     assert sorted(row[-1] for row in listed) == [f"file:{d}" for d in leaves]
+
+
+def test_add_partitions_by_location_walks_hidden_dirs(spark, db, usage_table):
+    """The listing descends into hidden and ``_`` directories, as a
+    recursive ``listFiles`` does, so a half-written job's
+    ``_temporary/0/`` lands in ``skipped``; only FILES named ``_*``/``.*``
+    are ignored, so a dir holding nothing else is not a leaf."""
+    import os
+
+    leaves = sorted(
+        root for root, _dirs, files in os.walk(usage_table)
+        if any(not f.startswith(("_", ".")) for f in files)
+    )
+    temporary = os.path.join(usage_table, "_temporary", "0")
+    staging = os.path.join(usage_table, ".staging")
+    marker_only = os.path.join(usage_table, "year=2098", "month=01")
+    for d, f in ((temporary, "part-0.parquet"), (staging, "part-1.parquet"),
+                 (marker_only, "_SUCCESS"), (marker_only, ".part-2.crc")):
+        os.makedirs(d, exist_ok=True)
+        with open(os.path.join(d, f), "wb") as fh:
+            fh.write(b"x")
+
+    result = cat.add_partitions_by_location(spark, db, "usage")
+    assert result == {"added": leaves, "skipped": sorted([temporary, staging]), "existed": []}
 
 
 def test_derive_partition_location():
@@ -401,23 +426,13 @@ def test_last_runs_per_job_matches_window_plan(spark, lines):
 def test_control_plane_reads_run_no_spark_job(spark, db, usage_table):
     """History and partition listing are served from the registry and the
     session catalog: no Spark job runs in their job group."""
-    sc = spark.sparkContext
     reg = _history_registry()
     cat.add_partitions_by_location(spark, db, "usage")
 
-    def jobs_in_group(read) -> list[int]:
-        group = f"reads_{uuid.uuid4().hex[:8]}"
-        sc.setJobGroup(group, "control-plane reads")
-        try:
-            read()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return list(sc.statusTracker().getJobIdsForGroup(group))
-
-    assert jobs_in_group(lambda: spark.range(3).count())  # the probe sees jobs
-    assert jobs_in_group(lambda: reg.list_runs(spark, "a_job", lines=2)) == []
-    assert jobs_in_group(lambda: reg.last_runs_per_job(spark, lines=2)) == []
-    assert jobs_in_group(lambda: cat.list_partitions(spark, db, "usage")) == []
+    assert jobs_in_group(spark, lambda: spark.range(3).count())  # the probe sees jobs
+    assert jobs_in_group(spark, lambda: reg.list_runs(spark, "a_job", lines=2)) == []
+    assert jobs_in_group(spark, lambda: reg.last_runs_per_job(spark, lines=2)) == []
+    assert jobs_in_group(spark, lambda: cat.list_partitions(spark, db, "usage")) == []
 
 
 def test_builtin_jobs_run_via_cli_registry(spark):

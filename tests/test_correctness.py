@@ -8,7 +8,7 @@ from __future__ import annotations
 
 import pytest
 
-from gluettalax_spark import registry
+from gluettalax_spark import registry, tables
 from tests.harness import compare, exact_hash_compare
 
 SPECS = registry.all_queries()
@@ -34,6 +34,27 @@ def test_query_matches_oracle(name, spark, sf_dir, oracle_con):
     )
 
 
+def _inferred_read(spark, sf_dir, name):
+    """The read without a cache: schema inferred from the footer on each
+    call, events under the legacy nanos conf, then ts-normalized."""
+    path = f"{sf_dir}/{name}.parquet"
+    if name != "events":
+        return spark.read.parquet(path)
+    with tables._events_legacy_nanos_conf(spark):
+        df = spark.read.parquet(path)
+    return tables._normalize_events_ts(df)
+
+
+@pytest.mark.parametrize("name", tables.TABLES)
+def test_fixture_load_matches_inferred_read(spark, sf_dir, name):
+    """``tables.load`` reads with a cached schema; every fixture table must
+    come back with the schema and rows of the inferred read."""
+    got = tables.load(spark, sf_dir, name)
+    ref = _inferred_read(spark, sf_dir, name)
+    assert got.schema == ref.schema
+    assert sorted(map(repr, got.collect())) == sorted(map(repr, ref.collect()))
+
+
 def test_entry_smoke(spark):
     import __spark_entry__ as e
 
@@ -55,7 +76,7 @@ def test_contract_shape():
 def test_sampling_rotation_names_are_registered():
     """Every _NEW_THIS_ROUND key must exist in the registry — a typo here
     silently demotes a query out of the driver's sampling priority."""
-    from gluettalax_spark import registry
+    from gluettalax_spark import registry, tables
 
     missing = [n for n in registry._NEW_THIS_ROUND if n not in registry.all_queries()]
     assert not missing, missing
