@@ -23,7 +23,7 @@ every later query a pruned scan + local re-rank.
 
 from __future__ import annotations
 
-from gluettalax_spark.memory import CKPT_LEVEL
+from gluettalax_spark.memory import CKPT_LEVEL, register_session_df_cache
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -171,6 +171,12 @@ def _centers_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# The checkpointed IVF-assigned corpus per (corpus, SparkContext): a
+# session-scoped DataFrame memo, so a wholesale storage release clears it
+# with its blocks. The numpy models stay in ``_MODEL_CACHE``.
+_ASSIGN_CACHE: dict[tuple, tuple] = register_session_df_cache({})
+
+
 def _assignments(spark: SparkSession, sf_dir: str):
     """(vec_id, label, embedding, cell) + the fitted centroid list.
 
@@ -187,8 +193,8 @@ def _assignments(spark: SparkSession, sf_dir: str):
     cell structure is DuckDB-replayable from the centroid literals."""
     # Keyed on the application id too: unlike the numpy-only PQ models,
     # a cached DataFrame dies with its SparkContext.
-    key = ("ivf-assign", fixture_fingerprint(sf_dir, "embeddings"), spark.sparkContext.applicationId)
-    if key not in _MODEL_CACHE:
+    key = (fixture_fingerprint(sf_dir, "embeddings"), spark.sparkContext.applicationId)
+    if key not in _ASSIGN_CACHE:
         import numpy as np
 
         # Spread the scan (optimization r12): the NLIST×N sqdist folds of
@@ -237,8 +243,8 @@ def _assignments(spark: SparkSession, sf_dir: str):
             .localCheckpoint(eager=True, storageLevel=CKPT_LEVEL)
         )
         centers = [np.asarray(c) for c in np.asarray(_ivf_centers_np(sf_dir))]
-        _MODEL_CACHE[key] = (assigned, centers)
-    return _MODEL_CACHE[key]
+        _ASSIGN_CACHE[key] = (assigned, centers)
+    return _ASSIGN_CACHE[key]
 
 
 def _ivf_topk_ctes(sf_dir: str) -> str:

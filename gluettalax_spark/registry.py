@@ -10,6 +10,10 @@ Every data-plane operator registers itself here with:
 Column names must match between builder output and oracle (the driver
 sorts columns by name before value-hashing), so builders alias every
 computed column and oracles use the same ``AS`` names.
+
+``queries()`` lists keys in one fixed order (see ``_sample_priority``):
+the TPC-H queries by number, then the ``window_``/``text_``/``stream_``/
+``events_`` families, then the rest in registration order.
 """
 
 from __future__ import annotations
@@ -97,51 +101,14 @@ def register(
     return wrap
 
 
-# Keys surfaced FIRST so a sampling driver gives them a verdict this
-# round. Round 11 rotation: the r10 driver sample verdicted the whole
-# r10 tuple (all 345 keys now carry a verdict — the board closed in
-# VERDICT r10), so this tuple holds only keys whose SEMANTICS changed
-# this round plus operators genuinely new in round 11.
-#
-# _ROTATION_ROUND records the round this tuple was last rotated. The
-# staleness guard
-# (tests/test_correctness.py::test_sampling_rotation_excludes_already_verdicted_keys)
-# ignores CORRECTNESS_r{N}.json deposits with N >= _ROTATION_ROUND: the
-# current round's deposit NECESSARILY verdicts the current rotation, and
-# treating that as staleness shipped the suite red after every driver
-# drop in rounds 6 and 7 (VERDICT r7 "What's wrong" #1).
-_ROTATION_ROUND = 13
-
-# Keys whose CONTRACT (output schema, oracle, or cross-engine character
-# source) changed this round: they already carry a prior-round verdict,
-# but that verdict certified the OLD semantics, so re-surfacing them is
-# the point, not a wasted slot — the staleness guard exempts exactly
-# this tuple (tests/test_correctness.py).
-_RECONTRACTED_THIS_ROUND: tuple[str, ...] = (
-    # r13 (VERDICT r12 #2, the last rows-only ANN key with a cheaply
-    # replayable model): rounded-argmin PQ encode + serial-fold
-    # norms/ADC sums — rows-only → fully oracle-checked from codebook
-    # literals (the r12 IVF-sibling recipe).
-    "similarity_topk_pq",
-)
-
-_NEW_THIS_ROUND: tuple[str, ...] = (
-    # -- contracts changed in round 13 (need a fresh verdict) --
-    *_RECONTRACTED_THIS_ROUND,
-    # -- operators added in round 13: none (optimization round) --
-)
-
-
 def _sample_priority(name: str) -> tuple[int, int]:
     """Ordering for ``queries()``: a driver that samples the first N keys
-    should hit this round's new keys, then the headline shapes — the 22
-    TPC-H queries, windows, text, and streaming batch oracles — before
-    the ops it already has verdicts for. Sort is stable, so registration
+    should hit the headline shapes first — the 22 TPC-H queries by
+    number, then the ``window_``, ``text_``, ``stream_`` and ``events_``
+    families, then everything else. Sort is stable, so registration
     order holds within each tier."""
     import re
 
-    if name in _NEW_THIS_ROUND:
-        return (-1, _NEW_THIS_ROUND.index(name))
     m = re.match(r"q(\d+)_", name)
     if m:
         return (0, int(m.group(1)))

@@ -36,19 +36,10 @@ def sf_dir() -> str:
 def oracle_con(sf_dir):
     """DuckDB connection with the fixture tables registered as views,
     mirroring the driver's correctness harness."""
+    from gluettalax_spark.tables import TABLES
+
     con = duckdb.connect()
-    for name in (
-        "region",
-        "nation",
-        "customer",
-        "supplier",
-        "part",
-        "orders",
-        "lineitem",
-        "events",
-        "documents",
-        "embeddings",
-    ):
+    for name in TABLES:
         con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{sf_dir}/{name}.parquet')")
     yield con
     con.close()

@@ -73,92 +73,15 @@ def test_contract_shape():
     assert set(os_) <= set(qs)
 
 
-def test_sampling_rotation_names_are_registered():
-    """Every _NEW_THIS_ROUND key must exist in the registry — a typo here
-    silently demotes a query out of the driver's sampling priority."""
-    from gluettalax_spark import registry, tables
-
-    missing = [n for n in registry._NEW_THIS_ROUND if n not in registry.all_queries()]
-    assert not missing, missing
-
-
-def _stale_rotation_keys(root, rotation, rotation_round):
-    """Keys in ``rotation`` already verdicted by a CORRECTNESS deposit from
-    a round BEFORE ``rotation_round``.
-
-    Deposits with N >= rotation_round are ignored: the current round's
-    driver drop necessarily verdicts the current rotation, and flagging
-    that shipped the suite red after every deposit (VERDICT r7 wrong #1).
-
-    A row whose every match field is null and whose ``err`` is set is a
-    harness failure, not a verdict — such keys SHOULD be re-surfaced."""
-    import glob
-    import json
-    import os
+def test_queries_order_puts_tpch_then_window_first():
+    """A driver that samples the first N keys of ``queries()`` sees the 22
+    TPC-H queries in numeric order, then the ``window_`` tier."""
     import re
 
-    seen: set[str] = set()
-    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if m and int(m.group(1)) >= rotation_round:
-            continue
-        try:
-            rows = json.load(open(path))
-        except (OSError, json.JSONDecodeError):
-            continue
-        for key, row in rows.items():
-            verdicted = not (
-                isinstance(row, dict)
-                and row.get("err")
-                and row.get("rows_match") is None
-                and row.get("schema_match") is None
-                and row.get("hash_match") is None
-            )
-            if verdicted:
-                seen.add(key)
-    return sorted(set(rotation) & seen)
-
-
-def test_sampling_rotation_excludes_already_verdicted_keys():
-    """_NEW_THIS_ROUND must be disjoint from keys that already carry a
-    driver verdict from a PRIOR round — re-surfacing a green key wastes a
-    sample slot that an unsigned key needs (VERDICT r5 nit 1)."""
-    import os
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    # Keys whose contract changed this round carry a verdict for the OLD
-    # semantics — re-surfacing them is required, not stale (registry
-    # documents each in _RECONTRACTED_THIS_ROUND).
-    rotation = [
-        k for k in registry._NEW_THIS_ROUND
-        if k not in registry._RECONTRACTED_THIS_ROUND
-    ]
-    stale = _stale_rotation_keys(root, rotation, registry._ROTATION_ROUND)
-    assert not stale, f"rotation re-surfaces already-verdicted keys: {stale}"
-    # The exemption list itself must be a subset of the rotation (a
-    # recontracted key that isn't surfaced would never get re-verdicted).
-    assert set(registry._RECONTRACTED_THIS_ROUND) <= set(registry._NEW_THIS_ROUND)
-
-
-def test_rotation_guard_ignores_current_round_deposit(tmp_path):
-    """Replay the failure mode that shipped the suite red in rounds 6–7:
-    the driver deposits CORRECTNESS_r{N}.json for the CURRENT round,
-    verdicting exactly the keys in the current rotation. The guard must
-    ignore that deposit — but still fire on a prior-round one."""
-    import json
-
-    verdict_row = {"rows_match": True, "schema_match": True, "hash_match": True, "err": None}
-
-    # Current-round deposit verdicting a rotated key → NOT stale.
-    (tmp_path / "CORRECTNESS_r08.json").write_text(json.dumps({"new_op": verdict_row}))
-    assert _stale_rotation_keys(str(tmp_path), ("new_op",), 8) == []
-
-    # Prior-round deposit verdicting the same key → stale.
-    (tmp_path / "CORRECTNESS_r07.json").write_text(json.dumps({"new_op": verdict_row}))
-    assert _stale_rotation_keys(str(tmp_path), ("new_op",), 8) == ["new_op"]
-
-    # An err-only row (harness failure) is not a verdict → not stale.
-    (tmp_path / "CORRECTNESS_r06.json").write_text(
-        json.dumps({"flaky_op": {"rows_match": None, "schema_match": None, "hash_match": None, "err": "boom"}})
+    names = list(registry.all_queries())
+    tpch = sorted(
+        (n for n in names if re.match(r"q\d+_", n)), key=lambda n: int(n[1 : n.index("_")])
     )
-    assert _stale_rotation_keys(str(tmp_path), ("flaky_op",), 8) == []
+    assert len(tpch) == 22
+    assert names[:22] == tpch
+    assert names[22].startswith("window_")

@@ -93,25 +93,3 @@ class TestDedupSubstringProfile:
         pdf = all_queries()["dedup_substring_profile"].builder(spark, sf_dir).toPandas()
         for _, r in pdf.iterrows():
             assert r["dup_ppm"] == r["dup_tokens"] * 1_000_000 // r["total_tokens"]
-
-
-class TestBenchNoiseClamp:
-    """VERDICT r11 finding #1: an idle-fast probe must never INFLATE a
-    capture — noise_factor is clamped at 1.0."""
-
-    def test_clamp_floor(self):
-        import bench
-
-        # Mirrors the arithmetic in bench.main(): blend below 1.0 clamps.
-        assert max(1.0, 0.562) == 1.0
-        src = open(bench.__file__).read()
-        assert "max(1.0, noise_factor_blend)" in src
-
-    def test_r11_driver_capture_would_read_raw(self):
-        """Replaying the driver's r11 probe readings through the clamp:
-        normalized == raw (1.14x, not the artifactual 2.04x)."""
-        blend = round((0.554 + 0.570) / 2, 3)
-        assert blend == 0.562
-        clamped = max(1.0, blend)
-        raw = 21.6183
-        assert round(raw / clamped, 4) == raw

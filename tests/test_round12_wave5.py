@@ -55,15 +55,13 @@ class TestSweepMemoryRelease:
         # Create both kinds of retained state the sweep accumulates.
         df = spark.read.parquet(f"{sf_dir}/lineitem.parquet").localCheckpoint(eager=True)
         assert df.count() > 0
-        ann._MODEL_CACHE[("ivf-assign", ("fake",), "app")] = ("df", "centers")
+        ann._ASSIGN_CACHE[(("fake",), "app")] = ("df", "centers")
         assert spark.sparkContext._jsc.getPersistentRDDs().size() > 0
 
         bench._release_sweep_memory(spark)
 
         assert spark.sparkContext._jsc.getPersistentRDDs().size() == 0
-        assert not any(
-            isinstance(k, tuple) and k and k[0] == "ivf-assign" for k in ann._MODEL_CACHE
-        )
+        assert ann._ASSIGN_CACHE == {}
 
     def test_numpy_model_caches_survive(self, spark, sf_dir):
         """Only the session-bound DataFrame memo is dropped — the numpy

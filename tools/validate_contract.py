@@ -24,12 +24,6 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
-
-
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     name_filter = sys.argv[2] if len(sys.argv) > 2 else ""
@@ -41,6 +35,7 @@ def main() -> int:
 
     import __spark_entry__ as e
     from gluettalax_spark.session import get_spark
+    from gluettalax_spark.tables import TABLES
 
     spark = get_spark("contract-validate")
     qs, osql = e.queries(), e.oracle_sql()
