@@ -23,9 +23,9 @@ frame; in exchange no operator's memory footprint depends on row-object
 overhead, which is the property that survives a 1000-executor cluster
 where the same heap serves 100× the partitions.
 
-Use ``CKPT_LEVEL`` for every ``localCheckpoint(storageLevel=...)`` call;
-a bare ``localCheckpoint()`` (deserialized) is a plan-audit violation
-(tests/test_plans.py pins this).
+Every ``persist``, ``cache`` and ``localCheckpoint`` call outside this
+module passes ``CKPT_LEVEL``; a bare ``localCheckpoint()`` (deserialized)
+or ``cache()`` is an audit violation (tests/test_env_knobs.py pins this).
 """
 
 from __future__ import annotations

@@ -390,10 +390,10 @@ def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: duplicate values collapse in ONE map-side-partial
     groupBy first (the value axis is far smaller than the fact table);
-    the running weight rides `grouped_running_sum` with a constant
-    group (range shuffle + metadata offsets — never an unpartitioned
-    window); the crossing fold is one bounded aggregate."""
-    from gluettalax_spark.operators.rank import grouped_running_sum
+    the running weight and its total ride `grouped_running_sums` over
+    one global group (range shuffle + metadata offsets — never an
+    unpartitioned window); the crossing fold is one bounded aggregate."""
+    from gluettalax_spark.operators.rank import grouped_running_sums
 
     li = load(spark, sf_dir, "lineitem")
     g = (
@@ -403,11 +403,8 @@ def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("v")
         .agg(F.sum("w").cast("long").alias("w"))
-        .withColumn("_g", F.lit(1))
     )
-    run = grouped_running_sum(g, ["_g"], [F.col("v")], "w", "cw")
-    tot = g.agg(F.sum("w").cast("long").alias("tw"))
-    r = run.crossJoin(F.broadcast(tot))
+    r = grouped_running_sums(g, [], [F.col("v")], [("w", "cw")]).withColumnRenamed("cw_total", "tw")
     return r.agg(
         F.max("tw").cast("long").alias("total_weight"),
         F.min(F.when(F.col("cw") * 2 >= F.col("tw"), F.col("v"))).cast("long").alias("wmedian_cents"),

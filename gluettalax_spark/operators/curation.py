@@ -579,8 +579,8 @@ def stats_wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one data-scale groupBy (user) then a dictionary groupBy
     (distinct |d| magnitudes); the running rank uses
-    `grouped_running_sum`, never an unpartitioned window over rows."""
-    from gluettalax_spark.operators.rank import grouped_running_sum
+    `grouped_running_sums`, never an unpartitioned window over rows."""
+    from gluettalax_spark.operators.rank import grouped_running_sums
 
     events = load(spark, sf_dir, "events")
     cents = F.round(F.col("value") * 100).cast("long")
@@ -602,9 +602,8 @@ def stats_wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.when(F.col("d") > 0, 1)).cast("long").alias("n_pos"),
             F.count("*").cast("long").alias("nv"),
         )
-        .withColumn("_g", F.lit(1))
     )
-    ranked = grouped_running_sum(dict_df, ["_g"], ["a"], "nv", "cum")
+    ranked = grouped_running_sums(dict_df, [], ["a"], [("nv", "cum")])
     m = ranked.agg(
         F.sum("nv").cast("long").alias("n"),
         F.sum(
@@ -788,23 +787,19 @@ def agg_trimmed_winsorized(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression each).
 
     Scale: one data-scale groupBy to the value dictionary (cents
-    cardinality ≪ rows); the running count is `grouped_running_sum`
-    (range-partitioned, never a single-task window); the 1-row (n, k)
-    frame broadcasts into the fold."""
-    from gluettalax_spark.operators.rank import grouped_running_sum
+    cardinality ≪ rows); the running count and its total n ride
+    `grouped_running_sums` (range-partitioned, never a single-task
+    window); the fold is one 1-row aggregate."""
+    from gluettalax_spark.operators.rank import grouped_running_sums
 
     vals = load(spark, sf_dir, "orders").select(
         F.round(F.col("o_totalprice") * 100).cast("long").alias("v")
     )
-    dict_df = (
-        vals.groupBy("v").agg(F.count("*").cast("long").alias("nv")).withColumn("_g", F.lit(1))
+    dict_df = vals.groupBy("v").agg(F.count("*").cast("long").alias("nv"))
+    ranked = grouped_running_sums(dict_df, [], ["v"], [("nv", "cum")]).select(
+        "v", "nv", "cum", F.col("cum_total").alias("n"), F.expr("cum_total DIV 10").alias("k")
     )
-    ranked = grouped_running_sum(dict_df, ["_g"], ["v"], "nv", "cum")
-    m = dict_df.agg(
-        F.sum("nv").cast("long").alias("n"),
-        F.expr("CAST(sum(nv) DIV 10 AS BIGINT)").alias("k"),
-    )
-    folded = ranked.crossJoin(F.broadcast(m)).agg(
+    folded = ranked.agg(
         F.max("n").alias("n"),
         F.max("k").alias("k"),
         F.sum(
@@ -916,8 +911,9 @@ def events_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: two scans (calibration residuals, test coverage), each
     joining a broadcast types-sized frame; the residual dictionary is
     per-type cents cardinality; the running count is
-    `grouped_running_sum` grouped by type."""
-    from gluettalax_spark.operators.rank import grouped_running_sum
+    `grouped_running_sums` grouped by type, whose per-type total is
+    the calibration count."""
+    from gluettalax_spark.operators.rank import grouped_running_sums
 
     events = load(spark, sf_dir, "events")
     cal = events.filter("event_id % 2 = 0")
@@ -936,10 +932,10 @@ def events_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     dict_df = resid.groupBy("event_type", "r").agg(F.count("*").cast("long").alias("nv"))
-    ranked = grouped_running_sum(dict_df, ["event_type"], ["r"], "nv", "cum")
+    ranked = grouped_running_sums(dict_df, ["event_type"], ["r"], [("nv", "cum")])
     k_expr = "least((9 * (n_cal + 1) + 9) DIV 10, n_cal)"
     qs = (
-        ranked.join(F.broadcast(pred), "event_type")
+        ranked.withColumnRenamed("cum_total", "n_cal")
         .groupBy("event_type", "n_cal")
         .agg(
             F.max(
@@ -1037,40 +1033,34 @@ def orders_newsvendor_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     dictionary; every cost column is an exact BIGINT.
 
     Scale: one data-scale groupBy to calendar days, a second to the
-    demand-value dictionary (≤ days); the running count uses
-    `grouped_running_sum`; 1-row (n, k) and q* frames broadcast into
+    demand-value dictionary (≤ days); the running count and its total
+    n ride `grouped_running_sums`; the 1-row q* frame broadcasts into
     the final fold."""
-    from gluettalax_spark.operators.rank import grouped_running_sum
+    from gluettalax_spark.operators.rank import grouped_running_sums
 
     daily = (
         load(spark, sf_dir, "orders")
         .groupBy(F.col("o_orderdate").cast("date").alias("day"))
         .agg(F.count("*").cast("long").alias("d"))
     )
-    dict_df = (
-        daily.groupBy("d").agg(F.count("*").cast("long").alias("nv")).withColumn("_g", F.lit(1))
+    dict_df = daily.groupBy("d").agg(F.count("*").cast("long").alias("nv"))
+    ranked = grouped_running_sums(dict_df, [], ["d"], [("nv", "cum")]).select(
+        "d",
+        "nv",
+        "cum",
+        F.col("cum_total").alias("n"),
+        F.expr("(9 * cum_total + 9) DIV 10").alias("k"),
     )
-    dict_df = dict_df.persist(CKPT_LEVEL)  # feeds rank, m, and the fold
-    ranked = grouped_running_sum(dict_df, ["_g"], ["d"], "nv", "cum")
-    m = dict_df.agg(
-        F.sum("nv").cast("long").alias("n"),
-        F.expr("CAST((9 * sum(nv) + 9) DIV 10 AS BIGINT)").alias("k"),
-    )
-    q = (
-        ranked.crossJoin(F.broadcast(m))
-        .agg(
-            F.max(
-                F.when(
-                    (F.col("cum") - F.col("nv") + 1 <= F.col("k"))
-                    & (F.col("k") <= F.col("cum")),
-                    F.col("d"),
-                )
-            ).cast("long").alias("q_star")
-        )
+    q = ranked.agg(
+        F.max(
+            F.when(
+                (F.col("cum") - F.col("nv") + 1 <= F.col("k")) & (F.col("k") <= F.col("cum")),
+                F.col("d"),
+            )
+        ).cast("long").alias("q_star")
     )
     return (
-        dict_df.crossJoin(F.broadcast(m))
-        .crossJoin(F.broadcast(q))
+        ranked.crossJoin(F.broadcast(q))
         .groupBy(F.col("n").alias("n_days"), "k", "q_star")
         .agg(
             F.sum(F.greatest(F.lit(0), F.col("q_star") - F.col("d")) * F.col("nv"))
@@ -2146,10 +2136,10 @@ def stats_anderson_darling(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie run = nv·(2·cum−nv)); each value's term quantizes to integer
     micro-units before the order-independent sum.
 
-    Scale: the dictionary + running-count machinery (`grouped_running_sum`)
+    Scale: the dictionary + running-count machinery (`grouped_running_sums`)
     over calendar days — metadata scale at any SF; the moment fold
     broadcasts into the term table."""
-    from gluettalax_spark.operators.rank import grouped_running_sum
+    from gluettalax_spark.operators.rank import grouped_running_sums
 
     daily = (
         load(spark, sf_dir, "orders")
@@ -2160,11 +2150,9 @@ def stats_anderson_darling(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("v")
         )
     )
-    dict_df = (
-        daily.groupBy("v").agg(F.count("*").cast("long").alias("nv")).withColumn("_g", F.lit(1))
-    )
+    dict_df = daily.groupBy("v").agg(F.count("*").cast("long").alias("nv"))
     dict_df = dict_df.persist(CKPT_LEVEL)
-    ranked = grouped_running_sum(dict_df, ["_g"], ["v"], "nv", "cum")
+    ranked = grouped_running_sums(dict_df, [], ["v"], [("nv", "cum")])
     m = dict_df.agg(
         F.sum("nv").cast("long").alias("n"),
         F.sum(F.col("v").cast("decimal(38,0)") * F.col("nv")).cast("long").alias("s1"),
@@ -2923,7 +2911,7 @@ def quality_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     range-partitioned running rank), one broadcast join of the
     dictionary-sized decile map back onto the scan, and the PSI fold
     lands on the 10-row grid."""
-    from gluettalax_spark.operators.rank import grouped_running_sum
+    from gluettalax_spark.operators.rank import grouped_running_sums
     from gluettalax_spark.operators.stats import PSI_Q
     from gluettalax_spark.operators.text import _quality_parts
 
@@ -2934,16 +2922,9 @@ def quality_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     # — tied within noise; persist kept (no build-time job).
     q = q.persist(CKPT_LEVEL)  # feeds the split bound, dict, and counts
     b = q.agg(F.expr("(min(doc_id) + max(doc_id)) div 2").alias("mid"))
-    d = (
-        q.groupBy("v")
-        .agg(F.count(F.lit(1)).cast("long").alias("nv"))
-        .withColumn("_g", F.lit(1))
-    )
-    d = d.persist(CKPT_LEVEL)  # value dictionary; feeds the running rank AND nn
-    r = grouped_running_sum(d, ["_g"], ["v"], "nv", "cum").select("v", "nv", "cum")
-    nn = d.agg(F.sum("nv").cast("long").alias("n"))
-    dec = r.crossJoin(F.broadcast(nn)).selectExpr(
-        "v", "CAST((cum - nv) * 10 DIV n AS BIGINT) AS decile"
+    d = q.groupBy("v").agg(F.count(F.lit(1)).cast("long").alias("nv"))
+    dec = grouped_running_sums(d, [], ["v"], [("nv", "cum")]).selectExpr(
+        "v", "CAST((cum - nv) * 10 DIV cum_total AS BIGINT) AS decile"
     )
     c = (
         q.join(F.broadcast(dec), "v")

@@ -29,7 +29,7 @@ from gluettalax_spark.memory import CKPT_LEVEL
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gluettalax_spark.operators.rank import grouped_running_sum
+from gluettalax_spark.operators.rank import grouped_running_sums
 from gluettalax_spark.registry import register
 from gluettalax_spark.tables import load
 
@@ -87,7 +87,7 @@ FROM m
 def stats_mannwhitney_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mann-Whitney U via the value-dictionary construction: group the
     cents-quantized values (exact), take a scale-safe running count over
-    the dictionary (``grouped_running_sum``, never an unpartitioned
+    the dictionary (``grouped_running_sums``, never an unpartitioned
     window over data rows), and fold the 2×-average-rank identity
     ``R2(v) = 2·cum_before + n_v + 1`` into integer moments. ``u1_x2``
     and the tie term are exact; ``z`` (normal approximation with tie
@@ -104,8 +104,8 @@ def stats_mannwhitney_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("in_a").cast("long").alias("n1v"),
         F.sum(1 - F.col("in_a")).cast("long").alias("n2v"),
         F.count(F.lit(1)).cast("long").alias("nv"),
-    ).withColumn("_g", F.lit(1))
-    ranked = grouped_running_sum(dict_df, ["_g"], ["v"], "nv", "cum")
+    )
+    ranked = grouped_running_sums(dict_df, [], ["v"], [("nv", "cum")])
     m = ranked.agg(
         F.sum("n1v").cast("long").alias("n1"),
         F.sum("n2v").cast("long").alias("n2"),
@@ -198,7 +198,7 @@ ORDER BY source
 def stats_spearman_quality_length(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spearman ρ per source with exact average-rank ties: marginal value
     dictionaries get scale-safe per-source running counts
-    (``grouped_running_sum``), the (x, y) pair dictionary joins its two
+    (``grouped_running_sums``), the (x, y) pair dictionary joins its two
     marginal 2×ranks back dictionary-keyed, and Pearson-on-ranks moments
     accumulate in DECIMAL(38,0). The 2× scale cancels in ρ, so the only
     float math is the single final expression (the two variance factors
@@ -220,7 +220,7 @@ def stats_spearman_quality_length(spark: SparkSession, sf_dir: str) -> DataFrame
 
     def marginal(col: str, cnt: str, cum: str) -> DataFrame:
         d = base.groupBy("source", col).agg(F.count(F.lit(1)).cast("long").alias(cnt))
-        return grouped_running_sum(d, ["source"], [col], cnt, cum)
+        return grouped_running_sums(d, ["source"], [col], [(cnt, cum)])
 
     dx = marginal("x", "cx", "cumx").select(
         "source", "x", (2 * (F.col("cumx") - F.col("cx")) + F.col("cx") + 1).alias("rx2")
@@ -517,10 +517,8 @@ def _kw_rank_frames(spark: SparkSession, sf_dir: str):
         .groupBy("g", "v")
         .agg(F.count(F.lit(1)).cast("long").alias("n_gv"))
     )
-    dict_df = (
-        cells.groupBy("v").agg(F.sum("n_gv").cast("long").alias("n_v")).withColumn("_g", F.lit(1))
-    )
-    ranked = grouped_running_sum(dict_df, ["_g"], ["v"], "n_v", "cum").select("v", "n_v", "cum")
+    dict_df = cells.groupBy("v").agg(F.sum("n_gv").cast("long").alias("n_v"))
+    ranked = grouped_running_sums(dict_df, [], ["v"], [("n_v", "cum")]).select("v", "n_v", "cum")
     per_g = (
         cells.join(ranked, "v")
         .groupBy("g")
@@ -832,11 +830,9 @@ def stats_brown_forsythe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13 A/B: lazy 0.96 ≈ persist 0.98 < eager 1.19 (count, best-of-3)
     # — persist kept (tied with lazy, no build-time stage execution).
     cells = cells.persist(CKPT_LEVEL)
-    ranked = grouped_running_sum(cells, ["g"], ["v"], "n_gv", "cum")
-    n_g_df = cells.groupBy("g").agg(F.sum("n_gv").cast("long").alias("n_g"))
+    ranked = grouped_running_sums(cells, ["g"], ["v"], [("n_gv", "cum")])
     med = (
-        ranked.join(F.broadcast(n_g_df), "g")
-        .filter(2 * F.col("cum") >= F.col("n_g"))
+        ranked.filter(2 * F.col("cum") >= F.col("cum_total"))
         .groupBy("g")
         .agg(F.min("v").alias("m"))
     )
@@ -2151,22 +2147,19 @@ def stats_median_ci_order(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select(F.round(quality * 10000).cast("long").alias("v"))
         .groupBy("v")
         .agg(F.count(F.lit(1)).cast("long").alias("nv"))
-        .withColumn("_g", F.lit(1))
     )
-    # r13 A/B: lazy ckpt 0.71 < persist 0.80 < eager 0.92 (count,
-    # best-of-3) — the r12 persist regression reverted to the r11 form.
-    d = d.localCheckpoint(eager=False, storageLevel=CKPT_LEVEL)  # feeds the total AND the running rank
-    r = grouped_running_sum(d, ["_g"], ["v"], "nv", "cum").select("v", "nv", "cum")
-    ranks = d.agg(F.sum("nv").cast("long").alias("n")).selectExpr(
-        "n",
-        f"greatest(1, CAST(floor((n - {_MCI_Z} * sqrt(CAST(n AS DOUBLE))) / 2)"
-        " AS BIGINT)) AS lo_rank",
-        f"least(n, CAST(ceil(1 + (n + {_MCI_Z} * sqrt(CAST(n AS DOUBLE))) / 2)"
-        " AS BIGINT)) AS hi_rank",
-        "(n + 1) DIV 2 AS med_rank",
-    )
+    r = grouped_running_sums(d, [], ["v"], [("nv", "cum")]).withColumnRenamed("cum_total", "n")
     return (
-        r.crossJoin(F.broadcast(ranks))
+        r.selectExpr(
+            "v",
+            "cum",
+            "n",
+            f"greatest(1, CAST(floor((n - {_MCI_Z} * sqrt(CAST(n AS DOUBLE))) / 2)"
+            " AS BIGINT)) AS lo_rank",
+            f"least(n, CAST(ceil(1 + (n + {_MCI_Z} * sqrt(CAST(n AS DOUBLE))) / 2)"
+            " AS BIGINT)) AS hi_rank",
+            "(n + 1) DIV 2 AS med_rank",
+        )
         .groupBy("n", "lo_rank", "med_rank", "hi_rank")
         .agg(
             F.min(F.when(F.col("cum") >= F.col("lo_rank"), F.col("v"))).alias("ci_lo"),
@@ -2257,13 +2250,13 @@ def stats_levene_bf(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("g", "v")
         .agg(F.count(F.lit(1)).cast("long").alias("n_gv"))
-        .persist(CKPT_LEVEL)  # feeds cum, gn, and the z fold
+        .persist(CKPT_LEVEL)  # feeds cum and the z fold
     )
-    cum = grouped_running_sum(cells, ["g"], ["v"], "n_gv", "cum").select("g", "v", "cum")
-    gn = cells.groupBy("g").agg(F.sum("n_gv").cast("long").alias("n_g"))
+    cum = grouped_running_sums(cells, ["g"], ["v"], [("n_gv", "cum")]).withColumnRenamed(
+        "cum_total", "n_g"
+    )
     med = (
-        cum.join(F.broadcast(gn), "g")
-        .groupBy("g")
+        cum.groupBy("g")
         .agg(
             F.min(
                 F.when(F.col("cum") >= F.expr("(n_g + 1) div 2"), F.col("v")).otherwise(None)

@@ -943,10 +943,10 @@ def token_budget_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The naive plan — ``sum() OVER (PARTITION BY source ORDER BY h)`` —
     funnels every source through ONE task; a source is a crawl at 100 TB.
-    This uses :func:`gluettalax_spark.operators.rank.grouped_running_sum`:
+    This uses :func:`gluettalax_spark.operators.rank.grouped_running_sums`:
     range-partition on (source, h), per-(pid, source) partial sums, and a
     metadata-scale prefix join — every stage parallel."""
-    from gluettalax_spark.operators.rank import grouped_running_sum
+    from gluettalax_spark.operators.rank import grouped_running_sums
 
     docs = load(spark, sf_dir, "documents")
     t = docs.select(
@@ -955,9 +955,7 @@ def token_budget_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size(F.expr(r"regexp_extract_all(text, '\\S+', 0)")).cast("long").alias("n_tokens"),
         F.md5(F.col("doc_id").cast("string")).alias("h"),
     )
-    run = grouped_running_sum(
-        t, ["source"], ["h", "doc_id"], "n_tokens", "cum_tokens"
-    )
+    run = grouped_running_sums(t, ["source"], ["h", "doc_id"], [("n_tokens", "cum_tokens")])
     return (
         run.filter(F.col("cum_tokens") <= TOKEN_BUDGET)
         .select("doc_id", "source", "n_tokens", F.col("cum_tokens").cast("long").alias("cum_tokens"))
@@ -1802,15 +1800,15 @@ def orders_abc_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     inventory-management classic, and the shape that needs a GLOBAL
     running sum over a data-scale table.
 
-    Scale shape: the running sum is `grouped_running_sum` with a
-    constant group — range-repartition on the sort key, per-partition
-    sums to a metadata-scale offsets table, local window + broadcast
-    offset — never `Window.orderBy` without a partition (the single-task
-    funnel the plan suite bans). Class cuts compare r*100 <= t*80 in
+    Scale shape: the running sum and its total ride
+    `grouped_running_sums` over one global group — range-repartition
+    on the sort key, per-partition sums to a metadata-scale offsets
+    table, local window + broadcast offset — never `Window.orderBy`
+    without a partition (the single-task funnel the plan suite bans). Class cuts compare r*100 <= t*80 in
     exact integer cents (no float shares), and the per-class summary is
     a 3-row aggregate. The revenue quantization (round(price*(1-disc)
     *100)) is the shared cents convention, deterministic cross-engine."""
-    from gluettalax_spark.operators.rank import grouped_running_sum
+    from gluettalax_spark.operators.rank import grouped_running_sums
 
     li = load(spark, sf_dir, "lineitem")
     rev = (
@@ -1823,19 +1821,15 @@ def orders_abc_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("cents")
         )
-        .withColumn("_g", F.lit(1))
     )
-    run = grouped_running_sum(
-        rev, ["_g"], [F.col("cents").desc(), F.col("pk")], "cents", "r"
-    )
-    tot = rev.agg(F.sum("cents").cast("long").alias("t"))
-    classed = run.crossJoin(F.broadcast(tot)).select(
+    run = grouped_running_sums(rev, [], [F.col("cents").desc(), F.col("pk")], [("cents", "r")])
+    classed = run.select(
         "cents",
-        F.when(F.col("r") * 100 <= F.col("t") * 80, "A")
-        .when(F.col("r") * 100 <= F.col("t") * 95, "B")
+        F.when(F.col("r") * 100 <= F.col("r_total") * 80, "A")
+        .when(F.col("r") * 100 <= F.col("r_total") * 95, "B")
         .otherwise("C")
         .alias("abc_class"),
-        "t",
+        F.col("r_total").alias("t"),
     )
     return (
         classed.groupBy("abc_class")
@@ -2773,7 +2767,7 @@ def quality_classifier_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode (data-scale, one shuffle to doc grain); the AUC itself runs
     on the logit dictionary. The deterministic-surrogate weights make
     the whole readout oracle-checkable end to end."""
-    from gluettalax_spark.operators.rank import grouped_running_sum
+    from gluettalax_spark.operators.rank import grouped_running_sums
     from gluettalax_spark.operators.text import _quality_parts
 
     docs = load(spark, sf_dir, "documents")
@@ -2811,9 +2805,8 @@ def quality_classifier_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("in_pos").cast("long").alias("n1v"),
             F.count(F.lit(1)).cast("long").alias("nv"),
         )
-        .withColumn("_g", F.lit(1))
     )
-    ranked = grouped_running_sum(dict_df, ["_g"], ["v"], "nv", "cum")
+    ranked = grouped_running_sums(dict_df, [], ["v"], [("nv", "cum")])
     m = ranked.agg(
         F.sum("n1v").cast("long").alias("n_pos"),
         F.sum(F.col("nv") - F.col("n1v")).cast("long").alias("n_neg"),
@@ -2897,9 +2890,9 @@ def corpus_mix_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one corpus scan to source grain (map-side combinable);
     the rank-and-fill runs on the SOURCE dictionary (20 rows here,
-    thousands in production — the `grouped_running_sum` machinery keeps
+    thousands in production — the `grouped_running_sums` machinery keeps
     even that path range-partitioned, never a single-task window)."""
-    from gluettalax_spark.operators.rank import grouped_running_sum
+    from gluettalax_spark.operators.rank import grouped_running_sums
     from gluettalax_spark.operators.text import _quality_parts
 
     docs = load(spark, sf_dir, "documents")
@@ -2914,17 +2907,14 @@ def corpus_mix_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n_tok").cast("long").alias("n_tokens"),
         F.expr("CAST(sum(q_int) * 100 div count(1) AS BIGINT)").alias("qmean_e6"),
     )
-    tot = per_source.agg(F.expr("CAST(sum(n_tokens) div 2 AS BIGINT)").alias("budget"))
-    ranked = grouped_running_sum(
-        per_source.withColumn("_g", F.lit(1)).withColumn("neg_q", -F.col("qmean_e6")),
-        ["_g"],
+    ranked = grouped_running_sums(
+        per_source.withColumn("neg_q", -F.col("qmean_e6")),
+        [],
         ["neg_q", "source"],
-        "n_tokens",
-        "cum",
-    )
+        [("n_tokens", "cum")],
+    ).withColumn("budget", F.expr("cum_total div 2"))
     return (
-        ranked.crossJoin(F.broadcast(tot))
-        .selectExpr(
+        ranked.selectExpr(
             "source",
             "n_docs",
             "qmean_e6",
@@ -3298,7 +3288,7 @@ def orders_basket_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     unavoidable shuffle), then the histogram and its running sum live
     on the basket-size dictionary (data-model bounded) via the
     range-partitioned machinery."""
-    from gluettalax_spark.operators.rank import grouped_running_sum
+    from gluettalax_spark.operators.rank import grouped_running_sums
 
     li = load(spark, sf_dir, "lineitem")
     h = (
@@ -3306,21 +3296,14 @@ def orders_basket_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.countDistinct("l_partkey").cast("long").alias("sz"))
         .groupBy(F.col("sz").alias("basket_size"))
         .agg(F.count(F.lit(1)).cast("long").alias("n_orders"))
-        .withColumn("_g", F.lit(1))
     )
-    h = h.persist(CKPT_LEVEL)  # feeds the total AND the running sum
-    t = h.agg(F.sum("n_orders").cast("long").alias("total"))
-    cum = grouped_running_sum(h, ["_g"], ["basket_size"], "n_orders", "cum_orders")
-    return (
-        cum.crossJoin(F.broadcast(t))
-        .selectExpr(
-            "basket_size",
-            "n_orders",
-            "CAST(cum_orders AS BIGINT) AS cum_orders",
-            "CAST(n_orders * 1000000 DIV total AS BIGINT) AS share_ppm",
-        )
-        .orderBy("basket_size")
-    )
+    cum = grouped_running_sums(h, [], ["basket_size"], [("n_orders", "cum_orders")])
+    return cum.selectExpr(
+        "basket_size",
+        "n_orders",
+        "CAST(cum_orders AS BIGINT) AS cum_orders",
+        "CAST(n_orders * 1000000 DIV cum_orders_total AS BIGINT) AS share_ppm",
+    ).orderBy("basket_size")
 
 
 # --------------------------------------------------------------------------
@@ -3397,15 +3380,12 @@ def orders_lorenz_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("long").alias("n_customers"),
             F.sum("cents").cast("long").alias("decile_cents"),
         )
-        .withColumn("_g", F.lit(1))
-        .persist(CKPT_LEVEL)  # 10 rows; feeds total AND the curve
     )
-    tot = dec.agg(F.sum("decile_cents").cast("long").alias("total"))
-    from gluettalax_spark.operators.rank import grouped_running_sum
+    from gluettalax_spark.operators.rank import grouped_running_sums
 
-    cum = grouped_running_sum(dec, ["_g"], ["decile"], "decile_cents", "cum_cents")
+    cum = grouped_running_sums(dec, [], ["decile"], [("decile_cents", "cum_cents")])
     return (
-        cum.crossJoin(F.broadcast(tot))
+        cum.withColumnRenamed("cum_cents_total", "total")
         .withColumn("cum_cents", F.col("cum_cents").cast("long"))
         .selectExpr(
             "decile",

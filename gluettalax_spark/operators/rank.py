@@ -55,13 +55,11 @@ def exact_global_rank(
     order_cols: list[Column | str],
     rank_name: str,
     num_partitions: int | None = None,
-    keep_total: bool = True,
-    isolate: bool = True,
 ) -> DataFrame:
     """Append an exact 1-based global rank under ``order_cols`` (which MUST
     be a total order — include a unique tiebreak) without any single-task
-    window. Also appends the total row count as ``_n`` (a constant column)
-    unless ``keep_total`` is False.
+    window. Also appends the total row count as ``_n`` (a constant column,
+    pruned by the optimizer when no consumer reads it).
 
     Cost: one range shuffle of ``df`` + one pid-hash shuffle for the
     per-partition ``row_number`` + a broadcast of the (#partitions)-row
@@ -92,11 +90,8 @@ def exact_global_rank(
     # AQE), either can be silently re-planned and the ranks scramble
     # (caught by the sf0.1 RFM sweep). Cutting lineage here makes both
     # consumers read one materialized RDD — cluster analog: write the
-    # ranked run to storage, then fan out. ``isolate=False`` exists ONLY
-    # for plan-shape tests that need to inspect the subtree; production
-    # callers must never pass it.
-    if isolate:
-        with_pid = with_pid.localCheckpoint(eager=False, storageLevel=CKPT_LEVEL)
+    # ranked run to storage, then fan out.
+    with_pid = with_pid.localCheckpoint(eager=False, storageLevel=CKPT_LEVEL)
 
     # Offsets: one row per range partition (≤ npart rows — config-bounded,
     # so the single-partition prefix-sum window here is metadata-scale,
@@ -105,10 +100,11 @@ def exact_global_rank(
     # aggregate or a limit). Both branches read the checkpointed RDD, so
     # they see the same partition ids by construction.
     w_off = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
-    off_cols = ["_pid", F.coalesce(F.sum("_cnt").over(w_off), F.lit(0)).alias("_off")]
-    if keep_total:
-        off_cols.append(F.sum("_cnt").over(Window.partitionBy()).alias(RANK_TOTAL_COL))
-    offsets = with_pid.groupBy("_pid").agg(F.count(F.lit(1)).alias("_cnt")).select(*off_cols)
+    offsets = with_pid.groupBy("_pid").agg(F.count(F.lit(1)).alias("_cnt")).select(
+        "_pid",
+        F.coalesce(F.sum("_cnt").over(w_off), F.lit(0)).alias("_off"),
+        F.sum("_cnt").over(Window.partitionBy()).alias(RANK_TOTAL_COL),
+    )
 
     return (
         with_pid.join(F.broadcast(offsets), "_pid")
@@ -117,19 +113,20 @@ def exact_global_rank(
     )
 
 
-def grouped_running_sum(
+def grouped_running_sums(
     df: DataFrame,
     group_cols: list[str],
     order_cols: list[Column | str],
-    value_col: str,
-    sum_name: str,
+    sums: "list[tuple[str, str]]",
     num_partitions: int | None = None,
-    isolate: bool = True,
+    lead_of: str | None = None,
+    lead_name: str = "_lead",
 ) -> DataFrame:
     """Exact running ``sum(value_col)`` per group under ``order_cols``
-    (a total order within the group) WITHOUT ``Window.partitionBy(group)``
-    — that window funnels each group through one task, and groups here
-    (e.g. a crawl source) grow with the corpus.
+    (a total order within the group) for every ``(value_col, sum_name)``
+    pair in ``sums``, WITHOUT ``Window.partitionBy(group)`` — that window
+    funnels each group through one task, and groups here (e.g. a crawl
+    source) grow with the corpus. ``group_cols=[]`` is one global group.
 
     Same offsets construction as :func:`exact_global_rank`, grouped:
 
@@ -143,71 +140,18 @@ def grouped_running_sum(
        metadata scale;
     3. local running sum within ``(pid, group)`` + broadcast offset.
 
+    Every pair also emits the group total as ``<sum_name>_total`` — the
+    sum of the group's per-partition sums on the same offsets table. It
+    is an ordinary column, so the optimizer prunes it when unread.
+
     Cost: the range exchange plus ONE more hash exchange of the data on
     ``(pid, group)`` for the local window — unlike row_number, a running
     sum over an arbitrary column cannot ride monotonically_increasing_id.
     Every ``(pid, group)`` window group is bounded by the range-partition
-    size, so no task sees more than one partition's rows."""
-    spark = df.sparkSession
-    npart = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    part = df.repartitionByRange(npart, *group_cols, *order_cols).sortWithinPartitions(
-        *group_cols, *order_cols
-    )
-    with_pid = part.withColumn("_pid", F.spark_partition_id())
-    # Same isolation as exact_global_rank: offsets and data must label
-    # rows with the SAME _pid, which is only guaranteed when both consume
-    # one materialized run rather than two re-planned executions of the
-    # range exchange.
-    if isolate:
-        with_pid = with_pid.localCheckpoint(eager=False, storageLevel=CKPT_LEVEL)
-
-    w_off = (
-        Window.partitionBy(*group_cols)
-        .orderBy("_pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = (
-        with_pid.groupBy("_pid", *group_cols)
-        .agg(F.sum(value_col).alias("_gsum"))
-        .select(
-            "_pid",
-            *group_cols,
-            F.coalesce(F.sum("_gsum").over(w_off), F.lit(0)).alias("_off"),
-        )
-    )
-
-    w_local = (
-        Window.partitionBy("_pid", *group_cols)
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    return (
-        with_pid.withColumn("_run", F.sum(value_col).over(w_local))
-        .join(F.broadcast(offsets), ["_pid", *group_cols])
-        .withColumn(sum_name, F.col("_run") + F.col("_off"))
-        .drop("_pid", "_run", "_off")
-    )
-
-
-def grouped_running_sums(
-    df: DataFrame,
-    group_cols: list[str],
-    order_cols: list[Column | str],
-    sums: "list[tuple[str, str]]",
-    num_partitions: int | None = None,
-    isolate: bool = True,
-    lead_of: str | None = None,
-    lead_name: str = "_lead",
-) -> DataFrame:
-    """N exact running sums in ONE range shuffle (optimization r12,
-    guide §2.2 "shuffle once, aggregate many"): identical construction to
-    :func:`grouped_running_sum`, but every ``(value_col, sum_name)`` pair
-    in ``sums`` rides the same materialized range run, the same offsets
-    broadcast and the same local window — callers that chained two or
-    three single-column passes (2-3 range exchanges + hash exchanges +
-    checkpoints) collapse to one of each. Integer/decimal running sums
-    are exact under any partitioning, so the values are bit-identical to
-    the chained form.
+    size, so no task sees more than one partition's rows. All pairs share
+    that one range run, offsets broadcast and local window (guide §2.2
+    "shuffle once, aggregate many"); integer/decimal running sums are
+    exact under any partitioning.
 
     ``lead_of`` (must be the single ASCENDING order column) additionally
     emits the group's next order value as ``lead_name`` — the partition-
@@ -219,45 +163,45 @@ def grouped_running_sums(
     part = df.repartitionByRange(npart, *group_cols, *order_cols).sortWithinPartitions(
         *group_cols, *order_cols
     )
-    with_pid = part.withColumn("_pid", F.spark_partition_id())
-    if isolate:
-        with_pid = with_pid.localCheckpoint(eager=False, storageLevel=CKPT_LEVEL)
-
-    w_off = (
-        Window.partitionBy(*group_cols)
-        .orderBy("_pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
+    # Same isolation as exact_global_rank: offsets and data must label
+    # rows with the SAME _pid, which is only guaranteed when both consume
+    # one materialized run rather than two re-planned executions of the
+    # range exchange.
+    with_pid = part.withColumn("_pid", F.spark_partition_id()).localCheckpoint(
+        eager=False, storageLevel=CKPT_LEVEL
     )
+
+    # Prefix, total and lead share one partition/order spec, hence one
+    # WindowExec over the offsets table.
+    w_pid = Window.partitionBy(*group_cols).orderBy("_pid")
+    w_off = w_pid.rowsBetween(Window.unboundedPreceding, -1)
+    w_all = w_pid.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     off_aggs = [F.sum(vc).alias(f"_gsum_{i}") for i, (vc, _) in enumerate(sums)]
-    off_cols = [
-        F.coalesce(F.sum(f"_gsum_{i}").over(w_off), F.lit(0)).alias(f"_off_{i}")
-        for i in range(len(sums))
-    ]
+    off_cols = []
+    for i, (_, sn) in enumerate(sums):
+        off_cols += [
+            F.coalesce(F.sum(f"_gsum_{i}").over(w_off), F.lit(0)).alias(f"_off_{i}"),
+            F.sum(f"_gsum_{i}").over(w_all).alias(f"{sn}_total"),
+        ]
     if lead_of is not None:
         # first order value per (pid, group) — sorted ascending, so min()
         off_aggs.append(F.min(lead_of).alias("_first_v"))
-        off_cols.append(
-            F.lead("_first_v").over(Window.partitionBy(*group_cols).orderBy("_pid"))
-            .alias("_next_first")
-        )
+        off_cols.append(F.lead("_first_v").over(w_pid).alias("_next_first"))
     offsets = (
         with_pid.groupBy("_pid", *group_cols)
         .agg(*off_aggs)
         .select("_pid", *group_cols, *off_cols)
     )
 
-    w_local = (
-        Window.partitionBy("_pid", *group_cols)
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
+    # Running sums and lead share one partition/order spec, hence one
+    # WindowExec over the data.
+    w_part = Window.partitionBy("_pid", *group_cols).orderBy(*order_cols)
+    w_local = w_part.rowsBetween(Window.unboundedPreceding, 0)
     out = with_pid
     for i, (vc, _) in enumerate(sums):
         out = out.withColumn(f"_run_{i}", F.sum(vc).over(w_local))
     if lead_of is not None:
-        # same partition spec/order as w_local → shares the one WindowExec
-        w_lead = Window.partitionBy("_pid", *group_cols).orderBy(*order_cols)
-        out = out.withColumn("_llead", F.lead(lead_of).over(w_lead))
+        out = out.withColumn("_llead", F.lead(lead_of).over(w_part))
     out = out.join(F.broadcast(offsets), ["_pid", *group_cols])
     for i, (_, sn) in enumerate(sums):
         out = out.withColumn(sn, F.col(f"_run_{i}") + F.col(f"_off_{i}"))

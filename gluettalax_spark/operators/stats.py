@@ -632,7 +632,7 @@ def agg_histogram_equidepth(spark: SparkSession, sf_dir: str) -> DataFrame:
     price's rank span is (cum − c_v, cum] off the per-price counts —
     the tiebreak columns can never split it. One map-side-combining
     groupBy collapses the fact table to the price dictionary, ONE
-    dictionary-scale `grouped_running_sum` ranks it, and each price
+    dictionary-scale `grouped_running_sums` ranks it, and each price
     explodes to the deciles its span touches (≤ dict + k rows). The r12
     form ranked every FACT row (`exact_global_rank` on the full table:
     a 3-column range exchange + a per-run localCheckpoint
@@ -640,17 +640,12 @@ def agg_histogram_equidepth(spark: SparkSession, sf_dir: str) -> DataFrame:
     row) — the driver's 3rd-slowest key at 3.46 s. The oracle replays
     ANSI ntile directly; `ntile_from_rank` matches it exactly
     (property-tested in test_rank.py for arbitrary (n, k))."""
-    from gluettalax_spark.operators.rank import grouped_running_sum, ntile_from_rank
+    from gluettalax_spark.operators.rank import grouped_running_sums, ntile_from_rank
 
     li = load(spark, sf_dir, "lineitem").select(F.col("l_extendedprice").alias("v"))
-    d = (
-        li.groupBy("v")
-        .agg(F.count(F.lit(1)).cast("long").alias("nv"))
-        .withColumn("_g", F.lit(1))
-    )
-    r = grouped_running_sum(d, ["_g"], ["v"], "nv", "cum")
-    n1 = d.agg(F.sum("nv").cast("long").alias("_n"))
-    spans = r.crossJoin(F.broadcast(n1)).select(
+    d = li.groupBy("v").agg(F.count(F.lit(1)).cast("long").alias("nv"))
+    r = grouped_running_sums(d, [], ["v"], [("nv", "cum")]).withColumnRenamed("cum_total", "_n")
+    spans = r.select(
         "v",
         "_n",
         ntile_from_rank(F.col("cum") - F.col("nv") + 1, F.col("_n"), _EQUIDEPTH_K).alias("d1"),
@@ -1832,8 +1827,8 @@ def events_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     display only.
 
     Scale shape: one filter + groupBy collapses events to the
-    distinct-value axis; BOTH running ECDFs ride one
-    `grouped_running_sum` chain over that table (constant group —
+    distinct-value axis; BOTH running ECDFs and their totals ride one
+    `grouped_running_sums` pass over that table (one global group —
     range shuffle + metadata offsets, never an unpartitioned
     data-scale window); the argmax is TakeOrderedAndProject(1)."""
     from gluettalax_spark.operators.rank import grouped_running_sums
@@ -1848,21 +1843,9 @@ def events_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.when(F.col("event_type") == _KS_A, 1)).cast("long").alias("ca"),
             F.count(F.when(F.col("event_type") == _KS_B, 1)).cast("long").alias("cb"),
         )
-        .withColumn("_g", F.lit(1))
     )
-    # One fused pass (optimization r12): both ECDFs previously chained two
-    # single-column range passes; integer running sums are unchanged.
-    run = grouped_running_sums(
-        g, ["_g"], [F.col("value")], [("ca", "ra"), ("cb", "rb")]
-    )
-    # Totals = the running sums' maxima (r13, guide §2.1): a separate
-    # g.agg() re-executed the whole events scan + groupBy per run; this
-    # 1-row fold reads the dictionary-scale ranked run instead (both
-    # consumers share grouped_running_sums' internal materialized cut).
-    tot = run.agg(
-        F.max("ra").cast("long").alias("na"), F.max("rb").cast("long").alias("nb")
-    )
-    scored = run.crossJoin(F.broadcast(tot)).select(
+    run = grouped_running_sums(g, [], [F.col("value")], [("ca", "ra"), ("cb", "rb")])
+    scored = run.withColumnsRenamed({"ra_total": "na", "rb_total": "nb"}).select(
         "value",
         "na",
         "nb",
@@ -2575,7 +2558,7 @@ def events_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
     join; everything after lives on the day dictionary (bounded by the
     corpus day span), where the running sums ride the range-partitioned
     rank machinery — no single-task window over subjects."""
-    from gluettalax_spark.operators.rank import grouped_running_sum, grouped_running_sums
+    from gluettalax_spark.operators.rank import grouped_running_sums
 
     events = load(spark, sf_dir, "events")
     horizon = events.agg(F.max(F.unix_micros("ts")).alias("h"))
@@ -2609,10 +2592,10 @@ def events_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
     days = subjects.groupBy(F.col("dur").alias("day")).agg(
         F.sum("observed").cast("long").alias("d"),
         F.sum(1 - F.col("observed")).cast("long").alias("c"),
-    ).withColumn("_g", F.lit(1))
+    )
     total = subjects.agg(F.count(F.lit(1)).cast("long").alias("n_total"))
-    cum = grouped_running_sum(
-        days.withColumn("dc", F.col("d") + F.col("c")), ["_g"], ["day"], "dc", "cum_dc"
+    cum = grouped_running_sums(
+        days.withColumn("dc", F.col("d") + F.col("c")), [], ["day"], [("dc", "cum_dc")]
     )
     risk = cum.crossJoin(F.broadcast(total)).select(
         "day",
@@ -2630,11 +2613,9 @@ def events_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
                  ELSE CAST(floor(ln(CAST(n_risk - d AS DOUBLE) / n_risk) * {_KM_SCALE}) AS BIGINT)
                 END"""
         ).alias("lnq"),
-    ).withColumn("_g", F.lit(1))
-    # One fused pass (optimization r12): ln-survival and absorption
-    # previously chained two single-column range passes; values unchanged.
+    )
     km = grouped_running_sums(
-        steps, ["_g"], ["day"], [("lnq", "ln_s_micro"), ("absorbed", "n_absorbed")]
+        steps, [], ["day"], [("lnq", "ln_s_micro"), ("absorbed", "n_absorbed")]
     )
     return (
         km.select(
@@ -3480,7 +3461,7 @@ def events_hazard_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: entry/conversion are user-keyed aggregates and one user-keyed
     join; everything after lives on the calendar-bounded day dictionary,
     where the running sums ride the range-partitioned rank machinery."""
-    from gluettalax_spark.operators.rank import grouped_running_sum
+    from gluettalax_spark.operators.rank import grouped_running_sums
 
     events = load(spark, sf_dir, "events")
     horizon = events.agg(F.max(F.unix_micros("ts")).alias("h"))
@@ -3514,10 +3495,10 @@ def events_hazard_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     days = subjects.groupBy(F.col("dur").alias("day")).agg(
         F.sum("observed").cast("long").alias("d"),
         F.sum(1 - F.col("observed")).cast("long").alias("c"),
-    ).withColumn("_g", F.lit(1))
+    )
     total = subjects.agg(F.count(F.lit(1)).cast("long").alias("n_total"))
-    cum = grouped_running_sum(
-        days.withColumn("dc", F.col("d") + F.col("c")), ["_g"], ["day"], "dc", "cum_dc"
+    cum = grouped_running_sums(
+        days.withColumn("dc", F.col("d") + F.col("c")), [], ["day"], [("dc", "cum_dc")]
     )
     hz = (
         cum.crossJoin(F.broadcast(total))
@@ -3533,9 +3514,8 @@ def events_hazard_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
             "d",
             "CAST(CAST(d AS DECIMAL(38,0)) * 1000000 div n_risk AS BIGINT) AS hazard_ppm",
         )
-        .withColumn("_g", F.lit(1))
     )
-    out = grouped_running_sum(hz, ["_g"], ["day"], "hazard_ppm", "cum_hazard_ppm")
+    out = grouped_running_sums(hz, [], ["day"], [("hazard_ppm", "cum_hazard_ppm")])
     return out.select(
         "day", "n_risk", "d", "hazard_ppm", F.col("cum_hazard_ppm").cast("long").alias("cum_hazard_ppm")
     ).orderBy("day")
@@ -3594,10 +3574,8 @@ def stats_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     D > c·√((n₁+n₂)/(n₁n₂)) with no square root.
 
     Scale: one data-scale groupBy to the value dictionary; BOTH running
-    counts ride ONE range-partitioned `grouped_running_sums` pass
-    (optimization r12 — previously two single-column passes joined back
-    on `v`: 2 range shuffles + 1 sort-merge join collapsed into 1 range
-    shuffle, values unchanged); everything after is metadata-scale."""
+    counts and their totals ride ONE range-partitioned
+    `grouped_running_sums` pass; everything after is one 1-row fold."""
     from gluettalax_spark.operators.rank import grouped_running_sums
 
     orders = load(spark, sf_dir, "orders")
@@ -3611,21 +3589,16 @@ def stats_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("g1").cast("long").alias("c1"),
             (F.count(F.lit(1)) - F.sum("g1")).cast("long").alias("c2"),
         )
-        .withColumn("_g", F.lit(1))
     )
-    vals = vals.persist(CKPT_LEVEL)  # feeds totals + running-sums pass
-    cum = grouped_running_sums(
-        vals, ["_g"], ["v"], [("c1", "cum1"), ("c2", "cum2")]
-    ).select("v", "cum1", "cum2")
-    tot = vals.agg(
-        F.sum("c1").cast("long").alias("n1"), F.sum("c2").cast("long").alias("n2")
+    cum = grouped_running_sums(vals, [], ["v"], [("c1", "cum1"), ("c2", "cum2")])
+    d = cum.agg(
+        F.max("cum1_total").alias("n1"),
+        F.max("cum2_total").alias("n2"),
+        F.max(
+            F.abs(F.col("cum1") * F.col("cum2_total") - F.col("cum2") * F.col("cum1_total"))
+        ).cast("long").alias("d_num"),
     )
-    d = (
-        cum.crossJoin(F.broadcast(tot))
-        .select(F.abs(F.col("cum1") * F.col("n2") - F.col("cum2") * F.col("n1")).alias("diff"))
-        .agg(F.max("diff").cast("long").alias("d_num"))
-    )
-    return d.crossJoin(F.broadcast(tot)).selectExpr(
+    return d.selectExpr(
         "n1",
         "n2",
         "d_num",
@@ -3713,7 +3686,6 @@ def stats_wasserstein_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("g1").cast("long").alias("c1"),
             (F.count(F.lit(1)) - F.sum("g1")).cast("long").alias("c2"),
         )
-        .withColumn("_g", F.lit(1))
     )
     vals = vals.persist(CKPT_LEVEL)  # totals + running-sums pass
     tot = vals.agg(
@@ -3723,7 +3695,7 @@ def stats_wasserstein_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("v") * F.col("c2")).cast("decimal(38,0)").alias("s2"),
     )
     cum = grouped_running_sums(
-        vals, ["_g"], ["v"], [("c1", "cum1"), ("c2", "cum2")],
+        vals, [], ["v"], [("c1", "cum1"), ("c2", "cum2")],
         lead_of="v", lead_name="v_next",
     ).select("v", "cum1", "cum2", (F.col("v_next") - F.col("v")).alias("dv"))
     w = (

@@ -2429,9 +2429,7 @@ def corpus_token_zipf(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(F.expr(r"regexp_extract_all(lower(text), '[a-z]+', 0)")).alias("w")
     )
     freq = words.groupBy("w").agg(F.count("*").cast("long").alias("c"))
-    ranked = exact_global_rank(
-        freq, [F.col("c").desc(), F.col("w")], "rk", keep_total=False
-    )
+    ranked = exact_global_rank(freq, [F.col("c").desc(), F.col("w")], "rk")
     pts = ranked.select(
         "c",
         F.floor(F.log(F.col("rk").cast("double")) * 1_000_000)
@@ -3526,22 +3524,23 @@ def text_ppl_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     an integer.
 
     Scale: per-language ranking never funnels a language through one
-    task — the rank comes from `grouped_running_sum` over the
+    task — the rank comes from `grouped_running_sums` over the
     (lang, key) dictionary; the only windows partition by (lang, key)
     (tie blocks, hash-thin by construction). ntile is then pure
     arithmetic from (rank, per-lang total)."""
-    from gluettalax_spark.operators.rank import grouped_running_sum, ntile_from_rank
+    from gluettalax_spark.operators.rank import grouped_running_sums, ntile_from_rank
 
     scored = ppl_doc_keys(spark, sf_dir).persist(CKPT_LEVEL)
     dict_df = scored.groupBy("lang", "key_nano").agg(
         F.count(F.lit(1)).cast("long").alias("n_k")
     )
-    cum = grouped_running_sum(dict_df, ["lang"], ["key_nano"], "n_k", "cum")
-    n_lang = scored.groupBy("lang").agg(F.count(F.lit(1)).cast("long").alias("n_lang"))
+    cum = grouped_running_sums(dict_df, ["lang"], ["key_nano"], [("n_k", "cum")])
     w_tie = Window.partitionBy("lang", "key_nano").orderBy("doc_id")
     ranked = (
-        scored.join(cum.select("lang", "key_nano", "n_k", "cum"), ["lang", "key_nano"])
-        .join(F.broadcast(n_lang), "lang")
+        scored.join(
+            cum.select("lang", "key_nano", "n_k", "cum", F.col("cum_total").alias("n_lang")),
+            ["lang", "key_nano"],
+        )
         .withColumn(
             "rnk", (F.col("cum") - F.col("n_k") + F.row_number().over(w_tie)).cast("long")
         )
@@ -3845,7 +3844,7 @@ def text_heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange the vocabulary already pays), and doc-keyed running sums
     on the range-partitioned rank machinery — never a single-task
     window over docs."""
-    from gluettalax_spark.operators.rank import grouped_running_sum
+    from gluettalax_spark.operators.rank import grouped_running_sums
 
     docs = load(spark, sf_dir, "documents")
     toks = docs.select(
@@ -3868,11 +3867,9 @@ def text_heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_tok",
             F.coalesce(F.col("novel"), F.lit(0)).cast("long").alias("novel"),
         )
-        .withColumn("_g", F.lit(1))
     )
-    c1 = grouped_running_sum(joined, ["_g"], ["doc_id"], "n_tok", "t_cum")
-    c2 = grouped_running_sum(c1, ["_g"], ["doc_id"], "novel", "v_cum")
-    pts = c2.filter((F.col("t_cum") > 0) & (F.col("v_cum") > 0)).select(
+    cum = grouped_running_sums(joined, [], ["doc_id"], [("n_tok", "t_cum"), ("novel", "v_cum")])
+    pts = cum.filter((F.col("t_cum") > 0) & (F.col("v_cum") > 0)).select(
         F.expr(f"CAST(floor(ln(CAST(t_cum AS DOUBLE)) * {_HEAPS_Q}) AS BIGINT)").alias("x"),
         F.expr(f"CAST(floor(ln(CAST(v_cum AS DOUBLE)) * {_HEAPS_Q}) AS BIGINT)").alias("y"),
     )
@@ -4346,7 +4343,7 @@ def text_token_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
     )
     vocab = vocab.persist(CKPT_LEVEL)  # feeds the rank AND the total
-    ranked = exact_global_rank(vocab, [F.col("c").desc(), F.col("w")], "r", keep_total=False)
+    ranked = exact_global_rank(vocab, [F.col("c").desc(), F.col("w")], "r")
     tot = vocab.agg(
         F.sum("c").cast("long").alias("n_total"),
         F.count(F.lit(1)).cast("long").alias("n_vocab"),
@@ -4625,7 +4622,7 @@ def text_doc_length_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one groupBy to the (source × length) dictionary; the running
     count uses the range-partitioned machinery per source; nothing else
     touches data rows."""
-    from gluettalax_spark.operators.rank import grouped_running_sum
+    from gluettalax_spark.operators.rank import grouped_running_sums
 
     docs = load(spark, sf_dir, "documents")
     dict_df = (
@@ -4633,7 +4630,7 @@ def text_doc_length_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("source", "v")
         .agg(F.count(F.lit(1)).cast("long").alias("m"))
     )
-    r = grouped_running_sum(dict_df, ["source"], ["v"], "m", "cum")
+    r = grouped_running_sums(dict_df, ["source"], ["v"], [("m", "cum")])
     g = r.groupBy("source").agg(
         F.sum("m").cast("long").alias("n_docs"),
         F.sum(F.col("v").cast("decimal(38,0)") * F.col("m")).cast("long").alias("s"),

@@ -1042,7 +1042,7 @@ def orders_interpurchase_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     percentile probes are conditional aggregates over it."""
     from pyspark.sql.window import Window
 
-    from gluettalax_spark.operators.rank import grouped_running_sum
+    from gluettalax_spark.operators.rank import grouped_running_sums
 
     orders = load(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
@@ -1056,24 +1056,13 @@ def orders_interpurchase_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("c", F.datediff("d", "prev_d").cast("long").alias("gap"))
         .persist(CKPT_LEVEL)  # feeds the dictionary AND n_repeat
     )
-    dict_df = (
-        gaps.groupBy("gap")
-        .agg(F.count(F.lit(1)).cast("long").alias("ng"))
-        .withColumn("_g", F.lit(1))
-        .persist(CKPT_LEVEL)
+    dict_df = gaps.groupBy("gap").agg(F.count(F.lit(1)).cast("long").alias("ng"))
+    r = grouped_running_sums(dict_df, [], ["gap"], [("ng", "cum")]).select(
+        "gap", "ng", "cum", F.col("cum_total").alias("n_gaps")
     )
-    r = grouped_running_sum(dict_df, ["_g"], ["gap"], "ng", "cum").select("gap", "ng", "cum")
-    tot = (
-        dict_df.agg(
-            F.sum("ng").cast("long").alias("n_gaps"),
-            F.sum(F.col("gap").cast("decimal(38,0)") * F.col("ng")).cast("long").alias("s_gap"),
-        )
-        .crossJoin(
-            gaps.agg(F.countDistinct("c").cast("long").alias("n_repeat_customers"))
-        )
-    )
+    n_repeat = gaps.agg(F.countDistinct("c").cast("long").alias("n_repeat_customers"))
     return (
-        r.crossJoin(F.broadcast(tot))
+        r.crossJoin(F.broadcast(n_repeat))
         .groupBy("n_repeat_customers", "n_gaps")
         .agg(
             F.min(
@@ -1088,7 +1077,10 @@ def orders_interpurchase_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min(
                 F.when(F.col("cum") >= F.expr("(n_gaps * 90 + 99) div 100"), F.col("gap"))
             ).alias("p90_days"),
-            F.expr("CAST(max(s_gap) * 1000 div max(n_gaps) AS BIGINT)").alias("mean_gap_milli"),
+            F.expr(
+                "CAST(CAST(sum(CAST(gap AS DECIMAL(38,0)) * ng) AS BIGINT) * 1000"
+                " div n_gaps AS BIGINT)"
+            ).alias("mean_gap_milli"),
         )
         .select(
             "n_repeat_customers", "n_gaps",

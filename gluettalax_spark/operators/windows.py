@@ -819,7 +819,7 @@ def events_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: sessionization is the user-partitioned window pair; the
     global running sum goes through the range-partitioned
-    `grouped_running_sum` machinery (never a single-task window over
+    `grouped_running_sums` machinery (never a single-task window over
     2x sessions rows); the peak lookup is one aggregate + one filter."""
     events = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -843,11 +843,11 @@ def events_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).unionAll(
         spans.select(F.col("t1").alias("t"), F.lit(-1).alias("delta"), F.lit(1).alias("neg"))
     )
-    from gluettalax_spark.operators.rank import grouped_running_sum
+    from gluettalax_spark.operators.rank import grouped_running_sums
 
-    running = grouped_running_sum(
-        deltas.withColumn("_g", F.lit(1)), ["_g"], ["t", "neg"], "delta", "cur"
-    ).persist(CKPT_LEVEL)  # feeds the peak aggregate AND the peak-at lookup
+    running = grouped_running_sums(deltas, [], ["t", "neg"], [("delta", "cur")]).persist(
+        CKPT_LEVEL
+    )  # feeds the peak aggregate AND the peak-at lookup
     peak = running.agg(F.max("cur").cast("long").alias("peak"))
     peak_at = (
         running.crossJoin(F.broadcast(peak))

@@ -18,7 +18,6 @@ completion on the finite fixture and compare against the batch truth
 
 from __future__ import annotations
 
-from gluettalax_spark.memory import CKPT_LEVEL
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -383,8 +382,8 @@ def _register_funnel_latency():
         Scale: the pair join is the same user-key equi-join; min() per
         view is a partial-aggregated groupBy on the view id; everything
         after lives on the ≤24-row bucket dictionary, where the running
-        sum rides `grouped_running_sum` (no single-task window)."""
-        from gluettalax_spark.operators.rank import grouped_running_sum
+        sum rides `grouped_running_sums` (no single-task window)."""
+        from gluettalax_spark.operators.rank import grouped_running_sums
 
         ev = load(spark, sf_dir, "events")
         a = ev.filter(F.col("event_type") == "view").select(
@@ -413,22 +412,15 @@ def _register_funnel_latency():
             )
             .groupBy("bucket")
             .agg(F.count(F.lit(1)).cast("long").alias("n_views"))
-            .withColumn("_g", F.lit(1))
         )
-        hist = hist.persist(CKPT_LEVEL)  # feeds total AND running sum (lazy cut, r12)
-        tot = hist.agg(F.sum("n_views").cast("long").alias("total"))
-        cum = grouped_running_sum(hist, ["_g"], ["bucket"], "n_views", "cum_views")
-        return (
-            cum.crossJoin(F.broadcast(tot))
-            .selectExpr(
-                "bucket",
-                "CAST(bucket * 30 AS BIGINT) AS bucket_start_min",
-                "n_views",
-                "CAST(cum_views AS BIGINT) AS cum_views",
-                "CAST(cum_views * 1000000 DIV total AS BIGINT) AS cum_ppm",
-            )
-            .orderBy("bucket")
-        )
+        cum = grouped_running_sums(hist, [], ["bucket"], [("n_views", "cum_views")])
+        return cum.selectExpr(
+            "bucket",
+            "CAST(bucket * 30 AS BIGINT) AS bucket_start_min",
+            "n_views",
+            "CAST(cum_views AS BIGINT) AS cum_views",
+            "CAST(cum_views * 1000000 DIV cum_views_total AS BIGINT) AS cum_ppm",
+        ).orderBy("bucket")
 
 
 _register_funnel_latency()

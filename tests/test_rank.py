@@ -16,6 +16,7 @@ from pyspark.sql.window import Window
 from gluettalax_spark.operators.rank import (
     cume_dist_from_rank,
     exact_global_rank,
+    grouped_running_sums,
     ntile_from_rank,
     percent_rank_from_rank,
 )
@@ -101,50 +102,92 @@ def test_exact_rank_empty_and_single_partition(spark):
 
 
 # --------------------------------------------------------------------------
-# grouped_running_sum
+# grouped_running_sums
 # --------------------------------------------------------------------------
 
-@pytest.mark.parametrize("n,groups,npart", [(1, 1, 4), (50, 3, 4), (1000, 7, 5), (1000, 7, 1)])
-def test_grouped_running_sum_matches_naive_window(spark, n, groups, npart):
-    """The distributed grouped running sum must equal the single-task
-    Window.partitionBy(group) form it replaces, for degenerate and
-    multi-partition shapes (including groups that span partitions)."""
-    from gluettalax_spark.operators.rank import grouped_running_sum
-
-    df = spark.range(n).select(
+def _grouped_sample(spark, n, groups):
+    return spark.range(n).select(
         F.col("id"),
         (F.col("id") % groups).cast("string").alias("g"),
         (F.hash("id") % 50 + 50).alias("val"),
     )
-    got = grouped_running_sum(df, ["g"], ["id"], "val", "run", num_partitions=npart)
+
+
+def _same_rows(got, exp, cols):
+    assert got.select(*cols).exceptAll(exp.select(*cols)).count() == 0
+    assert exp.select(*cols).exceptAll(got.select(*cols)).count() == 0
+
+
+@pytest.mark.parametrize("n,groups,npart", [(1, 1, 4), (50, 3, 4), (1000, 7, 5), (1000, 7, 1)])
+def test_grouped_running_sums_matches_naive_window(spark, n, groups, npart):
+    """The distributed grouped running sum must equal the single-task
+    Window.partitionBy(group) form it replaces, for degenerate and
+    multi-partition shapes (including groups that span partitions)."""
+    df = _grouped_sample(spark, n, groups)
+    got = grouped_running_sums(df, ["g"], ["id"], [("val", "run")], num_partitions=npart)
     w = Window.partitionBy("g").orderBy("id").rowsBetween(Window.unboundedPreceding, 0)
     exp = df.withColumn("run", F.sum("val").over(w))
-    assert got.select("id", "g", "run").exceptAll(exp.select("id", "g", "run")).count() == 0
-    assert exp.select("id", "g", "run").exceptAll(got.select("id", "g", "run")).count() == 0
+    _same_rows(got, exp, ["id", "g", "run"])
 
 
-def test_grouped_running_sum_deterministic(spark):
-    from gluettalax_spark.operators.rank import grouped_running_sum
+@pytest.mark.parametrize("n,groups,npart", [(1, 1, 4), (1000, 7, 5)])
+def test_grouped_running_sums_total_matches_naive_group_sum(spark, n, groups, npart):
+    df = _grouped_sample(spark, n, groups)
+    got = grouped_running_sums(df, ["g"], ["id"], [("val", "run")], num_partitions=npart)
+    exp = df.withColumn("run_total", F.sum("val").over(Window.partitionBy("g")))
+    _same_rows(got, exp, ["id", "g", "run_total"])
 
+
+@pytest.mark.parametrize("npart", [1, 6])
+def test_grouped_running_sums_empty_group_list_is_one_global_group(spark, npart):
+    df = _grouped_sample(spark, 500, 5)
+    got = grouped_running_sums(
+        df, [], ["val", "id"], [("val", "run"), ("id", "id_run")], num_partitions=npart
+    )
+    w = Window.orderBy("val", "id")
+    exp = df.select(
+        "id",
+        F.sum("val").over(w.rowsBetween(Window.unboundedPreceding, 0)).alias("run"),
+        F.sum("id").over(w.rowsBetween(Window.unboundedPreceding, 0)).alias("id_run"),
+        F.sum("val").over(Window.partitionBy()).alias("run_total"),
+        F.sum("id").over(Window.partitionBy()).alias("id_run_total"),
+    )
+    _same_rows(got, exp, ["id", "run", "id_run", "run_total", "id_run_total"])
+
+
+def test_grouped_running_sums_empty_input(spark):
+    empty = _grouped_sample(spark, 0, 1)
+    assert grouped_running_sums(empty, ["g"], ["id"], [("val", "run")]).count() == 0
+    assert grouped_running_sums(empty, [], ["id"], [("val", "run")]).count() == 0
+
+
+def test_grouped_running_sums_lead_with_empty_group_list(spark):
+    df = spark.range(300).select((F.col("id") * 3 % 301).alias("v"), F.lit(1).alias("one"))
+    got = grouped_running_sums(
+        df, [], ["v"], [("one", "rank")], num_partitions=5, lead_of="v", lead_name="v_next"
+    )
+    exp = df.select("v", F.lead("v").over(Window.orderBy("v")).alias("v_next"))
+    _same_rows(got, exp, ["v", "v_next"])
+
+
+def test_grouped_running_sums_deterministic(spark):
     df = spark.range(500).select(
         F.col("id"), (F.col("id") % 5).cast("string").alias("g"), F.lit(3).alias("val")
     )
-    a = grouped_running_sum(df, ["g"], ["id"], "val", "run", num_partitions=6).collect()
-    b = grouped_running_sum(df, ["g"], ["id"], "val", "run", num_partitions=6).collect()
+    a = grouped_running_sums(df, ["g"], ["id"], [("val", "run")], num_partitions=6).collect()
+    b = grouped_running_sums(df, ["g"], ["id"], [("val", "run")], num_partitions=6).collect()
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
 
 
-def test_grouped_running_sum_no_group_partitioned_data_window(spark):
+def test_grouped_running_sums_no_group_partitioned_data_window(spark):
     """The plan must not contain a WindowExec partitioned ONLY by the
     group column over the raw data — every data-path window is keyed by
     (_pid, group); the group-only window may appear solely over the
     metadata-scale offsets aggregate."""
-    from gluettalax_spark.operators.rank import grouped_running_sum
-
     df = spark.range(10_000).select(
         F.col("id"), (F.col("id") % 4).cast("string").alias("g"), F.lit(1).alias("val")
     )
-    out = grouped_running_sum(df, ["g"], ["id"], "val", "run", num_partitions=8)
+    out = grouped_running_sums(df, ["g"], ["id"], [("val", "run")], num_partitions=8)
     plan = out._jdf.queryExecution().executedPlan().toString()
     for ln in plan.splitlines():
         if "windowspecdefinition(" in ln and "_pid" not in ln:

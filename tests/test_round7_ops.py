@@ -1057,7 +1057,7 @@ def test_abc_matches_python_recompute(spark, sf_dir):
 
 def test_abc_plan_shape(spark, sf_dir):
     plan = physical_plan(queries()["orders_abc_analysis"](spark, sf_dir))
-    # The running sum rides the grouped_running_sum machinery (frozen
+    # The running sum rides the grouped_running_sums machinery (frozen
     # range-partitioned run), never an unpartitioned data-scale window.
     assert "Scan ExistingRDD" in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan

@@ -92,19 +92,19 @@ SHOWCASE = {
     "similarity_topk_hamming": "zero-shuffle 8-byte sign sketch; broadcast query join; xor+popcount scoring",
     "graph_assortativity": "shared basket-explode edges; degree equi-joins; five decimal moments to one row",
     "events_activity_streaks": "(day - row_number) island key per user; no self-join; monotone shrinking aggregates",
-    "orders_abc_analysis": "global running sum via grouped_running_sum (constant group); integer-cents class cuts; 3-row agg",
+    "orders_abc_analysis": "global running sum via grouped_running_sums (one global group); integer-cents class cuts; 3-row agg",
     "sql_pipe_syntax": "|> stages desugar to the classic plan: pushed filter, partial agg, TakeOrderedAndProject",
     "dedup_minhash_accuracy": "one shuffle builds sigs + shingle sets; capped band join; audit folds to one row",
     "events_dau_mau_stickiness": "(day,user) pairs forward-contribute to <=28 windows; one distinct-agg carries DAU and MAU",
-    "events_ks_test": "distinct-value axis; both ECDFs via one grouped_running_sum chain; argmax is TakeOrderedAndProject(1)",
+    "events_ks_test": "distinct-value axis; both ECDFs via one grouped_running_sums pass; argmax is TakeOrderedAndProject(1)",
     "events_rolling_zscore": "one rows-frame window per (user, type); integer cross-multiplied |z|>k decision; types-sized agg",
     "text_char_entropy": "char explode partial-aggs map-side to alphabet-bounded groups; integer entropy terms",
     "shard_balance_audit": "md5 shard key; map-side partial agg to 64 rows; 1-row fold",
-    "agg_weighted_median": "values collapse map-side; running weight via grouped_running_sum; integer crossing fold",
+    "agg_weighted_median": "values collapse map-side; running weight via grouped_running_sums; integer crossing fold",
     "events_benford_audit": "first digit from the integer-cents string; nine-row aggregate + 1-row total",
     "orders_repeat_cohort": "one groupBy(customer) folds first-month/count/LTV; months-sized cohort agg; window-free",
     "stats_anova_oneway": "one data-scale groupBy to the k-row moment table; F from five exact integers",
-    "stats_kruskal_wallis": "cents dictionary + grouped_running_sum rank; milli-quantized H sum per group",
+    "stats_kruskal_wallis": "cents dictionary + grouped_running_sums rank; milli-quantized H sum per group",
     "text_dup_ngram_fraction": "shingle explode -> (doc,h) agg checkpointed once; dup set hash-joined back (never broadcast-assumed)",
     "quality_classifier_linear": "features explode map-side in the scan stage; only the doc-keyed agg shuffles",
     "similarity_range_radius": "20-probe broadcast; zip_with/aggregate integer distance inside the scan stage",
@@ -139,7 +139,7 @@ SHOWCASE = {
     "similarity_topk_filtered": "label-keyed probe broadcast into the scan; 20 bounded rank partitions",
     "events_peak_concurrency": "+1/-1 session deltas; range-partitioned global running sum; no interval self-join",
     "part_skyline_pareto": "size-dictionary sweep (per-size min + strict-prefix min); oracle proves vs NOT EXISTS",
-    "corpus_mix_budget": "source-grain aggregate; rank-and-fill on the source dictionary via grouped_running_sum",
+    "corpus_mix_budget": "source-grain aggregate; rank-and-fill on the source dictionary via grouped_running_sums",
     "orders_croston_intermittent": "(part, ship-day) grain; calendar-bounded per-part arrays; power-of-two EWMA folds",
     "text_simhash_bit_balance": "shared one-shuffle fingerprint pass; map-side 64x bit fan-out to 64 groups",
     "json_schema_drift": "broadcast midpoint; key explode to (key x 2) grid; ppm floor divisions",
@@ -223,7 +223,7 @@ SHOWCASE = {
     "dedup_substring_profile": "runs stream is doc-granular; token totals from a column-pruned second scan; doc_id join bounded",
     "dedup_substring_source_matrix": "per-gram source self-join fans out at most C(|sources|,2) per gram; two key-hash aggregates",
     "dedup_levenshtein_rescore": "O(len^2) DP only on the bounded banded pair list; text fetched by two doc_id equi-joins",
-    "stats_ks_test": "value dictionary; both cumulative counts via grouped_running_sum; squared decision rule in DECIMAL(38)",
+    "stats_ks_test": "value dictionary; both cumulative counts via grouped_running_sums; squared decision rule in DECIMAL(38)",
     "stats_wasserstein_1d": "CDF-area terms on the value dictionary; neighbor steps via exact_global_rank self-join",
     "text_readability_flesch": "three regex folds per row inside the scan stage; source-dictionary agg (ARI sibling)",
     "graph_harmonic_2hop": "hub-capped wedge explode; anti-join excludes direct edges; two key-hash aggregates, top-20",
