@@ -1137,6 +1137,9 @@ def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-joins on doc id."""
     from pyspark.sql.window import Window
 
+    # Call-time import: graph imports this module at load.
+    from gluettalax_spark.operators.graph import explode_pairs
+
     ex = (
         shingles_exploded(spark, sf_dir)
         .select("doc_id", F.expr("CAST(conv(substr(md5(s), 1, 15), 16, 10) AS BIGINT)").alias("hs"))
@@ -1153,15 +1156,7 @@ def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sort_array(F.collect_set("doc_id")).alias("docs"))
     )
     pairs = (
-        keyed.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(docs, (x, i) -> "
-                    "transform(slice(docs, i + 2, size(docs)), y -> struct(x AS doc_a, y AS doc_b))))"
-                )
-            ).alias("p")
-        )
-        .select("p.doc_a", "p.doc_b")
+        explode_pairs(keyed, "docs", "doc_a", "doc_b")
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("n_shared"))
     )

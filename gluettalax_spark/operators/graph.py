@@ -13,7 +13,8 @@ Scale design: label propagation by repeated min-join. Each round is one
 shuffled join + aggregate; rounds needed = graph diameter (near-dup
 clusters are shallow — a handful). Lineage is cut per round with
 ``localCheckpoint`` (cluster analog: checkpoint to storage) so the plan
-doesn't grow with iterations. At extreme scale, swap the loop body for the
+doesn't grow with iterations. A graph still unconverged after
+``_FALLOVER_ROUNDS`` rounds is deep, and falls over automatically to the
 large-star/small-star variant (Kiveris et al., "Connected Components in
 MapReduce and Beyond") — same join primitive, provably fewer rounds.
 """
@@ -74,6 +75,7 @@ class _GenerationRotator:
     def __init__(self, spark: SparkSession) -> None:
         self._jsc = spark.sparkContext._jsc
         self._live: set[int] = set()
+        self._pending: set[int] = set()
 
     def checkpoint(self, df: DataFrame, eager: bool = True) -> DataFrame:
         """``eager=False`` is safe ONLY when the caller runs an action on
@@ -98,14 +100,14 @@ class _GenerationRotator:
             jrdd = rdds.get(rid)
             if jrdd is not None:
                 jrdd.unpersist(False)
-        self._live = getattr(self, "_pending", set())
+        self._live = self._pending
         self._pending = set()
 
 
 def connected_components(edges: DataFrame, src: str = "u", dst: str = "v") -> DataFrame:
     """(node, component) for every node in ``edges``; component = min node
     id reachable. Pure DataFrame iteration — no RDDs, no collect of data
-    (only a 1-row convergence count per round crosses to the driver).
+    (only a 1-row convergence flag per round crosses to the driver).
 
     Hybrid: min-label propagation (cheapest per round, diameter-bounded
     rounds) with a round-count guard — if the graph hasn't converged in
@@ -123,7 +125,7 @@ def connected_components(edges: DataFrame, src: str = "u", dst: str = "v") -> Da
     sym = sym.distinct().persist(CKPT_LEVEL)
     rot = _GenerationRotator(edges.sparkSession)
     # eager=False throughout (optimization r12, the kcore §5 fusion): every
-    # round's `changed` count consumes the new generation BEFORE retire(),
+    # round's convergence probe consumes the new generation BEFORE retire(),
     # so the checkpoint materializes inside the probe — one driver-blocking
     # job per round instead of two.
     labels = rot.checkpoint(
@@ -131,27 +133,6 @@ def connected_components(edges: DataFrame, src: str = "u", dst: str = "v") -> Da
         eager=False,
     )
     rot.retire()
-    converged = False
-    # Convergence probe by LABEL-SUM (r13, guide §2.1): min-label rounds
-    # only ever DECREASE a node's label (lab' = least(lab, nbr_min)), so
-    # Σlab is strictly monotone while anything changes and
-    # "changed == 0" ⟺ "Σlab unchanged". The old probe joined the new
-    # generation against the old one per round; this is one aggregate
-    # over the new generation alone — the same single job that
-    # materializes the lazy checkpoint, one join fewer per round.
-    # decimal(38,0) keeps the sum exact at any node-id scale. Only valid
-    # for INTEGRAL labels (ids, or decimals of scale 0): a fractional
-    # decimal would round in that cast, so two rounds could sum equal
-    # while labels still move. String node keys (the fuzzy-name graph)
-    # keep the join-probe — min() still decreases lexicographically but
-    # has no exact sum.
-    from pyspark.sql.types import ByteType, DecimalType, IntegerType, LongType, ShortType
-
-    lab_type = labels.schema["lab"].dataType
-    sum_probe = isinstance(lab_type, (ByteType, ShortType, IntegerType, LongType)) or (
-        isinstance(lab_type, DecimalType) and lab_type.scale == 0
-    )
-    prev_sum = None
     for _ in range(_FALLOVER_ROUNDS):
         nbr_min = (
             sym.join(labels, sym.v == labels.node)
@@ -163,33 +144,22 @@ def connected_components(edges: DataFrame, src: str = "u", dst: str = "v") -> Da
             .select(
                 "node",
                 F.least(F.col("lab"), F.coalesce(F.col("nbr_lab"), F.col("lab"))).alias("lab"),
+                (F.col("nbr_lab") < F.col("lab")).alias("moved"),
             ),
             eager=False,
         )
-        if sum_probe:
-            cur_sum = new_labels.agg(
-                F.sum(F.col("lab").cast("decimal(38,0)")).alias("s")
-            ).collect()[0]["s"]
-            # A NULL sum (no labels) proves nothing: not converged.
-            done = cur_sum is not None and cur_sum == prev_sum
-            prev_sum = cur_sum
-        else:
-            done = (
-                new_labels.alias("n")
-                .join(labels.alias("o"), "node")
-                .filter(F.col("n.lab") != F.col("o.lab"))
-                .count()
-                == 0
-            )
+        # Convergence probe: min-label only ever LOWERS a label, so "no
+        # label lowered this round" is exactly the fixed point, for any
+        # ordered key type (ids, decimals, strings). One aggregate over the
+        # new generation alone — the same job that materializes the lazy
+        # checkpoint. NULL means no labels at all (empty input): converged.
+        moved = new_labels.agg(F.bool_or("moved")).collect()[0][0]
         # The probe was the superseded generation's last read — release
         # its blocks now (the rotator, not ContextCleaner lag, decides).
         rot.retire()
         labels = new_labels
-        if done:
-            converged = True
-            break
-    if converged:
-        return labels.select(F.col("node"), F.col("lab").alias("component"))
+        if moved is not True:
+            return labels.select(F.col("node"), F.col("lab").alias("component"))
     # Deep graph: contract to label space and finish with star rounds.
     # Each partially-collapsed cluster is one supernode, so the contracted
     # edge set is no larger than the input and usually far smaller.
@@ -258,9 +228,15 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact semantics with a recursive CTE (transitive closure + min) —
     different algorithm, identical fixpoint, which is the point: the
     result is algorithm-independent."""
+    return _cluster_rows(dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b"))
+
+
+def _cluster_rows(pairs: DataFrame) -> DataFrame:
+    """(doc_id, component, cluster_size, is_keeper) over near-dup
+    ``(doc_a, doc_b)`` pairs, ordered by (component, doc_id): connected
+    components, then the keeper (min doc_id) of each cluster."""
     from pyspark.sql.window import Window
 
-    pairs = dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
     comp = connected_components(pairs, "doc_a", "doc_b").select(
         F.col("node").alias("doc_id"), F.col("component")
     )
@@ -440,27 +416,10 @@ ORDER BY component, doc_id
 def dedup_minhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The chain a 100 TB corpus dedup actually runs: MinHash signatures →
     LSH band candidates → Jaccard-verified pairs → connected components →
-    keeper per cluster. Same label-propagation core as dedup_clusters;
-    cluster_size via a window (never a per-component broadcast)."""
-    from pyspark.sql.window import Window
-
+    keeper per cluster. Same cluster tail as dedup_clusters."""
     from gluettalax_spark.operators.dedup import dedup_minhash_lsh
 
-    pairs = dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
-    comp = connected_components(pairs, "doc_a", "doc_b").select(
-        F.col("node").alias("doc_id"), F.col("component")
-    )
-    w = Window.partitionBy("component")
-    return (
-        comp.withColumn("cluster_size", F.count(F.lit(1)).over(w))
-        .select(
-            "doc_id",
-            "component",
-            "cluster_size",
-            (F.col("doc_id") == F.col("component")).alias("is_keeper"),
-        )
-        .orderBy("component", "doc_id")
-    )
+    return _cluster_rows(dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b"))
 
 
 # --------------------------------------------------------------------------
@@ -489,36 +448,116 @@ _DUCK_CAPPED_OP = f"""(
 )"""
 
 
-def cooccurrence_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(pa, pb), pa < pb — the part co-occurrence graph: parts co-ordered
-    in >= ``_TRI_MIN_SUPPORT`` distinct orders (the min-support prune
-    that keeps a basket graph sparse); baskets wider than ``MAX_BASKET``
-    distinct parts are dropped whole (see the cap comment above).
+def explode_pairs(df: DataFrame, arr: str, a: str, b: str, *keep: str) -> DataFrame:
+    """(a, b, *keep): one row per ordered pair (x, y) of the sorted array
+    column ``arr``, x before y — C(n, 2) rows for an array of n, none for
+    n < 2 — generated map-side from each row, with the ``keep`` columns
+    of that row riding along. Over a bounded array this replaces a
+    distinct + self-join (two shuffles) with none."""
+    pairs = F.expr(
+        f"flatten(transform({arr}, (x, i) -> "
+        f"transform(slice({arr}, i + 2, size({arr})), y -> struct(x AS {a}, y AS {b}))))"
+    )
+    return df.select(*keep, F.explode(pairs).alias("e")).select(f"e.{a}", f"e.{b}", *keep)
 
-    Per-order pair generation WITHOUT a self-join: one groupBy(order)
-    collects the (deduped, sorted) basket — bounded by items-per-order,
-    a data-model constant — and the ordered pairs explode map-side from
-    the array. One shuffle replaces distinct + self-join (two)."""
-    li = load(spark, sf_dir, "lineitem")
-    baskets = (
-        li.groupBy(F.col("l_orderkey").alias("o"))
+
+def order_baskets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(o, ps): each order's sorted distinct parts — one groupBy(order),
+    bounded by items-per-order, a data-model constant. Baskets wider than
+    ``MAX_BASKET`` distinct parts are dropped whole (see the cap comment
+    above)."""
+    return (
+        load(spark, sf_dir, "lineitem")
+        .groupBy(F.col("l_orderkey").alias("o"))
         .agg(F.sort_array(F.collect_set("l_partkey")).alias("ps"))
         .filter(F.size("ps") <= MAX_BASKET)
     )
+
+
+def pair_support(baskets: DataFrame) -> DataFrame:
+    """(pa, pb, support), pa < pb: the number of ``baskets`` rows whose
+    ``ps`` array holds both parts."""
     return (
-        baskets.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ps, (x, i) -> "
-                    "transform(slice(ps, i + 2, size(ps)), y -> struct(x AS pa, y AS pb))))"
-                )
-            ).alias("e")
-        )
-        .select("e.pa", "e.pb")
+        explode_pairs(baskets, "ps", "pa", "pb")
         .groupBy("pa", "pb")
-        .count()
-        .where(F.col("count") >= _TRI_MIN_SUPPORT)
-        .select("pa", "pb")
+        .agg(F.count(F.lit(1)).alias("support"))
+    )
+
+
+def cooccurrence_support(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(pa, pb, support), pa < pb — the weighted part co-occurrence
+    graph: parts co-ordered in >= ``_TRI_MIN_SUPPORT`` distinct orders
+    (the min-support prune that keeps a basket graph sparse). One shuffle
+    for the baskets, one for the pair count."""
+    return pair_support(order_baskets(spark, sf_dir)).where(
+        F.col("support") >= _TRI_MIN_SUPPORT
+    )
+
+
+def cooccurrence_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(pa, pb), pa < pb — the part co-occurrence graph of
+    :func:`cooccurrence_support`, unweighted."""
+    return cooccurrence_support(spark, sf_dir).select("pa", "pb")
+
+
+def node_degrees(
+    edges: DataFrame, a: str = "pa", b: str = "pb", n: str = "n", d: str = "d"
+) -> DataFrame:
+    """(n, d): how many ``edges`` rows name each node as endpoint ``a``
+    or ``b``. Both endpoints explode from each edge row in-row, so the
+    edge input is read once (a unionAll of the two endpoint projections
+    reads — and, uncut, recomputes — it twice)."""
+    return (
+        edges.select(F.explode(F.array(a, b)).alias(n))
+        .groupBy(n)
+        .agg(F.count(F.lit(1)).alias(d))
+    )
+
+
+def closed_wedges(edges: DataFrame, deg: DataFrame) -> DataFrame:
+    """(wsrc, ta, tb): every triangle of the undirected ``(pa, pb)`` edge
+    set exactly once, as the wedge wsrc→ta, wsrc→tb at its (degree,
+    id)-least vertex closed by the edge ta→tb; ``deg`` is
+    ``node_degrees(edges)`` (passed in so each caller keeps its own cut
+    on it).
+
+    The MapReduce-classic degree orientation (Suri & Vassilvitskii,
+    WWW'11): each edge is directed from its (degree, id)-smaller
+    endpoint, so every out-degree is O(sqrt(m)) and the wedge self-join
+    keyed on the oriented source is bounded by sqrt(2m) per vertex; the
+    close check is an equi-semi-join on the (ta, tb) pair. The oriented
+    edge table is cut because both joins read it."""
+    is_fwd = (F.col("da") < F.col("db")) | (
+        (F.col("da") == F.col("db")) & (F.col("pa") < F.col("pb"))
+    )
+    ed = (
+        edges.join(deg.select(F.col("n").alias("pa"), F.col("d").alias("da")), "pa")
+        .join(deg.select(F.col("n").alias("pb"), F.col("d").alias("db")), "pb")
+        .select(
+            F.when(is_fwd, F.col("pa")).otherwise(F.col("pb")).alias("src"),
+            F.when(is_fwd, F.col("pb")).otherwise(F.col("pa")).alias("dst"),
+            F.greatest("da", "db").alias("deg_dst"),
+        )
+        .persist(CKPT_LEVEL)
+    )
+    # Two out-neighbours of the same src, ordered by (degree, id) so the
+    # closing edge between them is oriented ta → tb.
+    w1, w2 = ed.alias("w1"), ed.alias("w2")
+    wedges = w1.join(
+        w2,
+        (F.col("w1.src") == F.col("w2.src"))
+        & (
+            (F.col("w1.deg_dst") < F.col("w2.deg_dst"))
+            | (
+                (F.col("w1.deg_dst") == F.col("w2.deg_dst"))
+                & (F.col("w1.dst") < F.col("w2.dst"))
+            )
+        ),
+    ).select(
+        F.col("w1.src").alias("wsrc"), F.col("w1.dst").alias("ta"), F.col("w2.dst").alias("tb")
+    )
+    return wedges.join(
+        ed.select(F.col("src").alias("ta"), F.col("dst").alias("tb")), ["ta", "tb"], "leftsemi"
     )
 
 
@@ -553,62 +592,23 @@ SELECT
 def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact triangle counting over the part co-occurrence graph (parts
     co-ordered in >= 2 distinct orders — the min-support prune that keeps
-    a basket graph sparse), via the MapReduce-classic degree orientation
-    (Suri & Vassilvitskii, WWW'11): each undirected edge is directed from
-    its (degree, id)-smaller endpoint, so every vertex's out-degree is
-    O(sqrt(m)) and every triangle is counted exactly once — as the wedge
-    at its (degree, id)-minimum vertex closed by the oriented edge
-    between the two out-neighbors.
+    a basket graph sparse), via the degree-oriented wedge join of
+    :func:`closed_wedges`: every triangle is counted exactly once — as
+    the wedge at its (degree, id)-minimum vertex closed by the oriented
+    edge between the two out-neighbors.
 
-    Scale shape: pair generation is an equi-self-join on l_orderkey
-    (fan-out bounded by items-per-order, a data-model constant — never
-    all-pairs over parts); support>=2 prunes the edge set; the wedge
-    self-join is keyed on the oriented source whose fan-out the
-    orientation bounds by sqrt(2m); the close check is an equi-semi-join
-    on the (a, b) pair. The ORACLE counts the same triangles via the
-    orientation-invariant id-ordered 3-way join, so the compare also
-    proves the orientation math. Everything is integer-exact."""
+    Scale shape: pair generation explodes map-side from the capped
+    per-order baskets (never all-pairs over parts); support>=2 prunes the
+    edge set; the wedge self-join's fan-out is bounded by sqrt(2m). The
+    ORACLE counts the same triangles via the orientation-invariant
+    id-ordered 3-way join, so the compare also proves the orientation
+    math. Everything is integer-exact."""
     # Cut lineage: the edge set feeds four consumers (deg, orientation,
     # wedge join, close join) — recomputing the basket explode per
     # consumer would dominate the runtime.
     edges = cooccurrence_edges(spark, sf_dir).persist(CKPT_LEVEL)
-
-    deg = (
-        edges.select(F.col("pa").alias("n"))
-        .unionAll(edges.select(F.col("pb").alias("n")))
-        .groupBy("n")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
-    # Orient each edge from its (degree, id)-smaller endpoint.
-    ed = (
-        edges.join(deg.withColumnRenamed("n", "pa").withColumnRenamed("d", "da"), "pa")
-        .join(deg.withColumnRenamed("n", "pb").withColumnRenamed("d", "db"), "pb")
-        .select(
-            F.when((F.col("da") < F.col("db")) | ((F.col("da") == F.col("db")) & (F.col("pa") < F.col("pb"))), F.col("pa"))
-            .otherwise(F.col("pb")).alias("src"),
-            F.when((F.col("da") < F.col("db")) | ((F.col("da") == F.col("db")) & (F.col("pa") < F.col("pb"))), F.col("pb"))
-            .otherwise(F.col("pa")).alias("dst"),
-            F.greatest("da", "db").alias("deg_dst_hi"),
-            F.least("da", "db").alias("deg_src"),
-        )
-        .select("src", "dst", F.col("deg_dst_hi").alias("deg_dst"))
-    )
-    ed = ed.persist(CKPT_LEVEL)
-
-    # Wedges at the orientation-minimum vertex: two out-neighbors of the
-    # same src, ordered by (degree, id) so the closing edge is oriented.
-    w1, w2 = ed.alias("w1"), ed.alias("w2")
-    wedges = w1.join(
-        w2,
-        (F.col("w1.src") == F.col("w2.src"))
-        & (
-            (F.col("w1.deg_dst") < F.col("w2.deg_dst"))
-            | ((F.col("w1.deg_dst") == F.col("w2.deg_dst")) & (F.col("w1.dst") < F.col("w2.dst")))
-        ),
-    ).select(F.col("w1.dst").alias("ta"), F.col("w2.dst").alias("tb"))
-    closed = wedges.join(
-        ed.select(F.col("src").alias("ta"), F.col("dst").alias("tb")), ["ta", "tb"], "leftsemi"
-    )
+    deg = node_degrees(edges)
+    closed = closed_wedges(edges, deg)
 
     n_tri = closed.agg(F.count(F.lit(1)).alias("n_triangles"))
     stats = deg.agg(
@@ -952,12 +952,7 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("lab_a") == F.col("lab_b"))
         .agg(F.count(F.lit(1)).cast("long").alias("a"))
     )
-    deg = (
-        edges.select(F.col("pa").alias("node"))
-        .unionAll(edges.select(F.col("pb").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).cast("long").alias("d"))
-    )
+    deg = node_degrees(edges, n="node")
     dc = deg.join(labels, "node").groupBy("lab").agg(F.sum("d").cast("decimal(38,0)").alias("dsum"))
     bs = dc.agg(
         F.count(F.lit(1)).cast("long").alias("n_communities"),
@@ -1217,16 +1212,10 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         # LAZY and the probe is a count() over it (optimization r12):
         # the count job materializes the checkpoint AND answers the
         # convergence question in one probe. localCheckpoint, NOT persist:
-        # each round references the previous generation 3x (union + two
+        # each round references the previous generation 3x (degrees + two
         # semi-joins via keep), so without lineage truncation the logical
         # plan grows 3^rounds and the driver OOMs analyzing it (observed).
-        deg = (
-            edges.select(F.col("pa").alias("n"))
-            .unionAll(edges.select(F.col("pb").alias("n")))
-            .groupBy("n")
-            .agg(F.count(F.lit(1)).alias("d"))
-            .localCheckpoint(eager=False, storageLevel=CKPT_LEVEL)
-        )
+        deg = node_degrees(edges).localCheckpoint(eager=False, storageLevel=CKPT_LEVEL)
         if deg.filter(F.col("d") < _KCORE_K).count() == 0:
             break
         keep = deg.filter(F.col("d") >= _KCORE_K).select("n")
@@ -1236,12 +1225,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("pa", "pb")
             .localCheckpoint(eager=False, storageLevel=CKPT_LEVEL)
         )
-    core_deg = (
-        edges.select(F.col("pa").alias("n"))
-        .unionAll(edges.select(F.col("pb").alias("n")))
-        .groupBy("n")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
+    core_deg = node_degrees(edges)
     totals = core_deg.agg(
         F.count(F.lit(1)).cast("long").alias("n_core_nodes"),
         F.coalesce(F.min("d") >= _KCORE_K, F.lit(True)).alias("converged"),
@@ -1348,14 +1332,7 @@ def jaccard_linkpred_scores(edges: DataFrame, max_deg: int = _LINKPRED_MAX_DEG) 
         .agg(F.sort_array(F.collect_set("nbr")).alias("ns"))
         .filter(F.size("ns") <= max_deg)
     )
-    wedges = nbrs.select(
-        F.explode(
-            F.expr(
-                "flatten(transform(ns, (x, i) -> "
-                "transform(slice(ns, i + 2, size(ns)), y -> struct(x AS a, y AS b))))"
-            )
-        ).alias("e")
-    ).select("e.a", "e.b")
+    wedges = explode_pairs(nbrs, "ns", "a", "b")
     common = wedges.groupBy("a", "b").agg(
         F.count(F.lit(1)).cast("long").alias("common_neighbors")
     )
@@ -1453,13 +1430,8 @@ def assortativity_from_edges(raw_edges: DataFrame) -> DataFrame:
     factored out so tests can pin known-shape graphs (a star is exactly
     r = -1; a clique's variance degenerates)."""
     edges = raw_edges.persist(CKPT_LEVEL)  # feeds deg + both joins
-    deg = (
-        edges.select(F.col("pa").alias("n"))
-        .unionAll(edges.select(F.col("pb").alias("n")))
-        .groupBy("n")
-        .agg(F.count(F.lit(1)).cast("long").alias("d"))
-        .persist(CKPT_LEVEL)  # feeds the node count and two degree joins
-    )
+    # feeds the node count and two degree joins
+    deg = node_degrees(edges).persist(CKPT_LEVEL)
     da = deg.select(F.col("n").alias("pa"), F.col("d").alias("x"))
     db = deg.select(F.col("n").alias("pb"), F.col("d").alias("y"))
     joined = edges.join(da, "pa").join(db, "pb")
@@ -1652,43 +1624,8 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Suri & Vassilvitskii); per-node credit is one explode + groupBy on
     triangle rows (≤ wedge count); everything else is node-grain."""
     edges = cooccurrence_edges(spark, sf_dir).persist(CKPT_LEVEL)
-    deg = (
-        edges.select(F.col("pa").alias("n"))
-        .unionAll(edges.select(F.col("pb").alias("n")))
-        .groupBy("n")
-        .agg(F.count(F.lit(1)).cast("long").alias("d"))
-        .persist(CKPT_LEVEL)
-    )
-    is_fwd = (F.col("da") < F.col("db")) | (
-        (F.col("da") == F.col("db")) & (F.col("pa") < F.col("pb"))
-    )
-    ed = (
-        edges.join(deg.withColumnRenamed("n", "pa").withColumnRenamed("d", "da"), "pa")
-        .join(deg.withColumnRenamed("n", "pb").withColumnRenamed("d", "db"), "pb")
-        .select(
-            F.when(is_fwd, F.col("pa")).otherwise(F.col("pb")).alias("src"),
-            F.when(is_fwd, F.col("pb")).otherwise(F.col("pa")).alias("dst"),
-            F.greatest("da", "db").alias("deg_dst"),
-        )
-        .persist(CKPT_LEVEL)
-    )
-    w1, w2 = ed.alias("w1"), ed.alias("w2")
-    wedges = w1.join(
-        w2,
-        (F.col("w1.src") == F.col("w2.src"))
-        & (
-            (F.col("w1.deg_dst") < F.col("w2.deg_dst"))
-            | (
-                (F.col("w1.deg_dst") == F.col("w2.deg_dst"))
-                & (F.col("w1.dst") < F.col("w2.dst"))
-            )
-        ),
-    ).select(
-        F.col("w1.src").alias("wsrc"), F.col("w1.dst").alias("ta"), F.col("w2.dst").alias("tb")
-    )
-    closed = wedges.join(
-        ed.select(F.col("src").alias("ta"), F.col("dst").alias("tb")), ["ta", "tb"], "leftsemi"
-    ).persist(CKPT_LEVEL)
+    deg = node_degrees(edges).persist(CKPT_LEVEL)
+    closed = closed_wedges(edges, deg).persist(CKPT_LEVEL)
 
     tcount = (
         closed.select(F.explode(F.array("wsrc", "ta", "tb")).alias("n"))
@@ -1800,25 +1737,7 @@ def graph_bounded_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
     per round (safe here: each round references its predecessor ONCE, so
     the un-truncated logical plan grows linearly, r12 §11). Rounds are a fixed
     constant, so the plan is 4 joins deep, not data-dependent."""
-    edges = (
-        load(spark, sf_dir, "lineitem")
-        .groupBy(F.col("l_orderkey").alias("o"))
-        .agg(F.sort_array(F.collect_set("l_partkey")).alias("ps"))
-        .filter(F.size("ps") <= MAX_BASKET)
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ps, (x, i) -> "
-                    "transform(slice(ps, i + 2, size(ps)), y -> struct(x AS pa, y AS pb))))"
-                )
-            ).alias("e")
-        )
-        .select("e.pa", "e.pb")
-        .groupBy("pa", "pb")
-        .agg(F.count("*").cast("long").alias("support"))
-        .where(F.col("support") >= _TRI_MIN_SUPPORT)
-    )
-    edges = edges.persist(CKPT_LEVEL)
+    edges = cooccurrence_support(spark, sf_dir).persist(CKPT_LEVEL)
     dir_e = (
         edges.selectExpr("pa AS u", "pb AS v", f"{_SSSP_COST} AS w")
         .unionAll(edges.selectExpr("pb AS u", "pa AS v", f"{_SSSP_COST} AS w"))
@@ -1890,15 +1809,9 @@ def graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     degree), using the range-partitioned running-sum machinery."""
     from gluettalax_spark.operators.rank import grouped_running_sums
 
-    edges = cooccurrence_edges(spark, sf_dir)
-    # Both endpoints explode from each edge row IN-ROW (optimization r12,
-    # guide §2.1): the unionAll form executed the whole basket-explode
-    # edge pipeline twice, once per branch. Same multiset of node ids.
-    deg = (
-        edges.select(F.explode(F.array("pa", "pb")).alias("n"))
-        .groupBy("n")
-        .agg(F.count(F.lit(1)).cast("long").alias("d"))
-    )
+    # Uncut edges: node_degrees reads them once, in-row (optimization
+    # r12), so the basket-explode edge pipeline runs once.
+    deg = node_degrees(cooccurrence_edges(spark, sf_dir))
     hist = deg.groupBy(F.col("d").alias("degree")).agg(
         F.count(F.lit(1)).cast("long").alias("n_nodes")
     )
@@ -1996,15 +1909,7 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr(f"CAST(floor({_AA_SCALE} / ln(CAST(size(ns) AS DOUBLE))) AS BIGINT)"),
         )
     )
-    wedges = nbrs.select(
-        "w",
-        F.explode(
-            F.expr(
-                "flatten(transform(ns, (x, i) -> "
-                "transform(slice(ns, i + 2, size(ns)), y -> struct(x AS a, y AS b))))"
-            )
-        ).alias("e"),
-    ).select("e.a", "e.b", "w")
+    wedges = explode_pairs(nbrs, "ns", "a", "b", "w")
     scored = wedges.groupBy("a", "b").agg(
         F.count(F.lit(1)).cast("long").alias("common_neighbors"),
         F.sum("w").cast("long").alias("aa_e8"),
@@ -2103,27 +2008,11 @@ def graph_harmonic_2hop(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sort_array(F.collect_set("nbr")).alias("ns"))
         .filter(F.size("ns") <= _HARMONIC_MAX_DEG)
     )
-    wedges = (
-        nbrs.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ns, (x, i) -> "
-                    "transform(slice(ns, i + 2, size(ns)), y -> struct(x AS a, y AS b))))"
-                )
-            ).alias("e")
-        )
-        .select("e.a", "e.b")
-        .distinct()
-    )
+    wedges = explode_pairs(nbrs, "ns", "a", "b").distinct()
     p2 = wedges.join(
         edges.select(F.col("pa").alias("a"), F.col("pb").alias("b")), ["a", "b"], "left_anti"
     )
-    n2 = (
-        p2.select(F.col("a").alias("n"))
-        .unionAll(p2.select(F.col("b").alias("n")))
-        .groupBy("n")
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
-    )
+    n2 = node_degrees(p2, "a", "b", d="c")
     return (
         deg.join(n2, "n", "left")
         .selectExpr(

@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from gluettalax_spark.operators.graph import MAX_BASKET
+from gluettalax_spark.operators.graph import MAX_BASKET, order_baskets, pair_support
 from gluettalax_spark.operators.rank import exact_global_rank, ntile_from_rank
 from gluettalax_spark.registry import register
 from gluettalax_spark.tables import load
@@ -291,33 +291,23 @@ LIMIT 20
 
 @register("part_cooccurrence", _COOCCUR_ORACLE, doc="top part pairs co-ordered (market basket)")
 def part_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Co-occurrence mining over per-order baskets: ONE groupBy(order)
-    collects the deduped basket, ordered pairs explode map-side from the
-    array (one shuffle replaces distinct + self-join — the same builder
-    shape as `graph.cooccurrence_edges`), count pairs, top-k via
+    """Co-occurrence mining over per-order baskets, on the builders
+    `graph.cooccurrence_edges` shares: `graph.order_baskets` (ONE
+    groupBy(order) collects the deduped basket) and `graph.pair_support`
+    (ordered pairs explode map-side from the array — one shuffle replaces
+    distinct + self-join — and are counted), unpruned; top-k via
     TakeOrderedAndProject. The classic skew danger — one degenerate
     mega-basket contributing C(n,2) pairs — is handled structurally:
     baskets wider than ``MAX_BASKET`` distinct parts are dropped whole,
     and the DuckDB oracle replays the cap (cap semantics are part of the
     operator spec)."""
-    li = load(spark, sf_dir, "lineitem")
-    baskets = (
-        li.groupBy(F.col("l_orderkey").alias("o"))
-        .agg(F.sort_array(F.collect_set("l_partkey")).alias("ps"))
-        .filter(F.size("ps") <= MAX_BASKET)
-    )
     return (
-        baskets.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ps, (x, i) -> "
-                    "transform(slice(ps, i + 2, size(ps)), y -> struct(x AS part_a, y AS part_b))))"
-                )
-            ).alias("e")
+        pair_support(order_baskets(spark, sf_dir))
+        .select(
+            F.col("pa").alias("part_a"),
+            F.col("pb").alias("part_b"),
+            F.col("support").alias("n_orders"),
         )
-        .select("e.part_a", "e.part_b")
-        .groupBy("part_a", "part_b")
-        .agg(F.count(F.lit(1)).alias("n_orders"))
         .orderBy(F.col("n_orders").desc(), "part_a", "part_b")
         .limit(20)
     )
@@ -1205,24 +1195,19 @@ def basket_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: pair candidates explode MAP-SIDE from per-order baskets
     (one groupBy(order) whose array is bounded by items-per-order — the
-    same one-shuffle builder as `graph.cooccurrence_edges`, never an
-    all-pairs join over parts); the min-support filter prunes before the
-    metric joins; item counts join on the part key (NOT broadcast — the
+    `graph.order_baskets` and `graph.pair_support` builders
+    `graph.cooccurrence_edges` shares, never an all-pairs join over
+    parts); the min-support filter prunes before the metric joins; item
+    counts join on the part key (NOT broadcast — the
     per-part table grows with the catalog, same unbounded-broadcast
     discipline as the rest of the repo); the basket total N is the only
     broadcast (a 1-row scalar aggregate). Ranking ties are broken by
     (n_ab, part ids) on the ROUNDED lift, so cross-engine ordering never
     depends on last-ulp float comparisons."""
-    li = load(spark, sf_dir, "lineitem")
     # ONE scan + ONE shuffle: the deduped per-order basket array feeds
     # pair candidates, per-item counts, and the basket total (frozen so
     # the three consumers don't re-run the aggregation).
-    baskets = (
-        li.groupBy(F.col("l_orderkey").alias("o"))
-        .agg(F.sort_array(F.collect_set("l_partkey")).alias("ps"))
-        .filter(F.size("ps") <= MAX_BASKET)
-        .persist(CKPT_LEVEL)
-    )
+    baskets = order_baskets(spark, sf_dir).persist(CKPT_LEVEL)
     n_tot = baskets.agg(F.count(F.lit(1)).alias("N"))
     icnt = (
         baskets.select(F.explode("ps").alias("part"))
@@ -1231,18 +1216,9 @@ def basket_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         .persist(CKPT_LEVEL)  # feeds BOTH metric joins (ia and ib)
     )
     pairs = (
-        baskets.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ps, (x, i) -> "
-                    "transform(slice(ps, i + 2, size(ps)), y -> struct(x AS pa, y AS pb))))"
-                )
-            ).alias("e")
-        )
-        .select("e.pa", "e.pb")
-        .groupBy("pa", "pb")
-        .agg(F.count(F.lit(1)).alias("n_ab"))
-        .where(F.col("n_ab") >= _RULES_MIN_PAIR)
+        pair_support(baskets)
+        .where(F.col("support") >= _RULES_MIN_PAIR)
+        .select("pa", "pb", F.col("support").alias("n_ab"))
         .persist(CKPT_LEVEL)  # feeds both halves of the directed union
     )
     directed = pairs.select(

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from gluettalax_spark.operators.graph import explode_pairs
 from gluettalax_spark.operators.rank import (
     cume_dist_from_rank,
     exact_global_rank,
@@ -958,15 +959,8 @@ def events_session_type_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("long").alias("n_a"))
     )
     pairs = (
-        per_session.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(types, (x, i) -> "
-                    "transform(slice(types, i + 2, size(types)), y -> struct(x AS a, y AS b))))"
-                )
-            ).alias("e")
-        )
-        .groupBy(F.col("e.a").alias("a"), F.col("e.b").alias("b"))
+        explode_pairs(per_session, "types", "a", "b")
+        .groupBy("a", "b")
         .agg(F.count(F.lit(1)).cast("long").alias("n_ab"))
     )
     sb = singles.select(F.col("a").alias("b"), F.col("n_a").alias("n_b"))

@@ -5,7 +5,13 @@ graphs)."""
 
 from __future__ import annotations
 
+from collections import Counter
+from decimal import Decimal
+from itertools import combinations
+
 import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 
@@ -156,6 +162,67 @@ def test_cc_deep_chain_converges_in_bounded_rounds(spark):
     assert got == want
     # Guard documents the budget the fallover relies on.
     assert graph._FALLOVER_ROUNDS < 25
+
+
+def _union_find_components(edges):
+    """Reference (node, component) pairs: component = min node reachable."""
+    parent = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for u, v in edges:
+        parent.setdefault(u, u)
+        parent.setdefault(v, v)
+        ru, rv = find(u), find(v)
+        if ru != rv:
+            parent[max(ru, rv)] = min(ru, rv)
+    return {(n, find(n)) for n in parent}
+
+
+# Node i of a generated graph as each key type. The string and decimal
+# keys order the nodes differently from the integer ones, and the
+# decimals are fractional, so no convergence probe can lean on sums.
+_CC_KEY_TYPES = {
+    "long": lambda i: i * 7,
+    "string": lambda i: f"n{(i * 7) % 10}",
+    "decimal(10,2)": lambda i: Decimal(100 + (i * 37) % 100) / 100,
+}
+
+
+@settings(max_examples=6, deadline=None)
+@example(kind="long", edges=[(i, i + 1) for i in range(9)])  # past the fallover budget
+@given(
+    kind=st.sampled_from(sorted(_CC_KEY_TYPES)),
+    edges=st.lists(st.tuples(st.integers(0, 9), st.integers(0, 9)), max_size=12),
+)
+def test_cc_matches_union_find(spark, kind, edges):
+    """Min-label propagation (and, on deep graphs, the star fallover)
+    reaches the union-find components on random graphs of ≤ 10 nodes,
+    self-loops and duplicate edges included, for every key type."""
+    from gluettalax_spark.operators.graph import connected_components
+
+    key = _CC_KEY_TYPES[kind]
+    typed = [(key(u), key(v)) for u, v in edges]
+    df = spark.createDataFrame(typed, f"u {kind}, v {kind}")
+    got = {(r.node, r.component) for r in connected_components(df).collect()}
+    assert got == _union_find_components(typed)
+
+
+def test_cc_empty_input_job_budget(spark):
+    """An empty edge frame converges on the first round's probe: no
+    further rounds, no star fallover."""
+    from gluettalax_spark.operators.graph import connected_components
+    from tests.harness import jobs_in_group
+
+    empty = spark.createDataFrame([], "u long, v long")
+    rows = []
+    jobs = jobs_in_group(spark, lambda: rows.extend(connected_components(empty).collect()))
+    assert rows == []
+    assert len(jobs) <= 6, jobs
 
 
 def _write_docs(spark, tmp_path, rows):
@@ -400,3 +467,45 @@ def test_covariance_and_pca_tiny_corpus(spark, tmp_path):
     rows = queries()["embedding_pca_project"](spark, out).collect()
     assert len(rows) == 5
     assert abs(rows[0]["var_pc1"] / rows[0]["eig1"] - 1.0) < 0.05
+
+
+def test_explode_pairs_emits_each_ordered_pair_once(spark):
+    """Arrays of size 0, 1, 2 and 5 give C(n, 2) pairs, each x < y."""
+    from gluettalax_spark.operators.graph import explode_pairs
+
+    arrays = {0: [], 1: [4], 2: [3, 8], 5: [1, 2, 5, 7, 9]}
+    df = spark.createDataFrame(list(arrays.items()), "k long, xs array<long>")
+    got = {}
+    for r in explode_pairs(df, "xs", "x", "y", "k").collect():
+        got.setdefault(r.k, []).append((r.x, r.y))
+    for k, xs in arrays.items():
+        want = list(combinations(xs, 2))
+        assert sorted(got.get(k, [])) == want
+        assert len(want) == k * (k - 1) // 2
+        assert all(x < y for x, y in want)
+
+
+def test_node_degrees_match_counter(spark):
+    from gluettalax_spark.operators.graph import node_degrees
+
+    edges = [(1, 2), (1, 3), (2, 3), (3, 4), (3, 9), (4, 9), (1, 9)]
+    df = spark.createDataFrame(edges, "pa long, pb long")
+    want = Counter(n for e in edges for n in e)
+    got = {r.n: r.d for r in node_degrees(df).collect()}
+    assert got == dict(want)
+    got = {r.node: r.c for r in node_degrees(df.toDF("a", "b"), "a", "b", "node", "c").collect()}
+    assert got == dict(want)
+
+
+def test_closed_wedges_k4_plus_pendant(spark):
+    """K4 on 1..4 plus the pendant edge 4-5: four triangles, and the
+    per-node triangle credit is 3/3/3/3/0."""
+    from gluettalax_spark.operators.graph import closed_wedges, node_degrees
+
+    edges = list(combinations([1, 2, 3, 4], 2)) + [(4, 5)]
+    df = spark.createDataFrame(edges, "pa long, pb long")
+    closed = closed_wedges(df, node_degrees(df)).collect()
+    assert len(closed) == 4
+    assert len({frozenset((r.wsrc, r.ta, r.tb)) for r in closed}) == 4
+    credit = Counter(n for r in closed for n in (r.wsrc, r.ta, r.tb))
+    assert [credit[n] for n in range(1, 6)] == [3, 3, 3, 3, 0]

@@ -247,10 +247,11 @@ def test_pagerank_plan_stays_one_iteration_deep(spark, sf_dir):
 
 
 def test_cc_decimal_ids_match_join_probe(spark):
-    """Fractional DECIMAL node ids must not take the label-sum probe: its
-    decimal(38,0) cast rounds 1.10..1.40 all to 1, so the sum stops
-    moving while labels still do. The DOUBLE copy of the same graph runs
-    the join probe and is the reference."""
+    """Fractional DECIMAL node ids converge to the same components as the
+    DOUBLE copy of the same graph. A probe that summed labels as
+    decimal(38,0) would round 1.10..1.40 all to 1 and stop while labels
+    still move; the "no label lowered" probe is exact for any ordered
+    key type."""
     from pyspark.sql import functions as F
 
     from gluettalax_spark.operators.graph import connected_components
