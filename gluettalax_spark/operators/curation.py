@@ -2541,15 +2541,10 @@ def similarity_item_cf(spark: SparkSession, sf_dir: str) -> DataFrame:
     TopK broadcast; per-item state is k rows."""
     from pyspark.sql.window import Window
 
-    from gluettalax_spark.operators.graph import MAX_BASKET
+    from gluettalax_spark.operators.graph import order_baskets
 
-    li = load(spark, sf_dir, "lineitem")
-    op = (
-        li.groupBy(F.col("l_orderkey").alias("o"))
-        .agg(F.sort_array(F.collect_set("l_partkey")).alias("ps"))
-        .filter(F.size("ps") <= MAX_BASKET)
-    )
-    op = op.persist(CKPT_LEVEL)  # feeds supports AND the pair explode
+    # The capped baskets feed the supports AND the pair explode.
+    op = order_baskets(spark, sf_dir).persist(CKPT_LEVEL)
     supp = op.select(F.explode("ps").alias("p")).groupBy("p").agg(
         F.count("*").cast("long").alias("np")
     )

@@ -166,13 +166,6 @@ sh AS (
 # md5s, and the signatures shuffle as longs instead of 32-char strings.
 
 
-def _minhash_sig_aggs() -> list[Column]:
-    """min(h1 + i·h2) per hash — h1/h2 must already be plain columns
-    (computing them inside each of the 16 aggregates would re-run the
-    md5/substr/conv chain 16× per row)."""
-    return [F.min(F.col("h1") + F.lit(i) * F.col("h2")).alias(f"s{i}") for i in range(N_HASHES)]
-
-
 def _duck_hex_int(start: int, width: int = 8) -> str:
     """DuckDB int value of md5 hex chars [start, start+width) (no conv()
     there). width ≤ 15 keeps the value inside signed 64-bit."""
@@ -197,18 +190,19 @@ MAX_BAND_BUCKET = 512
 
 def _cap_band_buckets(bands: DataFrame, key_cols: list[str], id_col: str, cap: int):
     """Split a band table into (within-cap rows, star pairs from over-cap
-    buckets, spill report). The over-cap bucket list has < corpus/cap
-    entries by construction — always broadcastable.
+    buckets). The over-cap bucket list has < corpus/cap entries by
+    construction — always broadcastable.
 
-    Returns ``(kept, star, spill)``:
+    Returns ``(kept, star)``:
 
-    * ``kept``  — band rows whose bucket is within the cap (safe to
+    * ``kept`` — band rows whose bucket is within the cap (safe to
       self-join for clique candidates);
-    * ``star``  — (rep, member) id pairs for every over-cap bucket, rep =
-      min(id) of the bucket, rep < member always;
-    * ``spill`` — (key_cols..., bucket_n) for each degraded bucket — the
-      observability feed (log it, alert on it; see
-      dedup_band_spill_report).
+    * ``star`` — (rep, member) id pairs for every over-cap bucket, rep =
+      min(id) of the bucket, rep < member always.
+
+    Most callers want both halves joined into one candidate-pair frame:
+    :func:`capped_bucket_pairs`. The degraded buckets themselves are
+    reported by dedup_band_spill_report.
 
     The over-cap set is found with a partial-aggregated groupBy (keys
     only shuffle) and materialized eagerly — it is bounded, so this is
@@ -230,29 +224,92 @@ def _cap_band_buckets(bands: DataFrame, key_cols: list[str], id_col: str, cap: i
     # the size aggregate per consumer. Lazy persist fuses the old
     # checkpoint job with the isEmpty probe right below (r12).
     over = sizes.filter(F.col("bucket_n") > cap).persist(CKPT_LEVEL)
-    spill = over.select(*key_cols, "bucket_n")
     if over.isEmpty():
         star = bands.limit(0).select(
             F.col(id_col).alias("_star_a"), F.col(id_col).alias("_star_b")
         )
-        return bands, star, spill
+        return bands, star
     kept = bands.join(F.broadcast(over.select(*key_cols)), key_cols, "left_anti")
     star = (
         bands.join(F.broadcast(over.select(*key_cols, "_rep")), key_cols)
         .filter(F.col(id_col) != F.col("_rep"))
         .select(F.col("_rep").alias("_star_a"), F.col(id_col).alias("_star_b"))
     )
-    return kept, star, spill
+    return kept, star
 
 
-def _minhash_band_array(
-    n_bands: int = N_BANDS, rows_per_band: int = ROWS_PER_BAND
-) -> Column:
-    """(band_idx, band_val) structs from the 16 signature columns —
-    band_val is md5 of the band's comma-joined signatures. Parameterized
-    so the band-configuration sweep can build every (b, r) split of the
-    same 16 hashes."""
-    return F.array(
+def _pair_ends(id_col: str, payload: tuple[str, ...]) -> list[str]:
+    """Column names of a candidate pair: ``<stem>_a``, ``<stem>_b`` for
+    the id (``doc_id`` → ``doc_a``, ``doc_b``), then ``<p>_a``, ``<p>_b``
+    per payload column."""
+    stem = id_col.removesuffix("_id")
+    return [f"{stem}_a", f"{stem}_b", *[f"{p}_{e}" for p in payload for e in "ab"]]
+
+
+def _pair_side(
+    df: DataFrame, id_col: str, end: str, payload: tuple[str, ...], *keep: str
+) -> DataFrame:
+    """``df``'s id and payload columns renamed for pair end ``end`` (a or
+    b), with the ``keep`` columns as they are."""
+    stem = id_col.removesuffix("_id")
+    return df.select(
+        F.col(id_col).alias(f"{stem}_{end}"),
+        *[F.col(p).alias(f"{p}_{end}") for p in payload],
+        *keep,
+    )
+
+
+def bucket_clique(
+    kept: DataFrame, key_cols: list[str], id_col: str, payload: tuple[str, ...] = ()
+) -> DataFrame:
+    """Every pair a < b of ids sharing a ``key_cols`` bucket of ``kept``,
+    with each end's ``payload`` columns (names from :func:`_pair_ends`):
+    one equi-join of the bucket rows with themselves. Ids that sit in
+    several buckets pair once per shared bucket."""
+    a, b, *_ = out = _pair_ends(id_col, payload)
+    return (
+        _pair_side(kept, id_col, "a", payload, *key_cols)
+        .join(_pair_side(kept, id_col, "b", payload, *key_cols), key_cols)
+        .filter(F.col(a) < F.col(b))
+        .select(*out)
+    )
+
+
+def capped_bucket_pairs(
+    rows: DataFrame,
+    key_cols: list[str],
+    id_col: str,
+    payload: tuple[str, ...],
+    cap: int,
+    lookup: DataFrame | None = None,
+) -> DataFrame:
+    """The candidate pairs of a bucket join under the bucket cap
+    (:func:`_cap_band_buckets`): the :func:`bucket_clique` of every
+    bucket within ``cap`` rows, plus the star pairs (bucket min id, other
+    member) of every bucket over it, each star end with its ``payload``
+    looked up by id in ``lookup`` (default ``rows``; pass the one-row-per
+    id source when ``rows`` holds an id once per bucket). Callers whose
+    ids sit in several buckets add their own ``distinct``."""
+    kept, star = _cap_band_buckets(rows, key_cols, id_col, cap)
+    clique = bucket_clique(kept, key_cols, id_col, payload)
+    a, b, *_ = out = _pair_ends(id_col, payload)
+    star = star.select(F.col("_star_a").alias(a), F.col("_star_b").alias(b))
+    if payload:
+        src = rows if lookup is None else lookup
+        star = star.join(_pair_side(src, id_col, "a", payload), a).join(
+            _pair_side(src, id_col, "b", payload), b
+        )
+    return clique.union(star.select(*out))
+
+
+def _minhash_bands(
+    sigs: DataFrame, n_bands: int = N_BANDS, rows_per_band: int = ROWS_PER_BAND
+) -> DataFrame:
+    """(doc_id, band_idx, band_val): one row per band of each signature
+    row of ``sigs`` — band_val is md5 of the band's comma-joined
+    signatures. Parameterized so the band-configuration sweep can build
+    every (b, r) split of the same 16 hashes."""
+    bands = F.array(
         *[
             F.struct(
                 F.lit(b).alias("band_idx"),
@@ -266,21 +323,41 @@ def _minhash_band_array(
             for b in range(n_bands)
         ]
     )
-
-
-def _minhash_oracle() -> str:
-    sig_cols = ",\n    ".join(f"min(h1 + {i} * h2) AS s{i}" for i in range(N_HASHES))
-    band_rows = "\n  UNION ALL\n".join(
-        "  SELECT doc_id, {b} AS band_idx, md5({concat}) AS band_val FROM sigs".format(
-            b=b,
-            concat=" || ',' || ".join(f"s{b * ROWS_PER_BAND + r}" for r in range(ROWS_PER_BAND)),
-        )
-        for b in range(N_BANDS)
+    return sigs.select("doc_id", F.explode(bands).alias("band")).select(
+        "doc_id", "band.band_idx", "band.band_val"
     )
-    return f"""
-WITH {_SHINGLES_CTE},
+
+
+# The 16 signature aggregates of every MinHash oracle, over ``ints``
+# (h1, h2) — the DuckDB twin of _minhash_sig_table's.
+_DUCK_SIG_COLS = ",\n    ".join(f"min(h1 + {i} * h2) AS s{i}" for i in range(N_HASHES))
+
+
+def _duck_band_rows(
+    n_bands: int = N_BANDS, rows_per_band: int = ROWS_PER_BAND, carry: str = ""
+) -> str:
+    """The ``bands`` CTE body of the MinHash oracles — the DuckDB twin of
+    :func:`_minhash_bands`: one row per (doc, band) of ``sigs``;
+    ``carry`` is SQL spliced in before band_idx (the sweep's cfg tag)."""
+    return "\n  UNION ALL\n".join(
+        "  SELECT doc_id, {carry}{b} AS band_idx, md5({concat}) AS band_val FROM sigs".format(
+            carry=carry,
+            b=b,
+            concat=" || ',' || ".join(f"s{b * rows_per_band + r}" for r in range(rows_per_band)),
+        )
+        for b in range(n_bands)
+    )
+
+
+# Shingles → one md5 per shingle: the CTE chain every MinHash oracle
+# opens with. The LSH and sweep oracles continue it with the same
+# ``ints``/``sigs`` (_DUCK_SIGS_CTES, the twin of _minhash_sig_table);
+# the band-spill and accuracy oracles build their own.
+_DUCK_HASHED_CTES = f"""{_SHINGLES_CTE},
 ex AS (SELECT doc_id, unnest(shingles) AS s FROM sh),
-hashed AS (SELECT doc_id, md5(s) AS m FROM ex),
+hashed AS (SELECT doc_id, md5(s) AS m FROM ex)"""
+
+_DUCK_SIGS_CTES = f"""{_DUCK_HASHED_CTES},
 ints AS (
   SELECT doc_id,
     {_duck_hex_int(1)} AS h1,
@@ -290,12 +367,15 @@ ints AS (
 ),
 sigs AS (
   SELECT doc_id,
-    {sig_cols},
+    {_DUCK_SIG_COLS},
     list_distinct(list(hs)) AS hset
   FROM ints GROUP BY doc_id
-),
+)"""
+
+_MINHASH_ORACLE = f"""
+WITH {_DUCK_SIGS_CTES},
 bands AS (
-{band_rows}
+{_duck_band_rows()}
 ),
 cand AS (
   SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -323,23 +403,13 @@ ORDER BY doc_a, doc_b
 """
 
 
-def _minhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _minhash_sig_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, s0..s15, shingles) — the 16 min-hash signatures plus the
     hashed shingle set, out of ONE groupBy (signatures and the verify
     sets share the aggregation; recomputing the tokenize→shingle→hash
-    chain per consumer would triple the scan work). Materialized once:
-    the table feeds the band explode and both sides of the verify join —
-    at cluster scale, "write the signature table to storage, then join
-    against it".
-
-    Lazy ``persist``, not eager ``localCheckpoint`` (optimization r12,
-    guide §5): the eager RDD materialization ran a 2-3 s driver-blocking
-    job per builder call (4-5x the 0.65 s the computation itself costs
-    through the noop sink — row-object serialization overhead), while
-    the SQL columnar cache materializes inside the first action and
-    serves every consumer compressed. Nothing downstream depends on a
-    frozen plan: the min-hash aggs are deterministic and the shingle
-    sets are consumed order-insensitively (array_intersect/size)."""
+    chain per consumer would triple the scan work). A consumer that
+    reads only the signatures prunes the shingle set away: the
+    ``collect_set`` and the ``hs`` projection drop out of its plan."""
     ex = (
         shingles_exploded(spark, sf_dir)
         .withColumn("m", F.md5("s"))
@@ -350,13 +420,30 @@ def _minhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("CAST(conv(substr(m, 1, 15), 16, 10) AS BIGINT)").alias("hs"),
         )
     )
-    sigs = ex.groupBy("doc_id").agg(
-        *_minhash_sig_aggs(), F.collect_set("hs").alias("shingles")
-    )
-    return sigs.persist(CKPT_LEVEL)
+    # min(h1 + i·h2) per hash over the plain h1/h2 columns: computing
+    # them inside each of the 16 aggregates would re-run the
+    # md5/substr/conv chain 16× per row.
+    sigs = [F.min(F.col("h1") + F.lit(i) * F.col("h2")).alias(f"s{i}") for i in range(N_HASHES)]
+    return ex.groupBy("doc_id").agg(*sigs, F.collect_set("hs").alias("shingles"))
 
 
-@register("dedup_minhash_lsh", _minhash_oracle(), doc="MinHash(16) + LSH(4×4) near-dup pairs, Jaccard-verified")
+def _minhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """:func:`_minhash_sig_table`, materialized once: the table feeds the
+    band explode and both sides of the verify join — at cluster scale,
+    "write the signature table to storage, then join against it".
+
+    Lazy ``persist``, not eager ``localCheckpoint`` (optimization r12,
+    guide §5): the eager RDD materialization ran a 2-3 s driver-blocking
+    job per builder call (4-5x the 0.65 s the computation itself costs
+    through the noop sink — row-object serialization overhead), while
+    the SQL columnar cache materializes inside the first action and
+    serves every consumer compressed. Nothing downstream depends on a
+    frozen plan: the min-hash aggs are deterministic and the shingle
+    sets are consumed order-insensitively (array_intersect/size)."""
+    return _minhash_sig_table(spark, sf_dir).persist(CKPT_LEVEL)
+
+
+@register("dedup_minhash_lsh", _MINHASH_ORACLE, doc="MinHash(16) + LSH(4×4) near-dup pairs, Jaccard-verified")
 def dedup_minhash_lsh(
     spark: SparkSession, sf_dir: str, max_bucket: int = MAX_BAND_BUCKET
 ) -> DataFrame:
@@ -377,29 +464,12 @@ def dedup_minhash_lsh(
     (boilerplate docs) are AQE-split.
     """
     sigs = _minhash_sigs(spark, sf_dir)
-
-    bands = sigs.select("doc_id", F.explode(_minhash_band_array()).alias("band")).select(
-        "doc_id", F.col("band.band_idx").alias("band_idx"), F.col("band.band_val").alias("band_val")
-    )
-
     # Adversarial-skew guard: over-cap buckets degrade to star pairs (see
     # _cap_band_buckets). The fixture never spills, so the oracle is exact.
-    kept, star, _spill = _cap_band_buckets(
-        bands, ["band_idx", "band_val"], "doc_id", max_bucket
-    )
-    a = kept.alias("a")
-    b = kept.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .union(star.select(F.col("_star_a").alias("doc_a"), F.col("_star_b").alias("doc_b")))
-        .distinct()
-    )
+    # A doc pair can share several bands, hence the distinct.
+    cand = capped_bucket_pairs(
+        _minhash_bands(sigs), ["band_idx", "band_val"], "doc_id", (), max_bucket
+    ).distinct()
 
     x = sigs.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
     y = sigs.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
@@ -418,28 +488,17 @@ def dedup_minhash_lsh(
     )
 
 
-def _band_spill_oracle() -> str:
-    sig_cols = ",\n    ".join(f"min(h1 + {i} * h2) AS s{i}" for i in range(N_HASHES))
-    band_rows = "\n  UNION ALL\n".join(
-        "  SELECT doc_id, {b} AS band_idx, md5({concat}) AS band_val FROM sigs".format(
-            b=b,
-            concat=" || ',' || ".join(f"s{b * ROWS_PER_BAND + r}" for r in range(ROWS_PER_BAND)),
-        )
-        for b in range(N_BANDS)
-    )
-    return f"""
-WITH {_SHINGLES_CTE},
-ex AS (SELECT doc_id, unnest(shingles) AS s FROM sh),
-hashed AS (SELECT doc_id, md5(s) AS m FROM ex),
+_BAND_SPILL_ORACLE = f"""
+WITH {_DUCK_HASHED_CTES},
 ints AS (
   SELECT doc_id,
     {_duck_hex_int(1)} AS h1,
     {_duck_hex_int(9)} AS h2
   FROM hashed
 ),
-sigs AS (SELECT doc_id, {sig_cols} FROM ints GROUP BY doc_id),
+sigs AS (SELECT doc_id, {_DUCK_SIG_COLS} FROM ints GROUP BY doc_id),
 bands AS (
-{band_rows}
+{_duck_band_rows()}
 )
 SELECT CAST(band_idx AS BIGINT) AS band_idx, band_val,
        CAST(count(*) AS BIGINT) AS bucket_n
@@ -452,7 +511,7 @@ ORDER BY band_idx, band_val
 
 @register(
     "dedup_band_spill_report",
-    _band_spill_oracle(),
+    _BAND_SPILL_ORACLE,
     doc=f"MinHash band buckets over the {MAX_BAND_BUCKET}-doc cap (skew spill observability)",
 )
 def dedup_band_spill_report(
@@ -463,24 +522,11 @@ def dedup_band_spill_report(
     size. Healthy corpora return 0 rows (the fixture does); a template
     farm shows up here as a handful of giant buckets — the metric a
     production dedup run logs and alerts on. Same one-shuffle signature
-    aggregation as the dedup itself, then a count per band key."""
-    ex = (
-        shingles_exploded(spark, sf_dir)
-        .withColumn("m", F.md5("s"))
-        .select(
-            "doc_id",
-            F.expr("CAST(conv(substr(m, 1, 8), 16, 10) AS BIGINT)").alias("h1"),
-            F.expr("CAST(conv(substr(m, 9, 8), 16, 10) AS BIGINT)").alias("h2"),
-        )
-    )
-    sigs = ex.groupBy("doc_id").agg(*_minhash_sig_aggs())
-    bands = sigs.select("doc_id", F.explode(_minhash_band_array()).alias("band")).select(
-        "doc_id",
-        F.col("band.band_idx").alias("band_idx"),
-        F.col("band.band_val").alias("band_val"),
-    )
+    aggregation as the dedup itself (shingle sets pruned, no cut), then
+    a count per band key."""
     return (
-        bands.groupBy("band_idx", "band_val")
+        _minhash_bands(_minhash_sig_table(spark, sf_dir))
+        .groupBy("band_idx", "band_val")
         .agg(F.count(F.lit(1)).alias("bucket_n"))
         .filter(F.col("bucket_n") > max_bucket)
         .select(
@@ -695,62 +741,49 @@ def dedup_simhash_pairs(
     # eager checkpoint (optimization r12): no build-time driver-blocking
     # job, columnar cache serves both sides; nothing needs a frozen plan.
     hashes = _simhash_df(spark, sf_dir).persist(CKPT_LEVEL)
+    return (
+        hamming_band_pairs(hashes, "simhash", max_bucket)
+        .select("doc_a", "doc_b", "hamming")
+        .orderBy("doc_a", "doc_b")
+    )
+
+
+def hamming_band_pairs(hashes: DataFrame, hash_col: str, max_bucket: int) -> DataFrame:
+    """(doc_a, doc_b, <hash_col>_a, <hash_col>_b, hamming): every pair of
+    ``hashes`` rows (doc_id, signed 64-bit ``hash_col``) at Hamming
+    distance ≤ ``HAMMING_MAX``, by the pigeonhole band join: each
+    fingerprint explodes into its 4 16-bit bands, pairs come from the
+    capped (band_idx, band_val) equi-join, and every candidate is
+    verified with an exact ``bit_count``. Shared by SimHash text dedup
+    and pHash payload dedup.
+
+    Same adversarial-skew guard as the MinHash band join: over-cap
+    buckets emit star pairs only, their fingerprints looked up in
+    ``hashes`` (one row per doc). Every star pair still passes the
+    Hamming verify, so emitted pairs are always correct; only clique
+    completeness inside a degraded bucket is traded away. A doc pair can
+    share several bands, hence the distinct."""
     bands = hashes.select(
         "doc_id",
-        "simhash",
+        hash_col,
         F.explode(
             F.array(
                 *[
                     F.struct(
                         F.lit(k).alias("band_idx"),
-                        F.expr(_band_expr("simhash", k)).alias("band_val"),
+                        F.expr(_band_expr(hash_col, k)).alias("band_val"),
                     )
                     for k in range(SIMHASH_BANDS)
                 ]
             )
         ).alias("band"),
-    ).select("doc_id", "simhash", "band.band_idx", "band.band_val")
-    # Same adversarial-skew guard as the MinHash band join: over-cap
-    # buckets emit star pairs only. Every star pair still passes the
-    # Hamming verify below (fingerprints re-joined from the checkpointed
-    # table), so emitted pairs are always correct; only clique
-    # completeness inside a degraded bucket is traded away.
-    kept, star, _spill = _cap_band_buckets(
-        bands, ["band_idx", "band_val"], "doc_id", max_bucket
-    )
-    a = kept.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("simhash").alias("sh_a"),
-        "band_idx",
-        "band_val",
-    )
-    b = kept.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("simhash").alias("sh_b"),
-        "band_idx",
-        "band_val",
-    )
-    sh_a = hashes.select(F.col("doc_id").alias("doc_a"), F.col("simhash").alias("sh_a"))
-    sh_b = hashes.select(F.col("doc_id").alias("doc_b"), F.col("simhash").alias("sh_b"))
-    star_pairs = (
-        star.select(F.col("_star_a").alias("doc_a"), F.col("_star_b").alias("doc_b"))
-        .join(sh_a, "doc_a")
-        .join(sh_b, "doc_b")
-        .select("doc_a", "doc_b", "sh_a", "sh_b")
-    )
-    cand = (
-        a.join(b, ["band_idx", "band_val"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", "sh_a", "sh_b")
-        .union(star_pairs)
-        .distinct()
-    )
-    return (
-        cand.withColumn("hamming", F.expr("CAST(bit_count(sh_a ^ sh_b) AS BIGINT)"))
-        .filter(F.col("hamming") <= HAMMING_MAX)
-        .select("doc_a", "doc_b", "hamming")
-        .orderBy("doc_a", "doc_b")
-    )
+    ).select("doc_id", hash_col, "band.band_idx", "band.band_val")
+    cand = capped_bucket_pairs(
+        bands, ["band_idx", "band_val"], "doc_id", (hash_col,), max_bucket, lookup=hashes
+    ).distinct()
+    return cand.withColumn(
+        "hamming", F.expr(f"CAST(bit_count({hash_col}_a ^ {hash_col}_b) AS BIGINT)")
+    ).filter(F.col("hamming") <= HAMMING_MAX)
 
 
 # --------------------------------------------------------------------------
@@ -811,8 +844,8 @@ def dedup_ngram_jaccard(
     collide with high probability and the key distribution is uniform
     (unlike lexicographic prefixes, which cluster on boilerplate). One
     equi-join on the block key; exact Jaccard only inside blocks; blocks
-    past the bucket cap degrade to star candidates (_cap_band_buckets),
-    each still exact-Jaccard-verified."""
+    past the bucket cap degrade to star candidates
+    (:func:`capped_bucket_pairs`), each still exact-Jaccard-verified."""
     hs = (
         shingles_exploded(spark, sf_dir)
         .withColumn("hs", F.expr("CAST(conv(substr(md5(s), 1, 15), 16, 10) AS BIGINT)"))
@@ -827,30 +860,10 @@ def dedup_ngram_jaccard(
         "block_key",
         F.md5(F.concat_ws("|", F.slice(F.array_sort("hset"), 1, 3).cast("array<string>"))),
     ).persist(CKPT_LEVEL)
-    kept, star, _spill = _cap_band_buckets(blocks, ["block_key"], "doc_id", max_bucket)
-    a = kept.select(
-        F.col("doc_id").alias("doc_a"), F.col("hset").alias("sh_a"), "block_key"
-    )
-    b = kept.select(
-        F.col("doc_id").alias("doc_b"), F.col("hset").alias("sh_b"), "block_key"
-    )
-    clique = (
-        a.join(b, "block_key")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", "sh_a", "sh_b")
-    )
-    xa = blocks.select(F.col("doc_id").alias("doc_a"), F.col("hset").alias("sh_a"))
-    xb = blocks.select(F.col("doc_id").alias("doc_b"), F.col("hset").alias("sh_b"))
-    star_pairs = (
-        star.select(F.col("_star_a").alias("doc_a"), F.col("_star_b").alias("doc_b"))
-        .join(xa, "doc_a")
-        .join(xb, "doc_b")
-        .select("doc_a", "doc_b", "sh_a", "sh_b")
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
+    inter = F.size(F.array_intersect("hset_a", "hset_b"))
+    union = F.size("hset_a") + F.size("hset_b") - inter
     return (
-        clique.union(star_pairs)
+        capped_bucket_pairs(blocks, ["block_key"], "doc_id", ("hset",), max_bucket)
         .select("doc_a", "doc_b", F.round(inter.cast("double") / union, 4).alias("jaccard"))
         .filter(F.col("jaccard") >= 0.3)
         .orderBy("doc_a", "doc_b")
@@ -1178,21 +1191,11 @@ def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _minhash_accuracy_oracle() -> str:
-    sig_cols = ",\n    ".join(f"min(h1 + {i} * h2) AS s{i}" for i in range(N_HASHES))
-    band_rows = "\n  UNION ALL\n".join(
-        "  SELECT doc_id, {b} AS band_idx, md5({concat}) AS band_val FROM sigs".format(
-            b=b,
-            concat=" || ',' || ".join(f"s{b * ROWS_PER_BAND + r}" for r in range(ROWS_PER_BAND)),
-        )
-        for b in range(N_BANDS)
-    )
     matches = " + ".join(
         f"(CASE WHEN sa.s{i} = sb.s{i} THEN 1 ELSE 0 END)" for i in range(N_HASHES)
     )
     return f"""
-WITH {_SHINGLES_CTE},
-ex AS (SELECT doc_id, unnest(shingles) AS s FROM sh),
-hashed AS (SELECT doc_id, md5(s) AS m FROM ex),
+WITH {_DUCK_HASHED_CTES},
 ints AS (
   SELECT doc_id,
          {_duck_hex_int(1)} AS h1,
@@ -1202,14 +1205,14 @@ ints AS (
 ),
 sigs AS MATERIALIZED (
   SELECT doc_id,
-    {sig_cols}
+    {_DUCK_SIG_COLS}
   FROM ints GROUP BY doc_id
 ),
 sets AS MATERIALIZED (
   SELECT doc_id, list_distinct(list(hs)) AS hset FROM ints GROUP BY doc_id
 ),
 bands AS MATERIALIZED (
-{band_rows}
+{_duck_band_rows()}
 ),
 over_cap AS (
   SELECT band_idx, band_val FROM bands
@@ -1275,45 +1278,28 @@ def dedup_minhash_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     signatures AND shingle sets, candidates come from the capped band
     equi-join, and the audit itself folds to ONE row. Text never
     shuffles."""
-    ex = (
-        shingles_exploded(spark, sf_dir)
-        .withColumn("m", F.md5("s"))
-        .select(
-            "doc_id",
-            F.expr("CAST(conv(substr(m, 1, 8), 16, 10) AS BIGINT)").alias("h1"),
-            F.expr("CAST(conv(substr(m, 9, 8), 16, 10) AS BIGINT)").alias("h2"),
-            F.expr("CAST(conv(substr(m, 1, 15), 16, 10) AS BIGINT)").alias("hs"),
-        )
+    sigs = _minhash_sigs(spark, sf_dir)
+    # The oracle drops over-cap buckets and makes no star pairs.
+    kept, _star = _cap_band_buckets(
+        _minhash_bands(sigs), ["band_idx", "band_val"], "doc_id", MAX_BAND_BUCKET
     )
-    sigs = ex.groupBy("doc_id").agg(
-        *_minhash_sig_aggs(), F.collect_set("hs").alias("hset")
+    cand = bucket_clique(kept, ["band_idx", "band_val"], "doc_id").distinct()
+    sa = sigs.select(
+        F.col("doc_id").alias("doc_a"),
+        *[F.col(f"s{i}").alias(f"a{i}") for i in range(N_HASHES)],
+        F.col("shingles").alias("ha"),
     )
-    sigs = sigs.persist(CKPT_LEVEL)  # band explode + both pair sides (lazy: r12)
-    bands = sigs.select("doc_id", F.explode(_minhash_band_array()).alias("band")).select(
-        "doc_id", F.col("band.band_idx").alias("band_idx"), F.col("band.band_val").alias("band_val")
+    sb = sigs.select(
+        F.col("doc_id").alias("doc_b"),
+        *[F.col(f"s{i}").alias(f"b{i}") for i in range(N_HASHES)],
+        F.col("shingles").alias("hb"),
     )
-    kept, _star, _spill = _cap_band_buckets(
-        bands, ["band_idx", "band_val"], "doc_id", MAX_BAND_BUCKET
-    )
-    a, b = kept.alias("a"), kept.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("da"), F.col("b.doc_id").alias("db"))
-        .distinct()
-    )
-    sa = sigs.select(F.col("doc_id").alias("da"), *[F.col(f"s{i}").alias(f"a{i}") for i in range(N_HASHES)], F.col("hset").alias("ha"))
-    sb = sigs.select(F.col("doc_id").alias("db"), *[F.col(f"s{i}").alias(f"b{i}") for i in range(N_HASHES)], F.col("hset").alias("hb"))
     matches = " + ".join(
         f"(CASE WHEN a{i} = b{i} THEN 1 ELSE 0 END)" for i in range(N_HASHES)
     )
     scored = (
-        cand.join(sa, "da")
-        .join(sb, "db")
+        cand.join(sa, "doc_a")
+        .join(sb, "doc_b")
         .select(
             F.expr(f"CAST(({matches}) * 62500 AS BIGINT)").alias("est_ppm"),
             F.expr(
@@ -1726,17 +1712,8 @@ _SWEEP_CONFIGS = ((2, 8), (4, 4), (8, 2))
 
 
 def _band_sweep_oracle() -> str:
-    sig_cols = ",\n    ".join(f"min(h1 + {i} * h2) AS s{i}" for i in range(N_HASHES))
     band_rows = "\n  UNION ALL\n".join(
-        "  SELECT doc_id, 'b{nb}r{rpb}' AS cfg, {b} AS band_idx, md5({concat}) AS band_val"
-        " FROM sigs".format(
-            nb=nb,
-            rpb=rpb,
-            b=b,
-            concat=" || ',' || ".join(f"s{b * rpb + r}" for r in range(rpb)),
-        )
-        for nb, rpb in _SWEEP_CONFIGS
-        for b in range(nb)
+        _duck_band_rows(nb, rpb, f"'b{nb}r{rpb}' AS cfg, ") for nb, rpb in _SWEEP_CONFIGS
     )
     cfg_rows = " UNION ALL ".join(
         f"SELECT 'b{nb}r{rpb}' AS cfg, CAST({nb} AS BIGINT) AS n_bands,"
@@ -1744,22 +1721,7 @@ def _band_sweep_oracle() -> str:
         for nb, rpb in _SWEEP_CONFIGS
     )
     return f"""
-WITH {_SHINGLES_CTE},
-ex AS (SELECT doc_id, unnest(shingles) AS s FROM sh),
-hashed AS (SELECT doc_id, md5(s) AS m FROM ex),
-ints AS (
-  SELECT doc_id,
-    {_duck_hex_int(1)} AS h1,
-    {_duck_hex_int(9)} AS h2,
-    {_duck_hex_int(1, 15)} AS hs
-  FROM hashed
-),
-sigs AS (
-  SELECT doc_id,
-    {sig_cols},
-    list_distinct(list(hs)) AS hset
-  FROM ints GROUP BY doc_id
-),
+WITH {_DUCK_SIGS_CTES},
 bands AS (
 {band_rows}
 ),
@@ -1830,12 +1792,9 @@ def dedup_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     sigs = _minhash_sigs(spark, sf_dir)
     bands = None
     for nb, rpb in _SWEEP_CONFIGS:
-        b = sigs.select(
-            "doc_id",
-            F.lit(f"b{nb}r{rpb}").alias("cfg"),
-            F.explode(_minhash_band_array(nb, rpb)).alias("band"),
-        ).select("doc_id", "cfg", F.col("band.band_idx").alias("band_idx"),
-                 F.col("band.band_val").alias("band_val"))
+        b = _minhash_bands(sigs, nb, rpb).select(
+            "doc_id", F.lit(f"b{nb}r{rpb}").alias("cfg"), "band_idx", "band_val"
+        )
         bands = b if bands is None else bands.unionAll(b)
     a, bb = bands.alias("a"), bands.alias("b")
     cand = (

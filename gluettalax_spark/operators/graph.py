@@ -55,13 +55,13 @@ class _GenerationRotator:
     old generation's blocks. (It previously DIFFED the whole
     persistent-RDD id set around the call — but a lazy checkpoint
     executes upstream stages at call time, so any not-yet-materialized
-    upstream ``persist`` — CC's ``sym``, a caller's ``_minhash_sigs`` —
-    first registered inside that window, was misattributed to the new
-    generation, and round-1 ``retire()`` silently dropped the
-    multi-consumer cache; ADVICE r12.) Unpersisting a locally-
-    checkpointed RDD makes it unrecomputable — callers must only
-    ``retire()`` after the last read. Cluster analog: deleting the
-    previous round's checkpoint files.
+    upstream ``persist`` — CC's ``sym``, a caller's MinHash signature
+    table (``dedup._minhash_sigs``) — first registered inside that
+    window, was misattributed to the new generation, and round-1
+    ``retire()`` silently dropped the multi-consumer cache; ADVICE r12.)
+    Unpersisting a locally-checkpointed RDD makes it unrecomputable —
+    callers must only ``retire()`` after the last read. Cluster analog:
+    deleting the previous round's checkpoint files.
 
     Why localCheckpoint and not persist (r12 post-mortem): a persist cut
     does NOT truncate the LOGICAL plan — CacheManager substitution only
@@ -376,9 +376,9 @@ def connected_components_star(edges: DataFrame, src: str = "u", dst: str = "v") 
 # --------------------------------------------------------------------------
 
 def _minhash_cc_oracle() -> str:
-    from gluettalax_spark.operators.dedup import _minhash_oracle
+    from gluettalax_spark.operators.dedup import _MINHASH_ORACLE
 
-    mh = _minhash_oracle().strip().removesuffix("ORDER BY doc_a, doc_b").rstrip()
+    mh = _MINHASH_ORACLE.strip().removesuffix("ORDER BY doc_a, doc_b").rstrip()
     return f"""
 WITH RECURSIVE mh AS (
 {mh}
@@ -512,6 +512,26 @@ def node_degrees(
         .groupBy(n)
         .agg(F.count(F.lit(1)).alias(d))
     )
+
+
+def wedge_centers(edges: DataFrame, max_deg: int) -> tuple[DataFrame, DataFrame]:
+    """(deg, nbrs) of the undirected ``(pa, pb)`` edge set, the inputs
+    of every common-neighbor score: ``deg`` (n, d) is each node's
+    degree, ``nbrs`` (n, ns) the sorted neighbor list of each node with
+    at most ``max_deg`` neighbors. A center's wedges are the pairs of
+    its list (:func:`explode_pairs`), so hub centers drop out BEFORE the
+    explode: their wedge fan-out is quadratic in the degree. Both come
+    from one adjacency, the ``unionAll`` of the two edge orientations."""
+    adj = edges.select(F.col("pa").alias("n"), F.col("pb").alias("nbr")).unionAll(
+        edges.select(F.col("pb").alias("n"), F.col("pa").alias("nbr"))
+    )
+    deg = adj.groupBy("n").agg(F.count(F.lit(1)).cast("long").alias("d"))
+    nbrs = (
+        adj.groupBy("n")
+        .agg(F.sort_array(F.collect_set("nbr")).alias("ns"))
+        .filter(F.size("ns") <= max_deg)
+    )
+    return deg, nbrs
 
 
 def closed_wedges(edges: DataFrame, deg: DataFrame) -> DataFrame:
@@ -1322,16 +1342,7 @@ def jaccard_linkpred_scores(edges: DataFrame, max_deg: int = _LINKPRED_MAX_DEG) 
     (columns pa < pb) with at least one common sub-hub neighbor. Factored
     edges-in so the hub-cap path is testable on synthetic graphs; see
     graph_jaccard_linkpred for the scale rationale."""
-    adj = edges.select(F.col("pa").alias("n"), F.col("pb").alias("nbr")).unionAll(
-        edges.select(F.col("pb").alias("n"), F.col("pa").alias("nbr"))
-    )
-    deg = adj.groupBy("n").agg(F.count(F.lit(1)).cast("long").alias("d"))
-    # Neighbor lists once; hub centers drop out BEFORE the wedge explode.
-    nbrs = (
-        adj.groupBy("n")
-        .agg(F.sort_array(F.collect_set("nbr")).alias("ns"))
-        .filter(F.size("ns") <= max_deg)
-    )
+    deg, nbrs = wedge_centers(edges, max_deg)
     wedges = explode_pairs(nbrs, "ns", "a", "b")
     common = wedges.groupBy("a", "b").agg(
         F.count(F.lit(1)).cast("long").alias("common_neighbors")
@@ -1893,17 +1904,12 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     anti-join the edge set, degrees join on the node key, top-k is
     TakeOrderedAndProject."""
     edges = cooccurrence_edges(spark, sf_dir).persist(CKPT_LEVEL)
-    adj = edges.select(F.col("pa").alias("n"), F.col("pb").alias("nbr")).unionAll(
-        edges.select(F.col("pb").alias("n"), F.col("pa").alias("nbr"))
-    )
-    deg = adj.groupBy("n").agg(F.count(F.lit(1)).cast("long").alias("d"))
+    deg, nbrs = wedge_centers(edges, _LINKPRED_MAX_DEG)
     nbrs = (
-        adj.groupBy("n")
-        .agg(F.sort_array(F.collect_set("nbr")).alias("ns"))
         # Degree-1 centers form no wedges anyway, and must drop BEFORE the
         # weight projection: ln(1) = 0 and ANSI mode turns 1e8/0 into an
         # error even on rows the explode would discard.
-        .filter((F.size("ns") >= 2) & (F.size("ns") <= _LINKPRED_MAX_DEG))
+        nbrs.filter(F.size("ns") >= 2)
         .withColumn(
             "w",
             F.expr(f"CAST(floor({_AA_SCALE} / ln(CAST(size(ns) AS DOUBLE))) AS BIGINT)"),
@@ -1999,15 +2005,7 @@ def graph_harmonic_2hop(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates; the direct-edge exclusion is an anti-join on the edge
     list. Nothing is corpus-quadratic."""
     edges = cooccurrence_edges(spark, sf_dir).persist(CKPT_LEVEL)
-    adj = edges.select(F.col("pa").alias("n"), F.col("pb").alias("nbr")).unionAll(
-        edges.select(F.col("pb").alias("n"), F.col("pa").alias("nbr"))
-    )
-    deg = adj.groupBy("n").agg(F.count(F.lit(1)).cast("long").alias("d"))
-    nbrs = (
-        adj.groupBy("n")
-        .agg(F.sort_array(F.collect_set("nbr")).alias("ns"))
-        .filter(F.size("ns") <= _HARMONIC_MAX_DEG)
-    )
+    deg, nbrs = wedge_centers(edges, _HARMONIC_MAX_DEG)
     wedges = explode_pairs(nbrs, "ns", "a", "b").distinct()
     p2 = wedges.join(
         edges.select(F.col("pa").alias("a"), F.col("pb").alias("b")), ["a", "b"], "left_anti"

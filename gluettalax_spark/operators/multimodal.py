@@ -31,6 +31,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gluettalax_spark.operators.dedup import HAMMING_MAX, MAX_BAND_BUCKET, hamming_band_pairs
 from gluettalax_spark.registry import register
 from gluettalax_spark.tables import load
 
@@ -633,10 +634,6 @@ def make_file_decode_batch(have_codecs: bool = _HAVE_CODECS):
 # --------------------------------------------------------------------------
 
 PHASH_SCHEMA = "doc_id long, phash long, payload_md5w long"
-PHASH_HAMMING_MAX = 3
-_PHASH_BANDS = 4
-_PHASH_BAND_BITS = 16
-_PHASH_BAND_MASK = (1 << _PHASH_BAND_BITS) - 1
 
 
 def make_phash_batch():
@@ -686,7 +683,7 @@ def make_phash_batch():
 @register(
     "multimodal_phash_neardup",
     None,
-    doc=f"perceptual-hash near-dup pairs (Hamming ≤ {PHASH_HAMMING_MAX}, 4×16 banding)",
+    doc=f"perceptual-hash near-dup pairs (Hamming ≤ {HAMMING_MAX}, 4×16 banding)",
     witness=("phash_a", "phash_b", "hamming"),
 )
 def multimodal_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -695,13 +692,14 @@ def multimodal_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Hamming banding is the standard architecture; Zauner 2010 is the
     public reference). The decode side is Python (mapInPandas kernel,
     stub pHash — see :func:`make_phash_batch`); everything after the
-    64-bit fingerprint is JVM-side and identical to
-    `dedup_simhash_pairs`' pigeonhole plan: Hamming ≤ 3 on 64 bits split
-    into 4 bands of 16 ⇒ at least one band matches exactly, so every
-    qualifying pair comes from ONE equi-join on (band_idx, band_val) —
-    never a cross join — with the adversarial-skew bucket cap replayed
-    from the MinHash machinery (over-cap buckets degrade to star pairs,
-    every emitted pair still passes the exact Hamming verify).
+    64-bit fingerprint is JVM-side and is `dedup_simhash_pairs`'
+    pigeonhole plan, one builder (``dedup.hamming_band_pairs``):
+    Hamming ≤ 3 on 64 bits split into 4 bands of 16 ⇒ at least one band
+    matches exactly, so every qualifying pair comes from ONE equi-join
+    on (band_idx, band_val) — never a cross join — with the
+    adversarial-skew bucket cap of the MinHash machinery (over-cap
+    buckets degrade to star pairs, every emitted pair still passes the
+    exact Hamming verify).
 
     Rows-only witness: ``phash_a``/``phash_b``/``hamming`` are re-derived
     in the pytest from the raw payload bytes (kernel + banding + verify,
@@ -712,59 +710,13 @@ def multimodal_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: payload bytes never shuffle (the kernel runs inside the scan
     stage and emits (doc_id, 2×long)); the band table is 4 rows per doc;
     the self-join key space is 4·2^16 and widens with the fingerprint."""
-    from gluettalax_spark.operators.dedup import _cap_band_buckets
-
     docs = load(spark, sf_dir, "documents")
     payloads = docs.select("doc_id", F.encode("text", "UTF-8").alias("payload"))
     hashes = payloads.mapInPandas(make_phash_batch(), PHASH_SCHEMA).localCheckpoint(
         eager=True, storageLevel=CKPT_LEVEL
     )
-    bands = hashes.select(
-        "doc_id",
-        "phash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(k).alias("band_idx"),
-                        F.expr(
-                            f"((phash >> {k * _PHASH_BAND_BITS}) & {_PHASH_BAND_MASK})"
-                        ).alias("band_val"),
-                    )
-                    for k in range(_PHASH_BANDS)
-                ]
-            )
-        ).alias("band"),
-    ).select("doc_id", "phash", "band.band_idx", "band.band_val")
-    kept, star, _spill = _cap_band_buckets(
-        bands, ["band_idx", "band_val"], "doc_id", 512
-    )
-    a = kept.select(
-        F.col("doc_id").alias("doc_a"), F.col("phash").alias("phash_a"),
-        "band_idx", "band_val",
-    )
-    b = kept.select(
-        F.col("doc_id").alias("doc_b"), F.col("phash").alias("phash_b"),
-        "band_idx", "band_val",
-    )
-    ph_a = hashes.select(F.col("doc_id").alias("doc_a"), F.col("phash").alias("phash_a"))
-    ph_b = hashes.select(F.col("doc_id").alias("doc_b"), F.col("phash").alias("phash_b"))
-    star_pairs = (
-        star.select(F.col("_star_a").alias("doc_a"), F.col("_star_b").alias("doc_b"))
-        .join(ph_a, "doc_a")
-        .join(ph_b, "doc_b")
-        .select("doc_a", "doc_b", "phash_a", "phash_b")
-    )
-    cand = (
-        a.join(b, ["band_idx", "band_val"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", "phash_a", "phash_b")
-        .union(star_pairs)
-        .distinct()
-    )
     return (
-        cand.withColumn("hamming", F.expr("CAST(bit_count(phash_a ^ phash_b) AS BIGINT)"))
-        .filter(F.col("hamming") <= PHASH_HAMMING_MAX)
+        hamming_band_pairs(hashes, "phash", MAX_BAND_BUCKET)
         .select("doc_a", "doc_b", "hamming", "phash_a", "phash_b")
         .orderBy("doc_a", "doc_b")
     )

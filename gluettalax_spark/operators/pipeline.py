@@ -18,6 +18,17 @@ from gluettalax_spark.operators.rank import exact_global_rank, ntile_from_rank
 from gluettalax_spark.registry import register
 from gluettalax_spark.tables import load
 
+
+def md5_byte(c: F.Column) -> F.Column:
+    """The first byte of md5(c) as an int in [0, 256) — hex chars 1-2 of
+    the digest, parsed the way the DuckDB oracles parse them. A
+    content-stable hash: the same for a value under any row order,
+    partitioning or engine."""
+    h = F.md5(c.cast("string"))
+    nibble = lambda i: F.instr(F.lit("0123456789abcdef"), F.substring(h, i, 1)) - 1  # noqa: E731
+    return nibble(1) * 16 + nibble(2)
+
+
 # --------------------------------------------------------------------------
 # Conversion funnel: signup → view → click → purchase (ordered steps)
 # --------------------------------------------------------------------------
@@ -167,8 +178,7 @@ def sample_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     never migrates between train and eval. Pure projection + one
     aggregate; zero extra shuffles at any scale."""
     docs = load(spark, sf_dir, "documents")
-    hexpos = lambda i: F.instr(F.lit("0123456789abcdef"), F.substring(F.md5(F.col("doc_id").cast("string")), i, 1)) - 1  # noqa: E731
-    h = hexpos(1) * 16 + hexpos(2)
+    h = md5_byte(F.col("doc_id"))
     return (
         docs.withColumn("h", h)
         .groupBy("lang")
@@ -730,8 +740,7 @@ def mixture_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     projection; the whole op is one map + one aggregate, no extra
     shuffle at any corpus size."""
     docs = load(spark, sf_dir, "documents")
-    hexpos = lambda i: F.instr(F.lit("0123456789abcdef"), F.substring(F.md5(F.col("doc_id").cast("string")), i, 1)) - 1  # noqa: E731
-    h = hexpos(1) * 16 + hexpos(2)
+    h = md5_byte(F.col("doc_id"))
     cutoff = (
         F.when(F.col("source").isin(_HIGH_SRC), 256)
         .when(F.col("source").isin(_LOW_SRC), 32)
@@ -876,8 +885,7 @@ def stratified_sample_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     counts = docs.groupBy("lang").agg(F.count(F.lit(1)).alias("n_docs"))
     cap = counts.agg(F.min("n_docs").alias("cap"))
-    hexpos = lambda i: F.instr(F.lit("0123456789abcdef"), F.substring(F.md5(F.col("doc_id").cast("string")), i, 1)) - 1  # noqa: E731
-    h = hexpos(1) * 16 + hexpos(2)
+    h = md5_byte(F.col("doc_id"))
     return (
         docs.select("doc_id", "lang", h.alias("h"))
         .join(F.broadcast(counts), "lang")
@@ -1107,9 +1115,7 @@ def shard_col(doc_id: F.Column, n_shards: int = N_SHARDS) -> F.Column:
     """Content-stable shard id: first md5 byte of the doc id, mod
     n_shards. Independent of row order, partitioning, and engine —
     re-exports land every document in the same shard."""
-    h = F.md5(doc_id.cast("string"))
-    hexpos = lambda i: F.instr(F.lit("0123456789abcdef"), F.substring(h, i, 1)) - 1  # noqa: E731
-    return ((hexpos(1) * 16 + hexpos(2)) % n_shards).cast("long")
+    return (md5_byte(doc_id) % n_shards).cast("long")
 
 
 @register(

@@ -34,9 +34,10 @@ Scale design (100 TB):
 * **Cluster-local pair join is capped.** k is fixed per run (here 8;
   production ~100k, chosen ∝ corpus size), so one mega-cluster would
   make the pair join quadratic — the band-bucket cap from
-  :func:`gluettalax_spark.operators.dedup._cap_band_buckets` degrades
-  over-cap clusters to verified star pairs, same contract as the
-  MinHash/fuzzy joins.
+  :func:`gluettalax_spark.operators.dedup._cap_band_buckets` (the split
+  under :func:`~gluettalax_spark.operators.dedup.capped_bucket_pairs`)
+  degrades over-cap clusters to verified star pairs, same contract as
+  the MinHash/fuzzy joins.
 
 Reference parity: the reference engine (``/root/reference``) has no
 embedding ops at all — this module is part of the LLM-training-data
@@ -345,7 +346,9 @@ def semantic_dedup(
         "vec_id", "cluster_id", qe.alias("qe")
     ).persist(CKPT_LEVEL)
 
-    kept, star, _spill = _cap_band_buckets(members, ["cluster_id"], "vec_id", max_bucket)
+    # The bare split: the clique half is a per-cluster applyInPandas
+    # matmul, not capped_bucket_pairs' equi-join.
+    kept, star = _cap_band_buckets(members, ["cluster_id"], "vec_id", max_bucket)
 
     def clique_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
         n = len(pdf)

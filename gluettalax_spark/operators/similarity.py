@@ -18,6 +18,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from gluettalax_spark.operators.dedup import MAX_BAND_BUCKET, capped_bucket_pairs
 from gluettalax_spark.registry import register
 from gluettalax_spark.tables import fixture_fingerprint, load, load_spread
 
@@ -323,7 +324,9 @@ ORDER BY vec_a, vec_b
     _NEARDUP_ORACLE,
     doc=f"LSH-bucketed embedding near-dup pairs (cosine ≥ {NEARDUP_COS})",
 )
-def embedding_neardup(spark: SparkSession, sf_dir: str, max_bucket: int = 512) -> DataFrame:
+def embedding_neardup(
+    spark: SparkSession, sf_dir: str, max_bucket: int = MAX_BAND_BUCKET
+) -> DataFrame:
     """Scale path: candidates come from an EQUI-JOIN on the sign-LSH
     bucket (the similarity_lsh_bucket key), never a triangular all-pairs
     self-join — candidate count is Σ_bucket n_b², not N². Cosine is
@@ -337,10 +340,8 @@ def embedding_neardup(spark: SparkSession, sf_dir: str, max_bucket: int = 512) -
     corpus (mass-duplicated embeddings — e.g. the zero vector or a
     boilerplate doc re-embedded millions of times) piles into ONE sign
     bucket; past ``max_bucket`` that bucket degrades from clique to star
-    candidates (dedup._cap_band_buckets), each still cosine-verified.
+    candidates (dedup.capped_bucket_pairs), each still cosine-verified.
     The fixture never reaches the cap, so the oracle stays exact."""
-    from gluettalax_spark.operators.dedup import _cap_band_buckets
-
     emb = load(spark, sf_dir, "embeddings")
     bucket = _bucket_expr(_plane_coeff_spark, lambda d: f"element_at(embedding, {d + 1})")
     # Both join sides read the bucketed table; materialize the 8×64-term
@@ -356,43 +357,9 @@ def embedding_neardup(spark: SparkSession, sf_dir: str, max_bucket: int = 512) -
         # persist; ExistingRDD plans don't.
         .localCheckpoint(eager=True, storageLevel=CKPT_LEVEL)
     )
-    kept, star, _spill = _cap_band_buckets(buckets, ["bucket"], "vec_id", max_bucket)
-    a = kept.select(
-        F.col("vec_id").alias("vec_a"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("a_norm"),
-        "bucket",
-    )
-    b = kept.select(
-        F.col("vec_id").alias("vec_b"),
-        F.col("embedding").alias("v_emb"),
-        F.col("nrm").alias("b_norm"),
-        "bucket",
-    )
-    xa = buckets.select(
-        F.col("vec_id").alias("vec_a"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("a_norm"),
-    )
-    xb = buckets.select(
-        F.col("vec_id").alias("vec_b"),
-        F.col("embedding").alias("v_emb"),
-        F.col("nrm").alias("b_norm"),
-    )
-    star_pairs = (
-        star.select(F.col("_star_a").alias("vec_a"), F.col("_star_b").alias("vec_b"))
-        .join(xa, "vec_a")
-        .join(xb, "vec_b")
-        .select("vec_a", "vec_b", "q_emb", "v_emb", "a_norm", "b_norm")
-    )
-    clique = (
-        a.join(b, "bucket")
-        .filter(F.col("vec_a") < F.col("vec_b"))
-        .select("vec_a", "vec_b", "q_emb", "v_emb", "a_norm", "b_norm")
-    )
-    cos = _dot(F.col("q_emb"), F.col("v_emb")) / (F.col("a_norm") * F.col("b_norm"))
+    cos = _dot(F.col("embedding_a"), F.col("embedding_b")) / (F.col("nrm_a") * F.col("nrm_b"))
     return (
-        clique.union(star_pairs)
+        capped_bucket_pairs(buckets, ["bucket"], "vec_id", ("embedding", "nrm"), max_bucket)
         .select("vec_a", "vec_b", F.round(cos, 4).alias("cosine"))
         .filter(F.col("cosine") >= NEARDUP_COS)
         .orderBy("vec_a", "vec_b")

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from gluettalax_spark.operators.dedup import _duck_hex_int
 from gluettalax_spark.registry import register
 from gluettalax_spark.tables import load
 
@@ -461,19 +462,9 @@ _CMS_D = 4  # depth: independent hash rows
 _CMS_W = 256  # width: counters per row
 
 
-def _duck_md5_int(start: int, width: int = 8) -> str:
-    """DuckDB int value of md5 hex chars [start, start+width) of column m
-    (no conv() in DuckDB; mirrors dedup._duck_hex_int)."""
-    terms = [
-        f"(strpos('0123456789abcdef', substr(m, {start + k}, 1)) - 1) * {16 ** (width - 1 - k)}"
-        for k in range(width)
-    ]
-    return "(" + " + ".join(terms) + ")"
-
-
 _CMS_ORACLE = f"""
 WITH hh AS (
-  SELECT user_id, {_duck_md5_int(1)} AS h1, {_duck_md5_int(9)} AS h2
+  SELECT user_id, {_duck_hex_int(1)} AS h1, {_duck_hex_int(9)} AS h2
   FROM (SELECT DISTINCT user_id, md5(CAST(user_id AS VARCHAR)) AS m FROM events)
 ),
 cms AS (
@@ -1066,16 +1057,6 @@ _CKSUM_DUCK = {
 }
 
 
-def _duck_hex_word(start: int) -> str:
-    """DuckDB int of md5 hex chars [start, start+15) (no conv() there;
-    15 hex digits stay inside signed 64-bit)."""
-    terms = [
-        f"(strpos('0123456789abcdef', substr(m, {start + k}, 1)) - 1) * {16 ** (14 - k)}"
-        for k in range(15)
-    ]
-    return "(" + " + ".join(terms) + ")"
-
-
 def _cksum_oracle() -> str:
     parts = []
     for t, canon in _CKSUM_DUCK.items():
@@ -1085,7 +1066,7 @@ SELECT '{t}' AS table_name,
        CAST(count(*) AS BIGINT) AS n_rows,
        CAST(sum(w) % {_CKSUM_MOD} AS BIGINT) AS checksum
 FROM (
-  SELECT {_duck_hex_word(1)} + {_duck_hex_word(17)} AS w
+  SELECT {_duck_hex_int(1, 15)} + {_duck_hex_int(17, 15)} AS w
   FROM (SELECT md5({canon}) AS m FROM {t})
 )"""
         )

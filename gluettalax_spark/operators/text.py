@@ -486,11 +486,11 @@ def text_fuzzy_prefix_pairs(
     (languages × size buckets) — block occupancy grows linearly with the
     corpus, so at scale the bucket cap is load-bearing, not just
     adversarial insurance: blocks past ``max_block`` degrade to star
-    candidates around the block's min doc_id (dedup._cap_band_buckets),
+    candidates around the block's min doc_id (dedup.capped_bucket_pairs),
     each still Levenshtein-verified. The cap engages already at sf0.1
     (blocks >512 docs), so the ORACLE replays it — the cap is part of
     the operator spec, not a silent divergence."""
-    from gluettalax_spark.operators.dedup import _cap_band_buckets
+    from gluettalax_spark.operators.dedup import capped_bucket_pairs
 
     docs = load(spark, sf_dir, "documents")
     prefixes = docs.select(
@@ -499,30 +499,8 @@ def text_fuzzy_prefix_pairs(
         F.substring(F.lower(F.col("text")), 1, 24).alias("pfx"),
         (F.col("n_chars") / 200).cast("long").alias("size_block"),
     )
-    kept, star, _spill = _cap_band_buckets(
-        prefixes, ["lang", "size_block"], "doc_id", max_block
-    )
-    a = kept.select(
-        F.col("doc_id").alias("doc_a"), "lang", "size_block", F.col("pfx").alias("pfx_a")
-    )
-    b = kept.select(
-        F.col("doc_id").alias("doc_b"), "lang", "size_block", F.col("pfx").alias("pfx_b")
-    )
-    xa = prefixes.select(F.col("doc_id").alias("doc_a"), F.col("pfx").alias("pfx_a"))
-    xb = prefixes.select(F.col("doc_id").alias("doc_b"), F.col("pfx").alias("pfx_b"))
-    star_pairs = (
-        star.select(F.col("_star_a").alias("doc_a"), F.col("_star_b").alias("doc_b"))
-        .join(xa, "doc_a")
-        .join(xb, "doc_b")
-        .select("doc_a", "doc_b", "pfx_a", "pfx_b")
-    )
-    clique = (
-        a.join(b, ["lang", "size_block"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", "pfx_a", "pfx_b")
-    )
     return (
-        clique.union(star_pairs)
+        capped_bucket_pairs(prefixes, ["lang", "size_block"], "doc_id", ("pfx",), max_block)
         .select(
             "doc_a",
             "doc_b",

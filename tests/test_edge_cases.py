@@ -509,3 +509,67 @@ def test_closed_wedges_k4_plus_pendant(spark):
     assert len({frozenset((r.wsrc, r.ta, r.tb)) for r in closed}) == 4
     credit = Counter(n for r in closed for n in (r.wsrc, r.ta, r.tb))
     assert [credit[n] for n in range(1, 6)] == [3, 3, 3, 3, 0]
+
+
+def _capped_pairs_ref(rows, cap):
+    """Python reference for dedup.capped_bucket_pairs over (key, id)
+    rows: per bucket within ``cap`` every pair a < b, per bucket over it
+    the star (min id, member) — a multiset, one entry per bucket."""
+    buckets = {}
+    for key, i in rows:
+        buckets.setdefault(key, []).append(i)
+    out = []
+    for ids in buckets.values():
+        if len(ids) <= cap:
+            out += [(a, b) for a in ids for b in ids if a < b]
+        else:
+            out += [(min(ids), m) for m in ids if m != min(ids)]
+    return sorted(out)
+
+
+def test_capped_bucket_pairs_clique_and_star_with_payload(spark):
+    """Bucket 1 (4 ids) is over the cap of 3 and degrades to the star
+    around its min id; bucket 2 stays a clique; a singleton pairs with
+    nothing. Both payload columns ride along on both ends."""
+    from gluettalax_spark.operators.dedup import capped_bucket_pairs
+
+    keyed = [(1, 5), (1, 2), (1, 9), (1, 7), (2, 3), (2, 1), (3, 4)]
+    df = spark.createDataFrame(
+        [(k, i, f"p{i}", i * 10) for k, i in keyed], "k long, doc_id long, p string, q long"
+    )
+    for cap in (3, 10):
+        got = capped_bucket_pairs(df, ["k"], "doc_id", ("p", "q"), cap)
+        assert got.columns == ["doc_a", "doc_b", "p_a", "p_b", "q_a", "q_b"]
+        rows = [tuple(r) for r in got.collect()]
+        assert sorted((a, b) for a, b, *_ in rows) == _capped_pairs_ref(keyed, cap)
+        assert all(r[2:] == (f"p{r[0]}", f"p{r[1]}", r[0] * 10, r[1] * 10) for r in rows)
+
+
+def test_capped_bucket_pairs_ids_in_several_buckets(spark):
+    """Ids 1 and 2 share two (k1, k2) buckets and an over-cap bucket:
+    one pair per shared bucket before ``distinct``, one after. Star
+    payloads come from the one-row-per-id ``lookup`` frame."""
+    from gluettalax_spark.operators.dedup import capped_bucket_pairs
+
+    keyed = [((0, 1), 1), ((0, 1), 2), ((0, 2), 1), ((0, 2), 2)]
+    keyed += [((1, 1), i) for i in (4, 1, 3, 2)]
+    df = spark.createDataFrame(
+        [(k1, k2, i, i * 7) for (k1, k2), i in keyed], "k1 long, k2 long, doc_id long, w long"
+    )
+    lookup = df.select("doc_id", "w").distinct()
+    pairs = capped_bucket_pairs(df, ["k1", "k2"], "doc_id", ("w",), 3, lookup=lookup)
+    want = _capped_pairs_ref(keyed, 3)
+    assert want == [(1, 2), (1, 2), (1, 2), (1, 3), (1, 4)]
+    assert sorted((r.doc_a, r.doc_b) for r in pairs.collect()) == want
+    got = pairs.distinct().collect()
+    assert sorted((r.doc_a, r.doc_b) for r in got) == sorted(set(want))
+    assert all((r.w_a, r.w_b) == (r.doc_a * 7, r.doc_b * 7) for r in got)
+
+
+def test_capped_bucket_pairs_empty_input(spark):
+    from gluettalax_spark.operators.dedup import capped_bucket_pairs
+
+    empty = spark.createDataFrame([], "bucket long, vec_id long, e double")
+    got = capped_bucket_pairs(empty, ["bucket"], "vec_id", ("e",), 1)
+    assert got.columns == ["vec_a", "vec_b", "e_a", "e_b"]
+    assert got.count() == 0
