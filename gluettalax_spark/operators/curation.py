@@ -32,6 +32,12 @@ from gluettalax_spark.memory import CKPT_LEVEL
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gluettalax_spark.operators.dedup import (
+    _WORD_COUNT_DUCK,
+    NGRAM_SCORED_CTES,
+    dedup_ngram_jaccard,
+    word_count,
+)
 from gluettalax_spark.registry import register
 from gluettalax_spark.tables import load
 
@@ -126,10 +132,10 @@ def text_good_turing_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Tokenizer fertility per language
 # --------------------------------------------------------------------------
 
-_FERTILITY_ORACLE = r"""
+_FERTILITY_ORACLE = rf"""
 WITH d AS (
   SELECT lang,
-         CAST(len(regexp_extract_all(text, '\S+')) AS BIGINT)  AS ws,
+         {_WORD_COUNT_DUCK}  AS ws,
          CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]')) AS BIGINT) AS bpe,
          CAST(n_chars AS BIGINT) AS nc
   FROM documents
@@ -167,7 +173,7 @@ def text_token_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle is data-scale."""
     d = load(spark, sf_dir, "documents").select(
         "lang",
-        F.size(F.expr(r"regexp_extract_all(text, '\\S+', 0)")).cast("long").alias("ws"),
+        word_count().alias("ws"),
         F.size(F.expr(r"regexp_extract_all(text, '[A-Za-z]+|[0-9]|[^A-Za-z0-9\\s]', 0)"))
         .cast("long")
         .alias("bpe"),
@@ -1487,24 +1493,7 @@ def orders_price_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 _BRIER_ORACLE_TMPL = r"""
-WITH toks AS (
-  SELECT doc_id, list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '') AS w
-  FROM documents
-),
-feats AS (
-  SELECT doc_id, unnest(w) AS f FROM toks
-  UNION ALL
-  SELECT doc_id, unnest(list_transform(range(1, len(w)), i -> w[i] || '_' || w[i+1])) AS f
-  FROM toks WHERE len(w) >= 2
-),
-hashed AS (SELECT doc_id, md5(f) AS m FROM feats),
-logits AS (
-  SELECT doc_id,
-         CAST(CAST(sum((({hex15} % {qc_buckets}) * {qc_knuth})
-                        % {qc_wrange} - {qc_half}) AS BIGINT)
-              * 1000 // count(*) AS BIGINT) AS logit_milli
-  FROM hashed GROUP BY doc_id
-),
+WITH {logits},
 quality AS (
   SELECT doc_id, CAST(round(({quality}) * 10000) AS BIGINT) AS q_int
   FROM documents
@@ -1563,23 +1552,11 @@ FROM tot t CROSS JOIN decomp d
 
 
 def _brier_oracle() -> str:
-    from gluettalax_spark.operators.dedup import _duck_hex_int
-    from gluettalax_spark.operators.pipeline import (
-        _ECE_P_E6,
-        _QC_BUCKETS,
-        _QC_KNUTH,
-        _QC_WRANGE,
-    )
+    from gluettalax_spark.operators.pipeline import _ECE_P_E6, duck_doc_logits
     from gluettalax_spark.operators.text import _QUALITY_DUCK
 
     return _BRIER_ORACLE_TMPL.format(
-        hex15=_duck_hex_int(1, 15),
-        qc_buckets=_QC_BUCKETS,
-        qc_knuth=_QC_KNUTH,
-        qc_wrange=_QC_WRANGE,
-        qc_half=_QC_WRANGE // 2,
-        quality=_QUALITY_DUCK,
-        p_e6=_ECE_P_E6,
+        logits=duck_doc_logits(), quality=_QUALITY_DUCK, p_e6=_ECE_P_E6
     )
 
 
@@ -2260,24 +2237,7 @@ def dedup_fuzzy_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 _PR_CURVE_ORACLE_TMPL = r"""
-WITH toks AS (
-  SELECT doc_id, list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '') AS w
-  FROM documents
-),
-feats AS (
-  SELECT doc_id, unnest(w) AS f FROM toks
-  UNION ALL
-  SELECT doc_id, unnest(list_transform(range(1, len(w)), i -> w[i] || '_' || w[i+1])) AS f
-  FROM toks WHERE len(w) >= 2
-),
-hashed AS (SELECT doc_id, md5(f) AS m FROM feats),
-logits AS (
-  SELECT doc_id,
-         CAST(CAST(sum((({hex15} % {qc_buckets}) * {qc_knuth})
-                        % {qc_wrange} - {qc_half}) AS BIGINT)
-              * 1000 // count(*) AS BIGINT) AS logit_milli
-  FROM hashed GROUP BY doc_id
-),
+WITH {logits},
 quality AS (
   SELECT doc_id, CAST(round(({quality}) * 10000) AS BIGINT) AS q_int
   FROM documents
@@ -2322,18 +2282,10 @@ ORDER BY decile
 
 
 def _pr_curve_oracle() -> str:
-    from gluettalax_spark.operators.dedup import _duck_hex_int
-    from gluettalax_spark.operators.pipeline import _QC_BUCKETS, _QC_KNUTH, _QC_WRANGE
+    from gluettalax_spark.operators.pipeline import duck_doc_logits
     from gluettalax_spark.operators.text import _QUALITY_DUCK
 
-    return _PR_CURVE_ORACLE_TMPL.format(
-        hex15=_duck_hex_int(1, 15),
-        qc_buckets=_QC_BUCKETS,
-        qc_knuth=_QC_KNUTH,
-        qc_wrange=_QC_WRANGE,
-        qc_half=_QC_WRANGE // 2,
-        quality=_QUALITY_DUCK,
-    )
+    return _PR_CURVE_ORACLE_TMPL.format(logits=duck_doc_logits(), quality=_QUALITY_DUCK)
 
 
 @register(
@@ -2416,11 +2368,11 @@ def quality_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Sentence-level stats per source
 # --------------------------------------------------------------------------
 
-_SENTENCE_ORACLE = r"""
+_SENTENCE_ORACLE = rf"""
 WITH d AS (
   SELECT source,
          CAST(len(regexp_extract_all(text, '[.!?]+')) AS BIGINT) AS n_sent,
-         CAST(len(regexp_extract_all(text, '\S+')) AS BIGINT) AS n_tok
+         {_WORD_COUNT_DUCK} AS n_tok
   FROM documents
 )
 SELECT source,
@@ -2454,7 +2406,7 @@ def text_sentence_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents").select(
         "source",
         F.size(F.expr(r"regexp_extract_all(text, '[.!?]+', 0)")).cast("long").alias("n_sent"),
-        F.size(F.expr(r"regexp_extract_all(text, '\\S+', 0)")).cast("long").alias("n_tok"),
+        word_count().alias("n_tok"),
     )
     return (
         d.groupBy("source")
@@ -2478,14 +2430,11 @@ def text_sentence_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CF_FOCAL = 20
 _CF_K = 5
 
-_ITEM_CF_ORACLE = f"""
-WITH op AS (
-  SELECT o, p FROM (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem)
-  WHERE o IN (
-    SELECT l_orderkey FROM (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem)
-    GROUP BY l_orderkey HAVING count(*) <= 256
-  )
-),
+def _item_cf_oracle() -> str:
+    from gluettalax_spark.operators.graph import _DUCK_CAPPED_OP
+
+    return f"""
+WITH op AS {_DUCK_CAPPED_OP},
 supp AS (SELECT p, CAST(count(*) AS BIGINT) AS np FROM op GROUP BY p),
 co AS (
   SELECT a.p AS pa, b.p AS pb, CAST(count(*) AS BIGINT) AS c
@@ -2520,7 +2469,7 @@ ORDER BY item, rank
 
 @register(
     "similarity_item_cf",
-    _ITEM_CF_ORACLE,
+    _item_cf_oracle(),
     doc=f"item-item collaborative filtering: co-purchase cosine top-{_CF_K} for the {_CF_FOCAL} highest-support parts",
 )
 def similarity_item_cf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2541,7 +2490,7 @@ def similarity_item_cf(spark: SparkSession, sf_dir: str) -> DataFrame:
     TopK broadcast; per-item state is k rows."""
     from pyspark.sql.window import Window
 
-    from gluettalax_spark.operators.graph import order_baskets
+    from gluettalax_spark.operators.graph import order_baskets, pair_support
 
     # The capped baskets feed the supports AND the pair explode.
     op = order_baskets(spark, sf_dir).persist(CKPT_LEVEL)
@@ -2549,19 +2498,20 @@ def similarity_item_cf(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").cast("long").alias("np")
     )
     supp = supp.persist(CKPT_LEVEL)  # feeds focal AND both cosine joins
+    # Counted once per unordered pair, then mirrored: co holds (a, b, c)
+    # and (b, a, c).
     co = (
-        op.select(
+        pair_support(op)
+        .where(F.col("support") >= 2)
+        .select(
             F.explode(
-                F.expr(
-                    "flatten(transform(ps, x -> "
-                    "transform(filter(ps, y -> y != x), y -> struct(x AS pa, y AS pb))))"
+                F.array(
+                    F.struct("pa", "pb", "support"),
+                    F.struct(F.col("pb").alias("pa"), F.col("pa").alias("pb"), "support"),
                 )
             ).alias("e")
         )
-        .select("e.pa", "e.pb")
-        .groupBy("pa", "pb")
-        .agg(F.count("*").cast("long").alias("c"))
-        .where(F.col("c") >= 2)
+        .select("e.pa", "e.pb", F.col("e.support").alias("c"))
     )
     focal = supp.orderBy(F.col("np").desc(), F.col("p")).limit(_CF_FOCAL).select("p")
     scored = (
@@ -2685,8 +2635,6 @@ _THRESHOLDS = (30, 40, 50, 60, 70, 80, 90)  # Jaccard percent
 def _threshold_oracle() -> str:
     # Shares the blocked-pairs → Jaccard CTE chain with the ngram oracle
     # via a named constant (not string-slicing the finished SQL).
-    from gluettalax_spark.operators.dedup import NGRAM_SCORED_CTES
-
     rows = " UNION ALL ".join(f"SELECT {t} AS t_pct" for t in _THRESHOLDS)
     return f"""
 WITH {NGRAM_SCORED_CTES},
@@ -2721,8 +2669,6 @@ def dedup_threshold_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the scored-pair table is the blocked candidate set
     (never all-pairs); the 7-row threshold frame broadcasts and the
     curve is a 7-group conditional count."""
-    from gluettalax_spark.operators.dedup import dedup_ngram_jaccard
-
     scored = dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b", "jaccard")
     th = spark.range(1).selectExpr(
         f"explode(array({','.join(str(t) for t in _THRESHOLDS)})) AS t_pct"
@@ -2790,7 +2736,6 @@ def corpus_dedup_quality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the pair/CC stages are the dedup path's (blocked, bucketed);
     losers anti-join back to the corpus by id (text never reshuffles);
     the audit itself is one conditional aggregate."""
-    from gluettalax_spark.operators.dedup import dedup_ngram_jaccard
     from gluettalax_spark.operators.graph import connected_components
     from gluettalax_spark.operators.text import _quality_parts
 

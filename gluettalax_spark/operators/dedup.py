@@ -67,12 +67,48 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Shared shingling (word 3-grams over normalized tokens)
+# Shared tokenizing and shingling (word n-grams over normalized tokens):
+# each Spark builder beside its DuckDB twin
 # --------------------------------------------------------------------------
 
+# The members of the oracles' whitespace class, as Spark SQL literal text.
+# DuckDB's \s (RE2) is [\t\n\f\r ]; Java's \s also matches U+000B, so the
+# Spark side spells the RE2 class out. Backslashes are doubled because
+# Spark SQL string literals unescape them once.
+_WS_CHARS_SQL = r"\\t\\n\\f\\r "
+
+
+def ws_tokens_sql(col: str = "text") -> str:
+    """Spark SQL text of the whitespace tokenizer: the non-empty
+    lowercase tokens of ``col``. The DuckDB twin is ``_WS_TOKENS_DUCK``."""
+    return f"filter(split(lower({col}), '[{_WS_CHARS_SQL}]+'), t -> t != '')"
+
+
 def _tokens_col() -> Column:
-    """Non-empty lowercase whitespace tokens."""
-    return F.filter(F.split(F.lower(F.col("text")), r"\s+"), lambda t: t != "")
+    """Non-empty lowercase whitespace tokens of ``text``."""
+    return F.expr(ws_tokens_sql())
+
+
+_WS_TOKENS_DUCK = r"list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '')"
+
+#: Spark SQL text of the whitespace-delimited words of ``text`` (case
+#: kept, punctuation attached). The DuckDB twin is ``_WORDS_DUCK``.
+WORDS_SQL = f"regexp_extract_all(text, '[^{_WS_CHARS_SQL}]+', 0)"
+_WORDS_DUCK = r"regexp_extract_all(text, '\S+')"
+
+
+def word_count() -> Column:
+    """Number of whitespace-delimited words of ``text`` (long)."""
+    return F.size(F.expr(WORDS_SQL)).cast("long")
+
+
+_WORD_COUNT_DUCK = f"CAST(len({_WORDS_DUCK}) AS BIGINT)"
+
+
+def duck_ngram(n: int, arr: str = "tokens", sep: str = " ") -> str:
+    """DuckDB text of the ``n`` tokens of ``arr`` from 1-based index ``i``
+    joined by ``sep`` (the lambda body of every n-gram list_transform)."""
+    return f" || '{sep}' || ".join([f"{arr}[i]"] + [f"{arr}[i+{k}]" for k in range(1, n)])
 
 
 def shingles_exploded(
@@ -137,23 +173,30 @@ def shingles_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# The same shingling in DuckDB SQL (list_transform over 1-based indexes).
-_SHINGLES_CTE = r"""
+def shingles_cte(*carry: str) -> str:
+    """The shingling of :func:`shingles_df` in DuckDB SQL: CTEs ``toks``
+    and ``sh(doc_id, *carry, shingles)`` (list_transform over 1-based
+    indexes)."""
+    cols = ", ".join(("doc_id",) + carry)
+    return f"""
 toks AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '') AS tokens
+  SELECT {cols},
+         {_WS_TOKENS_DUCK} AS tokens
   FROM documents
 ),
 sh AS (
-  SELECT doc_id,
+  SELECT {cols},
          list_distinct(list_transform(
            range(1, len(tokens) - 1),
-           i -> tokens[i] || ' ' || tokens[i+1] || ' ' || tokens[i+2]
+           i -> {duck_ngram(3)}
          )) AS shingles
   FROM toks
   WHERE len(tokens) >= 3
 )
 """
+
+
+_SHINGLES_CTE = shingles_cte()
 
 # --------------------------------------------------------------------------
 # MinHash + LSH banding near-dup
@@ -300,6 +343,44 @@ def capped_bucket_pairs(
             _pair_side(src, id_col, "b", payload), b
         )
     return clique.union(star.select(*out))
+
+
+def duck_capped_bucket_pairs(
+    rows: str, key_cols: list[str], id_col: str, payload: tuple[str, ...], cap: int
+) -> str:
+    """The DuckDB twin of :func:`capped_bucket_pairs` over the CTE
+    ``rows``: CTEs ``sizes`` (bucket size and min id), ``clique`` and
+    ``star``, both with :func:`_pair_ends`' columns."""
+    names = _pair_ends(id_col, payload)
+    keys = ", ".join(key_cols)
+
+    def on(x: str, y: str) -> str:
+        return " AND ".join(f"{x}.{k} = {y}.{k}" for k in key_cols)
+
+    def cols(x: str, x_id: str) -> str:
+        exprs = [x_id, f"b.{id_col}", *[f"{e}.{p}" for p in payload for e in (x, "b")]]
+        return ", ".join(f"{e} AS {n}" for e, n in zip(exprs, names))
+
+    pad = " " * (len(rows) + 8)
+    star_lookup = f"\n  JOIN {rows} ra ON ra.{id_col} = s.rep" if payload else ""
+    return f"""sizes AS (
+  SELECT {keys}, count(*) AS n, min({id_col}) AS rep
+  FROM {rows} GROUP BY {keys}
+),
+clique AS (
+  SELECT {cols("a", f"a.{id_col}")}
+  FROM {rows} a
+  JOIN {rows} b ON {on("a", "b")}
+{pad}AND a.{id_col} < b.{id_col}
+  JOIN sizes s ON {on("s", "a")}
+  WHERE s.n <= {cap}
+),
+star AS (
+  SELECT {cols("ra", "s.rep")}
+  FROM {rows} b
+  JOIN sizes s ON {on("s", "b")}{star_lookup}
+  WHERE s.n > {cap} AND b.{id_col} <> s.rep
+)"""
 
 
 def _minhash_bands(
@@ -615,7 +696,7 @@ def _simhash_oracle() -> str:
     return f"""
 WITH toks AS (
   SELECT doc_id,
-         list_filter(string_split_regex(lower(text), '\\s+'), t -> t <> '') AS tokens
+         {_WS_TOKENS_DUCK} AS tokens
   FROM documents
 ),
 ex AS (
@@ -685,24 +766,7 @@ WITH hashes AS (
 bands AS (
 {band_rows}
 ),
-sizes AS (
-  SELECT band_idx, band_val, count(*) AS n, min(doc_id) AS rep
-  FROM bands GROUP BY band_idx, band_val
-),
-clique AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM bands a
-  JOIN bands b ON a.band_idx = b.band_idx AND a.band_val = b.band_val
-             AND a.doc_id < b.doc_id
-  JOIN sizes s ON s.band_idx = a.band_idx AND s.band_val = a.band_val
-  WHERE s.n <= {MAX_BAND_BUCKET}
-),
-star AS (
-  SELECT s.rep AS doc_a, b.doc_id AS doc_b
-  FROM bands b
-  JOIN sizes s ON s.band_idx = b.band_idx AND s.band_val = b.band_val
-  WHERE s.n > {MAX_BAND_BUCKET} AND b.doc_id <> s.rep
-),
+{duck_capped_bucket_pairs("bands", ["band_idx", "band_val"], "doc_id", (), MAX_BAND_BUCKET)},
 cand AS (
   SELECT DISTINCT doc_a, doc_b
   FROM (SELECT doc_a, doc_b FROM clique UNION ALL SELECT doc_a, doc_b FROM star)
@@ -1009,7 +1073,7 @@ _PARA_WORDS = 8
 _PARA_DEDUP_ORACLE = rf"""
 WITH toks AS (
   SELECT doc_id, source,
-         list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '') AS tk
+         {_WS_TOKENS_DUCK} AS tk
   FROM documents
 ), blocks AS (
   SELECT t.doc_id, t.source, b.b_idx,
@@ -1433,7 +1497,7 @@ def _bit_balance_oracle() -> str:
     return f"""
 WITH toks AS (
   SELECT doc_id,
-         list_filter(string_split_regex(lower(text), '\\s+'), t -> t <> '') AS tokens
+         {_WS_TOKENS_DUCK} AS tokens
   FROM documents
 ),
 ex AS (
@@ -1953,18 +2017,17 @@ SUBSTRING_K = 5
 # copies of every doc) it does.
 MAX_GRAM_DF = 512
 
-_SUBSTRING_GRAMS_CTE = r"""
+_SUBSTRING_GRAMS_CTE = rf"""
 toks AS (
   SELECT doc_id,
-         list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '') AS tokens
+         {_WS_TOKENS_DUCK} AS tokens
   FROM documents
 ),
 grams AS (
   SELECT doc_id,
          unnest(range(1, len(tokens) - 3)) - 1 AS pos,
          unnest(list_transform(range(1, len(tokens) - 3),
-           i -> md5(tokens[i] || ' ' || tokens[i+1] || ' ' || tokens[i+2]
-                    || ' ' || tokens[i+3] || ' ' || tokens[i+4]))) AS g
+           i -> md5({duck_ngram(5)}))) AS g
   FROM toks WHERE len(tokens) >= 5
 ),
 dup AS (

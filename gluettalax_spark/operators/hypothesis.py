@@ -29,7 +29,16 @@ from gluettalax_spark.memory import CKPT_LEVEL
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gluettalax_spark.operators.dedup import _WORD_COUNT_DUCK, _WS_TOKENS_DUCK, word_count, ws_tokens_sql
 from gluettalax_spark.operators.rank import grouped_running_sums
+from gluettalax_spark.operators.text import (
+    _QUALITY_DUCK,
+    _STOP_HITS_DUCK,
+    STOP_COUNT_SQL,
+    _quality_parts,
+    gopher_feat_rules_sql,
+    gopher_rule_cols,
+)
 from gluettalax_spark.registry import register
 from gluettalax_spark.tables import load
 
@@ -137,8 +146,6 @@ def stats_mannwhitney_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _spearman_oracle() -> str:
-    from gluettalax_spark.operators.text import _QUALITY_DUCK
-
     return f"""
 WITH base AS (
   SELECT source,
@@ -208,8 +215,6 @@ def stats_spearman_quality_length(spark: SparkSession, sf_dir: str) -> DataFrame
     Scale: three data passes (two marginal groupBys + the pair groupBy);
     all joins and windows downstream are dictionary-sized and keyed by
     (source, value) — nothing funnels a source through one task."""
-    from gluettalax_spark.operators.text import _quality_parts
-
     docs = load(spark, sf_dir, "documents")
     *_, quality = _quality_parts()
     base = docs.select(
@@ -598,9 +603,9 @@ _KENDALL_ORACLE = rf"""
 WITH feat AS (
   SELECT doc_id,
          n_chars AS x,
-         CAST(len(regexp_extract_all(lower(text), '\b(the|and|of|to|is|a|in)\b')) AS BIGINT)
+         CAST({_STOP_HITS_DUCK} AS BIGINT)
            * 1000000
-           // greatest(len(list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '')), 1)
+           // greatest(len({_WS_TOKENS_DUCK}), 1)
            AS y
   FROM documents
 ),
@@ -667,11 +672,7 @@ def stats_kendall_tau_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
     feat = docs.select(
         "doc_id",
         F.col("n_chars").alias("x"),
-        F.expr(
-            r"CAST(size(regexp_extract_all(lower(text), '\\b(the|and|of|to|is|a|in)\\b', 0)) AS BIGINT)"
-            r" * 1000000"
-            r" div greatest(size(filter(split(lower(text), '\\s+'), t -> t != '')), 1)"
-        ).alias("y"),
+        F.expr(f"{STOP_COUNT_SQL} * 1000000 div greatest(size({ws_tokens_sql()}), 1)").alias("y"),
     )
     tagged = feat.select(
         "doc_id",
@@ -1599,8 +1600,6 @@ def events_power_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _icc_oracle() -> str:
-    from gluettalax_spark.operators.text import _QUALITY_DUCK
-
     return f"""
 WITH vals AS (
   SELECT source AS g, CAST(round(({_QUALITY_DUCK}) * 10000) AS BIGINT) AS v
@@ -1658,8 +1657,6 @@ def quality_variance_icc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one data-scale groupBy(source); everything after is
     source-dictionary-sized."""
-    from gluettalax_spark.operators.text import _quality_parts
-
     docs = load(spark, sf_dir, "documents")
     _, _, _, quality = _quality_parts()
     vals = docs.select(
@@ -1995,11 +1992,9 @@ _PCORR_PARTIAL = (
 
 
 def _pcorr_oracle() -> str:
-    from gluettalax_spark.operators.text import _QUALITY_DUCK
-
     return rf"""
 WITH feat AS (
-  SELECT CAST(len(regexp_extract_all(text, '\S+')) AS BIGINT) AS x,
+  SELECT {_WORD_COUNT_DUCK} AS x,
          CAST(round(({_QUALITY_DUCK}) * 10000) AS BIGINT) AS y,
          n_chars AS z
   FROM documents
@@ -2045,12 +2040,10 @@ def stats_partial_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: a single map-side moment fold to one 10-column row; nothing
     shuffles but the partial aggregates."""
-    from gluettalax_spark.operators.text import _quality_parts
-
     docs = load(spark, sf_dir, "documents")
     _, _, _, quality = _quality_parts()
     feat = docs.select(
-        F.size(F.expr(r"regexp_extract_all(text, '\\S+', 0)")).cast("long").alias("x"),
+        word_count().alias("x"),
         F.round(quality * 10000).cast("long").alias("y"),
         F.col("n_chars").alias("z"),
     )
@@ -2084,8 +2077,6 @@ _MCI_Z = "1.959964"  # two-sided 95% normal quantile, fixed literal text
 
 
 def _median_ci_oracle() -> str:
-    from gluettalax_spark.operators.text import _QUALITY_DUCK
-
     return f"""
 WITH q AS (
   SELECT CAST(round(({_QUALITY_DUCK}) * 10000) AS BIGINT) AS v FROM documents
@@ -2139,8 +2130,6 @@ def stats_median_ci_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one data-scale groupBy to the quality-score dictionary; the
     running rank uses the range-partitioned machinery; the three rank
     probes are conditional aggregates over the dictionary."""
-    from gluettalax_spark.operators.text import _quality_parts
-
     docs = load(spark, sf_dir, "documents")
     _, _, _, quality = _quality_parts()
     d = (
@@ -2307,8 +2296,6 @@ _MCN_Q_CUT = 4300  # composite-quality keep threshold, 1e4-scaled int
 
 
 def _mcnemar_oracle() -> str:
-    from gluettalax_spark.operators.text import _QUALITY_DUCK, gopher_feat_rules_sql
-
     return f"""
 WITH {gopher_feat_rules_sql(f"CAST(floor(({_QUALITY_DUCK}) * 10000 + 0.5) AS BIGINT) AS q10k", "q10k")},
 d AS (
@@ -2340,7 +2327,7 @@ def stats_mcnemar_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """McNemar's test over the 2×2 paired-decision table of two document
     filters — A = the six-rule Gopher battery (text.py's shared
     ``gopher_rule_cols``), B = the composite quality score ≥ 0.43 (the
-    shared ``_quality_parts`` composite on its 1e4 integer grid). Output
+    shared ``text._quality_parts`` composite on its 1e4 integer grid). Output
     is the full contingency (both_keep / rules_only / score_only /
     both_drop), an exact agreement ppm, and the continuity-corrected
     χ² = (|b−c|−1)²/(b+c) — the numerator is a pure integer, so the
@@ -2349,8 +2336,6 @@ def stats_mcnemar_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: both predicates are row-local projections inside the one
     documents scan; the whole table reduces to a single 4-counter
     aggregate — the same plan at 100 TB."""
-    from gluettalax_spark.operators.text import _quality_parts, gopher_rule_cols
-
     docs = load(spark, sf_dir, "documents")
     rules = gopher_rule_cols()
     a = rules["r_wc"] * rules["r_mwl"] * rules["r_sym"] * rules["r_bullet"] * rules["r_alpha"] * rules["r_stop"]
@@ -2396,8 +2381,6 @@ def stats_mcnemar_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _cochran_oracle() -> str:
-    from gluettalax_spark.operators.text import gopher_feat_rules_sql
-
     rules = ["r_wc", "r_mwl", "r_sym", "r_bullet", "r_alpha", "r_stop"]
     k = len(rules)
     cj = ", ".join(f"CAST(sum({r}) AS BIGINT) AS c_{r[2:]}" for r in rules)
@@ -2439,8 +2422,6 @@ def stats_cochran_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the rule predicates are row-local projections in ONE documents
     scan; everything reduces to a single moment row (ΣR_i² rides
     DECIMAL(38) partials). Same plan at 100 TB."""
-    from gluettalax_spark.operators.text import gopher_rule_cols
-
     rules = gopher_rule_cols()
     names = list(rules)
     k = len(names)

@@ -13,6 +13,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from gluettalax_spark.operators.dedup import (
+    _WORD_COUNT_DUCK,
+    _WORDS_DUCK,
+    _WS_TOKENS_DUCK,
+    _duck_hex_int,
+    _tokens_col,
+    duck_ngram,
+    shingles_cte,
+    shingles_exploded,
+    word_count,
+)
 from gluettalax_spark.operators.graph import MAX_BASKET, order_baskets, pair_support
 from gluettalax_spark.operators.rank import exact_global_rank, ntile_from_rank
 from gluettalax_spark.registry import register
@@ -86,15 +97,15 @@ def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 # N-gram vocabulary: top-5 bigrams per language
 # --------------------------------------------------------------------------
 
-_BIGRAM_ORACLE = r"""
+_BIGRAM_ORACLE = rf"""
 WITH toks AS (
   SELECT doc_id, lang,
-         list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '') AS tokens
+         {_WS_TOKENS_DUCK} AS tokens
   FROM documents
 ),
 pairs AS (
   SELECT lang,
-         tokens[i] || ' ' || tokens[i+1] AS bigram
+         {duck_ngram(2)} AS bigram
   FROM toks, unnest(range(1, len(tokens))) AS r(i)
   WHERE len(tokens) >= 2
 ),
@@ -126,7 +137,7 @@ def text_top_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select(
         "doc_id",
         "lang",
-        F.filter(F.split(F.lower(F.col("text")), r"\s+"), lambda t: t != "").alias("tokens"),
+        _tokens_col().alias("tokens"),
     ).filter(F.size("tokens") >= 2)
     pe = toks.select("doc_id", "lang", "tokens", F.posexplode("tokens").alias("pos", "tok"))
     pairs = (
@@ -773,7 +784,7 @@ _PACK_BUDGET = 512
 _PACK_ORACLE = f"""
 WITH sized AS (
   SELECT doc_id, source,
-         CAST(len(regexp_extract_all(text, '\\S+')) AS BIGINT) AS n_tokens
+         {_WORD_COUNT_DUCK} AS n_tokens
   FROM documents
 ),
 offsets AS (
@@ -819,7 +830,7 @@ def sequence_pack_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     docs = load(spark, sf_dir, "documents")
-    n_tokens = F.size(F.expr(r"regexp_extract_all(text, '\\S+', 0)")).cast("long")
+    n_tokens = word_count()
     sized = docs.select("doc_id", "source", n_tokens.alias("n_tokens"))
     w = Window.partitionBy("source").orderBy("doc_id").rowsBetween(Window.unboundedPreceding, 0)
     start = F.sum("n_tokens").over(w) - F.col("n_tokens")
@@ -909,7 +920,7 @@ TOKEN_BUDGET = 800  # whitespace tokens per source
 _TOKEN_BUDGET_ORACLE = rf"""
 WITH t AS (
   SELECT doc_id, source,
-         CAST(len(regexp_extract_all(text, '\S+')) AS BIGINT) AS n_tokens,
+         {_WORD_COUNT_DUCK} AS n_tokens,
          md5(CAST(doc_id AS VARCHAR)) AS h
   FROM documents
 ),
@@ -950,7 +961,7 @@ def token_budget_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = docs.select(
         "doc_id",
         "source",
-        F.size(F.expr(r"regexp_extract_all(text, '\\S+', 0)")).cast("long").alias("n_tokens"),
+        word_count().alias("n_tokens"),
         F.md5(F.col("doc_id").cast("string")).alias("h"),
     )
     run = grouped_running_sums(t, ["source"], ["h", "doc_id"], [("n_tokens", "cum_tokens")])
@@ -965,34 +976,11 @@ def token_budget_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Cross-source overlap matrix (contamination between corpus sources)
 # --------------------------------------------------------------------------
 
-_OVERLAP_SHINGLES_CTE = r"""
-toks AS (
-  SELECT doc_id, source,
-         list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '') AS tokens
-  FROM documents
-),
-sh AS (
-  SELECT doc_id, source,
-         list_distinct(list_transform(
-           range(1, len(tokens) - 1),
-           i -> tokens[i] || ' ' || tokens[i+1] || ' ' || tokens[i+2]
-         )) AS shingles
-  FROM toks
-  WHERE len(tokens) >= 3
-)
-"""
-
-# 60-bit int of md5 hex chars [1, 16) — same keyspace as the Spark side.
-_OVERLAP_HEX = "(" + " + ".join(
-    f"(strpos('0123456789abcdef', substr(m, {1 + k}, 1)) - 1) * {16 ** (15 - 1 - k)}"
-    for k in range(15)
-) + ")"
-
 _OVERLAP_ORACLE = f"""
-WITH {_OVERLAP_SHINGLES_CTE.strip()},
+WITH {shingles_cte("source").strip()},
 ex AS (SELECT source, unnest(shingles) AS s FROM sh),
 hs AS (
-  SELECT DISTINCT source, {_OVERLAP_HEX} AS hs
+  SELECT DISTINCT source, {_duck_hex_int(1, 15)} AS hs
   FROM (SELECT source, md5(s) AS m FROM ex)
 ),
 per_src AS (SELECT source, count(*) AS n FROM hs GROUP BY source),
@@ -1029,8 +1017,6 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     quadratic bucket. Per-source distinct counts broadcast into the final
     Jaccard projection. Shingles are 60-bit md5 ints (hashed identically
     in the oracle, so collisions — ~n²/2⁶¹ — cannot cause a mismatch)."""
-    from gluettalax_spark.operators.dedup import shingles_exploded
-
     hs = (
         shingles_exploded(spark, sf_dir, carry=("source",))
         .select(
@@ -1088,7 +1074,7 @@ N_SHARDS = 16
 _SHARD_ORACLE = rf"""
 WITH t AS (
   SELECT doc_id, source,
-         CAST(len(regexp_extract_all(text, '\S+')) AS BIGINT) AS n_tokens,
+         {_WORD_COUNT_DUCK} AS n_tokens,
          md5(CAST(doc_id AS VARCHAR)) AS m
   FROM documents
 ),
@@ -1133,7 +1119,7 @@ def export_training_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = docs.select(
         "doc_id",
         "source",
-        F.size(F.expr(r"regexp_extract_all(text, '\\S+', 0)")).cast("long").alias("n_tokens"),
+        word_count().alias("n_tokens"),
         shard_col(F.col("doc_id")).alias("shard"),
     )
     return (
@@ -1627,7 +1613,7 @@ def quality_percentile_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     folding into a metadata-scale groupBy(source). The percentile
     definition (rank*1e6 div n over the (quality, doc_id) total order)
     is integer-exact cross-engine; the quality composite itself is the
-    shared `_quality_parts` floor-rounded form already pinned by
+    shared `text._quality_parts` floor-rounded form already pinned by
     `text_quality_score`."""
     from gluettalax_spark.operators.text import _quality_parts
 
@@ -2189,51 +2175,6 @@ _QC_KNUTH = 2654435761
 _QC_WRANGE = 1 << 20
 
 
-def _qc_oracle() -> str:
-    from gluettalax_spark.operators.dedup import _duck_hex_int
-
-    return rf"""
-WITH toks AS (
-  SELECT doc_id, source,
-         list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '') AS w
-  FROM documents
-),
-feats AS (
-  SELECT doc_id, source, unnest(w) AS f FROM toks
-  UNION ALL
-  SELECT doc_id, source,
-         unnest(list_transform(range(1, len(w)), i -> w[i] || '_' || w[i+1])) AS f
-  FROM toks WHERE len(w) >= 2
-),
-hashed AS (
-  SELECT doc_id, source, md5(f) AS m FROM feats
-),
-scored_feat AS (
-  SELECT doc_id, source,
-         (({_duck_hex_int(1, 15)} % {_QC_BUCKETS}) * {_QC_KNUTH})
-           % {_QC_WRANGE} - {_QC_WRANGE // 2} AS wgt
-  FROM hashed
-),
-per_doc AS (
-  SELECT doc_id, source,
-         CAST(count(*) AS BIGINT) AS n_feats,
-         CAST(sum(wgt) AS BIGINT) AS sum_w,
-         CAST(CAST(sum(wgt) AS BIGINT) * 1000 // count(*) AS BIGINT) AS logit_milli
-  FROM scored_feat GROUP BY 1, 2
-)
-SELECT source,
-       CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(sum(CASE WHEN logit_milli > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_positive,
-       CAST(sum(CASE WHEN logit_milli > 0 THEN 1 ELSE 0 END) * 1000000 // count(*) AS BIGINT)
-         AS pos_share_ppm,
-       CAST(sum(logit_milli) // count(*) AS BIGINT) AS mean_logit_milli,
-       CAST(sum(n_feats) AS BIGINT) AS total_features
-FROM per_doc
-GROUP BY source
-ORDER BY source
-"""
-
-
 from gluettalax_spark.memory import register_session_df_cache
 
 _LOGITS_CACHE: dict[tuple[str, str], DataFrame] = register_session_df_cache({})
@@ -2257,7 +2198,7 @@ def classifier_doc_logits(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select(
         "doc_id",
         "source",
-        F.expr(r"filter(split(lower(text), '\\s+'), t -> t != '')").alias("w"),
+        _tokens_col().alias("w"),
     )
     feats = toks.select(
         "doc_id",
@@ -2291,6 +2232,48 @@ def classifier_doc_logits(spark: SparkSession, sf_dir: str) -> DataFrame:
     _LOGITS_CACHE.clear()
     _LOGITS_CACHE[key] = out
     return out
+
+
+def duck_doc_logits(*carry: str, n_feats: bool = False) -> str:
+    """The DuckDB twin of :func:`classifier_doc_logits`: CTEs ``toks``,
+    ``feats``, ``hashed`` and ``logits(doc_id, *carry, [n_feats,]
+    logit_milli)``."""
+    keys = ", ".join(("doc_id",) + carry)
+    n_feats_col = "\n         CAST(count(*) AS BIGINT) AS n_feats," if n_feats else ""
+    return f"""toks AS (
+  SELECT {keys}, {_WS_TOKENS_DUCK} AS w
+  FROM documents
+),
+feats AS (
+  SELECT {keys}, unnest(w) AS f FROM toks
+  UNION ALL
+  SELECT {keys}, unnest(list_transform(range(1, len(w)), i -> {duck_ngram(2, "w", "_")})) AS f
+  FROM toks WHERE len(w) >= 2
+),
+hashed AS (SELECT {keys}, md5(f) AS m FROM feats),
+logits AS (
+  SELECT {keys},{n_feats_col}
+         CAST(CAST(sum((({_duck_hex_int(1, 15)} % {_QC_BUCKETS}) * {_QC_KNUTH})
+                        % {_QC_WRANGE} - {_QC_WRANGE // 2}) AS BIGINT)
+              * 1000 // count(*) AS BIGINT) AS logit_milli
+  FROM hashed GROUP BY {keys}
+)"""
+
+
+def _qc_oracle() -> str:
+    return f"""
+WITH {duck_doc_logits("source", n_feats=True)}
+SELECT source,
+       CAST(count(*) AS BIGINT) AS n_docs,
+       CAST(sum(CASE WHEN logit_milli > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_positive,
+       CAST(sum(CASE WHEN logit_milli > 0 THEN 1 ELSE 0 END) * 1000000 // count(*) AS BIGINT)
+         AS pos_share_ppm,
+       CAST(sum(logit_milli) // count(*) AS BIGINT) AS mean_logit_milli,
+       CAST(sum(n_feats) AS BIGINT) AS total_features
+FROM logits
+GROUP BY source
+ORDER BY source
+"""
 
 
 @register(
@@ -2490,31 +2473,13 @@ def events_attribution_position(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _qsa_oracle() -> str:
-    from gluettalax_spark.operators.dedup import _duck_hex_int
+    from gluettalax_spark.operators.text import _TERM_TOKENS_DUCK
 
     return rf"""
-WITH toks AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '') AS w
-  FROM documents
-),
-feats AS (
-  SELECT doc_id, unnest(w) AS f FROM toks
-  UNION ALL
-  SELECT doc_id, unnest(list_transform(range(1, len(w)), i -> w[i] || '_' || w[i+1])) AS f
-  FROM toks WHERE len(w) >= 2
-),
-hashed AS (SELECT doc_id, md5(f) AS m FROM feats),
-cls AS (
-  SELECT doc_id,
-         CAST(CAST(sum((({_duck_hex_int(1, 15)} % {_QC_BUCKETS}) * {_QC_KNUTH})
-                  % {_QC_WRANGE} - {_QC_WRANGE // 2}) AS BIGINT) * 1000
-              // count(*) AS BIGINT) AS logit_milli
-  FROM hashed GROUP BY doc_id
-),
+WITH {duck_doc_logits()},
 ptoks AS (
   SELECT doc_id,
-         list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), t -> len(t) >= 3) AS tokens
+         {_TERM_TOKENS_DUCK} AS tokens
   FROM documents
 ),
 tf AS (
@@ -2536,8 +2501,8 @@ ppl AS (
   GROUP BY f.doc_id
 ),
 joined AS (
-  SELECT cls.doc_id, cls.logit_milli, ppl.key_nano
-  FROM cls JOIN ppl ON cls.doc_id = ppl.doc_id
+  SELECT logits.doc_id, logits.logit_milli, ppl.key_nano
+  FROM logits JOIN ppl ON logits.doc_id = ppl.doc_id
 ),
 tiled AS (
   SELECT ntile(3) OVER (ORDER BY logit_milli, doc_id) AS b_cls,
@@ -2658,28 +2623,10 @@ def quality_signal_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _auc_oracle() -> str:
-    from gluettalax_spark.operators.dedup import _duck_hex_int
     from gluettalax_spark.operators.text import _QUALITY_DUCK
 
     return rf"""
-WITH toks AS (
-  SELECT doc_id, list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '') AS w
-  FROM documents
-),
-feats AS (
-  SELECT doc_id, unnest(w) AS f FROM toks
-  UNION ALL
-  SELECT doc_id, unnest(list_transform(range(1, len(w)), i -> w[i] || '_' || w[i+1])) AS f
-  FROM toks WHERE len(w) >= 2
-),
-hashed AS (SELECT doc_id, md5(f) AS m FROM feats),
-logits AS (
-  SELECT doc_id,
-         CAST(CAST(sum((({_duck_hex_int(1, 15)} % {_QC_BUCKETS}) * {_QC_KNUTH})
-                        % {_QC_WRANGE} - {_QC_WRANGE // 2}) AS BIGINT)
-              * 1000 // count(*) AS BIGINT) AS logit_milli
-  FROM hashed GROUP BY doc_id
-),
+WITH {duck_doc_logits()},
 quality AS (
   SELECT doc_id, CAST(round(({_QUALITY_DUCK}) * 10000) AS BIGINT) AS q_int
   FROM documents
@@ -2821,7 +2768,7 @@ def _mix_budget_oracle() -> str:
     return rf"""
 WITH per_doc AS (
   SELECT source,
-         CAST(len(regexp_extract_all(text, '\S+')) AS BIGINT) AS n_tok,
+         {_WORD_COUNT_DUCK} AS n_tok,
          CAST(round(({_QUALITY_DUCK}) * 10000) AS BIGINT) AS q_int
   FROM documents
 ),
@@ -2881,7 +2828,7 @@ def corpus_mix_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     _, _, _, quality = _quality_parts()
     per_doc = docs.select(
         "source",
-        F.size(F.expr(r"regexp_extract_all(text, '\\S+', 0)")).cast("long").alias("n_tok"),
+        word_count().alias("n_tok"),
         F.round(quality * 10000).cast("long").alias("q_int"),
     )
     per_source = per_doc.groupBy("source").agg(
@@ -2929,28 +2876,10 @@ _ECE_P_E6 = (
 
 
 def _ece_oracle() -> str:
-    from gluettalax_spark.operators.dedup import _duck_hex_int
     from gluettalax_spark.operators.text import _QUALITY_DUCK
 
     return rf"""
-WITH toks AS (
-  SELECT doc_id, list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '') AS w
-  FROM documents
-),
-feats AS (
-  SELECT doc_id, unnest(w) AS f FROM toks
-  UNION ALL
-  SELECT doc_id, unnest(list_transform(range(1, len(w)), i -> w[i] || '_' || w[i+1])) AS f
-  FROM toks WHERE len(w) >= 2
-),
-hashed AS (SELECT doc_id, md5(f) AS m FROM feats),
-logits AS (
-  SELECT doc_id,
-         CAST(CAST(sum((({_duck_hex_int(1, 15)} % {_QC_BUCKETS}) * {_QC_KNUTH})
-                        % {_QC_WRANGE} - {_QC_WRANGE // 2}) AS BIGINT)
-              * 1000 // count(*) AS BIGINT) AS logit_milli
-  FROM hashed GROUP BY doc_id
-),
+WITH {duck_doc_logits()},
 quality AS (
   SELECT doc_id, CAST(round(({_QUALITY_DUCK}) * 10000) AS BIGINT) AS q_int
   FROM documents
@@ -3062,7 +2991,7 @@ _EPOCH_BUDGET_X = 2
 _EPOCH_ORACLE = rf"""
 WITH per_source AS (
   SELECT source,
-         CAST(sum(len(regexp_extract_all(text, '\S+'))) AS BIGINT) AS n_tokens
+         CAST(sum(len({_WORDS_DUCK})) AS BIGINT) AS n_tokens
   FROM documents GROUP BY source
 ),
 q AS (
@@ -3119,7 +3048,7 @@ def corpus_epoch_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_source = (
         docs.select(
             "source",
-            F.size(F.expr(r"regexp_extract_all(text, '\\S+', 0)")).cast("long").alias("t"),
+            word_count().alias("t"),
         )
         .groupBy("source")
         .agg(F.sum("t").cast("long").alias("n_tokens"))

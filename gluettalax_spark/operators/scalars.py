@@ -15,6 +15,7 @@ from gluettalax_spark.memory import CKPT_LEVEL
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gluettalax_spark.operators.dedup import _WS_TOKENS_DUCK, ws_tokens_sql
 from gluettalax_spark.registry import register
 from gluettalax_spark.tables import load
 
@@ -307,12 +308,11 @@ def variant_props_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # SQL UDFs (Spark 4 CREATE FUNCTION — Catalyst-inlined, codegen-resident)
 # --------------------------------------------------------------------------
 
-_SQL_UDF_ORACLE = r"""
+_SQL_UDF_ORACLE = f"""
 SELECT
   source,
   CAST(count(*) AS BIGINT) AS n_docs,
-  round(avg(len(list_filter(string_split_regex(lower(text), '\s+'), x -> x <> ''))), 4)
-    AS avg_tokens,
+  round(avg(len({_WS_TOKENS_DUCK})), 4) AS avg_tokens,
   round(avg(CAST(length(text) - length(regexp_replace(text, '[.,;:!?]', '', 'g')) AS DOUBLE)
             / nullif(length(text), 0)), 4) AS avg_punct
 FROM documents
@@ -340,8 +340,8 @@ def sql_udf_text_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     The DuckDB oracle computes the same metrics with the function bodies
     inlined (single-statement oracle contract — no macros needed)."""
     spark.sql(
-        "CREATE OR REPLACE TEMPORARY FUNCTION gx_tok_count(t STRING) RETURNS INT "
-        r"RETURN size(filter(split(lower(t), '\\s+'), x -> x <> ''))"
+        "CREATE OR REPLACE TEMPORARY FUNCTION gx_tok_count(s STRING) RETURNS INT "
+        f"RETURN size({ws_tokens_sql('s')})"
     )
     spark.sql(
         "CREATE OR REPLACE TEMPORARY FUNCTION gx_punct_ratio(t STRING) RETURNS DOUBLE "

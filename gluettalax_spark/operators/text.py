@@ -1,10 +1,14 @@
-"""Text-analysis operators over ``documents`` — the training-data-pipeline
+r"""Text-analysis operators over ``documents`` — the training-data-pipeline
 surface (BASELINE.json north star): per-document stats, quality scoring,
 token counting, language ID, and content fingerprinting.
 
-Everything is built-in Spark SQL functions (regex engines differ only in
-dialect, not semantics, for the patterns used) — no Python in the row
-loop, so these run at full codegen speed over 100 TB of text.
+Everything is built-in Spark SQL functions — no Python in the row loop,
+so these run at full codegen speed over 100 TB of text. Each shared text
+primitive (tokenizers, word and stop-word counts, the quality composite)
+is defined once, its Spark builder beside its DuckDB twin: below, and in
+dedup.py for the whitespace tokenizer, the word count and the shingles.
+Java and RE2 regexes differ in places (``\s`` matches U+000B in Java
+only), so those builders spell their patterns to match RE2.
 """
 
 from __future__ import annotations
@@ -15,18 +19,78 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from gluettalax_spark.operators.dedup import (
+    _SHINGLES_CTE,
+    _WORD_COUNT_DUCK,
+    _WORDS_DUCK,
+    _WS_TOKENS_DUCK,
+    WORDS_SQL,
+    _duck_hex_int,
+    _tokens_col,
+    capped_bucket_pairs,
+    duck_capped_bucket_pairs,
+    duck_ngram,
+    shingles_exploded,
+    word_count,
+)
 from gluettalax_spark.registry import register
 from gluettalax_spark.tables import load, load_spread
+
+# --------------------------------------------------------------------------
+# Shared text primitives: each Spark builder beside its DuckDB twin. The
+# whitespace tokenizer, the word count and the n-gram shingles live in
+# dedup.py.
+# --------------------------------------------------------------------------
+
+_STOP_WORDS = "the|and|of|to|is|a|in"
+#: Spark SQL text of the stop-word hit count over ``lower(text)`` (long).
+STOP_COUNT_SQL = rf"CAST(size(regexp_extract_all(lower(text), '\\b({_STOP_WORDS})\\b', 0)) AS LONG)"
+_STOP_HITS_DUCK = rf"len(regexp_extract_all(lower(text), '\b({_STOP_WORDS})\b'))"
+
+
+def term_tokens() -> Column:
+    """Lowercase alphanumeric terms of ``text`` of 3+ characters."""
+    return F.expr("filter(split(lower(text), '[^a-z0-9]+'), t -> length(t) >= 3)")
+
+
+_TERM_TOKENS_DUCK = r"list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), t -> len(t) >= 3)"
+
+
+def _quality_parts() -> tuple:
+    """(len_score, stop_ratio, punct_ratio, quality) columns over the
+    ``text`` column: the document quality composite every quality-keyed
+    operator shares. The DuckDB twin of ``quality`` is ``_QUALITY_DUCK``."""
+    n_chars = F.length("text")
+    n_tokens = word_count()
+    n_stop = F.expr(STOP_COUNT_SQL)
+    n_punct = F.length(F.regexp_replace(F.col("text"), "[^.,!?;:]", "")).cast("long")
+    len_score = F.least(n_chars / 500.0, F.lit(1.0))
+    stop_ratio = n_stop.cast("double") / F.greatest(n_tokens, F.lit(1).cast("long"))
+    punct_ratio = n_punct.cast("double") / F.greatest(n_chars.cast("long"), F.lit(1).cast("long"))
+    quality = (
+        F.floor((0.5 * len_score + 0.4 * stop_ratio + 0.1 * (1.0 - punct_ratio)) * 10000 + 0.5)
+        / 10000
+    )
+    return len_score, stop_ratio, punct_ratio, quality
+
+
+_QUALITY_DUCK = f"""
+    floor((0.5 * least(length(text) / 500.0, 1.0)
+        + 0.4 * (CAST({_STOP_HITS_DUCK} AS DOUBLE)
+                 / greatest({_WORD_COUNT_DUCK}, 1))
+        + 0.1 * (1.0 - CAST(length(regexp_replace(text, '[^.,!?;:]', '', 'g')) AS DOUBLE)
+                 / greatest(length(text), 1))) * 10000 + 0.5) / 10000
+"""
 
 # --------------------------------------------------------------------------
 # Per-document statistics
 # --------------------------------------------------------------------------
 
-_TEXT_STATS_ORACLE = r"""
+_TEXT_STATS_ORACLE = rf"""
 SELECT
   doc_id,
   length(text)                                                    AS n_chars_actual,
-  CAST(len(regexp_extract_all(text, '\S+')) AS BIGINT)            AS n_tokens,
+  {_WORD_COUNT_DUCK}            AS n_tokens,
   CAST(length(regexp_replace(text, '[^.,!?;:]', '', 'g')) AS BIGINT) AS n_punct,
   CAST(length(regexp_replace(text, '[^0-9]', '', 'g')) AS BIGINT) AS n_digits,
   round(CAST(length(regexp_replace(text, '\s', '', 'g')) AS DOUBLE)
@@ -44,7 +108,7 @@ def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.select(
         "doc_id",
         F.length(text).cast("long").alias("n_chars_actual"),
-        F.size(F.expr(r"regexp_extract_all(text, '\\S+', 0)")).cast("long").alias("n_tokens"),
+        word_count().alias("n_tokens"),
         F.length(F.regexp_replace(text, "[^.,!?;:]", "")).cast("long").alias("n_punct"),
         F.length(F.regexp_replace(text, "[^0-9]", "")).cast("long").alias("n_digits"),
         F.round(
@@ -59,13 +123,13 @@ def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Corpus-level aggregate by language/source
 # --------------------------------------------------------------------------
 
-_TEXT_AGG_ORACLE = r"""
+_TEXT_AGG_ORACLE = rf"""
 SELECT
   lang,
   count(*)                                                   AS n_docs,
   CAST(sum(length(text)) AS BIGINT)                          AS total_chars,
   round(avg(length(text)), 4)                                AS avg_chars,
-  round(avg(len(regexp_extract_all(text, '\S+'))), 4)        AS avg_tokens,
+  round(avg(len({_WORDS_DUCK})), 4)        AS avg_tokens,
   count(DISTINCT source)                                     AS n_sources
 FROM documents
 GROUP BY lang
@@ -76,7 +140,7 @@ ORDER BY lang
 @register("text_corpus_stats", _TEXT_AGG_ORACLE, doc="corpus rollup by language")
 def text_corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    n_tokens = F.size(F.expr(r"regexp_extract_all(text, '\\S+', 0)"))
+    n_tokens = word_count()
     return (
         docs.groupBy("lang")
         .agg(
@@ -178,14 +242,15 @@ def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Quality scoring (length / punctuation / stopword-density composite)
 # --------------------------------------------------------------------------
 
-_QUALITY_ORACLE = r"""
+_QUALITY_ORACLE = rf"""
 WITH feats AS (
   SELECT
     doc_id,
     length(text) AS n_chars,
-    CAST(len(regexp_extract_all(text, '\S+')) AS BIGINT) AS n_tokens,
-    CAST(len(regexp_extract_all(lower(text), '\b(the|and|of|to|is|a|in)\b')) AS BIGINT) AS n_stop,
-    CAST(length(regexp_replace(text, '[^.,!?;:]', '', 'g')) AS BIGINT) AS n_punct
+    {_WORD_COUNT_DUCK} AS n_tokens,
+    CAST({_STOP_HITS_DUCK} AS BIGINT) AS n_stop,
+    CAST(length(regexp_replace(text, '[^.,!?;:]', '', 'g')) AS BIGINT) AS n_punct,
+    {_QUALITY_DUCK.strip()} AS quality
   FROM documents
 )
 SELECT
@@ -193,32 +258,10 @@ SELECT
   round(least(n_chars / 500.0, 1.0), 4)                              AS len_score,
   round(CAST(n_stop AS DOUBLE) / greatest(n_tokens, 1), 4)           AS stop_ratio,
   round(CAST(n_punct AS DOUBLE) / greatest(n_chars, 1), 4)           AS punct_ratio,
-  floor((0.5 * least(n_chars / 500.0, 1.0)
-      + 0.4 * (CAST(n_stop AS DOUBLE) / greatest(n_tokens, 1))
-      + 0.1 * (1.0 - CAST(n_punct AS DOUBLE) / greatest(n_chars, 1))) * 10000 + 0.5) / 10000 AS quality
+  quality
 FROM feats
 ORDER BY doc_id
 """
-
-
-def _quality_parts() -> tuple:
-    """(len_score, stop_ratio, punct_ratio, quality) columns over the
-    ``text`` column — shared by the per-doc score and the per-language
-    quantile filter so both use the identical composite."""
-    n_chars = F.length("text")
-    n_tokens = F.size(F.expr(r"regexp_extract_all(text, '\\S+', 0)")).cast("long")
-    n_stop = F.expr(
-        r"CAST(size(regexp_extract_all(lower(text), '\\b(the|and|of|to|is|a|in)\\b', 0)) AS LONG)"
-    )
-    n_punct = F.length(F.regexp_replace(F.col("text"), "[^.,!?;:]", "")).cast("long")
-    len_score = F.least(n_chars / 500.0, F.lit(1.0))
-    stop_ratio = n_stop.cast("double") / F.greatest(n_tokens, F.lit(1).cast("long"))
-    punct_ratio = n_punct.cast("double") / F.greatest(n_chars.cast("long"), F.lit(1).cast("long"))
-    quality = (
-        F.floor((0.5 * len_score + 0.4 * stop_ratio + 0.1 * (1.0 - punct_ratio)) * 10000 + 0.5)
-        / 10000
-    )
-    return len_score, stop_ratio, punct_ratio, quality
 
 
 @register("text_quality_score", _QUALITY_ORACLE, doc="composite document quality score")
@@ -243,10 +286,10 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Token counting (whitespace + BPE-ish regex) — LLM-pipeline staple
 # --------------------------------------------------------------------------
 
-_TOKEN_COUNT_ORACLE = r"""
+_TOKEN_COUNT_ORACLE = rf"""
 SELECT
   doc_id,
-  CAST(len(regexp_extract_all(text, '\S+')) AS BIGINT)                       AS ws_tokens,
+  {_WORD_COUNT_DUCK}                       AS ws_tokens,
   CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]')) AS BIGINT) AS bpe_ish_tokens,
   CAST(ceil(length(text) / 4.0) AS BIGINT)                                   AS char4_estimate
 FROM documents
@@ -262,7 +305,7 @@ def text_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
-        F.size(F.expr(r"regexp_extract_all(text, '\\S+', 0)")).cast("long").alias("ws_tokens"),
+        word_count().alias("ws_tokens"),
         F.size(F.expr(r"regexp_extract_all(text, '[A-Za-z]+|[0-9]|[^A-Za-z0-9\\s]', 0)"))
         .cast("long")
         .alias("bpe_ish_tokens"),
@@ -376,12 +419,12 @@ def text_winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Quality FILTERING with reject reasons (the actionable form of scoring)
 # --------------------------------------------------------------------------
 
-_FILTER_REPORT_ORACLE = r"""
+_FILTER_REPORT_ORACLE = rf"""
 WITH feats AS (
   SELECT
     doc_id, lang,
     length(text) AS n_chars,
-    CAST(len(regexp_extract_all(text, '\S+')) AS BIGINT) AS n_tokens,
+    {_WORD_COUNT_DUCK} AS n_tokens,
     CAST(length(regexp_replace(text, '[^.,!?;:]', '', 'g')) AS BIGINT) AS n_punct
   FROM documents
 ),
@@ -412,7 +455,7 @@ def text_filter_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     caught. One projection + one aggregate, no extra scans."""
     docs = load(spark, sf_dir, "documents")
     n_chars = F.length("text")
-    n_tokens = F.size(F.expr(r"regexp_extract_all(text, '\\S+', 0)")).cast("long")
+    n_tokens = word_count()
     n_punct = F.length(F.regexp_replace(F.col("text"), "[^.,!?;:]", "")).cast("long")
     punct_ratio = n_punct.cast("double") / F.greatest(n_chars.cast("long"), F.lit(1).cast("long"))
     verdict = (
@@ -442,25 +485,7 @@ WITH prefixes AS (
          CAST(n_chars // 200 AS BIGINT) AS size_block
   FROM documents
 ),
-sizes AS (
-  SELECT lang, size_block, count(*) AS n, min(doc_id) AS rep
-  FROM prefixes GROUP BY lang, size_block
-),
-clique AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, a.pfx AS pfx_a, b.pfx AS pfx_b
-  FROM prefixes a
-  JOIN prefixes b ON a.lang = b.lang AND a.size_block = b.size_block
-                 AND a.doc_id < b.doc_id
-  JOIN sizes s ON s.lang = a.lang AND s.size_block = a.size_block
-  WHERE s.n <= {_FUZZY_MAX_BLOCK}
-),
-star AS (
-  SELECT s.rep AS doc_a, b.doc_id AS doc_b, ra.pfx AS pfx_a, b.pfx AS pfx_b
-  FROM prefixes b
-  JOIN sizes s ON s.lang = b.lang AND s.size_block = b.size_block
-  JOIN prefixes ra ON ra.doc_id = s.rep
-  WHERE s.n > {_FUZZY_MAX_BLOCK} AND b.doc_id <> s.rep
-),
+{duck_capped_bucket_pairs("prefixes", ["lang", "size_block"], "doc_id", ("pfx",), _FUZZY_MAX_BLOCK)},
 pairs AS (
   SELECT doc_a, doc_b, CAST(levenshtein(pfx_a, pfx_b) AS BIGINT) AS edit_dist
   FROM (SELECT * FROM clique UNION ALL SELECT * FROM star)
@@ -490,8 +515,6 @@ def text_fuzzy_prefix_pairs(
     each still Levenshtein-verified. The cap engages already at sf0.1
     (blocks >512 docs), so the ORACLE replays it — the cap is part of
     the operator spec, not a silent divergence."""
-    from gluettalax_spark.operators.dedup import capped_bucket_pairs
-
     docs = load(spark, sf_dir, "documents")
     prefixes = docs.select(
         "doc_id",
@@ -515,10 +538,10 @@ def text_fuzzy_prefix_pairs(
 # TF-IDF keyword extraction (top terms per document)
 # --------------------------------------------------------------------------
 
-_TFIDF_ORACLE = r"""
+_TFIDF_ORACLE = rf"""
 WITH toks AS (
   SELECT doc_id,
-         list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), t -> len(t) >= 3) AS tokens
+         {_TERM_TOKENS_DUCK} AS tokens
   FROM documents
 ),
 n_docs AS (SELECT count(*) AS n FROM toks),
@@ -563,9 +586,7 @@ def text_tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
-        F.filter(
-            F.split(F.lower(F.col("text")), "[^a-z0-9]+"), lambda t: F.length(t) >= 3
-        ).alias("tokens"),
+        term_tokens().alias("tokens"),
     )
     n_docs = toks.agg(F.count(F.lit(1)).cast("double").alias("n"))
     tf = (
@@ -641,11 +662,11 @@ def text_redact_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Cross-language vocabulary overlap (corpus-level Jaccard)
 # --------------------------------------------------------------------------
 
-_VOCAB_ORACLE = r"""
+_VOCAB_ORACLE = rf"""
 WITH vocab AS (
   SELECT lang,
          list_distinct(flatten(list(
-           list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), t -> len(t) >= 3)
+           {_TERM_TOKENS_DUCK}
          ))) AS terms
   FROM documents
   GROUP BY lang
@@ -672,14 +693,7 @@ def text_vocab_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows; at 100 TB only the vocabulary aggregate scales with data, and
     it map-side combines."""
     docs = load(spark, sf_dir, "documents")
-    terms = docs.select(
-        "lang",
-        F.explode(
-            F.filter(
-                F.split(F.lower(F.col("text")), "[^a-z0-9]+"), lambda t: F.length(t) >= 3
-            )
-        ).alias("term"),
-    )
+    terms = docs.select("lang", F.explode(term_tokens()).alias("term"))
     vocab = terms.groupBy("lang").agg(F.collect_set("term").alias("terms"))
     a = vocab.select(F.col("lang").alias("lang_a"), F.col("terms").alias("terms_a"))
     b = vocab.select(F.col("lang").alias("lang_b"), F.col("terms").alias("terms_b"))
@@ -702,7 +716,7 @@ def text_vocab_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 # End-to-end corpus preparation pipeline (the north-star composition)
 # --------------------------------------------------------------------------
 
-_CORPUS_PREP_ORACLE = r"""
+_CORPUS_PREP_ORACLE = rf"""
 WITH feats AS (
   SELECT
     doc_id,
@@ -712,15 +726,13 @@ WITH feats AS (
     CAST(len(regexp_extract_all(lower(text), '\b(el|la|los|que|es)\b')) AS BIGINT)    AS s_es,
     CAST(len(regexp_extract_all(lower(text), '\b(le|la|les|et|est)\b')) AS BIGINT)    AS s_fr,
     CAST(length(regexp_replace(lower(text), '[^一-鿿]', '', 'g')) AS BIGINT)            AS s_zh,
-    length(text)                                                         AS n_chars,
-    CAST(len(regexp_extract_all(text, '\S+')) AS BIGINT)                 AS n_tokens,
-    CAST(len(regexp_extract_all(lower(text), '\b(the|and|of|to|is|a|in)\b')) AS BIGINT) AS n_stop,
-    CAST(length(regexp_replace(text, '[^.,!?;:]', '', 'g')) AS BIGINT)   AS n_punct
+    {_WORD_COUNT_DUCK} AS n_tokens,
+    {_QUALITY_DUCK.strip()} AS quality
   FROM documents
 ),
 labeled AS (
   SELECT
-    doc_id, text, n_tokens,
+    doc_id, text, n_tokens, quality,
     CASE
       WHEN s_zh >= greatest(s_en, s_de, s_es, s_fr, 1) THEN 'zh'
       WHEN s_en >= greatest(s_de, s_es, s_fr) AND s_en > 0 THEN 'en'
@@ -728,10 +740,7 @@ labeled AS (
       WHEN s_es >= s_fr AND s_es > 0 THEN 'es'
       WHEN s_fr > 0 THEN 'fr'
       ELSE 'unknown'
-    END AS lang_pred,
-    floor((0.5 * least(n_chars / 500.0, 1.0)
-        + 0.4 * (CAST(n_stop AS DOUBLE) / greatest(n_tokens, 1))
-        + 0.1 * (1.0 - CAST(n_punct AS DOUBLE) / greatest(n_chars, 1))) * 10000 + 0.5) / 10000 AS quality
+    END AS lang_pred
   FROM feats
 ),
 kept AS (
@@ -781,38 +790,14 @@ def corpus_prep_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(s["fr"] > 0, "fr")
         .otherwise("unknown")
     )
-    n_chars = F.length("text")
-    n_tokens = F.size(F.expr(r"regexp_extract_all(text, '\\S+', 0)")).cast("long")
-    n_stop = F.expr(
-        r"CAST(size(regexp_extract_all(lower(text), '\\b(the|and|of|to|is|a|in)\\b', 0)) AS LONG)"
-    )
-    n_punct = F.length(F.regexp_replace(F.col("text"), "[^.,!?;:]", "")).cast("long")
-    # floor-based half-up round — same cross-engine boundary rationale as
-    # text_quality_score (the composite lands exactly on .xxxx5).
-    quality = (
-        F.floor(
-            (
-                0.5 * F.least(n_chars / 500.0, F.lit(1.0))
-                + 0.4 * (n_stop.cast("double") / F.greatest(n_tokens, F.lit(1).cast("long")))
-                + 0.1
-                * (
-                    F.lit(1.0)
-                    - n_punct.cast("double")
-                    / F.greatest(n_chars.cast("long"), F.lit(1).cast("long"))
-                )
-            )
-            * 10000
-            + 0.5
-        )
-        / 10000
-    )
+    *_rest, quality = _quality_parts()
     fingerprint = F.md5(F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")))
     kept = (
         docs.select(
             "doc_id",
             lang_pred.alias("lang_pred"),
             quality.alias("quality"),
-            n_tokens.alias("ws_tokens"),
+            word_count().alias("ws_tokens"),
             fingerprint.alias("fingerprint"),
         )
         .filter((F.col("lang_pred") != "unknown") & (F.col("quality") >= 0.5))
@@ -830,21 +815,8 @@ def corpus_prep_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Benchmark decontamination (train-vs-eval n-gram collisions)
 # --------------------------------------------------------------------------
 
-_DECONTAM_ORACLE = r"""
-WITH toks AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '') AS tokens
-  FROM documents
-),
-sh AS (
-  SELECT doc_id,
-         list_distinct(list_transform(
-           range(1, len(tokens) - 1),
-           i -> tokens[i] || ' ' || tokens[i+1] || ' ' || tokens[i+2]
-         )) AS shingles
-  FROM toks
-  WHERE len(tokens) >= 3
-),
+_DECONTAM_ORACLE = rf"""
+WITH {_SHINGLES_CTE.strip()},
 ex AS (SELECT doc_id, unnest(shingles) AS s FROM sh),
 eval_sh AS (
   SELECT DISTINCT s FROM ex JOIN documents USING (doc_id) WHERE source = 'src0'
@@ -880,8 +852,6 @@ def decontaminate_eval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus never shuffles for the probe; the only wide exchanges are the
     per-doc count aggregates, which carry (doc_id, long) rows.
     """
-    from gluettalax_spark.operators.dedup import shingles_exploded
-
     docs = load(spark, sf_dir, "documents").select("doc_id", "source")
     sh = shingles_exploded(spark, sf_dir)
     eval_sh = (
@@ -961,20 +931,7 @@ def _bloom_build(hashes):
 
 
 _DECONTAM_BLOOM_ORACLE = rf"""
-WITH toks AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '') AS tokens
-  FROM documents
-),
-sh AS (
-  SELECT doc_id,
-         list_distinct(list_transform(
-           range(1, len(tokens) - 1),
-           i -> tokens[i] || ' ' || tokens[i+1] || ' ' || tokens[i+2]
-         )) AS shingles
-  FROM toks
-  WHERE len(tokens) >= 3
-),
+WITH {_SHINGLES_CTE.strip()},
 ex0 AS (SELECT doc_id, unnest(shingles) AS s FROM sh),
 hashed AS (SELECT doc_id, md5(s) AS m FROM ex0),
 ex AS (SELECT DISTINCT doc_id, {{hs}} AS hs FROM hashed),
@@ -996,8 +953,6 @@ ORDER BY source
 
 
 def _decontam_bloom_oracle() -> str:
-    from gluettalax_spark.operators.dedup import _duck_hex_int
-
     return _DECONTAM_BLOOM_ORACLE.format(hs=_duck_hex_int(1, 15))
 
 
@@ -1026,8 +981,6 @@ def decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     codebook training in ``similarity_topk_pq``.
     """
     import pandas as pd
-
-    from gluettalax_spark.operators.dedup import shingles_exploded
 
     h60 = F.expr("CAST(conv(substr(md5(s), 1, 15), 16, 10) AS BIGINT)").alias("hs")
     # The source split is pushed BELOW the shingling (into the parquet
@@ -1108,7 +1061,7 @@ _CHUNK_SIZE = 32
 _CHUNK_ORACLE = rf"""
 WITH toks AS (
   SELECT doc_id,
-         list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '') AS tokens
+         {_WS_TOKENS_DUCK} AS tokens
   FROM documents
 ),
 chunks AS (
@@ -1144,7 +1097,7 @@ def doc_token_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     only exchange. Chunks inherit the doc's partition, which is what lets
     a downstream ``repartition(n_sequences)`` pack uniformly."""
     docs = load(spark, sf_dir, "documents")
-    tokens = F.filter(F.split(F.lower(F.col("text")), r"\s+"), lambda t: t != "")
+    tokens = _tokens_col()
     C = _CHUNK_SIZE
     toks = docs.select("doc_id", tokens.alias("tokens")).filter(F.size("tokens") > 0)
     n_chunks = F.ceil(F.size("tokens") / F.lit(float(C))).cast("int")
@@ -1166,10 +1119,10 @@ def doc_token_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Repetition-based quality filter (Gopher/C4-style)
 # --------------------------------------------------------------------------
 
-_REPETITION_ORACLE = r"""
+_REPETITION_ORACLE = rf"""
 WITH toks AS (
   SELECT doc_id,
-         list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '') AS tokens
+         {_WS_TOKENS_DUCK} AS tokens
   FROM documents
 ),
 ex AS (SELECT doc_id, unnest(tokens) AS tok FROM toks),
@@ -1185,7 +1138,7 @@ bi AS (
   SELECT doc_id,
          len(tokens) - 1 AS n_bigrams,
          len(list_distinct(list_transform(
-           range(1, len(tokens)), i -> tokens[i] || ' ' || tokens[i+1]
+           range(1, len(tokens)), i -> {duck_ngram(2)}
          ))) AS n_distinct_bigrams
   FROM toks
   WHERE len(tokens) >= 2
@@ -1218,7 +1171,7 @@ def text_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     pure array ops (zero shuffle), then one per-doc aggregate + a join
     on doc_id."""
     docs = load(spark, sf_dir, "documents")
-    tokens = F.filter(F.split(F.lower(F.col("text")), r"\s+"), lambda t: t != "")
+    tokens = _tokens_col()
     toks = docs.select("doc_id", tokens.alias("tokens"))
     tc = (
         toks.select("doc_id", F.explode("tokens").alias("tok"))
@@ -1260,11 +1213,11 @@ def text_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Python UDTF (table function) — API-coverage path
 # --------------------------------------------------------------------------
 
-_UDTF_TOKEN_ORACLE = r"""
+_UDTF_TOKEN_ORACLE = rf"""
 SELECT doc_id, tok AS token, count(*) AS cnt
 FROM (
   SELECT doc_id,
-         unnest(list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '')) AS tok
+         unnest({_WS_TOKENS_DUCK}) AS tok
   FROM documents
   WHERE doc_id < 50
 )
@@ -1310,15 +1263,15 @@ def udtf_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_UDTF_POLY_ORACLE = r"""
+_UDTF_POLY_ORACLE = rf"""
 WITH toks AS (
   SELECT doc_id,
-         list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '') AS tokens
+         {_WS_TOKENS_DUCK} AS tokens
   FROM documents WHERE doc_id < 20
 ),
 grams AS (
   SELECT doc_id,
-         unnest(list_transform(range(1, len(tokens)), i -> {'w0': tokens[i], 'w1': tokens[i+1]})) AS g
+         unnest(list_transform(range(1, len(tokens)), i -> {{'w0': tokens[i], 'w1': tokens[i+1]}})) AS g
   FROM toks WHERE len(tokens) >= 2
 )
 SELECT doc_id, g.w0 AS w0, g.w1 AS w1, count(*) AS cnt
@@ -1379,14 +1332,6 @@ def udtf_ngrams_poly(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 QUALITY_QUANTILE = 0.25  # drop the bottom quartile per language
-
-_QUALITY_DUCK = """
-    floor((0.5 * least(length(text) / 500.0, 1.0)
-        + 0.4 * (CAST(len(regexp_extract_all(lower(text), '\\b(the|and|of|to|is|a|in)\\b')) AS DOUBLE)
-                 / greatest(CAST(len(regexp_extract_all(text, '\\S+')) AS BIGINT), 1))
-        + 0.1 * (1.0 - CAST(length(regexp_replace(text, '[^.,!?;:]', '', 'g')) AS DOUBLE)
-                 / greatest(length(text), 1))) * 10000 + 0.5) / 10000
-"""
 
 _QUALITY_BY_LANG_ORACLE = f"""
 WITH scored AS (
@@ -1456,7 +1401,7 @@ TOP_VOCAB = 1000
 
 _COMMON_TOKEN_ORACLE = rf"""
 WITH tok AS (
-  SELECT doc_id, unnest(list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '')) AS t
+  SELECT doc_id, unnest({_WS_TOKENS_DUCK}) AS t
   FROM documents
 ),
 vocab AS (
@@ -1502,7 +1447,7 @@ def common_token_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id",
-        F.explode(F.filter(F.split(F.lower(F.col("text")), r"\s+"), lambda t: t != "")).alias("t"),
+        F.explode(_tokens_col()).alias("t"),
     )
     vocab = tok.groupBy("t").agg(F.count(F.lit(1)).alias("n"))
     top = vocab.orderBy(F.col("n").desc(), "t").limit(TOP_VOCAB).select("t", F.lit(1).alias("_hit"))
@@ -1537,7 +1482,7 @@ _BM25_QUERY_SQL = ", ".join(f"'{t}'" for t in BM25_QUERY)
 _BM25_ORACLE = rf"""
 WITH toks AS (
   SELECT doc_id,
-         list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), t -> len(t) >= 3) AS tokens
+         {_TERM_TOKENS_DUCK} AS tokens
   FROM documents
 ),
 lens AS (SELECT doc_id, len(tokens) AS dl FROM toks),
@@ -1587,9 +1532,7 @@ def text_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
-        F.filter(
-            F.split(F.lower(F.col("text")), "[^a-z0-9]+"), lambda t: F.length(t) >= 3
-        ).alias("tokens"),
+        term_tokens().alias("tokens"),
     )
     lens = toks.select("doc_id", F.size("tokens").alias("dl"))
     corpus = lens.agg(
@@ -1637,7 +1580,7 @@ PMI_TOPK = 20
 _PMI_ORACLE = rf"""
 WITH toks AS (
   SELECT doc_id,
-         list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), t -> len(t) >= 3) AS tokens
+         {_TERM_TOKENS_DUCK} AS tokens
   FROM documents
 ),
 bigrams AS (
@@ -1691,9 +1634,7 @@ def text_collocations_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
-        F.filter(
-            F.split(F.lower(F.col("text")), "[^a-z0-9]+"), lambda t: F.length(t) >= 3
-        ).alias("tokens"),
+        term_tokens().alias("tokens"),
     )
     bigrams = toks.filter(F.size("tokens") >= 2).select(
         F.explode(
@@ -1743,7 +1684,7 @@ PPL_TOPK = 20
 _PPL_ORACLE = rf"""
 WITH toks AS (
   SELECT doc_id, lang,
-         list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), t -> len(t) >= 3) AS tokens
+         {_TERM_TOKENS_DUCK} AS tokens
   FROM documents
 ),
 tf AS (
@@ -1801,9 +1742,7 @@ def text_unigram_logppl(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
-        F.filter(
-            F.split(F.lower(F.col("text")), "[^a-z0-9]+"), lambda t: F.length(t) >= 3
-        ).alias("tokens"),
+        term_tokens().alias("tokens"),
     )
     tf = (
         toks.select("doc_id", F.explode("tokens").alias("term"))
@@ -1848,7 +1787,7 @@ VOCAB_CHECKPOINTS = (100, 300, 1_000, 3_000, 10_000)
 
 _VOCAB_COVERAGE_ORACLE = rf"""
 WITH toks AS (
-  SELECT list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), t -> len(t) >= 3) AS tokens
+  SELECT {_TERM_TOKENS_DUCK} AS tokens
   FROM documents
 ),
 cnt AS (
@@ -1898,14 +1837,7 @@ def text_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side (≤ |checkpoints| × VOCAB_CURVE_MAX tiny rows)."""
     docs = load(spark, sf_dir, "documents")
     cnt = (
-        docs.select(
-            F.explode(
-                F.filter(
-                    F.split(F.lower(F.col("text")), "[^a-z0-9]+"),
-                    lambda t: F.length(t) >= 3,
-                )
-            ).alias("term")
-        )
+        docs.select(F.explode(term_tokens()).alias("term"))
         .groupBy("term")
         .agg(F.count(F.lit(1)).alias("c"))
     )
@@ -1951,7 +1883,7 @@ BIPPL_TOPK = 20
 _BIPPL_ORACLE = rf"""
 WITH toks AS (
   SELECT doc_id,
-         list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), t -> len(t) >= 3) AS tokens
+         {_TERM_TOKENS_DUCK} AS tokens
   FROM documents
 ),
 bg AS (
@@ -2013,9 +1945,7 @@ def text_bigram_logppl(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
-        F.filter(
-            F.split(F.lower(F.col("text")), "[^a-z0-9]+"), lambda t: F.length(t) >= 3
-        ).alias("tokens"),
+        term_tokens().alias("tokens"),
     )
     bg = toks.filter(F.size("tokens") >= 2).select(
         "doc_id",
@@ -2706,16 +2636,16 @@ def gopher_feat_rules_sql(carry: str, carry_cols: str | None = None) -> str:
     return f"""feat AS (
   SELECT
     {carry},
-    CAST(len(regexp_extract_all(text, '\\S+')) AS BIGINT) AS nw,
-    CAST(list_sum(list_transform(regexp_extract_all(text, '\\S+'), w -> length(w))) AS BIGINT) AS wchars,
-    CAST(len(list_filter(regexp_extract_all(text, '\\S+'),
+    {_WORD_COUNT_DUCK} AS nw,
+    CAST(list_sum(list_transform({_WORDS_DUCK}, w -> length(w))) AS BIGINT) AS wchars,
+    CAST(len(list_filter({_WORDS_DUCK},
                          w -> regexp_matches(lower(w), '[a-z]'))) AS BIGINT) AS n_alpha,
     CAST(length(text) - length(replace(text, '#', '')) AS BIGINT)
       + CAST((length(text) - length(replace(text, '...', ''))) / 3 AS BIGINT) AS n_sym,
     CAST(len(string_split(text, chr(10))) AS BIGINT) AS n_lines,
     CAST(len(list_filter(string_split(text, chr(10)),
                          l -> regexp_matches(ltrim(l), '^[-*•]'))) AS BIGINT) AS n_bullet,
-    CAST(len(regexp_extract_all(lower(text), '\\b(the|and|of|to|is|a|in)\\b')) AS BIGINT) AS n_stop
+    CAST({_STOP_HITS_DUCK} AS BIGINT) AS n_stop
   FROM documents
 ),
 rules AS (
@@ -2736,14 +2666,9 @@ def gopher_rule_cols() -> dict:
     Columns over ``text`` — the Spark twin of :func:`gopher_feat_rules_sql`,
     shared by text_gopher_quality and stats_mcnemar_filters so both keys'
     engines replay ONE rule definition."""
-    ws = F.expr(r"regexp_extract_all(text, '\\S+', 0)")
-    nw = F.size(ws).cast("long")
-    wchars = F.expr(
-        r"aggregate(regexp_extract_all(text, '\\S+', 0), 0L, (a, w) -> a + length(w))"
-    )
-    n_alpha = F.size(
-        F.expr(r"filter(regexp_extract_all(text, '\\S+', 0), w -> lower(w) rlike '[a-z]')")
-    ).cast("long")
+    nw = word_count()
+    wchars = F.expr(f"aggregate({WORDS_SQL}, 0L, (a, w) -> a + length(w))")
+    n_alpha = F.size(F.expr(f"filter({WORDS_SQL}, w -> lower(w) rlike '[a-z]')")).cast("long")
     n_sym = (
         (F.length("text") - F.length(F.replace(F.col("text"), F.lit("#"), F.lit(""))))
         + (F.length("text") - F.length(F.replace(F.col("text"), F.lit("..."), F.lit("")))) / 3
@@ -2752,9 +2677,7 @@ def gopher_rule_cols() -> dict:
     n_bullet = F.size(
         F.expr(r"filter(split(text, '\n'), l -> ltrim(l) rlike '^[-*•]')")
     ).cast("long")
-    n_stop = F.expr(
-        r"CAST(size(regexp_extract_all(lower(text), '\\b(the|and|of|to|is|a|in)\\b', 0)) AS LONG)"
-    )
+    n_stop = F.expr(STOP_COUNT_SQL)
     return {
         "r_wc": F.when((nw >= 50) & (nw <= 100000), 1).otherwise(0),
         "r_mwl": F.when((wchars >= 3 * nw) & (wchars <= 10 * nw), 1).otherwise(0),
@@ -3062,11 +2985,11 @@ def text_tfidf_source_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
 # with T = distinct train bigram types, so num/den are exact integers.
 _KN_SCALE = 1_000_000  # per-bigram −ln p floor-quantized to micro-nats
 
-_KN_ORACLE = r"""
+_KN_ORACLE = rf"""
 WITH toks AS (
   SELECT doc_id,
          doc_id % 10 < 8 AS is_train,
-         list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), t -> len(t) >= 3) AS tokens
+         {_TERM_TOKENS_DUCK} AS tokens
   FROM documents
 ),
 bg AS (
@@ -3133,9 +3056,7 @@ def text_bigram_kn_logppl(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select(
         "doc_id",
         (F.col("doc_id") % 10 < 8).alias("is_train"),
-        F.filter(
-            F.split(F.lower(F.col("text")), "[^a-z0-9]+"), lambda t: F.length(t) >= 3
-        ).alias("tokens"),
+        term_tokens().alias("tokens"),
     )
     bg = toks.filter(F.size("tokens") >= 2).select(
         "is_train",
@@ -3261,19 +3182,17 @@ _DUP_NGRAM_THRESH_PPM = 200_000  # "heavily templated" flag: >20% dup positions
 
 
 def _dup_ngram_oracle() -> str:
-    from gluettalax_spark.operators.dedup import _duck_hex_int
-
     return rf"""
 WITH toks AS (
   SELECT doc_id, source,
-         list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '') AS tokens
+         {_WS_TOKENS_DUCK} AS tokens
   FROM documents
 ),
 sh AS (
   SELECT doc_id, source,
          unnest(list_transform(
            range(1, len(tokens) - 1),
-           i -> tokens[i] || ' ' || tokens[i+1] || ' ' || tokens[i+2]
+           i -> {duck_ngram(3)}
          )) AS s
   FROM toks
   WHERE len(tokens) >= 3
@@ -3340,8 +3259,6 @@ def text_dup_ngram_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc-keyed aggregates. Nothing all-pairs. The per-(doc,h) table is
     localCheckpointed so the dup-set scan and the join-back share one
     materialization instead of re-running the shingle explode."""
-    from gluettalax_spark.operators.dedup import shingles_exploded
-
     sh = shingles_exploded(spark, sf_dir, carry=("source",))
     occ = (
         sh.select(
@@ -3394,7 +3311,7 @@ _CCNET_KEY_SCALE = 1_000  # per-token micro-nats → nano-nats: the tercile sort
 _PPL_BUCKETS_ORACLE = rf"""
 WITH toks AS (
   SELECT doc_id, lang,
-         list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), t -> len(t) >= 3) AS tokens
+         {_TERM_TOKENS_DUCK} AS tokens
   FROM documents
 ),
 tf AS (
@@ -3450,9 +3367,7 @@ def ppl_doc_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select(
         "doc_id",
         "lang",
-        F.expr(
-            "filter(split(lower(text), '[^a-z0-9]+'), t -> length(t) >= 3)"
-        ).alias("tokens"),
+        term_tokens().alias("tokens"),
     )
     tf = (
         toks.select("doc_id", F.explode("tokens").alias("term"))
@@ -3753,7 +3668,7 @@ _HEAPS_Q = 1_000_000  # ln quantization: micro-nats
 
 _HEAPS_ORACLE = rf"""
 WITH toks AS (
-  SELECT doc_id, unnest(list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '')) AS t
+  SELECT doc_id, unnest({_WS_TOKENS_DUCK}) AS t
   FROM documents
 ),
 doc_tokens AS (
@@ -3825,12 +3740,7 @@ def text_heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gluettalax_spark.operators.rank import grouped_running_sums
 
     docs = load(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id",
-        F.explode(
-            F.expr(r"filter(split(lower(text), '\\s+'), t -> t != '')")
-        ).alias("t"),
-    )
+    toks = docs.select("doc_id", F.explode(_tokens_col()).alias("t"))
     doc_tokens = toks.groupBy("doc_id").agg(F.count(F.lit(1)).cast("long").alias("n_tok"))
     first_seen = (
         toks.groupBy("t")

@@ -5,6 +5,9 @@
   change what a registered key executes.
 * One storage level: every lineage cut stores at ``memory.CKPT_LEVEL``
   (serialized, evictable to disk), the policy ``memory.py`` documents.
+* One home per text primitive: the tokenizers, the word and stop-word
+  counts and the n-gram joins are spelled out once, in the module that
+  holds the Spark builder and its DuckDB twin.
 """
 
 from __future__ import annotations
@@ -76,5 +79,68 @@ def test_no_deserialized_lineage_cuts():
         f"{f.relative_to(PKG.parent)}:{i}"
         for f in files
         for i in _cuts_without_ckpt_level(f.read_text())
+    ]
+    assert offenders == []
+
+
+# Each text primitive's spelling and, per home module, how often it may
+# appear there (the Spark builder and the DuckDB fragment); every other
+# operator module composes those. ``F.`` prefixes are dropped before the
+# scan, so ``F.split(F.lower(...))`` counts as ``split(lower(``.
+_TEXT_HOMES = {
+    # whitespace tokenizer (dedup) and term tokenizer (text)
+    "split(lower(": {"dedup.py": 1, "text.py": 1},
+    "string_split_regex(lower(": {"dedup.py": 1, "text.py": 1},
+    # DuckDB word split; the Spark side spells RE2's class out
+    "\\S+": {"dedup.py": 1},
+    # stop words of the stop-word count and the quality composite
+    "the|and|of|to|is|a|in": {"text.py": 1},
+    # n-gram joins: generated by dedup.duck_ngram, never spelled
+    "w[i] || '_' || w[i+1]": {},
+    "tokens[i] || ' ' || tokens[i+1]": {},
+}
+# RAKE splits text into candidate phrases at its own delimiter list
+# (``_RAKE_SPLIT``, built from ``_RAKE_STOPS``): a phrase splitter with
+# its own stop list, not one of the primitives above.
+_TEXT_EXEMPT = re.compile(r"\b_RAKE_(?:SPLIT|STOPS)\b")
+
+
+def _text_spellings(src: str) -> dict[str, int]:
+    """How often each primitive's spelling occurs in ``src``, skipping
+    the RAKE lines."""
+    kept = "\n".join(
+        line.replace("F.", "") for line in src.splitlines() if not _TEXT_EXEMPT.search(line)
+    )
+    return {p: kept.count(p) for p in _TEXT_HOMES}
+
+
+def test_text_primitives_have_one_home():
+    for src, pattern in (
+        (r'F.filter(F.split(F.lower(F.col("text")), r"\s+"), lambda t: t != "")', "split(lower("),
+        ("F.expr(\"filter(split(lower(text), '[^a-z0-9]+'), t -> length(t) >= 3)\")", "split(lower("),
+        ("list_filter(string_split_regex(lower(text), '\\s+'), t -> t <> '')", "string_split_regex(lower("),
+        ("CAST(len(regexp_extract_all(text, '\\S+')) AS BIGINT)", "\\S+"),
+        ("regexp_extract_all(lower(text), '\\b(the|and|of|to|is|a|in)\\b')", "the|and|of|to|is|a|in"),
+        ("i -> w[i] || '_' || w[i+1]", "w[i] || '_' || w[i+1]"),
+        ("i -> tokens[i] || ' ' || tokens[i+1] || ' ' || tokens[i+2]", "tokens[i] || ' ' || tokens[i+1]"),
+    ):
+        assert _text_spellings(src) == {p: int(p == pattern) for p in _TEXT_HOMES}, src
+    for src in (
+        '_tokens_col().alias("tokens")',
+        "{_WS_TOKENS_DUCK} AS tokens",
+        "i -> {duck_ngram(3)}",
+        'F.explode(F.split(F.lower(F.col("text")), _RAKE_SPLIT))',
+        '_RAKE_STOPS = "the|and|of|to|is|a|in"',
+        "F.split(F.col(\"text\"), \"\\n\")",
+    ):
+        assert not any(_text_spellings(src).values()), src
+
+    files = sorted((PKG / "operators").rglob("*.py"))
+    assert len(files) > 10
+    offenders = [
+        f"{f.name}: {pattern!r} x{n}"
+        for f in files
+        for pattern, n in _text_spellings(f.read_text()).items()
+        if n > _TEXT_HOMES[pattern].get(f.name, 0)
     ]
     assert offenders == []
