@@ -9,14 +9,17 @@ The reference has no graph code (its only iteration is service polling,
 ``gluettalax.py:220-224``); this is part of the LLM-pipeline extension
 surface (BASELINE.json north star).
 
-Scale design: label propagation by repeated min-join. Each round is one
-shuffled join + aggregate; rounds needed = graph diameter (near-dup
-clusters are shallow — a handful). Lineage is cut per round with
-``localCheckpoint`` (cluster analog: checkpoint to storage) so the plan
-doesn't grow with iterations. A graph still unconverged after
-``_FALLOVER_ROUNDS`` rounds is deep, and falls over automatically to the
-large-star/small-star variant (Kiveris et al., "Connected Components in
-MapReduce and Beyond") — same join primitive, provably fewer rounds.
+Scale design: every iterative loop here (connected components, k-core,
+bounded SSSP, label propagation, PageRank) runs the same vertex-state
+round, :func:`vertex_round`: one row per node carrying its adjacency and
+state, exploded into its own row plus one message per neighbour, and ONE
+groupBy(node) that rebuilds the adjacency and combines the messages —
+one hash exchange per round, no join against an edge table, no
+broadcast. :func:`run_rounds` holds the one lineage-cut policy. A
+connected-components graph still unconverged after ``_FALLOVER_ROUNDS``
+rounds is deep, and falls over automatically to the large-star/small-star
+variant (Kiveris et al., "Connected Components in MapReduce and
+Beyond"), whose round count does not grow with the diameter.
 """
 
 from __future__ import annotations
@@ -34,7 +37,7 @@ _MAX_ROUNDS = 25
 
 # Min-label rounds before falling over to the large-star/small-star
 # variant. Near-dup clusters are shallow (diameter ≲ 3), so the common
-# case converges here at one join+agg per round; a chained graph (a
+# case converges here at one exchange per round; a chained graph (a
 # template-spam corpus produces paths, diameter ~ corpus size) would need
 # DIAMETER rounds, so past this budget the remaining work is contracted
 # and finished in O(log² n) star rounds instead of being truncated.
@@ -42,54 +45,43 @@ _FALLOVER_ROUNDS = 5
 
 
 class _GenerationRotator:
-    """Release the storage blocks of SUPERSEDED localCheckpoint generations.
+    """Lazy localCheckpoint generations of an iterative loop, releasing
+    the storage blocks of each SUPERSEDED generation.
 
-    An iterative loop that eagerly localCheckpoints every round keeps the
-    blocks of EVERY past round alive until the py4j refs are GC'd —
-    Spark's ContextCleaner lags a tight sequential loop badly enough that
-    at sf10 the dead generations starve hash-aggregate execution memory
-    (the r12 sweep's UNABLE_TO_ACQUIRE_MEMORY at the default 8g heap).
-    The rotator reads the checkpoint RDD's id straight off the returned
-    frame's ``LogicalRDD`` and, once the new generation is materialized
-    AND the loop no longer references the old one, unpersists exactly the
-    old generation's blocks. (It previously DIFFED the whole
-    persistent-RDD id set around the call — but a lazy checkpoint
-    executes upstream stages at call time, so any not-yet-materialized
-    upstream ``persist`` — CC's ``sym``, a caller's MinHash signature
-    table (``dedup._minhash_sigs``) — first registered inside that
-    window, was misattributed to the new generation, and round-1
-    ``retire()`` silently dropped the multi-consumer cache; ADVICE r12.)
-    Unpersisting a locally-checkpointed RDD makes it unrecomputable —
-    callers must only ``retire()`` after the last read. Cluster analog:
-    deleting the previous round's checkpoint files.
+    A loop that cuts every round keeps the blocks of EVERY past round
+    alive until the py4j refs are GC'd — Spark's ContextCleaner lags a
+    tight sequential loop badly enough that at sf10 the dead generations
+    starve hash-aggregate execution memory (the r12 sweep's
+    UNABLE_TO_ACQUIRE_MEMORY at the default 8g heap). The rotator reads
+    the checkpoint RDD's id straight off the returned frame's
+    ``LogicalRDD`` and, once the new generation is materialized AND the
+    loop no longer references the old one, unpersists exactly the old
+    generation's blocks (not a diff of the persistent-RDD ids around the
+    call: that misattributes an upstream ``persist`` the lazy checkpoint
+    first materializes; ADVICE r12). Unpersisting a locally-checkpointed
+    RDD makes it unrecomputable — ``retire()`` only after the last read.
+    Cluster analog: deleting the previous round's checkpoint files.
 
-    Why localCheckpoint and not persist (r12 post-mortem): a persist cut
-    does NOT truncate the LOGICAL plan — CacheManager substitution only
-    happens at execution planning — and these loops reference the previous
-    generation 2-4x per round (join + keep-set / star pairs), so the
-    logical tree grows exponentially round-over-round and the DRIVER dies
-    analyzing it (observed: graph_kcore heap OOM at 3^rounds). Truncating
-    lineage per generation is load-bearing here; the AQE stage execution
-    a lazy checkpoint runs at call time is the price."""
+    Every checkpoint is lazy: its blocks register at once, but the old
+    generation must stay readable until an action on the new one has
+    materialized it, so the convergence probe that a loop already runs
+    doubles as the materializing job (under AQE the upstream stages still
+    execute at call time). A localCheckpoint truncates the LOGICAL plan,
+    which a persist does not (CacheManager substitutes only at execution
+    planning): a loop whose round reads its predecessor more than once
+    would otherwise grow its logical tree exponentially and the driver
+    dies analyzing it (observed r12: graph_kcore heap OOM at 3^rounds)."""
 
     def __init__(self, spark: SparkSession) -> None:
         self._jsc = spark.sparkContext._jsc
         self._live: set[int] = set()
         self._pending: set[int] = set()
 
-    def checkpoint(self, df: DataFrame, eager: bool = True) -> DataFrame:
-        """``eager=False`` is safe ONLY when the caller runs an action on
-        the returned frame before ``retire()`` — the lazy checkpoint
-        registers its blocks immediately (persist-at-mark), but the OLD
-        generation must stay readable until the new one has materialized.
-        Loops whose convergence probe already consumes the new frame get
-        the final-stage materialization fused with the probe (under AQE
-        the upstream stages still execute at call time)."""
-        out = df.localCheckpoint(eager=eager, storageLevel=CKPT_LEVEL)
+    def checkpoint(self, df: DataFrame) -> DataFrame:
+        out = df.localCheckpoint(eager=False, storageLevel=CKPT_LEVEL)
         # Track ONLY the checkpoint RDD this call created: the analyzed
         # plan of a checkpointed frame is a LogicalRDD over exactly the
-        # persisted RDD. A snapshot diff would also catch unrelated RDDs
-        # registered while the lazy checkpoint ran upstream stages.
+        # persisted RDD.
         self._pending = {out._jdf.queryExecution().analyzed().rdd().id()}
         return out
 
@@ -104,70 +96,123 @@ class _GenerationRotator:
         self._pending = set()
 
 
+def vertex_state(
+    edges: DataFrame, a: str = "pa", b: str = "pb", weight: str | None = None
+) -> DataFrame:
+    """(n, nbrs): every node of the undirected edge set ``(a, b)`` with
+    its distinct neighbours — node ids, or ``struct(v, w)`` with ``w`` the
+    SQL expression ``weight`` over the edge row. Both orientations
+    explode from each edge row in-row, so one aggregate builds it."""
+
+    def nbr(x: str) -> F.Column:
+        if weight is None:
+            return F.col(x)
+        return F.struct(F.col(x).alias("v"), F.expr(weight).alias("w"))
+
+    both = edges.select(
+        F.explode(
+            F.array(
+                F.struct(F.col(a).alias("n"), nbr(b).alias("nbr")),
+                F.struct(F.col(b).alias("n"), nbr(a).alias("nbr")),
+            )
+        ).alias("e")
+    )
+    return both.groupBy(F.col("e.n").alias("n")).agg(F.collect_set("e.nbr").alias("nbrs"))
+
+
+def vertex_round(
+    state: DataFrame, *combine: F.Column, own: F.Column | None = None, to: str = "m", by: tuple = ()
+) -> DataFrame:
+    """One message-passing round (the Pregel form) over the vertex-state
+    frame ``state`` — one row per node, ``(n, nbrs, *state)``.
+
+    ``posexplode(concat(array(own), nbrs))`` gives every node its own row
+    (``i = 0``, element ``m`` = ``own``, default ``n``) and one message
+    row per neighbour (``i > 0``, ``m`` = that neighbour), each carrying
+    the sender's columns. ONE ``groupBy(to, *by)`` brings each node's
+    rows back together, rebuilds ``nbrs`` from the own row alone
+    (``collect_list`` skips the messages' NULLs; ``max(nbrs)`` would plan
+    as a SortAggregate) and applies ``combine``. Result: ``(n, *by, nbrs,
+    *combine)`` — one hash exchange, no join, no broadcast; the adjacency
+    travels with the shuffle."""
+    own_first = F.concat(F.array(F.col("n") if own is None else own), F.col("nbrs"))
+    sent = state.select("*", F.posexplode(own_first).alias("i", "m"))
+    return sent.groupBy(F.col(to).alias("n"), *by).agg(
+        F.flatten(F.collect_list(F.when(F.col("i") == 0, F.col("nbrs")))).alias("nbrs"), *combine
+    )
+
+
+def run_rounds(state: DataFrame, step, rounds: int, done=None) -> tuple[DataFrame, bool]:
+    """(last generation, converged): ``step`` applied to ``state`` up to
+    ``rounds`` times — the one lineage-cut policy of the graph loops.
+
+    Without ``done`` the rounds are fixed: each reads its predecessor
+    once, so the chain is planned uncut and only the last generation is
+    cut, once, for the callers that read it more than once. With ``done``
+    the loop probes for convergence: every generation, ``state``
+    included, is cut lazily through :class:`_GenerationRotator`;
+    ``done(generation)`` — a full scan, since it is the job that
+    materializes the cut — says whether it is a fixed point; and the
+    superseded generation is released after the probe, its last read.
+    ``converged`` is False only when a probing loop spent its budget."""
+    rot = _GenerationRotator(state.sparkSession)
+    if done is None:
+        for _ in range(rounds):
+            state = step(state)
+        return rot.checkpoint(state), True
+    state = rot.checkpoint(state)
+    converged = done(state)
+    rot.retire()
+    for _ in range(rounds):
+        if converged:
+            break
+        state = rot.checkpoint(step(state))
+        converged = done(state)
+        rot.retire()
+    return state, converged
+
+
 def connected_components(edges: DataFrame, src: str = "u", dst: str = "v") -> DataFrame:
     """(node, component) for every node in ``edges``; component = min node
     id reachable. Pure DataFrame iteration — no RDDs, no collect of data
     (only a 1-row convergence flag per round crosses to the driver).
 
-    Hybrid: min-label propagation (cheapest per round, diameter-bounded
-    rounds) with a round-count guard — if the graph hasn't converged in
-    ``_FALLOVER_ROUNDS`` it is DEEP, so the partially-collapsed graph is
-    contracted to label space (every label = one supernode; edges between
-    equal labels drop) and handed to :func:`connected_components_star`,
-    whose round count is O(log² n) regardless of diameter. Same fixpoint
-    either way (component = min reachable id); the fallover only changes
-    which join schedule reaches it."""
-    sym = edges.selectExpr(f"{src} AS u", f"{dst} AS v").unionByName(
-        edges.selectExpr(f"{dst} AS u", f"{src} AS v")
-    )
-    # Static across rounds; lazy persist (r12) — the first round's
-    # convergence probe materializes it, no separate build-time job.
-    sym = sym.distinct().persist(CKPT_LEVEL)
-    rot = _GenerationRotator(edges.sparkSession)
-    # eager=False throughout (optimization r12, the kcore §5 fusion): every
-    # round's convergence probe consumes the new generation BEFORE retire(),
-    # so the checkpoint materializes inside the probe — one driver-blocking
-    # job per round instead of two.
-    labels = rot.checkpoint(
-        sym.select(F.col("u").alias("node")).distinct().withColumn("lab", F.col("node")),
-        eager=False,
-    )
-    rot.retire()
-    for _ in range(_FALLOVER_ROUNDS):
-        nbr_min = (
-            sym.join(labels, sym.v == labels.node)
-            .groupBy("u")
-            .agg(F.min("lab").alias("nbr_lab"))
-        )
-        new_labels = rot.checkpoint(
-            labels.join(nbr_min, labels.node == nbr_min.u, "left")
-            .select(
-                "node",
-                F.least(F.col("lab"), F.coalesce(F.col("nbr_lab"), F.col("lab"))).alias("lab"),
-                (F.col("nbr_lab") < F.col("lab")).alias("moved"),
-            ),
-            eager=False,
-        )
-        # Convergence probe: min-label only ever LOWERS a label, so "no
-        # label lowered this round" is exactly the fixed point, for any
-        # ordered key type (ids, decimals, strings). One aggregate over the
-        # new generation alone — the same job that materializes the lazy
-        # checkpoint. NULL means no labels at all (empty input): converged.
-        moved = new_labels.agg(F.bool_or("moved")).collect()[0][0]
-        # The probe was the superseded generation's last read — release
-        # its blocks now (the rotator, not ContextCleaner lag, decides).
-        rot.retire()
-        labels = new_labels
-        if moved is not True:
-            return labels.select(F.col("node"), F.col("lab").alias("component"))
+    Hybrid: min-label propagation on :func:`vertex_round` — each node's
+    message is its label, the combine is ``min``, and ``moved`` flags a
+    label lowered this round — with a round-count guard: if the graph
+    hasn't converged in ``_FALLOVER_ROUNDS`` it is DEEP, so the
+    partially-collapsed graph is contracted to label space (every label =
+    one supernode; edges between equal labels drop) and handed to
+    :func:`connected_components_star`, whose round count is O(log² n)
+    regardless of diameter. Same fixpoint either way (component = min
+    reachable id); the fallover only changes which schedule reaches it."""
+
+    def relabel(s: DataFrame) -> DataFrame:
+        return vertex_round(
+            s, F.min("lab").alias("lab"), F.min(F.when(F.col("i") == 0, F.col("lab"))).alias("was")
+        ).select("n", "nbrs", "lab", (F.col("lab") < F.col("was")).alias("moved"))
+
+    def settled(s: DataFrame) -> bool:
+        # Min-label only ever LOWERS a label, so "no label lowered this
+        # round" is exactly the fixed point, for any ordered key type (ids,
+        # decimals, strings). NULL means no nodes at all: converged.
+        return s.agg(F.bool_or("moved")).collect()[0][0] is not True
+
+    # A fixed point needs the neighbours' labels, so the first probed
+    # generation is the first round's.
+    first = relabel(vertex_state(edges, src, dst).withColumn("lab", F.col("n")))
+    state, converged = run_rounds(first, relabel, _FALLOVER_ROUNDS - 1, settled)
+    labels = state.select(F.col("n").alias("node"), "lab")
+    if converged:
+        return labels.select("node", F.col("lab").alias("component"))
     # Deep graph: contract to label space and finish with star rounds.
     # Each partially-collapsed cluster is one supernode, so the contracted
     # edge set is no larger than the input and usually far smaller.
     contracted = (
-        sym.join(labels.selectExpr("node AS u", "lab AS lu"), "u")
-        .join(labels.selectExpr("node AS v", "lab AS lv"), "v")
-        .filter(F.col("lu") != F.col("lv"))
-        .select(F.col("lu").alias("u"), F.col("lv").alias("v"))
+        state.select(F.col("lab").alias("u"), F.explode("nbrs").alias("node"))
+        .join(labels, "node")
+        .where(F.col("u") != F.col("lab"))
+        .select("u", F.col("lab").alias("v"))
         .distinct()
     )
     star = connected_components_star(contracted).selectExpr(
@@ -337,14 +382,13 @@ def connected_components_star(edges: DataFrame, src: str = "u", dst: str = "v") 
     fixpoint; tests assert equivalence. Use this variant for deep/chained
     graphs; the min-label one for shallow near-dup clusters."""
     rot = _GenerationRotator(edges.sparkSession)
-    # eager=False (r12, the kcore §5 fusion): the isEmpty probe / per-round
-    # convergence compare consume each generation before retire(), so the
-    # checkpoint materializes inside the probe job it already pays for.
+    # The isEmpty probe / per-round convergence compare consume each
+    # generation before retire(), so each lazy cut materializes inside the
+    # probe job it already pays for.
     e = rot.checkpoint(
         edges.selectExpr(f"{src} AS u", f"{dst} AS v")
         .filter(F.col("u") != F.col("v"))
-        .distinct(),
-        eager=False,
+        .distinct()
     )
     rot.retire()
     singletons = edges.selectExpr(f"{src} AS n").unionByName(
@@ -353,7 +397,7 @@ def connected_components_star(edges: DataFrame, src: str = "u", dst: str = "v") 
     if e.rdd.isEmpty():
         return singletons.select(F.col("n").alias("node"), F.col("n").alias("component"))
     for _ in range(_MAX_ROUNDS):
-        e2 = rot.checkpoint(_small_star(_large_star(e)), eager=False)
+        e2 = rot.checkpoint(_small_star(_large_star(e)))
         # Converged when the edge set is unchanged (both are distinct sets).
         same = e2.count() == e.count() and e2.exceptAll(e).rdd.isEmpty()
         # The convergence compare was the old generation's last read.
@@ -453,12 +497,10 @@ def explode_pairs(df: DataFrame, arr: str, a: str, b: str, *keep: str) -> DataFr
     column ``arr``, x before y — C(n, 2) rows for an array of n, none for
     n < 2 — generated map-side from each row, with the ``keep`` columns
     of that row riding along. Over a bounded array this replaces a
-    distinct + self-join (two shuffles) with none."""
-    pairs = F.expr(
-        f"flatten(transform({arr}, (x, i) -> "
-        f"transform(slice({arr}, i + 2, size({arr})), y -> struct(x AS {a}, y AS {b}))))"
-    )
-    return df.select(*keep, F.explode(pairs).alias("e")).select(f"e.{a}", f"e.{b}", *keep)
+    distinct + self-join (two shuffles) with none. Two code-generated
+    explodes: each element x at position _i, then the elements after it."""
+    xs = df.select(*keep, arr, F.posexplode(arr).alias("_i", a))
+    return xs.select(a, F.explode(F.expr(f"slice({arr}, _i + 2, size({arr}))")).alias(b), *keep)
 
 
 def order_baskets(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -721,36 +763,12 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor losses keep it slightly under SCALE, identically on both
     engines.
 
-    Scale shape: vertex-state message passing (the Pregel form). The
-    state is one row per node, (n, nbrs, r), built once by one
-    aggregate over the map-side symmetrized edges. Each round explodes
-    every node into its own state row (nbrs, no contribution) plus one
-    message (neighbour, r DIV degree) per neighbour, and ONE groupBy(n)
-    puts each node's adjacency and incoming contributions back
-    together: one hash exchange per round, no join, no broadcast, no
-    cut. The adjacency travels with the round's shuffle instead of
-    being re-joined against a cached copy. ``flatten(collect_list)``
-    (ObjectHashAggregate) rebuilds the list — ``collect_list`` skips
-    the messages' NULL lists, so each node gets back exactly its own;
-    ``max(nbrs)`` would plan as SortAggregate and add two sorts per
-    round. Each round references its predecessor once, so the logical
-    plan grows linearly; it is cut once, after the last round, because
-    the mass and the top-k both read the final ranks. Degree is
-    ``size(nbrs)``, so no degree join remains either.
+    Scale shape: :func:`vertex_round` over (n, nbrs, r); a node's message
+    to each neighbour is r DIV size(nbrs) and the combine is their sum.
+    The rounds are fixed, so :func:`run_rounds` cuts once, after the
+    last: the mass and the top-k both read the final ranks.
     """
-    sym = cooccurrence_edges(spark, sf_dir).select(
-        F.explode(
-            F.array(
-                F.struct(F.col("pa").alias("src"), F.col("pb").alias("dst")),
-                F.struct(F.col("pb").alias("src"), F.col("pa").alias("dst")),
-            )
-        ).alias("e")
-    )
-    nodes = (
-        sym.groupBy(F.col("e.src").alias("n"))
-        .agg(F.collect_list("e.dst").alias("nbrs"))
-        .persist(CKPT_LEVEL)
-    )
+    nodes = vertex_state(cooccurrence_edges(spark, sf_dir)).persist(CKPT_LEVEL)
 
     n_nodes = nodes.count()
     if n_nodes == 0:
@@ -758,31 +776,15 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         # divide-by-zero in the teleport term.
         return spark.createDataFrame([], "part long, rank_e12 long, degree long, mass_e12 long")
     base = _PR_TELEPORT_E12 // n_nodes
+
+    def step(s: DataFrame) -> DataFrame:
+        share = F.when(F.col("i") > 0, F.expr("r DIV size(nbrs)"))
+        return vertex_round(s, F.sum(share).alias("in_sum")).select(
+            "n", "nbrs", (F.lit(base) + F.expr("(85 * in_sum) DIV 100")).cast("long").alias("r")
+        )
+
     state = nodes.select("n", "nbrs", F.lit(_PR_SCALE // n_nodes).cast("long").alias("r"))
-    for _ in range(_PR_ITERS):
-        msgs = state.select(
-            F.explode(
-                F.expr(
-                    "concat(array(named_struct('n', n, 'nbrs', nbrs, 'c', 0L)), "
-                    "transform(nbrs, x -> named_struct('n', x, 'nbrs', CAST(NULL AS "
-                    "array<long>), 'c', r DIV size(nbrs))))"
-                )
-            ).alias("m")
-        )
-        state = (
-            msgs.groupBy(F.col("m.n").alias("n"))
-            .agg(
-                F.flatten(F.collect_list("m.nbrs")).alias("nbrs"),
-                F.sum("m.c").alias("in_sum"),
-            )
-            .select(
-                "n",
-                "nbrs",
-                (F.lit(base) + F.expr("(85 * in_sum) DIV 100")).cast("long").alias("r"),
-            )
-        )
-    # The one cut: the mass and the top-k both read the final ranks.
-    ranks = state.localCheckpoint(eager=False, storageLevel=CKPT_LEVEL)
+    ranks, _ = run_rounds(state, step, _PR_ITERS)
 
     mass = ranks.agg(F.sum("r").cast("long").alias("mass_e12"))
     return (
@@ -850,39 +852,26 @@ FROM lab{_LPA_ITERS} GROUP BY lab ORDER BY n_members DESC, community LIMIT {_LPA
     )
 
 
-def _lpa_edges_and_labels(spark: SparkSession, sf_dir: str):
-    """(undirected edges, final LPA labels) — the per-round join + count
-    + min(struct) argmax shape documented on :func:`graph_communities_lpa`;
-    shared with :func:`graph_modularity` so both score the same labeling."""
-    edges = cooccurrence_edges(spark, sf_dir).persist(CKPT_LEVEL)
-    sym = edges.select(F.col("pa").alias("u"), F.col("pb").alias("v")).unionAll(
-        edges.select(F.col("pb").alias("u"), F.col("pa").alias("v"))
-    )
-    labels = sym.select(F.col("u").alias("node")).distinct().select(
-        "node", F.col("node").alias("lab")
-    )
-    for _ in range(_LPA_ITERS):
-        nbr = sym.join(labels.withColumnRenamed("node", "v"), "v").select(
-            F.col("u").alias("node"), "lab"
+def _lpa_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(n, nbrs, lab): the final LPA labels with each node's adjacency —
+    the round documented on :func:`graph_communities_lpa`; shared with
+    :func:`graph_modularity` so both score the same labeling."""
+
+    def relabel(s: DataFrame) -> DataFrame:
+        # Count each (node, neighbour label) — the own row lands in the
+        # NULL-vote group with the adjacency — then take the argmax as
+        # min(struct(-count, label)): ties go to the smaller label.
+        votes = vertex_round(
+            s, F.count(F.lit(1)).alias("c"), by=(F.when(F.col("i") > 0, F.col("lab")).alias("vote"),)
         )
-        cnt = nbr.groupBy("node", "lab").agg(F.count(F.lit(1)).alias("c"))
-        labels = (
-            cnt.groupBy("node")
-            .agg(
-                F.min(
-                    F.struct((-F.col("c")).alias("nc"), F.col("lab").alias("l"))
-                ).alias("m")
-            )
-            .select("node", F.col("m.l").alias("lab"))
-            # persist, not localCheckpoint (r12): AQE executes upstream
-            # stages at even a lazy checkpoint call — 3 blocking builder
-            # jobs; the CacheManager substitution keeps plans one round
-            # deep with zero build-time execution. (graph_pagerank needs
-            # neither: its message-passing round reads its predecessor
-            # once, so its plan grows linearly and takes one final cut.)
-            .persist(CKPT_LEVEL)
-        )
-    return edges, labels
+        best = F.struct((-F.col("c")).alias("nc"), F.col("vote").alias("l"))
+        return votes.groupBy("n").agg(
+            F.flatten(F.collect_list("nbrs")).alias("nbrs"),
+            F.min(F.when(F.col("vote").isNotNull(), best)).alias("best"),
+        ).select("n", "nbrs", F.col("best.l").alias("lab"))
+
+    nodes = vertex_state(cooccurrence_edges(spark, sf_dir)).withColumn("lab", F.col("n"))
+    return run_rounds(nodes, relabel, _LPA_ITERS)[0]
 
 
 @register(
@@ -900,17 +889,16 @@ def graph_communities_lpa(spark: SparkSession, sf_dir: str) -> DataFrame:
     this SQL-expressible — contrast `graph_pagerank`, whose fixpoint is
     rows-only).
 
-    Scale shape: per round ONE equi-join (edges x labels, both keyed on
-    the node id) + one (node, label) count + an argmax folded into a
-    single min(struct(-count, label)) aggregate — no windows, so the
-    shuffle carries (node, label, count) rows only; labels are
-    checkpointed per round to keep the plan one round deep. Same
-    per-iteration shape a 100 TB run needs (bucketed edges co-locate the
-    static side).
+    Scale shape: each round is one :func:`vertex_round` — every node
+    sends its label to its neighbours, grouped by (node, label) into
+    counts — and one more groupBy(node) that folds the argmax into a
+    single min(struct(-count, label)) aggregate while the adjacency rides
+    along: two aggregates, no join, no window. The 3 rounds are fixed,
+    so the plan is planned uncut and cut once, after the last round.
     """
-    _, labels = _lpa_edges_and_labels(spark, sf_dir)
     return (
-        labels.groupBy(F.col("lab").alias("community"))
+        _lpa_labels(spark, sf_dir)
+        .groupBy(F.col("lab").alias("community"))
         .agg(F.count(F.lit(1)).alias("n_members"))
         .orderBy(F.desc("n_members"), F.asc("community"))
         .limit(_LPA_TOPK)
@@ -959,29 +947,28 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     (e.g. near-dup clusters, topical buckets) is real before sharding by
     it.
 
-    Scale shape: label join is node-keyed on both endpoints (never a
-    broadcast of the unbounded label table), degrees aggregate from the
-    edge list, and the three 1-row aggregates meet in broadcast
-    crossJoins — nothing after the joins exceeds one row per community."""
-    edges, labels = _lpa_edges_and_labels(spark, sf_dir)
-    la = labels.select(F.col("node").alias("pa"), F.col("lab").alias("lab_a"))
-    lb = labels.select(F.col("node").alias("pb"), F.col("lab").alias("lab_b"))
-    intra = (
-        edges.join(la, "pa")
-        .join(lb, "pb")
-        .filter(F.col("lab_a") == F.col("lab_b"))
-        .agg(F.count(F.lit(1)).cast("long").alias("a"))
+    Scale shape: everything reads the final LPA state, whose adjacency
+    gives each node's degree. ``A`` is one more :func:`vertex_round`
+    grouped by (node, label): the own row meets the neighbours that share
+    its label, so it counts each intra edge from both ends. ``B`` and
+    ``m`` are a groupBy(label) of the degrees; the 1-row aggregates meet
+    in a broadcast crossJoin — nothing exceeds one row per community."""
+    labels = _lpa_labels(spark, sf_dir)
+    same = vertex_round(
+        labels,
+        F.count(F.when(F.col("i") > 0, 1)).alias("c"),
+        F.bool_or(F.col("i") == 0).alias("home"),
+        by=(F.col("lab"),),
     )
-    deg = node_degrees(edges, n="node")
-    dc = deg.join(labels, "node").groupBy("lab").agg(F.sum("d").cast("decimal(38,0)").alias("dsum"))
+    intra = same.where("home").agg(F.expr("CAST(coalesce(sum(c), 0) DIV 2 AS BIGINT)").alias("a"))
+    dc = labels.groupBy("lab").agg(F.sum(F.size("nbrs")).cast("decimal(38,0)").alias("dsum"))
     bs = dc.agg(
         F.count(F.lit(1)).cast("long").alias("n_communities"),
         F.sum(F.col("dsum") * F.col("dsum")).alias("b"),
+        F.expr("CAST(coalesce(sum(dsum), 0) DIV 2 AS BIGINT)").alias("m"),
     )
-    mm = edges.agg(F.count(F.lit(1)).cast("long").alias("m"))
     return (
-        bs.crossJoin(F.broadcast(mm))
-        .crossJoin(F.broadcast(intra))
+        bs.crossJoin(F.broadcast(intra))
         .selectExpr(
             "n_communities",
             "m AS m_edges",
@@ -1216,47 +1203,52 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     output rather than silent. Output: top-k core members by in-core
     degree plus 1-row totals.
 
-    Scale shape: each round is one degree aggregate + two semi-joins on
-    the node id (never all-pairs), with the shrinking edge set
-    localCheckpointed so the plan stays one round deep; the convergence
-    probe is a count on the (bounded, already-aggregated) under-k set.
-    Synchronous peeling needs O(peel-depth) rounds — the distributed
-    -k-core default (Montresor et al.); degeneracy-ordering variants
-    trade more machinery for fewer rounds and keep the same per-round
-    join primitive."""
-    edges = cooccurrence_edges(spark, sf_dir).persist(CKPT_LEVEL)
-    for _ in range(_KCORE_MAX_ROUNDS):
-        # Checkpoint the (node-sized) degree table: the convergence probe
-        # AND the keep-set filter both consume it, and without the cut
-        # each round would run the degree aggregate twice. The cut is
-        # LAZY and the probe is a count() over it (optimization r12):
-        # the count job materializes the checkpoint AND answers the
-        # convergence question in one probe. localCheckpoint, NOT persist:
-        # each round references the previous generation 3x (degrees + two
-        # semi-joins via keep), so without lineage truncation the logical
-        # plan grows 3^rounds and the driver OOMs analyzing it (observed).
-        deg = node_degrees(edges).localCheckpoint(eager=False, storageLevel=CKPT_LEVEL)
-        if deg.filter(F.col("d") < _KCORE_K).count() == 0:
-            break
-        keep = deg.filter(F.col("d") >= _KCORE_K).select("n")
-        edges = (
-            edges.join(keep.withColumnRenamed("n", "pa"), "pa", "left_semi")
-            .join(keep.withColumnRenamed("n", "pb"), "pb", "left_semi")
-            .select("pa", "pb")
-            .localCheckpoint(eager=False, storageLevel=CKPT_LEVEL)
+    Scale shape: each peel round is one :func:`vertex_round` — a node
+    with fewer than k neighbours sends its id to each of them and drops
+    out, the survivors ``array_except`` the senders from their adjacency,
+    and a node left with no neighbours leaves too, as it does from an
+    edge list. The probe is one aggregate over each generation, the job
+    that materializes its cut: the least degree answers convergence, and
+    the last one's node and edge counts are the output's totals. Synchronous peeling
+    needs O(peel-depth) rounds — the distributed-k-core default
+    (Montresor et al.); degeneracy-ordering variants trade more machinery
+    for fewer rounds."""
+    low = F.size("nbrs") < _KCORE_K
+
+    def peel(s: DataFrame) -> DataFrame:
+        return (
+            vertex_round(
+                s,
+                F.collect_list(F.when((F.col("i") > 0) & low, F.col("n"))).alias("gone"),
+                F.max(F.when(F.col("i") == 0, low)).alias("low"),
+            )
+            .where(~F.col("low"))
+            .select("n", F.array_except("nbrs", "gone").alias("nbrs"))
+            .where(F.size("nbrs") > 0)
         )
-    core_deg = node_degrees(edges)
-    totals = core_deg.agg(
-        F.count(F.lit(1)).cast("long").alias("n_core_nodes"),
-        F.coalesce(F.min("d") >= _KCORE_K, F.lit(True)).alias("converged"),
-    ).crossJoin(edges.agg(F.count(F.lit(1)).cast("long").alias("n_core_edges")))
+
+    probes = []  # per generation: (least degree, nodes, directed edges)
+
+    def peeled(s: DataFrame) -> bool:
+        size = F.size("nbrs")
+        probes.append(s.agg(F.min(size), F.count(F.lit(1)), F.sum(size)).collect()[0])
+        return probes[-1][0] is None or probes[-1][0] >= _KCORE_K
+
+    adj = vertex_state(cooccurrence_edges(spark, sf_dir))
+    core, converged = run_rounds(adj, peel, _KCORE_MAX_ROUNDS, peeled)
+    # The last probe already counted the core: its totals ride as
+    # literals, and an empty core plans no job at all (LIMIT 0).
+    _, n_nodes, n_dir_edges = probes[-1]
     return (
-        core_deg.select(F.col("n").alias("node"), F.col("d").cast("long").alias("core_degree"))
+        core.select(
+            F.col("n").alias("node"),
+            F.size("nbrs").cast("long").alias("core_degree"),
+            F.lit(n_nodes).cast("long").alias("n_core_nodes"),
+            F.lit((n_dir_edges or 0) // 2).cast("long").alias("n_core_edges"),
+            F.lit(converged).alias("converged"),
+        )
         .orderBy(F.desc("core_degree"), F.asc("node"))
-        .limit(_KCORE_TOPK)
-        .crossJoin(F.broadcast(totals))
-        .select("node", "core_degree", "n_core_nodes", "n_core_edges", "converged")
-        .orderBy(F.desc("core_degree"), F.asc("node"))
+        .limit(_KCORE_TOPK if n_nodes else 0)
     )
 
 
@@ -1742,33 +1734,35 @@ def graph_bounded_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
     BIGINT min; the source is the deterministic min node id; output is
     the 20 nearest (dist, node)-ordered — a total order.
 
-    Scale: each round is ONE hash join of the frontier against the
-    node-keyed directed edge list followed by a min-aggregate — never a
-    broadcast of unbounded state — with a lazy `persist(CKPT_LEVEL)` cut
-    per round (safe here: each round references its predecessor ONCE, so
-    the un-truncated logical plan grows linearly, r12 §11). Rounds are a fixed
-    constant, so the plan is 4 joins deep, not data-dependent."""
-    edges = cooccurrence_support(spark, sf_dir).persist(CKPT_LEVEL)
-    dir_e = (
-        edges.selectExpr("pa AS u", "pb AS v", f"{_SSSP_COST} AS w")
-        .unionAll(edges.selectExpr("pb AS u", "pa AS v", f"{_SSSP_COST} AS w"))
-        .persist(CKPT_LEVEL)
+    Scale: each round is one :func:`vertex_round` whose adjacency
+    carries ``struct(v, w)``: a node's message to each neighbour is its
+    distance plus the edge cost, its own row's element costs 0 so its own
+    distance is a message too, and the combine is ``min``. Unreached
+    nodes hold NULL, send only NULLs, and are filtered out at the end.
+    Rounds are a fixed constant, so the chain is planned uncut and cut
+    once, after the last round."""
+    adj = vertex_state(cooccurrence_support(spark, sf_dir), weight=_SSSP_COST)
+    src = F.broadcast(adj.agg(F.min("n").alias("s")))
+    dist0 = F.when(F.col("n") == F.col("s"), F.lit(0)).cast("long").alias("dist")
+    # With no edges the oracle's source row (NULL, 0) still stands.
+    lone = src.where(F.col("s").isNull()).select(
+        F.col("s").alias("n"),
+        F.array().cast(adj.schema["nbrs"].dataType).alias("nbrs"),
+        F.lit(0).cast("long").alias("dist"),
     )
-    src = edges.agg(F.min("pa").alias("s"))
-    d = src.select(F.col("s").alias("node"), F.lit(0).cast("long").alias("dist"))
-    for _ in range(_SSSP_ROUNDS):
-        relaxed = d.join(dir_e, d.node == dir_e.u).select(
-            F.col("v").alias("node"), (F.col("dist") + F.col("w")).alias("dist")
-        )
-        d = (
-            d.unionAll(relaxed)
-            .groupBy("node")
-            .agg(F.min("dist").cast("long").alias("dist"))
-            # persist lineage cut per round (r12): no build-time stage
-            # execution, plans stay one round deep via cache substitution.
-            .persist(CKPT_LEVEL)
-        )
-    return d.orderBy("dist", "node").limit(_SSSP_TOP)
+    state = adj.crossJoin(src).select("n", "nbrs", dist0).unionByName(lone)
+    home = F.struct(F.col("n").alias("v"), F.lit(0).cast("long").alias("w"))
+
+    def relax(s: DataFrame) -> DataFrame:
+        return vertex_round(s, F.min(F.col("dist") + F.col("m.w")).alias("dist"), own=home, to="m.v")
+
+    d, _ = run_rounds(state, relax, _SSSP_ROUNDS)
+    return (
+        d.where(F.col("dist").isNotNull())
+        .select(F.col("n").alias("node"), "dist")
+        .orderBy("dist", "node")
+        .limit(_SSSP_TOP)
+    )
 
 
 # --------------------------------------------------------------------------

@@ -227,6 +227,145 @@ def test_cc_empty_input_job_budget(spark):
     assert len(jobs) <= 6, jobs
 
 
+# Differential tests of the vertex-state graph loops: each registered
+# loop, run end to end on a co-occurrence graph written as baskets, must
+# equal a pure-Python replay of its schedule. Edge (u, v) with support s
+# is s two-part orders, so the support-pruned graph is exactly the drawn
+# one and the support doubles as the SSSP cost's input.
+_GRAPHS = st.lists(
+    st.tuples(st.integers(0, 9), st.integers(0, 9), st.integers(2, 4)), max_size=14
+).map(lambda es: {(min(u, v), max(u, v)): s for u, v, s in reversed(es) if u != v})
+
+
+def _run_graph_key(spark, key, edges, partitions):
+    """Rows of registered ``key`` over the weighted edge dict ``edges``
+    at ``partitions`` shuffle partitions."""
+    import shutil
+    import tempfile
+
+    from gluettalax_spark.registry import queries
+
+    rows, o = [], 0
+    for (u, v), s in sorted(edges.items()):
+        for _ in range(s):
+            rows += [(o, u, 1, 1.0), (o, v, 2, 1.0)]
+            o += 1
+    root = tempfile.mkdtemp(prefix="graph-diff-")
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
+        sf = _write_lineitem(spark, pathlib.Path(root), rows or [(0, 0, 1, 1.0)])
+        return [tuple(r) for r in queries()[key](spark, sf).collect()]
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def _adjacency(edges):
+    adj = {}
+    for u, v in edges:
+        adj.setdefault(u, set()).add(v)
+        adj.setdefault(v, set()).add(u)
+    return adj
+
+
+_PARTITIONS = st.sampled_from([1, 7, 200])
+
+
+@settings(max_examples=4, deadline=None)
+@given(edges=_GRAPHS, partitions=_PARTITIONS)
+def test_kcore_matches_python_peeling(spark, edges, partitions):
+    """graph_kcore peels like the synchronous reference: at most
+    ``_KCORE_MAX_ROUNDS`` rounds, each dropping every under-k node."""
+    from gluettalax_spark.operators.graph import _KCORE_K, _KCORE_MAX_ROUNDS
+
+    adj = _adjacency(edges)
+    converged = False
+    for _ in range(_KCORE_MAX_ROUNDS + 1):
+        low = {n for n, ns in adj.items() if len(ns) < _KCORE_K}
+        if not low:
+            converged = True
+            break
+        adj = {n: ns - low for n, ns in adj.items() if n not in low and ns - low}
+    n_edges = sum(len(ns) for ns in adj.values()) // 2
+    want = [
+        (n, len(ns), len(adj), n_edges, converged)
+        for n, ns in sorted(adj.items(), key=lambda kv: (-len(kv[1]), kv[0]))[:20]
+    ]
+    assert _run_graph_key(spark, "graph_kcore", edges, partitions) == want
+
+
+@settings(max_examples=4, deadline=None)
+@given(edges=_GRAPHS, partitions=_PARTITIONS)
+def test_bounded_sssp_matches_bellman_ford(spark, edges, partitions):
+    """graph_bounded_sssp equals 4 synchronous Bellman-Ford rounds from
+    the least node with integer costs 1e6 DIV support."""
+    from gluettalax_spark.operators.graph import _SSSP_ROUNDS
+
+    dist = {min(edges)[0]: 0} if edges else {}
+    for _ in range(_SSSP_ROUNDS):
+        nxt = dict(dist)
+        for (u, v), s in edges.items():
+            for a, b in ((u, v), (v, u)):
+                if a in dist:
+                    nxt[b] = min(nxt.get(b, dist[a] + 1_000_000 // s), dist[a] + 1_000_000 // s)
+        dist = nxt
+    want = sorted(dist.items(), key=lambda kv: (kv[1], kv[0]))[:20] if edges else [(None, 0)]
+    assert _run_graph_key(spark, "graph_bounded_sssp", edges, partitions) == want
+
+
+@settings(max_examples=4, deadline=None)
+@given(edges=_GRAPHS, partitions=_PARTITIONS)
+def test_lpa_and_modularity_match_python_lpa(spark, edges, partitions):
+    """graph_communities_lpa and graph_modularity score the labels of 3
+    synchronous rounds in which every node adopts its neighbours' most
+    frequent label, ties going to the smaller label."""
+    from gluettalax_spark.operators.graph import _LPA_ITERS
+
+    adj = _adjacency(edges)
+    lab = {n: n for n in adj}
+    for _ in range(_LPA_ITERS):
+        votes = {n: Counter(lab[x] for x in ns) for n, ns in adj.items()}
+        lab = {n: min(c, key=lambda k: (-c[k], k)) for n, c in votes.items()}
+    sizes = Counter(lab.values())
+    want = sorted(sizes.items(), key=lambda kv: (-kv[1], kv[0]))[:20]
+    assert _run_graph_key(spark, "graph_communities_lpa", edges, partitions) == want
+
+    if not edges:
+        return  # Q divides by the edge count
+    m = len(edges)
+    a = sum(lab[u] == lab[v] for u, v in edges)
+    dsum = Counter()
+    for n, ns in adj.items():
+        dsum[lab[n]] += len(ns)
+    b = sum(d * d for d in dsum.values())
+    got = _run_graph_key(spark, "graph_modularity", edges, partitions)
+    assert got == [(len(dsum), m, a, a / m - b / (4.0 * m * m))]
+
+
+@settings(max_examples=4, deadline=None)
+@given(edges=_GRAPHS, partitions=_PARTITIONS)
+def test_pagerank_matches_integer_replay(spark, edges, partitions):
+    """graph_pagerank equals the 8-round integer recurrence
+    r' = base + (85 * sum(r DIV degree)) DIV 100."""
+    from gluettalax_spark.operators.graph import _PR_ITERS, _PR_SCALE, _PR_TELEPORT_E12
+
+    adj = _adjacency(edges)
+    want = []
+    if adj:
+        n = len(adj)
+        r = {v: _PR_SCALE // n for v in adj}
+        for _ in range(_PR_ITERS):
+            r = {
+                v: _PR_TELEPORT_E12 // n + 85 * sum(r[x] // len(adj[x]) for x in ns) // 100
+                for v, ns in adj.items()
+            }
+        mass = sum(r.values())
+        top = sorted(r, key=lambda v: (-r[v], v))[:20]
+        want = [(v, r[v], len(adj[v]), mass) for v in top]
+    assert _run_graph_key(spark, "graph_pagerank", edges, partitions) == want
+
+
 def _write_docs(spark, tmp_path, rows):
     df = spark.createDataFrame(
         rows, "doc_id long, text string, lang string, source string, n_chars long"

@@ -8,6 +8,8 @@
 * One home per text primitive: the tokenizers, the word and stop-word
   counts and the n-gram joins are spelled out once, in the module that
   holds the Spark builder and its DuckDB twin.
+* One loop-cut policy: the graph loops cut lineage only through
+  ``graph._GenerationRotator``, which ``graph.run_rounds`` drives.
 """
 
 from __future__ import annotations
@@ -143,4 +145,38 @@ def test_text_primitives_have_one_home():
         for pattern, n in _text_spellings(f.read_text()).items()
         if n > _TEXT_HOMES[pattern].get(f.name, 0)
     ]
+    assert offenders == []
+
+
+# The only top-level definitions of operators/graph.py that may call
+# localCheckpoint: the generation rotator every graph loop cuts through.
+_LOOP_CUT_HOMES = {"_GenerationRotator"}
+
+
+def _local_checkpoint_owners(src: str) -> list[str]:
+    """The top-level def/class enclosing each localCheckpoint call of
+    ``src`` ("<module>" above the first one)."""
+    owners, owner = [], "<module>"
+    for line in src.splitlines():
+        m = re.match(r"(?:def|class)\s+(\w+)", line)
+        if m:
+            owner = m.group(1)
+        if ".localCheckpoint(" in line:
+            owners.append(owner)
+    return owners
+
+
+def test_graph_loops_cut_through_the_rotator():
+    for src, owners in (
+        ("class _GenerationRotator:\n    def checkpoint(self, df):\n        df.localCheckpoint(eager=False)", []),
+        ("def graph_kcore(spark, sf_dir):\n    deg = deg.localCheckpoint(eager=False)", ["graph_kcore"]),
+        ("ranks = state.localCheckpoint(eager=False)", ["<module>"]),
+        ("def run_rounds(state):\n    return rot.checkpoint(state)", []),
+    ):
+        got = [o for o in _local_checkpoint_owners(src) if o not in _LOOP_CUT_HOMES]
+        assert got == owners, src
+
+    src = (PKG / "operators" / "graph.py").read_text()
+    assert "class _GenerationRotator" in src
+    offenders = [o for o in _local_checkpoint_owners(src) if o not in _LOOP_CUT_HOMES]
     assert offenders == []

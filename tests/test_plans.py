@@ -563,6 +563,57 @@ def test_pagerank_job_budget_and_plan_shape(spark, sf_dir):
             assert op not in plan, (op, plan)
 
 
+# Spark jobs of one builder + collect() on the sf0.001 fixture (warm
+# fixture reads, empty SQL cache) for each key whose loop runs on the
+# vertex-state round: (when each round joined its state against an edge
+# table, the ceiling on the vertex-state round).
+_VERTEX_LOOP_JOBS = {
+    "graph_bounded_sssp": (25, 10),
+    "graph_kcore": (13, 8),
+    "graph_communities_lpa": (24, 15),
+    "graph_modularity": (36, 27),
+    "dedup_clusters": (29, 19),
+    "dedup_filter_corpus": (31, 21),
+    "dedup_minhash_clusters": (33, 21),
+    "dedup_keep_best": (30, 20),
+    "dedup_fuzzy_clusters": (26, 16),
+    "corpus_dedup_quality_audit": (30, 20),
+}
+
+
+@pytest.mark.parametrize("key", sorted(_VERTEX_LOOP_JOBS))
+def test_vertex_loop_job_budget(spark, sf_dir, key):
+    """Each round of the key's graph loop is one vertex-state exchange
+    (two for LPA's count and argmax), with no per-round edge join."""
+    join_rounds, ceiling = _VERTEX_LOOP_JOBS[key]
+    build = lambda: queries()[key](spark, sf_dir).collect()  # noqa: E731
+    build()  # warm the fixture reads
+    spark.catalog.clearCache()
+    jobs, _ = _run_in_job_group(spark, build)
+    assert 0 < jobs <= ceiling < join_rounds, jobs
+
+
+# Spark jobs of one graph_kcore builder + collect() over baskets whose
+# pairs all fall under the support prune, when each peel round joined
+# the edge list against a degree table.
+_KCORE_EMPTY_JOBS_JOIN_ROUNDS = 4
+
+
+def test_kcore_empty_core_job_budget(spark, tmp_path):
+    """An empty graph is probed once and plans no output job: the
+    vertex-state loop adds no round over the edge-list loop."""
+    from tests.test_edge_cases import _write_lineitem
+
+    sf = _write_lineitem(
+        spark, tmp_path, [(1, 10, 1, 5.0), (1, 11, 2, 5.0), (2, 10, 1, 5.0), (2, 12, 2, 5.0)]
+    )
+    build = lambda: queries()["graph_kcore"](spark, sf).collect()  # noqa: E731
+    assert build() == []
+    spark.catalog.clearCache()
+    jobs, _ = _run_in_job_group(spark, build)
+    assert 0 < jobs <= _KCORE_EMPTY_JOBS_JOIN_ROUNDS, jobs
+
+
 # Spark jobs of one graph_degree_distribution builder + count() on the
 # sf0.001 fixture (warm fixture reads, empty SQL cache), when the
 # histogram was persisted and its total was a second aggregate broadcast
