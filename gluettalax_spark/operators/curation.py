@@ -33,8 +33,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gluettalax_spark.operators.dedup import (
+    _BPE_ISH_COUNT_DUCK,
     _WORD_COUNT_DUCK,
     NGRAM_SCORED_CTES,
+    bpe_ish_count,
     dedup_ngram_jaccard,
     word_count,
 )
@@ -136,7 +138,7 @@ _FERTILITY_ORACLE = rf"""
 WITH d AS (
   SELECT lang,
          {_WORD_COUNT_DUCK}  AS ws,
-         CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]')) AS BIGINT) AS bpe,
+         {_BPE_ISH_COUNT_DUCK} AS bpe,
          CAST(n_chars AS BIGINT) AS nc
   FROM documents
 )
@@ -174,9 +176,7 @@ def text_token_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents").select(
         "lang",
         word_count().alias("ws"),
-        F.size(F.expr(r"regexp_extract_all(text, '[A-Za-z]+|[0-9]|[^A-Za-z0-9\\s]', 0)"))
-        .cast("long")
-        .alias("bpe"),
+        bpe_ish_count().alias("bpe"),
         F.col("n_chars").cast("long").alias("nc"),
     )
     return (

@@ -32,41 +32,6 @@ ROWS_PER_BAND = N_HASHES // N_BANDS
 JACCARD_THRESHOLD = 0.5
 
 # --------------------------------------------------------------------------
-# Exact dedup (hash-groupBy on normalized-content fingerprint)
-# --------------------------------------------------------------------------
-
-_EXACT_ORACLE = r"""
-WITH fp AS (
-  SELECT doc_id, md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fingerprint
-  FROM documents
-)
-SELECT
-  fingerprint,
-  CAST(min(doc_id) AS BIGINT) AS keeper_doc_id,
-  count(*)                    AS n_copies
-FROM fp
-GROUP BY fingerprint
-ORDER BY fingerprint
-"""
-
-
-@register("dedup_exact", _EXACT_ORACLE, doc="exact dedup: min-doc_id keeper per content hash")
-def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact dedup = groupBy(content_hash) keeping min(doc_id). One
-    shuffle on the 16-byte hash (not the document text!) — the payload
-    per row is constant regardless of document size, which is what makes
-    this viable at 100 TB."""
-    docs = load(spark, sf_dir, "documents")
-    fp = F.md5(F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")))
-    return (
-        docs.select(fp.alias("fingerprint"), "doc_id")
-        .groupBy("fingerprint")
-        .agg(F.min("doc_id").alias("keeper_doc_id"), F.count(F.lit(1)).alias("n_copies"))
-        .orderBy("fingerprint")
-    )
-
-
-# --------------------------------------------------------------------------
 # Shared tokenizing and shingling (word n-grams over normalized tokens):
 # each Spark builder beside its DuckDB twin
 # --------------------------------------------------------------------------
@@ -103,6 +68,29 @@ def word_count() -> Column:
 
 
 _WORD_COUNT_DUCK = f"CAST(len({_WORDS_DUCK}) AS BIGINT)"
+
+
+def normalized_text() -> Column:
+    """``text`` lowercased, its whitespace runs collapsed to one space,
+    trimmed: the content every exact fingerprint hashes. The DuckDB twin
+    is ``_NORMALIZED_DUCK``."""
+    return F.expr(f"trim(regexp_replace(lower(text), '[{_WS_CHARS_SQL}]+', ' '))")
+
+
+_NORMALIZED_DUCK = r"trim(regexp_replace(lower(text), '\s+', ' ', 'g'))"
+
+
+def bpe_ish_count() -> Column:
+    """Number of BPE-ish pieces of ``text`` (long): letter runs, single
+    digits and single other non-whitespace characters. The DuckDB twin
+    is ``_BPE_ISH_COUNT_DUCK``."""
+    pieces = f"regexp_extract_all(text, '[A-Za-z]+|[0-9]|[^A-Za-z0-9{_WS_CHARS_SQL}]', 0)"
+    return F.size(F.expr(pieces)).cast("long")
+
+
+_BPE_ISH_COUNT_DUCK = (
+    r"CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]')) AS BIGINT)"
+)
 
 
 def duck_ngram(n: int, arr: str = "tokens", sep: str = " ") -> str:
@@ -197,6 +185,42 @@ sh AS (
 
 
 _SHINGLES_CTE = shingles_cte()
+
+
+# --------------------------------------------------------------------------
+# Exact dedup (hash-groupBy on normalized-content fingerprint)
+# --------------------------------------------------------------------------
+
+_EXACT_ORACLE = rf"""
+WITH fp AS (
+  SELECT doc_id, md5({_NORMALIZED_DUCK}) AS fingerprint
+  FROM documents
+)
+SELECT
+  fingerprint,
+  CAST(min(doc_id) AS BIGINT) AS keeper_doc_id,
+  count(*)                    AS n_copies
+FROM fp
+GROUP BY fingerprint
+ORDER BY fingerprint
+"""
+
+
+@register("dedup_exact", _EXACT_ORACLE, doc="exact dedup: min-doc_id keeper per content hash")
+def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact dedup = groupBy(content_hash) keeping min(doc_id). One
+    shuffle on the 16-byte hash (not the document text!) — the payload
+    per row is constant regardless of document size, which is what makes
+    this viable at 100 TB."""
+    docs = load(spark, sf_dir, "documents")
+    fp = F.md5(normalized_text())
+    return (
+        docs.select(fp.alias("fingerprint"), "doc_id")
+        .groupBy("fingerprint")
+        .agg(F.min("doc_id").alias("keeper_doc_id"), F.count(F.lit(1)).alias("n_copies"))
+        .orderBy("fingerprint")
+    )
+
 
 # --------------------------------------------------------------------------
 # MinHash + LSH banding near-dup
@@ -938,10 +962,10 @@ def dedup_ngram_jaccard(
 # Corpus duplication report (per-source observability)
 # --------------------------------------------------------------------------
 
-_DUP_REPORT_ORACLE = r"""
+_DUP_REPORT_ORACLE = rf"""
 WITH fp AS (
   SELECT source,
-         md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fingerprint
+         md5({_NORMALIZED_DUCK}) AS fingerprint
   FROM documents
 )
 SELECT
@@ -967,7 +991,7 @@ def corpus_dup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     text never shuffles; Catalyst plans count(DISTINCT) as the standard
     two-phase expand aggregate."""
     docs = load(spark, sf_dir, "documents")
-    fp = F.md5(F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")))
+    fp = F.md5(normalized_text())
     return (
         docs.select("source", fp.alias("fingerprint"))
         .groupBy("source")
@@ -1587,9 +1611,9 @@ def text_simhash_bit_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Duplicate-cluster size histogram (dedup observability)
 # --------------------------------------------------------------------------
 
-_CLUSTER_HIST_ORACLE = r"""
+_CLUSTER_HIST_ORACLE = rf"""
 WITH fp AS (
-  SELECT doc_id, md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fingerprint
+  SELECT doc_id, md5({_NORMALIZED_DUCK}) AS fingerprint
   FROM documents
 ),
 clusters AS (
@@ -1633,7 +1657,7 @@ def dedup_cluster_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     fp = docs.select(
         "doc_id",
-        F.md5(F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))).alias("fingerprint"),
+        F.md5(normalized_text()).alias("fingerprint"),
     )
     clusters = fp.groupBy("fingerprint").agg(F.count(F.lit(1)).cast("long").alias("sz"))
     tot = fp.agg(F.count(F.lit(1)).cast("long").alias("n_docs_tot"))
@@ -1928,10 +1952,10 @@ def dedup_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Storage savings of exact dedup, per source
 # --------------------------------------------------------------------------
 
-_SAVINGS_ORACLE = r"""
+_SAVINGS_ORACLE = rf"""
 WITH f AS (
   SELECT doc_id, source, n_chars,
-         md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fp
+         md5({_NORMALIZED_DUCK}) AS fp
   FROM documents
 ),
 k AS (SELECT fp, min(doc_id) AS keeper FROM f GROUP BY fp)
@@ -1970,7 +1994,7 @@ def dedup_storage_savings(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same key (co-partitioned by the first shuffle), and the fold
     lands on the source grid."""
     docs = load(spark, sf_dir, "documents")
-    fp = F.md5(F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")))
+    fp = F.md5(normalized_text())
     f = docs.select("doc_id", "source", "n_chars", fp.alias("fp"))
     f = f.persist(CKPT_LEVEL)  # feeds the keeper agg AND the join back
     k = f.groupBy("fp").agg(F.min("doc_id").alias("keeper"))

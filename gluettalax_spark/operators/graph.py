@@ -943,7 +943,9 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``Q = Σ_c [L_c/m − (d_c/2m)²] = A/m − B/4m²`` with ``A`` = intra-
     community edges and ``B = Σ_c d_c²`` — two integer moments (B in
     DECIMAL(38,0)), then ONE double expression, so the score is exact
-    cross-engine. The curation use: decide whether a community structure
+    cross-engine. An edgeless graph has no Q: ``try_divide`` makes it
+    NULL under ANSI and legacy mode alike, as DuckDB's ``x / 0`` is.
+    The curation use: decide whether a community structure
     (e.g. near-dup clusters, topical buckets) is real before sharding by
     it.
 
@@ -973,8 +975,8 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_communities",
             "m AS m_edges",
             "a AS intra_edges",
-            """CAST(a AS DOUBLE) / m
-               - CAST(b AS DOUBLE) / (4.0 * CAST(m AS DOUBLE) * CAST(m AS DOUBLE))
+            """try_divide(CAST(a AS DOUBLE), m)
+               - try_divide(CAST(b AS DOUBLE), 4.0 * CAST(m AS DOUBLE) * CAST(m AS DOUBLE))
                AS modularity""",
         )
     )

@@ -6,7 +6,8 @@ Everything is built-in Spark SQL functions — no Python in the row loop,
 so these run at full codegen speed over 100 TB of text. Each shared text
 primitive (tokenizers, word and stop-word counts, the quality composite)
 is defined once, its Spark builder beside its DuckDB twin: below, and in
-dedup.py for the whitespace tokenizer, the word count and the shingles.
+dedup.py for the whitespace tokenizer, the word and BPE-ish counts, the
+fingerprint normalization and the shingles.
 Java and RE2 regexes differ in places (``\s`` matches U+000B in Java
 only), so those builders spell their patterns to match RE2.
 """
@@ -20,16 +21,21 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from gluettalax_spark.operators.dedup import (
+    _BPE_ISH_COUNT_DUCK,
+    _NORMALIZED_DUCK,
     _SHINGLES_CTE,
     _WORD_COUNT_DUCK,
     _WORDS_DUCK,
+    _WS_CHARS_SQL,
     _WS_TOKENS_DUCK,
     WORDS_SQL,
     _duck_hex_int,
     _tokens_col,
+    bpe_ish_count,
     capped_bucket_pairs,
     duck_capped_bucket_pairs,
     duck_ngram,
+    normalized_text,
     shingles_exploded,
     word_count,
 )
@@ -112,7 +118,7 @@ def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.length(F.regexp_replace(text, "[^.,!?;:]", "")).cast("long").alias("n_punct"),
         F.length(F.regexp_replace(text, "[^0-9]", "")).cast("long").alias("n_digits"),
         F.round(
-            F.length(F.regexp_replace(text, r"\s", "")).cast("double")
+            F.length(F.expr(f"regexp_replace(text, '[{_WS_CHARS_SQL}]', '')")).cast("double")
             / F.greatest(F.length(text), F.lit(1)),
             4,
         ).alias("nonspace_ratio"),
@@ -290,7 +296,7 @@ _TOKEN_COUNT_ORACLE = rf"""
 SELECT
   doc_id,
   {_WORD_COUNT_DUCK}                       AS ws_tokens,
-  CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]')) AS BIGINT) AS bpe_ish_tokens,
+  {_BPE_ISH_COUNT_DUCK} AS bpe_ish_tokens,
   CAST(ceil(length(text) / 4.0) AS BIGINT)                                   AS char4_estimate
 FROM documents
 ORDER BY doc_id
@@ -306,9 +312,7 @@ def text_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.select(
         "doc_id",
         word_count().alias("ws_tokens"),
-        F.size(F.expr(r"regexp_extract_all(text, '[A-Za-z]+|[0-9]|[^A-Za-z0-9\\s]', 0)"))
-        .cast("long")
-        .alias("bpe_ish_tokens"),
+        bpe_ish_count().alias("bpe_ish_tokens"),
         F.ceil(F.length("text") / 4.0).cast("long").alias("char4_estimate"),
     ).orderBy("doc_id")
 
@@ -317,17 +321,11 @@ def text_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Document fingerprinting
 # --------------------------------------------------------------------------
 
-def normalized_text() -> Column:
-    """Normalization shared by fingerprint + exact dedup: lowercase,
-    collapse whitespace runs, trim."""
-    return F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
-
-
-_FINGERPRINT_ORACLE = r"""
+_FINGERPRINT_ORACLE = rf"""
 SELECT
   doc_id,
-  md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g')))             AS fingerprint,
-  substr(md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))), 1, 8) AS shard_key
+  md5({_NORMALIZED_DUCK})             AS fingerprint,
+  substr(md5({_NORMALIZED_DUCK}), 1, 8) AS shard_key
 FROM documents
 ORDER BY doc_id
 """
@@ -358,7 +356,7 @@ WINNOW_W = 16  # winnowing window (positions)
 
 _WINNOW_ORACLE = f"""
 WITH norm AS (
-  SELECT doc_id, trim(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS t
+  SELECT doc_id, {_NORMALIZED_DUCK} AS t
   FROM documents
 ),
 grams AS (
@@ -749,7 +747,7 @@ kept AS (
 ranked AS (
   SELECT doc_id, lang_pred, quality, n_tokens,
          row_number() OVER (
-           PARTITION BY md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g')))
+           PARTITION BY md5({_NORMALIZED_DUCK})
            ORDER BY doc_id
          ) AS rn
   FROM kept
@@ -791,7 +789,7 @@ def corpus_prep_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise("unknown")
     )
     *_rest, quality = _quality_parts()
-    fingerprint = F.md5(F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")))
+    fingerprint = F.md5(normalized_text())
     kept = (
         docs.select(
             "doc_id",

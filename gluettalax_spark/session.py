@@ -35,6 +35,27 @@ def get_spark(app_name: str = "gluettalax_spark", cpus: str | None = None) -> Sp
       (parquet fixtures are UTC; the DuckDB oracle is TZ-naive).
     * Arrow enabled — vectorized transfer for every Pandas UDF /
       ``applyInPandas`` path (the sanctioned slow path).
+    * ``spark.sql.streaming.checkpointFileManagerClass`` — the
+      FileSystem-based manager. The default FileContext manager renames
+      each offset/commit/state file through ``FileContext``, and on a
+      local path without libhadoop every such rename forks ``readlink``
+      twice (Hadoop's shell fallback): about 190 subprocesses for the
+      benchmark's two-batch drain over 4 state partitions.
+      ``RawLocalFileSystem.rename`` is an atomic,
+      overwriting ``rename(2)`` on a local path, and the checksum wrapper
+      (``ChecksumCheckpointFileManager``) stays on. This session always
+      runs a ``local[N]`` master; for HDFS checkpoint paths on a cluster
+      the FileContext manager stays the right choice: its overwriting
+      rename is atomic on HDFS, where ``FileSystem.rename`` refuses an
+      existing target.
+    * ``spark.broadcast.blockSize=1m`` — every broadcast, each stage's
+      task binary included, is cut into chunks of this size. The 4m
+      default equals the G1 region size of the 8 GB driver heap, so each
+      chunk was a humongous object (one of at least half a region),
+      allocated straight into the old generation; the humongous-allocation
+      GCs made the control plane's CPU time swing from run to run. 1m is
+      below half of a 4 MB region, and of the larger regions of every
+      larger heap.
     """
     cpus = cpus or _DEFAULT_CPUS
     builder = (
@@ -68,6 +89,12 @@ def get_spark(app_name: str = "gluettalax_spark", cpus: str | None = None) -> Sp
         # Cluster-scale rationale is identical — iterative caches should
         # yield to shuffle/agg memory, never the reverse.
         .config("spark.memory.storageFraction", "0.1")
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
+        .config("spark.broadcast.blockSize", "1m")
     )
     # ANSI sweep mode (make correctness-ansi): surfaces div-by-zero /
     # overflow / strict-cast divergences that silently return null in

@@ -93,11 +93,16 @@ def write_partitioned(
     """Hive-layout partitioned write (``k=v/`` dirs) — the sink that
     feeds the partition-DDL control plane.
 
-    Scale notes: callers should repartition by the partition columns
-    first when the frame is wide-shuffled (one file per partition-value
-    per task otherwise — the small-files problem);
-    ``maxRecordsPerFile`` caps file size for downstream scan parallelism.
+    Layout: a ``rebalance`` hint on the partition columns shuffles each
+    partition value's rows into one writer task, so a small write leaves
+    one file per value instead of one per value per input task (the
+    small-files problem that every later crawl, leaf listing and pruned
+    read pays for). At scale AQE sizes the writer tasks: a value larger
+    than the advisory partition size is split across several tasks
+    rather than funnelled into one. ``maxRecordsPerFile`` additionally
+    caps file size for downstream scan parallelism.
     """
+    df = df.hint("rebalance", *partition_by)
     writer = df.write.format(fmt).mode(mode).partitionBy(*partition_by)
     if max_records_per_file:
         writer = writer.option("maxRecordsPerFile", str(max_records_per_file))

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gluettalax_spark.operators.dedup import _NORMALIZED_DUCK, normalized_text
 from gluettalax_spark.streaming.windows import read_events_stream
 from gluettalax_spark.tables import load
 
@@ -247,7 +248,7 @@ CORPUS_SPLIT_DOC_ID = 250  # fixture convention: ids < split = "existing corpus"
 _INCREMENTAL_DEDUP_ORACLE = rf"""
 WITH fp AS (
   SELECT doc_id, source,
-         md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fingerprint
+         md5({_NORMALIZED_DUCK}) AS fingerprint
   FROM documents
 ),
 idx AS (SELECT DISTINCT fingerprint FROM fp WHERE doc_id < {CORPUS_SPLIT_DOC_ID})
@@ -260,9 +261,6 @@ ORDER BY f.doc_id
 
 
 def _corpus_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gluettalax_spark.operators.text import normalized_text
-    from gluettalax_spark.tables import load
-
     return load(spark, sf_dir, "documents").select(
         "doc_id", "source", F.md5(normalized_text()).alias("fingerprint")
     )
@@ -303,9 +301,6 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus is dropped at ingest regardless of how long ago the original
     arrived. Within-stream re-deliveries are handled downstream by the
     watermarked dedup (streaming_dedup_within_watermark pattern)."""
-    from gluettalax_spark.operators.text import normalized_text
-    from gluettalax_spark.tables import load
-
     docs_schema = load(spark, sf_dir, "documents").schema
     stream = (
         spark.readStream.schema(docs_schema)

@@ -315,11 +315,14 @@ def test_bounded_sssp_matches_bellman_ford(spark, edges, partitions):
 
 
 @settings(max_examples=4, deadline=None)
-@given(edges=_GRAPHS, partitions=_PARTITIONS)
-def test_lpa_and_modularity_match_python_lpa(spark, edges, partitions):
+@example(edges={}, partitions=1, ansi=True)
+@example(edges={}, partitions=1, ansi=False)
+@given(edges=_GRAPHS, partitions=_PARTITIONS, ansi=st.booleans())
+def test_lpa_and_modularity_match_python_lpa(spark, edges, partitions, ansi):
     """graph_communities_lpa and graph_modularity score the labels of 3
     synchronous rounds in which every node adopts its neighbours' most
-    frequent label, ties going to the smaller label."""
+    frequent label, ties going to the smaller label. An edgeless graph
+    scores a NULL Q in either ANSI mode, as the DuckDB oracle does."""
     from gluettalax_spark.operators.graph import _LPA_ITERS
 
     adj = _adjacency(edges)
@@ -329,18 +332,22 @@ def test_lpa_and_modularity_match_python_lpa(spark, edges, partitions):
         lab = {n: min(c, key=lambda k: (-c[k], k)) for n, c in votes.items()}
     sizes = Counter(lab.values())
     want = sorted(sizes.items(), key=lambda kv: (-kv[1], kv[0]))[:20]
-    assert _run_graph_key(spark, "graph_communities_lpa", edges, partitions) == want
-
-    if not edges:
-        return  # Q divides by the edge count
     m = len(edges)
     a = sum(lab[u] == lab[v] for u, v in edges)
     dsum = Counter()
     for n, ns in adj.items():
         dsum[lab[n]] += len(ns)
     b = sum(d * d for d in dsum.values())
-    got = _run_graph_key(spark, "graph_modularity", edges, partitions)
-    assert got == [(len(dsum), m, a, a / m - b / (4.0 * m * m))]
+    q = a / m - b / (4.0 * m * m) if m else None
+
+    before = spark.conf.get("spark.sql.ansi.enabled")
+    try:
+        spark.conf.set("spark.sql.ansi.enabled", str(ansi).lower())
+        assert _run_graph_key(spark, "graph_communities_lpa", edges, partitions) == want
+        got = _run_graph_key(spark, "graph_modularity", edges, partitions)
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", before)
+    assert got == [(len(dsum), m, a, q)]
 
 
 @settings(max_examples=4, deadline=None)
@@ -734,10 +741,14 @@ def _text_primitive_pairs(spark, sf_dir):
     """(name, Spark frame, DuckDB query) per shared text primitive over
     the ``documents`` table in ``sf_dir``."""
     from gluettalax_spark.operators.dedup import (
+        _BPE_ISH_COUNT_DUCK,
+        _NORMALIZED_DUCK,
         _SHINGLES_CTE,
         _WORD_COUNT_DUCK,
         _WS_TOKENS_DUCK,
         _tokens_col,
+        bpe_ish_count,
+        normalized_text,
         shingles_df,
         word_count,
     )
@@ -760,6 +771,8 @@ def _text_primitive_pairs(spark, sf_dir):
         ("ws_tokens", *per_doc(_tokens_col(), _WS_TOKENS_DUCK)),
         ("term_tokens", *per_doc(term_tokens(), _TERM_TOKENS_DUCK)),
         ("word_count", *per_doc(word_count(), _WORD_COUNT_DUCK)),
+        ("bpe_ish_count", *per_doc(bpe_ish_count(), _BPE_ISH_COUNT_DUCK)),
+        ("normalized_text", *per_doc(normalized_text(), _NORMALIZED_DUCK)),
         ("stop_count", *per_doc(F.expr(STOP_COUNT_SQL), f"CAST({_STOP_HITS_DUCK} AS BIGINT)")),
         ("quality", *per_doc(_quality_parts()[3], _QUALITY_DUCK)),
         (
@@ -803,12 +816,14 @@ def _assert_text_primitives_match(spark, texts):
 
 @settings(max_examples=6, deadline=None)
 @example(texts=["a\x0bb c\td\x0ce", "the cat\x0bsat in a hat"], partitions=1, ansi=True)
+@example(texts=["a\x0bb"], partitions=7, ansi=False)
 @given(texts=_DOCS, partitions=st.sampled_from([1, 7, 200]), ansi=st.booleans())
 def test_text_primitives_match_duckdb(spark, texts, partitions, ansi):
-    """Tokenizers, word and stop-word counts, the quality composite, the
-    3-gram shingles and the classifier logits agree with their DuckDB
-    fragments on random ASCII text, whitespace runs of every kind
-    included, at any shuffle-partition count and ANSI mode."""
+    """Tokenizers, word, BPE-ish and stop-word counts, the fingerprint
+    normalization, the quality composite, the 3-gram shingles and the
+    classifier logits agree with their DuckDB fragments on random ASCII
+    text, whitespace runs of every kind included, at any
+    shuffle-partition count and ANSI mode."""
     confs = {
         "spark.sql.shuffle.partitions": str(partitions),
         "spark.sql.ansi.enabled": str(ansi).lower(),

@@ -97,6 +97,9 @@ _TEXT_HOMES = {
     "\\S+": {"dedup.py": 1},
     # stop words of the stop-word count and the quality composite
     "the|and|of|to|is|a|in": {"text.py": 1},
+    # fingerprint normalization and BPE-ish pieces (Spark builder, DuckDB twin)
+    "trim(regexp_replace(lower(": {"dedup.py": 2},
+    "[A-Za-z]+|[0-9]|[^A-Za-z0-9": {"dedup.py": 2},
     # n-gram joins: generated by dedup.duck_ngram, never spelled
     "w[i] || '_' || w[i+1]": {},
     "tokens[i] || ' ' || tokens[i+1]": {},
@@ -123,6 +126,8 @@ def test_text_primitives_have_one_home():
         ("list_filter(string_split_regex(lower(text), '\\s+'), t -> t <> '')", "string_split_regex(lower("),
         ("CAST(len(regexp_extract_all(text, '\\S+')) AS BIGINT)", "\\S+"),
         ("regexp_extract_all(lower(text), '\\b(the|and|of|to|is|a|in)\\b')", "the|and|of|to|is|a|in"),
+        ('F.md5(F.trim(F.regexp_replace(F.lower(F.col("text")), r"\\s+", " ")))', "trim(regexp_replace(lower("),
+        (r"regexp_extract_all(text, '[A-Za-z]+|[0-9]|[^A-Za-z0-9\\s]', 0)", "[A-Za-z]+|[0-9]|[^A-Za-z0-9"),
         ("i -> w[i] || '_' || w[i+1]", "w[i] || '_' || w[i+1]"),
         ("i -> tokens[i] || ' ' || tokens[i+1] || ' ' || tokens[i+2]", "tokens[i] || ' ' || tokens[i+1]"),
     ):
@@ -130,6 +135,7 @@ def test_text_primitives_have_one_home():
     for src in (
         '_tokens_col().alias("tokens")',
         "{_WS_TOKENS_DUCK} AS tokens",
+        "md5({_NORMALIZED_DUCK}) AS fingerprint",
         "i -> {duck_ngram(3)}",
         'F.explode(F.split(F.lower(F.col("text")), _RAKE_SPLIT))',
         '_RAKE_STOPS = "the|and|of|to|is|a|in"',

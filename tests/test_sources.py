@@ -45,6 +45,32 @@ def test_partitioned_write_layout(spark, sf_dir, tmp_path):
     assert "PartitionFilters" in plan and "lang" in plan
 
 
+def test_write_partitioned_one_file_per_partition_value(spark, tmp_path):
+    """A frame spread over many input tasks leaves one parquet file per
+    partition value; rows round-trip, and maxRecordsPerFile still splits
+    a value's file."""
+    rows = [(i, f"k{i % 4}") for i in range(200)]
+    df = spark.createDataFrame(rows, "id long, k string").repartition(8)
+
+    def files(path):
+        return {
+            d: [f for f in os.listdir(os.path.join(path, d)) if f.endswith(".parquet")]
+            for d in os.listdir(path)
+            if d.startswith("k=")
+        }
+
+    one = str(tmp_path / "one")
+    write_partitioned(df, one, ["k"])
+    assert {d: len(fs) for d, fs in files(one).items()} == {f"k=k{j}": 1 for j in range(4)}
+    back = read_table(spark, one).select("id", "k")
+    assert sorted(tuple(r) for r in back.collect()) == rows
+
+    capped = str(tmp_path / "capped")
+    write_partitioned(df, capped, ["k"], max_records_per_file=20)
+    assert {d: len(fs) for d, fs in files(capped).items()} == {f"k=k{j}": 3 for j in range(4)}
+    assert read_table(spark, capped).count() == len(rows)
+
+
 def test_overwrite_partitions_dynamic(spark, sf_dir, tmp_path):
     """Dynamic overwrite replaces only the partitions present in the frame."""
     import uuid as _uuid
